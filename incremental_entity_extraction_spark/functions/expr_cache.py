@@ -1,7 +1,7 @@
 """Per-SparkContext memo of prebuilt Column expression lists.
 
 Driver-side plan construction is a serial per-batch floor term — profiled
-at ~0.28 s/batch (tools/profile_batch_floor.py: nil_plan 0.10, triple
+at ~0.28 s/batch (nil_plan 0.10, triple
 plans 0.14, new-entity plan 0.04) — dominated by the Py4J round-trips
 that rebuild the SAME Column trees every batch.  Column objects are
 expression TEMPLATES: unresolved attribute references bound only to the

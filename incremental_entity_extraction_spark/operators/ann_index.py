@@ -5,11 +5,10 @@ Reference semantics: the FAISS index is trained and built ONCE, serialized
 to disk, loaded at service start, and new cluster centers are incrementally
 ADDED to it (pipeline/biencoder/blink/indexer/faiss_indexer.py:34-43
 serialize/load; pipeline/indexer/main.py:178-214 add, 216-251 dump) — the
-index is never retrained per batch.  The previous ivf retrieval path
-(retrieval_ann → similarity_search.ivf_topk) re-counted, re-sampled,
-re-trained k-means, and re-bucketed the ENTIRE KB every batch, all of it
-byte-identical each time by the deterministic-seed contract: per-batch
-O(|KB|) work for O(1) information.  This module is the fix:
+index is never retrained per batch.  Re-counting, re-sampling, re-training
+k-means and re-bucketing the ENTIRE KB every batch would be byte-identical
+each time by the deterministic-seed contract: per-batch O(|KB|) work for
+O(1) information.  This module is the one ANN engine on the pipeline path:
 
 * ``build_ann_index``   — train coarse centroids (+ PQ codebooks) once on a
   deterministic sample, bucket/encode the corpus once, persist rows as a
@@ -25,17 +24,17 @@ O(|KB|) work for O(1) information.  This module is the fix:
   ``added_batch=N`` partition — idempotent under dynamic partition
   overwrite, so a crashed batch re-run replaces exactly its own rows.
 * ``ann_index_search``  — per-batch retrieval against the persisted rows:
-  queries are bucketed DRIVER-side (one collect of the batch's encodings,
-  the same driver budget as ``cosine_topk_scan``), the rows table is
-  scanned with ``bucket IN (probed)`` partition pruning, and each scan
-  partition scores only the queries probing its buckets — one matmul (ivf)
-  or ADC LUT gathers (pq) per bucket block, local top-k EMITTED
-  TIE-INCLUSIVELY so the global window merge is partitioning-invariant,
-  never a corpus-sized shuffle or broadcast.
+  queries are bucketed DRIVER-side (one collect of the batch's
+  encodings), the rows table is scanned with ``bucket IN (probed)``
+  partition pruning, and each scan partition scores only the queries
+  probing its buckets — one matmul (ivf) or ADC LUT gathers (pq) per
+  bucket block, local top-k EMITTED TIE-INCLUSIVELY so the global window
+  merge is partitioning-invariant, never a corpus-sized shuffle or
+  broadcast.
 
-Per-batch cost drops from O(|KB| scan + shuffle + k-means) to
-O(probed index bytes + |delta|); the index table itself is the unit the
-lake maintenance (compaction/vacuum) and a 1000-executor scan both want.
+Per-batch cost is O(probed index bytes + |delta|), never an O(|KB| scan +
+shuffle + k-means); the index table itself is the unit the lake
+maintenance (compaction/vacuum) and a 1000-executor scan both want.
 
 The partition column is ``added_batch`` (NOT ``batch_id``) on purpose:
 ``maintenance.vacuum_lake`` reclaims ``batch_id=`` partitions absent from
@@ -232,12 +231,12 @@ def build_ann_index(
     """Train once, bucket/encode the corpus once, persist rows + model.
 
     The ONLY collects are the corpus count and the ≤``train_size`` training
-    sample (same budget as ``ivf_topk``); the corpus itself is bucketed via
-    one vectorized ``mapInPandas`` pass and written shuffled-by-bucket so
-    each bucket dir holds one file-set.  Same parameter derivation, seeding
-    and k-means as the per-call engines (``_derive_ivf_params`` /
-    ``kmeans_centroids`` are shared code), so a prebuilt index returns the
-    same buckets as ``ivf_topk`` at the same seed.
+    sample; the corpus itself is bucketed via one vectorized
+    ``mapInPandas`` pass and written shuffled-by-bucket so each bucket dir
+    holds one file-set.  Parameter derivation, seeding and k-means are the
+    shared ``similarity_search`` code (``_derive_ivf_params`` /
+    ``kmeans_centroids``), so the ivf and ivf_pq modes derive the same
+    buckets at the same seed.
 
     ``train_extra`` (same id/vec columns as ``corpus``) folds accreted
     delta vectors into the k-means TRAINING sample only — persisted base
@@ -636,14 +635,13 @@ def ann_index_search(
     """Top-k neighbors from the persisted index.  Output = the engines'
     shared ``(query_id, neighbor_id, cosine, rank)`` contract
     (score = f32-matmul cosine for ivf, exact f64 re-ranked cosine for pq —
-    same dtypes as ``ivf_topk`` / ``ivf_pq_topk``).
+    same dtypes as ``cosine_topk_join``).
 
     ``query_mode='driver'`` (default — the incremental regime, where a
     batch's mention set is modest):
 
-    * queries are collected ONCE (the same driver budget as
-      ``cosine_topk_scan``) and bucketed on the driver: no query explosion
-      through a shuffle, no per-row Python;
+    * queries are collected ONCE and bucketed on the driver: no query
+      explosion through a shuffle, no per-row Python;
     * the rows table is read with ``added_batch IN allowed`` and
       ``bucket IN probed`` — both partition-dir columns, so unprobed
       buckets and undrained batches are PRUNED at the file listing;
@@ -655,10 +653,9 @@ def ann_index_search(
     near-dup sweep over the whole corpus): nothing query-sized reaches the
     driver either — queries are bucketed distributed (the Arrow-native
     ``_bucketed_queries`` explode) and scored against the persisted rows
-    with a ``cogroup(bucket)``, exactly ``ivf_topk``'s topology except the
-    corpus side comes pre-bucketed from the index (no per-call training or
-    corpus bucketing).  Bucket pruning is moot there: an unbounded query
-    set probes essentially every bucket.
+    with a ``cogroup(bucket)``; the corpus side comes pre-bucketed from the
+    index (no per-call training or corpus bucketing).  Bucket pruning is
+    moot there: an unbounded query set probes essentially every bucket.
 
     Shared: ``extra_rows`` is the one in-flight delta (assigned but not
     yet persisted) — unioned into the scan, bounded at one batch; pq mode
@@ -830,10 +827,10 @@ def _search_cogroup(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Distributed-queries search: ``ivf_topk``'s cogroup topology with the
-    corpus side read pre-bucketed from the persisted index (zero per-call
-    training or corpus bucketing).  Nothing query- or corpus-sized touches
-    the driver — the path for unbounded query sets."""
+    """Distributed-queries search: a ``cogroup(bucket)`` of the exploded
+    queries with the corpus side read pre-bucketed from the persisted index
+    (zero per-call training or corpus bucketing).  Nothing query- or
+    corpus-sized touches the driver — the path for unbounded query sets."""
     from incremental_entity_extraction_spark.operators.similarity_search import (
         _bucketed_queries,
     )

@@ -124,7 +124,7 @@ def new_entity_rows(clusters_with_ids: DataFrame, cfg: PipelineConfig) -> DataFr
     title, descr, type_, embedding; wikipedia_id = -1 for discovered
     entities, pipeline/indexer/main.py:207).  Select list memoized per
     (SparkContext, max_title_len) — rebuilt every batch otherwise
-    (~0.04 s/batch of Py4J, profile_batch_floor)."""
+    (~0.04 s/batch of Py4J)."""
     from incremental_entity_extraction_spark.functions.expr_cache import (
         cached_exprs,
     )

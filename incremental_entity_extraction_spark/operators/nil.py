@@ -74,7 +74,7 @@ def predict_nil(candidates_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     Catalyst collapses the duplicated subtrees, so the physical plan (and
     every value) is identical to the chained form.  The expression LIST is
     additionally memoized per (SparkContext, cfg): rebuilding the same
-    tree cost ~0.10 s/batch of Py4J round-trips (profile_batch_floor)."""
+    tree cost ~0.10 s/batch of Py4J round-trips."""
     cols = cached_exprs(
         candidates_df.sparkSession.sparkContext,
         ("predict_nil", cfg),

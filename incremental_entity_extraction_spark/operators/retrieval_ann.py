@@ -6,10 +6,9 @@ as NumPy shards — the right topology while the KB fits executor memory
 (the reference's whole KB is one 24 GB FAISS server,
 pipeline/biencoder/blink/indexer/faiss_indexer.py:65-67).  When the entity
 dimension outgrows broadcast (10^8+ entities × 1024-d), this module keeps
-the KB a DataFrame and retrieves through the distributed IVF engine
-(operators/similarity_search.ivf_topk): only sampled centroids are
-collected, the KB is bucketed in place, and mentions probe ``n_probe``
-buckets — approximate (recall tested ≥ 0.9 in its operating regime) but
+the KB a DataFrame and retrieves through the persisted, build-once IVF(-PQ)
+index (operators/ann_index.py): mentions probe ``n_probe`` buckets of the
+index rows — approximate (recall tested ≥ 0.9 in its operating regime) but
 nothing KB-sized ever reaches the driver or a broadcast.
 
 Output contract matches ``retrieve_topk`` exactly: mention rows +
@@ -27,7 +26,6 @@ from pyspark.sql import types as T
 
 from incremental_entity_extraction_spark.config import PipelineConfig
 from incremental_entity_extraction_spark.operators.retrieval import CANDIDATE_STRUCT
-from incremental_entity_extraction_spark.operators.similarity_search import ivf_topk
 
 # composite (indexer, id) -> one long key; id must stay below 2^40 (~1.1e12,
 # far above any KB/RW id — RW ids count discovered clusters, not turns) and
@@ -53,7 +51,7 @@ def composite_corpus(kb_df: DataFrame) -> DataFrame:
         | (F.col("indexer") >= F.lit(_MAX_INDEXER)),
         F.raise_error(
             F.concat(
-                F.lit("retrieve_topk_ann: kb id/indexer outside composite-key "
+                F.lit("composite_corpus: kb id/indexer outside composite-key "
                       "range (id in [0, 2^40), indexer in [0, 2^23)): id="),
                 F.col("id").cast("string"),
                 F.lit(" indexer="),
@@ -84,34 +82,6 @@ def composite_keys_np(ids, indexers) -> "np.ndarray":
     return idx * _IDX_SHIFT + ids
 
 
-def retrieve_topk_ann(
-    mentions: DataFrame,
-    kb_df: DataFrame,
-    cfg: PipelineConfig,
-    n_centroids: int | None = None,  # None → ivf_topk derives ≈ sqrt(|KB|)
-    n_probe: int | None = None,      # None → ivf_topk keeps the 25% ratio
-    seed: int = 11,
-) -> DataFrame:
-    """mentions(+encoding) × kb DataFrame -> mentions + candidates array.
-
-    kb_df needs (id, indexer, wikipedia_id, title, embedding).  Join-back is
-    on ``xxhash64(mention_id)`` (deterministic; collision odds ~n²/2⁶⁴).
-
-    Per-call engine: trains/buckets on every invocation — right for ad-hoc
-    queries.  The incremental pipeline uses ``retrieve_topk_indexed`` over a
-    build-once persisted index instead (operators/ann_index.py)."""
-    queries = mentions.select(
-        F.xxhash64("mention_id").alias("vec_id"),
-        F.col("encoding").alias("embedding"),
-    )
-    corpus = composite_corpus(kb_df)
-    nn = ivf_topk(
-        queries, corpus, k=cfg.top_k, n_centroids=n_centroids, n_probe=n_probe,
-        seed=seed, exclude_self=False,
-    )
-    return _assemble_candidates(nn, mentions, kb_df, cfg)
-
-
 def retrieve_topk_indexed(
     mentions: DataFrame,
     kb_df: DataFrame,
@@ -120,7 +90,7 @@ def retrieve_topk_indexed(
     extra_rows=None,
     allowed_batches: list[int] | None = None,
 ) -> DataFrame:
-    """Index-backed retrieval: same output contract as ``retrieve_topk_ann``
+    """Index-backed retrieval: same output contract as ``retrieve_topk``
     but against a persisted, incrementally-added ANN index
     (operators/ann_index.AnnIndexModel) — no per-batch training, bucketing,
     or corpus shuffle; the scan is pruned to probed buckets.  ``kb_df``

@@ -1,25 +1,21 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Shared similarity-search building blocks over embedding columns
+(``array<float>``).
 
-* ``cosine_topk_broadcast`` — the scale path: broadcast corpus matrix,
-  per-partition matmul + argpartition (same machinery class as W1 retrieval).
-* ``cosine_topk_join``      — pure-DataFrame brute force (crossjoin + HOF dot
-  + window top-k); SQL-expressible, used for oracle cross-checks.
-* ``ivf_topk``              — IVF-style ANN: seeded k-means centroids (driver,
-  deterministic), corpus bucketed by nearest centroid, queries probe the
-  ``n_probe`` nearest centroid buckets only.
-* ``ivf_pq_topk``           — IVF + residual product quantization (+ exact
-  re-rank): ~8 bytes per corpus vector instead of dim×4 — the
-  index-compression path when raw vectors dwarf cluster memory.
+* ``cosine_topk_join``   — pure-DataFrame brute force (crossjoin + HOF dot
+  + window top-k); SQL-expressible, the exact reference that ANN recall is
+  measured against.
+* IVF/PQ training pieces — seeded k-means centroids, ≈√n parameter
+  derivation, the deterministic training sample, the Arrow-native query
+  bucketing and residual product-quantization codebooks.  The persisted
+  index (operators/ann_index.py) is built from these.
 """
 
 from __future__ import annotations
 
 import math
-import warnings
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,70 +34,6 @@ def _normalize(X: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(X, axis=1)
     norms[norms == 0] = 1.0
     return X / norms[:, None]
-
-
-def cosine_topk_broadcast(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Exact cosine top-k: corpus broadcast as a normalized matrix; each
-    query partition does one matmul.  Deterministic ties: cosine desc,
-    neighbor_id asc."""
-    spark = queries.sparkSession
-    corpus_pdf = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).toPandas()
-    C = _normalize(
-        np.stack([np.asarray(v, dtype=np.float32) for v in corpus_pdf["vec"]])
-    )
-    c_ids = corpus_pdf["id"].to_numpy(dtype=np.int64)
-    bc = spark.sparkContext.broadcast((C, c_ids))
-
-    def _topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cm, ids = bc.value
-        tile = 2048  # cache-resident score tiles (see retrieval kernel note)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = _normalize(
-                np.stack([np.asarray(v, dtype=np.float32) for v in pdf["vec"]])
-            )
-            q_ids = pdf["id"].to_numpy(dtype=np.int64)
-            rows = np.arange(len(Q))[:, None]
-            parts_s, parts_i = [], []
-            for t0 in range(0, Cm.shape[0], tile):
-                S_t = Q @ Cm[t0 : t0 + tile].T
-                kk_t = min(k + 1, S_t.shape[1])  # +1 headroom for self-hit
-                idx_t = np.argpartition(-S_t, kk_t - 1, axis=1)[:, :kk_t]
-                parts_s.append(S_t[rows, idx_t])
-                parts_i.append(idx_t + t0)
-            S = np.concatenate(parts_s, axis=1)
-            gidx = np.concatenate(parts_i, axis=1)
-            nid_all = ids[gidx]
-            if exclude_self:
-                S[nid_all == q_ids[:, None]] = -np.inf
-            kk = min(k, S.shape[1])
-            idx = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-            sub = S[rows, idx]
-            nid = nid_all[rows, idx]
-            order = np.lexsort((nid, -sub), axis=1)
-            out_rows = []
-            for r in range(len(Q)):
-                for rank, c in enumerate(order[r], start=1):
-                    out_rows.append(
-                        (int(q_ids[r]), int(nid[r, c]), float(sub[r, c]), rank)
-                    )
-            yield pd.DataFrame(
-                out_rows, columns=["query_id", "neighbor_id", "cosine", "rank"]
-            )
-
-    return queries.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(_topk, schema=_TOPK_SCHEMA)
 
 
 def cosine_topk_join(
@@ -145,97 +77,6 @@ def cosine_topk_join(
     )
 
 
-def cosine_topk_scan(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Exact cosine top-k for a corpus too big to collect OR broadcast — the
-    third topology in the matrix:
-
-    * ``cosine_topk_broadcast`` — corpus broadcast, queries scanned
-      (KB-sized corpus, unbounded queries);
-    * THIS — queries broadcast, corpus scanned in place (unbounded corpus,
-      modest query set, e.g. dedup probes / eval queries);
-    * ``ivf_topk``             — both sides unbounded (ANN).
-
-    Each corpus partition computes one matmul against the broadcast query
-    matrix and emits its LOCAL top-k per query (≤ k·|Q| rows per partition —
-    the shuffle is bounded by parallelism·k·|Q|, never by |corpus|); a
-    window merge keeps the global top-k.  Same deterministic tie-break as
-    the other engines (cosine desc, neighbor_id asc) and exact-equal output
-    to ``cosine_topk_join`` (tested)."""
-    spark = queries.sparkSession
-    q_pdf = queries.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).toPandas()
-    if len(q_pdf) == 0:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    Q = _normalize(np.stack([np.asarray(v, dtype=np.float32) for v in q_pdf["vec"]]))
-    Qraw = np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf["vec"]])
-    qn = np.linalg.norm(Qraw, axis=1)
-    qn[qn == 0] = 1.0
-    Q64 = Qraw / qn[:, None]  # f64-normalized twin for exact rescoring
-    q_ids = q_pdf["id"].to_numpy(dtype=np.int64)
-    bc = spark.sparkContext.broadcast((Q, Q64, q_ids))
-
-    local_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("neighbor_id", T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
-
-    def _scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Qm, Q64, qid = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            C = _normalize(
-                np.stack([np.asarray(v, dtype=np.float32) for v in pdf["vec"]])
-            )
-            cid = pdf["id"].to_numpy(dtype=np.int64)
-            S = Qm @ C.T  # f32 matmul selects the local top-k
-            if exclude_self:
-                S[qid[:, None] == cid[None, :]] = -np.inf
-            kk = min(k, S.shape[1])
-            idx = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-            rows = np.repeat(np.arange(len(Qm)), kk)
-            cols = idx.ravel()
-            keep = np.isfinite(S[rows, cols])
-            rows, cols = rows[keep], cols[keep]
-            # emitted values rescored in f64 from f64-normalized vectors so
-            # they hash-match a relational double-precision oracle
-            Craw = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-            )
-            n64 = np.linalg.norm(Craw, axis=1)
-            n64[n64 == 0] = 1.0
-            C64 = Craw / n64[:, None]
-            sc64 = np.einsum("ij,ij->i", Q64[rows], C64[cols])
-            yield pd.DataFrame(
-                {
-                    "query_id": qid[rows],
-                    "neighbor_id": cid[cols],
-                    "cosine": sc64,
-                }
-            )
-
-    local = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(_scan, schema=local_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def _grouped_means(S: np.ndarray, assign: np.ndarray):
     """Per-group row means of ``S`` grouped by ``assign`` — yields
     ``(group, mean_row)`` for each non-empty group.
@@ -271,9 +112,9 @@ def kmeans_centroids(
     return C
 
 
-# shared by ivf_topk / ivf_pq_topk so the two engines derive IDENTICAL
-# parameters, training samples, and (for the same seed) coarse buckets —
-# the "same seed → same buckets" contract is structural, not copy-paste
+# shared by the ivf and ivf_pq index modes (operators/ann_index.py) so both
+# derive IDENTICAL parameters, training samples, and (for the same seed)
+# coarse buckets — the "same seed → same buckets" contract is structural
 _BUCKETED_SCHEMA = T.StructType(
     [
         T.StructField("bucket", T.IntegerType(), False),
@@ -361,131 +202,6 @@ def _bucketed_queries(
     ).mapInArrow(_bq, schema=_BUCKETED_SCHEMA)
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_centroids: int | None = None,
-    n_probe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 11,
-    exclude_self: bool = True,
-    train_size: int = 100_000,
-    hot_bucket_bytes: int = 512 << 20,
-) -> DataFrame:
-    """IVF ANN, fully distributed — nothing corpus-sized ever reaches the
-    driver or a broadcast:
-
-    1. centroids are trained driver-side on a deterministic SAMPLE of at most
-       ``train_size`` corpus rows (the only collect) and broadcast — a tiny
-       ``n_centroids × dim`` model;
-    2. the corpus stays a DataFrame, bucketed by nearest centroid via one
-       vectorized ``mapInPandas`` matmul per partition;
-    3. each query is exploded to its ``n_probe`` nearest-centroid buckets;
-    4. a ``cogroup(bucket).applyInPandas`` scores each bucket with ONE
-       matmul (queries-in-bucket × corpus-in-bucket) and emits per-bucket
-       local top-k;
-    5. a window over query_id keeps the global top-k.
-
-    Scan cost scales by ``n_probe/n_centroids`` at a small recall cost
-    (tested >= 0.9 vs exact).
-
-    ``n_centroids=None`` (the default) derives ``≈ sqrt(n)`` from the corpus
-    count, clamped to [4, 4096] — the classic IVF sizing that keeps expected
-    bucket size ≈ sqrt(n) rows at any scale, instead of a fixed constant
-    whose buckets grow linearly with the corpus.  After centroid training
-    the TRAINING SAMPLE's bucket histogram (already driver-side — no extra
-    job) estimates the largest bucket; if that estimate exceeds
-    ``hot_bucket_bytes`` (default 512 MB — a comfortable single-task bound)
-    a warning names the bucket and the fix (raise ``n_centroids``, or salt
-    the corpus side and probe all salts)."""
-    spark = queries.sparkSession
-    cvec = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    n = cvec.count()
-    if n == 0:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    n_centroids, n_probe = _derive_ivf_params(n, n_centroids, n_probe)
-    X = _coarse_sample(cvec, n, train_size, seed)
-    C = kmeans_centroids(X, n_centroids, seed=seed)
-    # hot-bucket estimate from the training sample (free: X is on the driver)
-    sample_assign = np.argmax(_normalize(X.astype(np.float32)) @ C.T, axis=1)
-    counts = np.bincount(sample_assign, minlength=len(C))
-    hot = int(counts.argmax())
-    est_rows = counts[hot] / len(X) * n
-    est_bytes = est_rows * X.shape[1] * 4
-    if est_bytes > hot_bucket_bytes:
-        warnings.warn(
-            f"ivf_topk: hottest bucket {hot} holds ~{counts[hot] / len(X):.0%} "
-            f"of the corpus (≈{est_rows:,.0f} rows, ≈{est_bytes / 2**20:,.0f} MB "
-            f"> {hot_bucket_bytes / 2**20:,.0f} MB task bound). Raise "
-            "n_centroids, or salt the corpus side and probe all salts.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    bc = spark.sparkContext.broadcast(C)
-
-    def _bucket_corpus(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cm = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            Xp = _normalize(
-                np.stack([np.asarray(v, dtype=np.float32) for v in pdf["vec"]])
-            )
-            assign = np.argmax(Xp @ Cm.T, axis=1).astype("int32")
-            yield pd.DataFrame(
-                {"bucket": assign, "id": pdf["id"], "vecn": list(map(list, Xp))}
-            )
-
-    corpus_b = cvec.mapInPandas(_bucket_corpus, schema=_BUCKETED_SCHEMA)
-    queries_b = _bucketed_queries(queries, id_col, vec_col, bc, n_probe)
-
-    local_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("neighbor_id", T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
-
-    def _score(cdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cdf) == 0 or len(qdf) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
-        Cb = np.stack([np.asarray(v, dtype=np.float32) for v in cdf["vecn"]])
-        Qb = np.stack([np.asarray(v, dtype=np.float32) for v in qdf["vecn"]])
-        S = Qb @ Cb.T
-        cids = cdf["id"].to_numpy(dtype=np.int64)
-        qids = qdf["id"].to_numpy(dtype=np.int64)
-        if exclude_self:
-            S[qids[:, None] == cids[None, :]] = -np.inf
-        kk = min(k, S.shape[1])
-        idx = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        rows = np.repeat(np.arange(len(Qb)), kk)
-        cols = idx.ravel()
-        sc = S[rows, cols]
-        keep = np.isfinite(sc)
-        return pd.DataFrame(
-            {
-                "query_id": qids[rows[keep]],
-                "neighbor_id": cids[cols[keep]],
-                "cosine": sc[keep].astype(float),
-            }
-        )
-
-    local = (
-        corpus_b.groupby("bucket")
-        .cogroup(queries_b.groupby("bucket"))
-        .applyInPandas(_score, schema=local_schema)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ: product-quantized ANN for corpora whose raw vectors do not fit
 # ---------------------------------------------------------------------------
@@ -545,180 +261,3 @@ def pq_encode(Rn: np.ndarray, books: np.ndarray) -> np.ndarray:
         ).astype(np.uint8)
     return codes
 
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_centroids: int | None = None,
-    n_probe: int | None = None,
-    m_subvectors: int | None = None,
-    rerank: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 11,
-    exclude_self: bool = True,
-    train_size: int = 20_000,
-) -> DataFrame:
-    """IVF + product quantization + exact re-rank — the index-compression
-    scale path beyond ``ivf_topk``.
-
-    ``ivf_topk`` keeps full float32 vectors in every bucket row, so the
-    shuffled/stored index bytes scale as n·dim·4 (the reference's 5.9M ×
-    1024-d KB is 24 GB; at 10^9 corpus rows it is 4 TB).  Here each corpus
-    row is quantized to ``m`` uint8 codes (dim=256 → 8 bytes: a 128×
-    reduction), the bucket scan scores candidates with an ADC lookup table
-    (asymmetric distance: LUT[m][j] = q_sub·codeword, score = q·centroid +
-    Σ_m LUT gathers — one matmul builds the LUT per query batch, the scan
-    itself is integer gathers), and the top ``rerank`` PQ candidates per
-    query are re-scored EXACTLY by joining the raw vectors back (broadcast
-    of the ≤|Q|·rerank shortlist against the corpus — never the corpus
-    itself) with the same f64 dot/norm expression the exact engines use, so
-    ranks and cosines are bit-comparable with ``cosine_topk_join``.
-
-    Structure (FAISS IVFPQ semantics, residual encoding; faiss_indexer.py
-    is the reference's index layer): coarse spherical k-means buckets
-    (shared with ``ivf_topk`` — same seed → same buckets), residual r =
-    x_norm − centroid[bucket] quantized per subspace, deterministic
-    throughout (seeded sampling + sorted init)."""
-    spark = queries.sparkSession
-    cvec = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    n = cvec.count()
-    if n == 0:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    # shared derivation/sampling/k-means with ivf_topk: same seed → same
-    # coarse buckets, by construction
-    n_centroids, n_probe = _derive_ivf_params(n, n_centroids, n_probe)
-    if rerank is None:
-        rerank = max(4 * k, 32)
-    X = _coarse_sample(cvec, n, train_size, seed)
-    dim = X.shape[1]
-    m = _pq_subdims(dim, m_subvectors)
-    C = kmeans_centroids(X, n_centroids, seed=seed)
-    Xn = _normalize(X)
-    R = Xn - C[np.argmax(Xn @ C.T, axis=1)]
-    books = pq_train_codebooks(R, m, seed=seed)
-    # C ships ONCE: the query-bucketing helper and the corpus encoder share
-    # bc_C; only the codebooks ride their own broadcast
-    bc_C = spark.sparkContext.broadcast(C)
-    bc_books = spark.sparkContext.broadcast(books)
-
-    coded_schema = T.StructType(
-        [
-            T.StructField("bucket", T.IntegerType(), False),
-            T.StructField("id", T.LongType(), False),
-            T.StructField("code", T.BinaryType(), False),
-        ]
-    )
-
-    def _encode_corpus(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cm, bk = bc_C.value, bc_books.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            Xp = _normalize(
-                np.stack([np.asarray(v, dtype=np.float32) for v in pdf["vec"]])
-            )
-            assign = np.argmax(Xp @ Cm.T, axis=1)
-            codes = pq_encode(Xp - Cm[assign], bk)
-            yield pd.DataFrame(
-                {
-                    "bucket": assign.astype("int32"),
-                    "id": pdf["id"],
-                    "code": [c.tobytes() for c in codes],
-                }
-            )
-
-    corpus_c = cvec.mapInPandas(_encode_corpus, schema=coded_schema)
-    queries_b = _bucketed_queries(queries, id_col, vec_col, bc_C, n_probe)
-
-    local_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("neighbor_id", T.LongType(), False),
-            T.StructField("pq_score", T.DoubleType(), False),
-        ]
-    )
-    kk_local = rerank
-
-    def _score(cdf: pd.DataFrame, qdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cdf) == 0 or len(qdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "pq_score": []}
-            )
-        Cm, bk = bc_C.value, bc_books.value
-        mM, _, dsub = bk.shape
-        b = int(cdf["bucket"].iloc[0])
-        codes = np.frombuffer(
-            b"".join(cdf["code"]), dtype=np.uint8
-        ).reshape(len(cdf), mM)
-        Qb = np.stack([np.asarray(v, dtype=np.float32) for v in qdf["vecn"]])
-        # ADC: score = q·centroid_b + Σ_m LUT[m][:, code[:, m]]
-        S = np.tile((Qb @ Cm[b]).astype(np.float32)[:, None], (1, len(cdf)))
-        for mi in range(mM):
-            lut = Qb[:, mi * dsub : (mi + 1) * dsub] @ bk[mi].T  # (nQ, J)
-            S += lut[:, codes[:, mi]]
-        cids = cdf["id"].to_numpy(dtype=np.int64)
-        qids = qdf["id"].to_numpy(dtype=np.int64)
-        if exclude_self:
-            S[qids[:, None] == cids[None, :]] = -np.inf
-        kk = min(kk_local, S.shape[1])
-        idx = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        rows = np.repeat(np.arange(len(Qb)), kk)
-        cols = idx.ravel()
-        sc = S[rows, cols]
-        keep = np.isfinite(sc)
-        return pd.DataFrame(
-            {
-                "query_id": qids[rows[keep]],
-                "neighbor_id": cids[cols[keep]],
-                "pq_score": sc[keep].astype(float),
-            }
-        )
-
-    local = (
-        corpus_c.groupby("bucket")
-        .cogroup(queries_b.groupby("bucket"))
-        .applyInPandas(_score, schema=local_schema)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_score"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-
-    # exact re-rank: broadcast the small shortlist against the (unbounded)
-    # corpus and the query vectors; f64 dot/norm — same expression family as
-    # cosine_topk_join so cosines are comparable across engines
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    nv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    joined = (
-        nv.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    scored = joined.withColumn(
-        "cosine", (dot / (norm(F.col("qv")) * norm(F.col("cv")))).cast("double")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )

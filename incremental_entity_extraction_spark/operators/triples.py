@@ -57,7 +57,7 @@ def mention_triples(nil_scored: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """'mentions' + 'linked_to' triples from the enriched mention table.
     Expression templates cached per (SparkContext, indexer id) — this plan
     is rebuilt every batch and its Py4J construction cost is a serial
-    floor term (profile_batch_floor: ~0.06 s/batch)."""
+    floor term (~0.06 s/batch)."""
     mentions_cols, not_nil, linked_cols = cached_exprs(
         nil_scored.sparkSession.sparkContext,
         ("mention_triples", cfg.ro_indexer_id),

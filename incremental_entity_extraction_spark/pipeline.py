@@ -205,16 +205,26 @@ class Lake:
     def lineage_path(self) -> str:
         return os.path.join(self.root, "lineage.jsonl")
 
+    # A line is committed once its trailing newline is on disk: a crash
+    # mid-append leaves a torn final line, which counts as not committed.
     def completed_batches(self) -> set[int]:
         p = self.lineage_path()
         if not os.path.exists(p):
             return set()
         with open(p) as f:
-            return {json.loads(line)["batch_id"] for line in f if line.strip()}
+            committed = f.read().split("\n")[:-1]
+        return {json.loads(line)["batch_id"] for line in committed if line.strip()}
 
     def mark_complete(self, batch_id: int, stats: dict) -> None:
         os.makedirs(self.root, exist_ok=True)
-        with open(self.lineage_path(), "a") as f:
+        p = self.lineage_path()
+        if os.path.exists(p) and os.path.getsize(p):
+            with open(p, "r+b") as f:
+                f.seek(-1, os.SEEK_END)
+                if f.read(1) != b"\n":  # cut a torn tail before appending
+                    f.seek(0)
+                    f.truncate(f.read().rfind(b"\n") + 1)
+        with open(p, "a") as f:
             f.write(json.dumps({"batch_id": batch_id, **stats}) + "\n")
 
 
@@ -246,23 +256,26 @@ def run_batch(
     single-hop detect→encode→retrieve — exact, for KBs within the broadcast
     budget (the reference's regime).  ``'ivf'`` / ``'ivf_pq'``: the KB stays
     a DataFrame (``kb_ro_df`` + the RW delta) and candidates come from the
-    distributed ANN engine — approximate, for entity dimensions beyond
-    broadcast.  When ``ann_model`` is given (run_incremental builds one per
-    run — operators/ann_index.py), retrieval scans the PERSISTED index with
-    frozen centroids/codebooks: ``ann_extra_rows`` is the one in-flight
-    delta and ``ann_allowed_batches`` the drained-batch visibility set.
-    Without a model the per-call ivf engine runs (direct callers, streaming
-    driver).  The RW delta is preferably passed as ``rw_df`` (a DataFrame —
+    PERSISTED ANN index ``ann_model`` (required — run_incremental and the
+    streaming driver build one per run, operators/ann_index.py), scanned
+    with frozen centroids/codebooks — approximate, for entity dimensions
+    beyond broadcast.  ``ann_extra_rows`` is the one in-flight delta and
+    ``ann_allowed_batches`` the drained-batch visibility set.  The RW delta
+    is preferably passed as ``rw_df`` (a DataFrame —
     ``run_incremental`` threads it through the lake's ``new_entities`` table
     so driver memory never accretes); ``rw_pdf`` is the fallback for direct
     callers."""
     rw_bc = None  # per-batch RW broadcast; unpersisted after the barrier
     if retrieval_mode in ("ivf", "ivf_pq"):
+        if ann_model is None:
+            raise ValueError(
+                f"retrieval_mode={retrieval_mode!r} needs a prebuilt ann_model "
+                "(run_incremental builds one; see operators/ann_index.py)"
+            )
         from incremental_entity_extraction_spark.operators.fused import (
             detect_encode,
         )
         from incremental_entity_extraction_spark.operators.retrieval_ann import (
-            retrieve_topk_ann,
             retrieve_topk_indexed,
         )
 
@@ -275,7 +288,7 @@ def run_batch(
             kb_df = kb_df.unionByName(
                 spark.createDataFrame(rw_pdf[kb_cols])
             )
-            if ann_model is not None and ann_extra_rows is None:
+            if ann_extra_rows is None:
                 # direct-caller guard: rw_pdf entities are in kb_df METADATA
                 # but absent from the persisted index — without index rows
                 # they could never surface as candidates (silent recall
@@ -299,19 +312,11 @@ def run_batch(
         encoded = detect_encode(
             transcripts_batch, cfg, known_words=known_words, encoder=encoder
         ).localCheckpoint()
-        if ann_model is not None:
-            enriched = retrieve_topk_indexed(
-                encoded, kb_df, cfg, ann_model,
-                extra_rows=ann_extra_rows,
-                allowed_batches=ann_allowed_batches,
-            )
-        else:
-            if retrieval_mode == "ivf_pq":
-                raise ValueError(
-                    "retrieval_mode='ivf_pq' needs a prebuilt ann_model "
-                    "(run_incremental builds one; see operators/ann_index.py)"
-                )
-            enriched = retrieve_topk_ann(encoded, kb_df, cfg)
+        enriched = retrieve_topk_indexed(
+            encoded, kb_df, cfg, ann_model,
+            extra_rows=ann_extra_rows,
+            allowed_batches=ann_allowed_batches,
+        )
     else:
         # fused single-hop stage (operators/fused.py): one Python worker per
         # task instead of three chained ones; identical output to the composed

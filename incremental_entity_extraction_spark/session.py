@@ -1,8 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local mode stands in for the multi-executor cluster (BASELINE.md scaling
-evidence runs the same job at local[N] vs local[4N]); on a real cluster the
-same configs apply, plus Iceberg catalog configs.
+Local mode stands in for the multi-executor cluster (the benchmark runs
+the job at local[N]); on a real cluster the same configs apply, plus
+Iceberg catalog configs.
 """
 
 from __future__ import annotations

@@ -1,27 +1,22 @@
-"""Triples parity for the EXACT configuration the scaling bench measures:
+"""Triples parity for the configuration the benchmark measures:
 ``cluster_mode='cc'`` (star-CC + LSH-capable blocking) over a
-``fixtures.spark_generator`` world at the bench's dim=256 — so the scaling
-evidence in BENCH.md is backed by a correctness gate on the same engine,
+``fixtures.make_world`` world at the benchmark's dim=256 — so the
+perfbench workloads are backed by a correctness gate on the same engine,
 same generator, same feature dimension (a smaller world; the physics of the
 operators do not change with row count, only the wall clock does)."""
 
 from dataclasses import replace
 
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG
-from incremental_entity_extraction_spark.fixtures.spark_generator import (
-    make_entities_pdf,
-    spark_transcripts,
-)
+from incremental_entity_extraction_spark.fixtures import make_world
 from incremental_entity_extraction_spark.oracle import oracle_run_incremental
 from incremental_entity_extraction_spark.pipeline import Lake, run_incremental
 
 
 def test_cc_parity_on_spark_generator_world(spark, tmp_path):
-    cfg = replace(DEFAULT_CONFIG, dim=256)  # the scaling bench's dim
-    entities_all, kb_pdf = make_entities_pdf(800, cfg=cfg)
-    tdf = spark_transcripts(spark, entities_all, n_convs=60, hot_turns=60,
-                            n_batches=2)
-    transcripts_pdf = tdf.toPandas()
+    cfg = replace(DEFAULT_CONFIG, dim=256)  # the benchmark's dim
+    w = make_world(cfg, n_convs=60, n_entities=800, n_batches=2)
+    transcripts_pdf, kb_pdf = w.transcripts, w.entities_kb
     assert len(transcripts_pdf) > 300  # non-trivial world
 
     _, _, oracle_triples, _ = oracle_run_incremental(

@@ -1,12 +1,15 @@
-"""Scale-safe IVF defaults: sqrt(n) centroid auto-derivation and the
-hot-bucket warning on skewed corpora (similarity_search.ivf_topk)."""
+"""Scale-safe IVF defaults of the persisted index: sqrt(n) centroid
+auto-derivation and the 25% probe ratio (similarity_search._derive_ivf_params,
+applied by ann_index.build_ann_index)."""
 
 import numpy as np
-import pytest
 from pyspark.sql import types as T
 
+from incremental_entity_extraction_spark.operators.ann_index import (
+    ann_index_search,
+    build_ann_index,
+)
 from incremental_entity_extraction_spark.operators.similarity_search import (
-    ivf_topk,
     kmeans_centroids,
 )
 
@@ -25,47 +28,21 @@ def _df(spark, X, ids=None):
     )
 
 
-def test_auto_centroids_sqrt_n(spark):
+def test_auto_centroids_sqrt_n(spark, tmp_path):
     rng = np.random.default_rng(7)
     n = 900  # sqrt -> 30 centroids
     X = rng.normal(size=(n, 8)).astype(np.float32)
-    corpus = _df(spark, X)
+    model = build_ann_index(_df(spark, X), str(tmp_path / "idx"))
+    assert model.centroids.shape[0] == 30
     q = _df(spark, X[:5], ids=range(10_000, 10_005))
-    out = ivf_topk(q, corpus, k=3, n_probe=30, exclude_self=False).toPandas()
+    out = ann_index_search(
+        model, spark, q, k=3, n_probe=30, exclude_self=False
+    ).toPandas()
     assert len(out) == 15
     # with n_probe == all 30 auto-derived buckets this is exact: every query
     # (a corpus member) must find itself at rank 1
     top = out[out["rank"] == 1].sort_values("query_id")
     assert list(top["neighbor_id"]) == [0, 1, 2, 3, 4]
-
-
-def test_hot_bucket_warning_on_skew(spark):
-    rng = np.random.default_rng(3)
-    base = rng.normal(size=8).astype(np.float32)
-    # 95% of the corpus collapses into one direction -> one hot bucket
-    X = np.vstack(
-        [
-            base + rng.normal(scale=1e-3, size=(950, 8)).astype(np.float32),
-            rng.normal(size=(50, 8)).astype(np.float32),
-        ]
-    )
-    corpus = _df(spark, X)
-    q = _df(spark, X[:3], ids=range(5000, 5003))
-    with pytest.warns(RuntimeWarning, match="hottest bucket"):
-        ivf_topk(
-            q, corpus, k=2, n_centroids=4, n_probe=4,
-            hot_bucket_bytes=1024,  # tiny bound so the 950-row bucket trips it
-        ).count()
-
-
-def test_no_warning_when_balanced(spark, recwarn):
-    rng = np.random.default_rng(5)
-    X = rng.normal(size=(400, 8)).astype(np.float32)
-    corpus = _df(spark, X)
-    q = _df(spark, X[:2], ids=[9001, 9002])
-    ivf_topk(q, corpus, k=2, n_centroids=8, n_probe=8).count()
-    assert not [w for w in recwarn if issubclass(w.category, RuntimeWarning)
-                and "hottest bucket" in str(w.message)]
 
 
 def test_kmeans_caps_centroids_to_sample(spark):
@@ -74,15 +51,16 @@ def test_kmeans_caps_centroids_to_sample(spark):
     assert C.shape[0] <= 6
 
 
-def test_auto_probe_finds_twin_duplicates(spark):
+def test_auto_probe_finds_twin_duplicates(spark, tmp_path):
     """Auto-derived n_probe (25% of the sqrt(n) buckets) must keep obvious
     structure findable: every vector's exact duplicate shares its bucket."""
     rng = np.random.default_rng(11)
     base = rng.normal(size=(300, 8)).astype(np.float32)
     X = np.vstack([base, base])  # ids 0..299 and twins 300..599
-    corpus = _df(spark, X)
+    model = build_ann_index(_df(spark, X), str(tmp_path / "idx"))
+    assert model.n_probe == 6  # sqrt(600) -> 24 buckets, 25% probed
     q = _df(spark, X[:10], ids=range(10))
-    out = ivf_topk(q, corpus, k=1, exclude_self=True).toPandas()
+    out = ann_index_search(model, spark, q, k=1, exclude_self=True).toPandas()
     top = out[out["rank"] == 1].set_index("query_id")["neighbor_id"]
     assert all(top[i] == i + 300 for i in range(10))
 

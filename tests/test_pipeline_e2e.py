@@ -102,6 +102,23 @@ def test_resume_and_idempotent_rerun(spark, spark_world, cfg, tmp_lake):
     assert [s["batch_id"] for s in stats2] == [3]
     rerun = _triple_set(spark.read.parquet(tmp_lake.path("triples")).toPandas())
     assert rerun == resumed
+    # crash mid-append: batch 3's line is torn (no trailing newline) — it is
+    # not committed, the rerun redoes batch 3 and cuts the torn tail
+    lines = open(tmp_lake.lineage_path()).read().strip().split("\n")
+    torn = [l for l in lines if json.loads(l)["batch_id"] == 3][0]
+    kept = [l for l in lines if json.loads(l)["batch_id"] != 3]
+    open(tmp_lake.lineage_path(), "w").write(
+        "\n".join(kept) + "\n" + torn[: len(torn) // 2]
+    )
+    assert tmp_lake.completed_batches() == {0, 1, 2}
+    stats3 = _run(spark, spark_world, tmp_lake, cfg, "greedy_replay")
+    assert [s["batch_id"] for s in stats3] == [3]
+    torn_rerun = _triple_set(
+        spark.read.parquet(tmp_lake.path("triples")).toPandas()
+    )
+    assert torn_rerun == resumed
+    with open(tmp_lake.lineage_path()) as f:
+        assert sorted(json.loads(l)["batch_id"] for l in f) == [0, 1, 2, 3]
 
 
 @pytest.mark.parametrize("mode", ["greedy_replay", "cc"])

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from incremental_entity_extraction_spark.operators.ann_index import build_ann_index
 from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
 from incremental_entity_extraction_spark.operators.mentions import detect_mentions
 from incremental_entity_extraction_spark.operators.retrieval import (
@@ -12,19 +13,28 @@ from incremental_entity_extraction_spark.operators.retrieval import (
     retrieve_topk,
 )
 from incremental_entity_extraction_spark.operators.retrieval_ann import (
-    retrieve_topk_ann,
+    composite_corpus,
+    retrieve_topk_indexed,
 )
 
 
+def _build(kb, path, **kw):
+    return build_ann_index(
+        composite_corpus(kb.select("id", "indexer", "embedding")), path, **kw
+    )
+
+
 @pytest.fixture(scope="module")
-def enriched_pair(spark, spark_world, cfg):
+def enriched_pair(spark, spark_world, cfg, tmp_path_factory):
     encoded = encode_mentions_df(
         detect_mentions(spark_world["transcripts"]), cfg
     ).localCheckpoint()
-    shards = build_kb_shards(spark_world["entities_kb"], 1)
+    kb = spark_world["entities_kb"]
+    shards = build_kb_shards(kb, 1)
     exact = retrieve_topk(encoded, cfg, shards).toPandas().set_index("mention_id")
+    model = _build(kb, str(tmp_path_factory.mktemp("ann") / "idx"))
     ann = (
-        retrieve_topk_ann(encoded, spark_world["entities_kb"], cfg)
+        retrieve_topk_indexed(encoded, kb, cfg, model)
         .toPandas()
         .set_index("mention_id")
     )
@@ -64,6 +74,20 @@ def test_ann_top1_agrees_with_exact(enriched_pair):
     assert agree / n >= 0.9, f"top-1 agreement {agree / n:.3f}"
 
 
+@pytest.mark.parametrize("mode", ["ivf", "ivf_pq"])
+def test_run_batch_ann_modes_require_model(spark_world, cfg, mode):
+    """The persisted index is the only ANN path: no per-call fallback."""
+    import pandas as pd
+
+    from incremental_entity_extraction_spark.pipeline import run_batch
+
+    with pytest.raises(ValueError, match="needs a prebuilt ann_model"):
+        run_batch(
+            spark_world["transcripts"], [], pd.DataFrame(), 0, cfg,
+            retrieval_mode=mode, kb_ro_df=spark_world["entities_kb"],
+        )
+
+
 def test_pipeline_e2e_with_ivf_retrieval(spark, spark_world, world, cfg, tmp_path):
     """Full incremental run with retrieval_mode='ivf' (no KB broadcast, no
     KB collect): triples must match the oracle at P/R >= 0.95."""
@@ -84,22 +108,10 @@ def test_pipeline_e2e_with_ivf_retrieval(spark, spark_world, world, cfg, tmp_pat
     assert p >= 0.95 and r >= 0.95, f"ivf-mode triples P={p:.3f} R={r:.3f}"
 
 
-def test_composite_key_guard_rejects_out_of_range(spark, cfg):
+def test_composite_key_guard_rejects_out_of_range(spark, cfg, tmp_path):
     """id >= 2^40 or indexer >= 2^23 must raise, not decode a wrong entity."""
-    import numpy as np
-    import pytest
-    from pyspark.sql import functions as F
-    from pyspark.sql.utils import PythonException
-
-    from incremental_entity_extraction_spark.operators.retrieval_ann import (
-        retrieve_topk_ann,
-    )
-
     rng = np.random.default_rng(2)
     vec = [float(x) for x in rng.normal(size=cfg.dim)]
-    mentions = spark.createDataFrame(
-        [("m1", vec)], "mention_id string, encoding array<float>"
-    )
     for bad_id, bad_indexer in [(1 << 40, 0), (5, 1 << 23), (-1, 0)]:
         kb = spark.createDataFrame(
             [(bad_id, bad_indexer, 100, "t", vec)],
@@ -107,20 +119,13 @@ def test_composite_key_guard_rejects_out_of_range(spark, cfg):
             "embedding array<float>",
         )
         with pytest.raises(Exception) as ei:
-            retrieve_topk_ann(mentions, kb, cfg, n_centroids=2, n_probe=2).collect()
+            _build(kb, str(tmp_path / "idx"), n_centroids=2, n_probe=2)
         assert "composite-key" in str(ei.value)
 
 
-def test_large_indexer_decodes_exactly(spark, cfg):
+def test_large_indexer_decodes_exactly(spark, cfg, tmp_path):
     """indexer beyond 2^13 pushes the composite key past 2^53 — the decode
     must use integer DIV (float division would hydrate the wrong entity)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from incremental_entity_extraction_spark.operators.retrieval_ann import (
-        retrieve_topk_ann,
-    )
-
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(6, cfg.dim)).astype(np.float32)
     big_indexer = (1 << 23) - 1  # max legal; key ≈ 2^63 - ε
@@ -136,7 +141,8 @@ def test_large_indexer_decodes_exactly(spark, cfg):
         [("m0", [float(x) for x in vecs[0]])],
         "mention_id string, encoding array<float>",
     )
-    out = retrieve_topk_ann(mentions, kb, cfg, n_centroids=2, n_probe=2).collect()
+    model = _build(kb, str(tmp_path / "idx"), n_centroids=2, n_probe=2)
+    out = retrieve_topk_indexed(mentions, kb, cfg, model).collect()
     cands = out[0]["candidates"]
     assert len(cands) > 0
     assert all(c["indexer"] == big_indexer for c in cands)

@@ -5,19 +5,33 @@ skew".  The salt is turn_idx — a conversation with 40% of all turns must
 not pin a single task.
 """
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from incremental_entity_extraction_spark.fixtures.spark_generator import (
-    make_entities_pdf,
-    spark_transcripts,
-)
+
+def _skewed_transcripts(spark, n_convs: int, hot_turns: int, zipf: float):
+    """Turn keys only: conv i gets ``max(2, hot_turns / (i+1)^zipf)`` turns,
+    so conv 0 is the hot head."""
+    n_turns = np.maximum(
+        2, (hot_turns / np.arange(1, n_convs + 1) ** zipf).astype(int)
+    )
+    pdf = pd.DataFrame(
+        {
+            "conv_id": np.repeat(
+                [f"conv_{i:08d}" for i in range(n_convs)], n_turns
+            ),
+            "turn_idx": np.concatenate([np.arange(n) for n in n_turns]).astype(
+                "int32"
+            ),
+        }
+    )
+    return spark.createDataFrame(pdf)
 
 
 def test_salted_repartition_spreads_hot_conversation(spark):
-    ents, _ = make_entities_pdf(200)
     # tiny world with an extreme hot head: conv 0 gets ~2000 turns, the rest ~2
-    t = spark_transcripts(spark, ents, n_convs=50, hot_turns=2000, zipf=3.0)
+    t = _skewed_transcripts(spark, n_convs=50, hot_turns=2000, zipf=3.0)
     total = t.count()
     hot = t.filter(F.col("conv_id") == "conv_00000000").count()
     assert hot / total > 0.5, "fixture should be skewed for this test"
@@ -43,33 +57,3 @@ def test_salted_repartition_spreads_hot_conversation(spark):
         .toPandas()["count"]
     )
     assert sizes_u.max() > sizes.max(), "salt should strictly improve balance"
-
-
-def test_ngram_jaccard_df_cap_bounds_stop_shingle(spark):
-    """One stop-shingle shared by 10k docs would create ~50M self-join rows;
-    df_cap drops it from the index before the join so the query finishes in
-    bounded time and still finds the planted near-dup pair."""
-    import pandas as pd
-
-    n = 10_000
-    rows = [
-        {"doc_id": i, "text": f"common stop phrase unique{i} token{i} word{i}"}
-        for i in range(n)
-    ]
-    # planted exact near-dup of doc 7
-    rows.append(
-        {"doc_id": 100_000, "text": "common stop phrase unique7 token7 word7"}
-    )
-    docs = spark.createDataFrame(pd.DataFrame(rows)).repartition(8)
-
-    from incremental_entity_extraction_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    out = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5, df_cap=50
-    ).toPandas()
-    pairs = set(map(tuple, out[["id_a", "id_b"]].itertuples(index=False)))
-    assert pairs == {(7, 100_000)}
-    # over the capped shingle universe the planted pair is identical
-    assert abs(out["jaccard"].iloc[0] - 1.0) < 1e-9
