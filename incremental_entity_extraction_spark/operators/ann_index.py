@@ -566,8 +566,8 @@ def backfill_missing_deltas(
 ) -> None:
     """Persist index deltas (and their commit markers) for completed
     batches that lack one — a lake written by a pre-index code version, or
-    a fingerprint-change rebuild that wiped the rows table.  Shared by the
-    batch and streaming drivers so the two stay in lockstep.
+    a fingerprint-change rebuild that wiped the rows table.  Called by
+    ``pipeline.BatchLoop.run`` before the first batch of each run.
 
     When ``rw_df`` is None (the ``new_entities`` table is unreadable),
     NOTHING is persisted — markers included: the table may be absent

@@ -130,12 +130,13 @@ def connected_components(
     assumed symmetric-able (we union both directions).  Returns
     (mention_id, cluster_label) where label = min member mention_id.
 
-    Needs O(graph diameter) rounds — kept as the simple fallback; the
-    default engine everywhere is ``connected_components_star`` (O(log n)
-    rounds).  Convergence is detected with a one-job label-set signature
-    (count + bit_xor of per-row hashes) instead of a join against the
-    previous labels; ``localCheckpoint`` truncates lineage per iteration
-    (SURVEY.md §4).  Raises on non-convergence rather than silently
+    Needs O(graph diameter) rounds, so no pipeline path uses it: the engine
+    is ``connected_components_star`` (O(log n) rounds), and this simpler
+    algorithm is kept as the reference that tests/test_cc_star.py checks
+    star CC against.  Convergence is detected with a one-job label-set
+    signature (count + bit_xor of per-row hashes) instead of a join against
+    the previous labels; ``localCheckpoint`` truncates lineage per
+    iteration (SURVEY.md §4).  Raises on non-convergence rather than silently
     returning partially-propagated labels."""
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -178,7 +179,6 @@ def cluster_cc(
     nil_df: DataFrame,
     cfg: PipelineConfig,
     lsh_threshold: int = 200_000,
-    cc_backend: str = "star",
     small_graph_edges: int = 100_000,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -188,9 +188,9 @@ def cluster_cc(
     O(n·dim) broadcast) stops fitting; switch to LSH-blocked candidate
     generation (``nil_edges_lsh``) — bounded memory, slightly bounded recall.
 
-    ``cc_backend``: 'star' (default — large-star/small-star, O(log n) rounds
-    regardless of component diameter) or 'propagation' (min-label, O(diameter)
-    rounds; kept for cross-checking).  Both emit label = min member id.
+    Components come from ``connected_components_star`` (large-star /
+    small-star, O(log n) rounds regardless of diameter); label = min member
+    id.
 
     ``n_rows``: the NIL row count when the caller already knows it (the
     pipeline's gate count rides an ``Observation`` on the checkpoint
@@ -201,12 +201,9 @@ def cluster_cc(
         edges = nil_edges_lsh(nil_df, cfg)
     else:
         edges = nil_edges(nil_df, cfg)
-    if cc_backend == "star":
-        return connected_components_star(
-            nil_df.select("mention_id"), edges,
-            small_graph_edges=small_graph_edges,
-        )
-    return connected_components(nil_df.select("mention_id"), edges)
+    return connected_components_star(
+        nil_df.select("mention_id"), edges, small_graph_edges=small_graph_edges
+    )
 
 
 # --------------------------------------------------------------------------
@@ -601,12 +598,6 @@ def nil_edges_lsh(
         .applyInPandas(_verify, schema=edge_schema)
         .distinct()
     )
-
-
-def cluster_cc_lsh(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """CC over LSH-blocked edges (the giant-NIL-set path)."""
-    edges = nil_edges_lsh(nil_df, cfg)
-    return connected_components_star(nil_df.select("mention_id"), edges)
 
 
 # --------------------------------------------------------------------------

@@ -165,6 +165,14 @@ def _flip_pointer(st, manifest_name: str, expected_etag: str | None) -> None:
         ) from e
 
 
+def _intact(st, part: str, files) -> bool:
+    """A governed partition's committed file list still describes it: every
+    file exists.  An empty list counts as rewritten — ``all()`` over it is
+    vacuously true, which would pin a partition committed with no files to
+    ``[]`` after a writer repopulates it."""
+    return bool(files) and all(st.data_exists(part, f) for f in files)
+
+
 def refresh_manifest(root: str, store=None) -> str:
     """Snapshot the CURRENT directory state into a committed manifest —
     bootstrap for a table that never had one, or resync after a
@@ -172,12 +180,13 @@ def refresh_manifest(root: str, store=None) -> str:
     partition by partition, so a refresh commits exactly the state a read
     would have seen:
 
-    * a GOVERNED partition whose referenced files are all intact keeps the
-      referenced list VERBATIM — any extra non-compact files beside a
-      committed ``compact-*`` generation are the superseded originals of a
-      not-yet-vacuumed compaction (a writer rewrite would have removed the
-      referenced files), and annexing them would double-read every such
-      partition (round-7 advice);
+    * a GOVERNED partition whose referenced files are all intact
+      (``_intact``: a non-empty list) keeps the referenced list VERBATIM —
+      any extra non-compact files beside a committed ``compact-*``
+      generation are the superseded originals of a not-yet-vacuumed
+      compaction (a writer rewrite would have removed the referenced
+      files), and annexing them would double-read every such partition
+      (round-7 advice);
     * otherwise (ungoverned, or governed-but-rewritten) the directory is
       the truth, EXCLUDING unreferenced ``compact-*`` files: per
       ``read_table``'s invariant those can only be staging orphans of a
@@ -196,9 +205,7 @@ def refresh_manifest(root: str, store=None) -> str:
     for p in st.list_partitions():
         ref = prev_files.get(p)
         ref_list = list(ref) if isinstance(ref, (list, tuple)) else None
-        if ref_list is not None and all(
-            st.data_exists(p, f) for f in ref_list
-        ):
+        if ref_list is not None and _intact(st, p, ref_list):
             files[p] = ref_list
         else:
             files[p] = [
@@ -236,7 +243,7 @@ def read_table(spark: SparkSession, root: str, store=None) -> DataFrame:
         ]
 
     for part, files in covered.items():
-        if all(st.data_exists(part, f) for f in files):
+        if _intact(st, part, files):
             paths.extend(st.data_path(part, f) for f in files)
         else:
             # a writer rewrote this governed partition (lineage re-run,
@@ -323,7 +330,7 @@ def compact_table_manifest(
     changed = False
     for part in st.list_partitions():
         governed = part in m["files"]
-        if governed and all(st.data_exists(part, f) for f in m["files"][part]):
+        if governed and _intact(st, part, m["files"][part]):
             files = m["files"][part]
         else:
             if governed:
@@ -471,7 +478,7 @@ def vacuum_unreferenced(
     for part in st.list_partitions():
         governed = part in m["files"]
         keep = set(m["files"][part]) if governed else set()
-        if governed and not all(st.data_exists(part, f) for f in keep):
+        if governed and not _intact(st, part, keep):
             # a writer rewrote this governed partition since the manifest
             # committed (fresh file names): the keep-set is stale, and
             # deleting by it would remove the only live copies — skip; the

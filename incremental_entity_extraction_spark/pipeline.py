@@ -13,7 +13,7 @@ resumable (north_rule):
 * ``prev_clusters``  — cluster summaries per batch.
 * ``triples``        — the KG, partitioned by batch_id.
 * ``lineage``        — one row per completed batch (checkpoint marker);
-  resume = skip batch_ids present in lineage.
+  resume = skip the longest committed prefix of the batch order.
 * ``metrics``        — per-batch counters + timings (+ eval metrics when gold
   labels are supplied).
 
@@ -29,11 +29,12 @@ partitions instead of pinning one task (SURVEY.md §4 "salted repartition").
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -256,21 +257,26 @@ def run_batch(
     single-hop detect→encode→retrieve — exact, for KBs within the broadcast
     budget (the reference's regime).  ``'ivf'`` / ``'ivf_pq'``: the KB stays
     a DataFrame (``kb_ro_df`` + the RW delta) and candidates come from the
-    PERSISTED ANN index ``ann_model`` (required — run_incremental and the
-    streaming driver build one per run, operators/ann_index.py), scanned
-    with frozen centroids/codebooks — approximate, for entity dimensions
-    beyond broadcast.  ``ann_extra_rows`` is the one in-flight delta and
-    ``ann_allowed_batches`` the drained-batch visibility set.  The RW delta
-    is preferably passed as ``rw_df`` (a DataFrame —
-    ``run_incremental`` threads it through the lake's ``new_entities`` table
-    so driver memory never accretes); ``rw_pdf`` is the fallback for direct
-    callers."""
+    PERSISTED ANN index ``ann_model`` (required — ``BatchLoop`` builds one
+    per run, operators/ann_index.py), scanned with frozen
+    centroids/codebooks — approximate, for entity dimensions beyond
+    broadcast.  ``ann_extra_rows`` is the one in-flight delta and
+    ``ann_allowed_batches`` the drained-batch visibility set.  These modes
+    take RW state only as ``rw_df`` (a DataFrame — ``BatchLoop`` threads it
+    through the lake's ``new_entities`` table so driver memory never
+    accretes); a non-empty ``rw_pdf`` raises, because its entities would
+    have KB metadata but no index rows."""
     rw_bc = None  # per-batch RW broadcast; unpersisted after the barrier
     if retrieval_mode in ("ivf", "ivf_pq"):
         if ann_model is None:
             raise ValueError(
                 f"retrieval_mode={retrieval_mode!r} needs a prebuilt ann_model "
                 "(run_incremental builds one; see operators/ann_index.py)"
+            )
+        if len(rw_pdf):
+            raise ValueError(
+                f"retrieval_mode={retrieval_mode!r} takes RW state as rw_df, "
+                "not rw_pdf"
             )
         from incremental_entity_extraction_spark.operators.fused import (
             detect_encode,
@@ -283,27 +289,6 @@ def run_batch(
         kb_df = kb_ro_df.select(*kb_cols)
         if rw_df is not None:
             kb_df = kb_df.unionByName(rw_df.select(*kb_cols))
-        elif len(rw_pdf):
-            spark = transcripts_batch.sparkSession
-            kb_df = kb_df.unionByName(
-                spark.createDataFrame(rw_pdf[kb_cols])
-            )
-            if ann_extra_rows is None:
-                # direct-caller guard: rw_pdf entities are in kb_df METADATA
-                # but absent from the persisted index — without index rows
-                # they could never surface as candidates (silent recall
-                # hole).  Assign them under the frozen model as the
-                # in-flight delta; the added_batch tag (0) is in-memory only
-                # (_read_rows never consults it), nothing is persisted.
-                # run_incremental never hits this: it threads rw_df +
-                # ann_extra_rows explicitly.
-                from incremental_entity_extraction_spark.operators.ann_index import (  # noqa: E501
-                    rw_delta_rows,
-                )
-
-                ann_extra_rows = rw_delta_rows(
-                    ann_model, rw_pdf, 0, cfg.rw_indexer_id
-                )
         # one fused detect+encode hop (not two chained mapInPandas), then
         # the distributed ANN scan — the KB is never collected or broadcast.
         # Checkpointed because the enriched plan references it twice (the
@@ -321,7 +306,7 @@ def run_batch(
         # fused single-hop stage (operators/fused.py): one Python worker per
         # task instead of three chained ones; identical output to the composed
         # detect_mentions → encode_mentions_df → retrieve_topk chain.
-        # ``ro_shards_bc`` (run_incremental) reuses ONE broadcast of the RO
+        # ``ro_shards_bc`` (BatchLoop) reuses ONE broadcast of the RO
         # KB across every batch — only the small RW shard is broadcast per
         # batch; direct callers without it keep the single-broadcast path.
         rw_shards = (
@@ -551,22 +536,325 @@ class BatchPersist:
         }
 
 
-def persist_batch(
-    lake: Lake,
-    nil_scored: DataFrame,
-    clusters_with_ids: DataFrame,
-    new_entities: DataFrame,
-    triples: DataFrame,
-    persist_candidates: bool = False,
-    rw_pdf_precomputed: pd.DataFrame | None = None,
-) -> tuple[pd.DataFrame, dict]:
-    """Synchronous persist (streaming driver + ad-hoc callers)."""
-    bp = BatchPersist().start(
-        lake, nil_scored, clusters_with_ids, new_entities, triples,
-        persist_candidates, rw_pdf_precomputed,
-    )
-    add_pdf = bp.rw_delta()
-    return add_pdf, bp.finish()
+@dataclass
+class BatchLoop:
+    """The incremental batch loop that both drivers step: ``run_incremental``
+    runs it once over the whole frame, the streaming driver once per
+    micro-batch (streaming/incremental.py).
+
+    The loop object owns the run-lifetime state — the ONE broadcast of the
+    RO KB (per-batch re-broadcast of an unchanged KB pays a driver pickle
+    per batch and defeats the Python workers' broadcast-id cache,
+    fused.detect_encode_retrieve) and, in the ANN modes, the persisted index
+    model, built or loaded at the first ``run``.  Everything else is
+    re-derived from the lake at each ``run``, so the lineage prefix is the
+    only resume contract.  ``dels`` are tombstoned entity ids, filtered out
+    of the RW state (the caller filters ``kb_ro``); ``close`` releases the
+    broadcast."""
+
+    spark: SparkSession
+    kb_ro: DataFrame
+    lake: Lake
+    cfg: PipelineConfig = DEFAULT_CONFIG
+    cluster_mode: str = "cc"
+    n_shards: int = 1
+    resume: bool = True
+    partitions: int | None = None
+    known_words: frozenset | None = None
+    persist_candidates: bool = False
+    dels: list[int] = field(default_factory=list)
+    encoder: object = None
+    retrieval_mode: str = "broadcast"
+    ann_rebuild_threshold: float | None = None
+    salt_repartition: bool | None = None
+
+    def __post_init__(self) -> None:
+        self.ann = self.retrieval_mode in ("ivf", "ivf_pq")
+        # ANN modes never collect the KB — that is their point
+        self.ro_shards = (
+            build_kb_shards(self.kb_ro, self.n_shards)
+            if self.retrieval_mode == "broadcast" else []
+        )
+        self.ro_shards_bc = (
+            self.spark.sparkContext.broadcast(self.ro_shards)
+            if self.ro_shards else None
+        )
+        self.ann_model = None
+
+    def close(self) -> None:
+        if self.ro_shards_bc is not None:
+            self.ro_shards_bc.unpersist()
+            self.ro_shards_bc = None
+
+    def _salted(self, tb: DataFrame, n_turns: int) -> DataFrame:
+        """salt_repartition True/False forces every batch; None decides PER
+        BATCH: an explicit ``partitions`` is a request to shape the batch's
+        partitioning (the partition-invariance tests rely on it); otherwise
+        the salt shuffle exists for (a) parallelism — a byte-contiguous
+        batch in the source parquet lands in ~one scan split — and (b)
+        hot-conversation skew; for tiny batches it buys neither
+        (single-task fused compute is already cheap) and its ~0.2 s/batch
+        stage is pure serial floor (profiled), so skip below ~1000
+        turns/batch.  Per-batch, NOT the run average: one 50k-turn batch
+        among many tiny ones must still get its salt and its task count."""
+        salt = (
+            self.salt_repartition if self.salt_repartition is not None
+            else self.partitions is not None or n_turns >= 1000
+        )
+        if not salt:
+            return tb
+        if self.partitions is not None:
+            n = self.partitions
+        else:
+            # ~2000 turns per task, bounded by executor slots: tiny batches
+            # shouldn't schedule 2×cores tasks, huge ones shouldn't underfill
+            par = self.spark.sparkContext.defaultParallelism
+            n = int(min(par * 2, max(par // 2, n_turns / 2000, 1)))
+        return tb.repartition(n, "conv_id", "turn_idx")  # turn_idx = skew salt
+
+    def run(self, frame: DataFrame) -> list[dict]:
+        """Run the frame's batches in ascending batch_id order; returns one
+        stats row per batch run.  Every batch's writes have drained and its
+        lineage mark has landed when this returns — ``foreachBatch`` needs
+        that, because the stream checkpoint commits when the handler
+        returns."""
+        spark, lake, cfg, ann, dels = (
+            self.spark, self.lake, self.cfg, self.ann, self.dels
+        )
+        # ONE job sizes every batch AND enumerates the batch ids
+        batch_counts = {
+            r["batch_id"]: int(r["n"])
+            for r in frame.groupBy("batch_id")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        # incremental contract: batch N+1's output depends on batch N's RW
+        # state, so only the longest committed PREFIX of the batch order
+        # counts as done — a gap in the lineage (mid-run corruption, manual
+        # partition delete) invalidates every later batch, which is then
+        # re-run; dynamic partition overwrite makes the re-runs
+        # byte-identical replacements.
+        completed = lake.completed_batches() if self.resume else set()
+        todo = list(
+            itertools.dropwhile(lambda b: b in completed, sorted(batch_counts))
+        )
+        if not todo:
+            return []
+
+        # rebuild RW state from the committed batches below the first batch
+        # this run executes
+        drained: set[int] = {int(b) for b in completed if b < todo[0]}
+        lake_rw = lake.read(spark, "new_entities") if drained else None
+        rw_pdf = pd.DataFrame(columns=[
+            "id", "indexer", "wikipedia_id", "title", "descr", "type_",
+            "embedding",
+        ])
+        last_delta_pdf: pd.DataFrame | None = None
+        if ann:
+            # ANN modes exist for the beyond-broadcast regime, so RW state
+            # must not accrete in driver memory: it stays IN the lake's
+            # ``new_entities`` table.  The driver keeps only ``next_rw_id``
+            # plus the single in-flight delta whose async write has not
+            # drained yet (bounded at one batch); each batch's KB union reads
+            # the drained partitions back as a DataFrame (_rw_state_df).
+            next_rw_id = 0
+            if lake_rw is not None:
+                mx = (
+                    lake_rw.filter(F.col("batch_id").isin(sorted(drained)))
+                    .agg(F.max("id"))
+                    .first()[0]
+                )
+                next_rw_id = int(mx) + 1 if mx is not None else 0
+        else:
+            if lake_rw is not None:
+                rw_pdf = lake_rw.filter(
+                    F.col("batch_id").isin(sorted(drained))
+                ).drop("batch_id").toPandas()
+            # deleted RW ids are never reassigned: next_rw_id is taken
+            # before the tombstone filter
+            next_rw_id = int(rw_pdf["id"].max()) + 1 if len(rw_pdf) else 0
+            if dels and len(rw_pdf):
+                rw_pdf = rw_pdf[~rw_pdf["id"].isin(dels)].reset_index(drop=True)
+
+        # ---- build-once ANN index (FAISS build/serialize/load/add
+        # semantics, pipeline/indexer/main.py:178-214; operators/ann_index.py)
+        ann_inflight: pd.DataFrame | None = None  # in-flight delta index rows
+        if ann:
+            from incremental_entity_extraction_spark.operators.ann_index import (
+                BASE_BATCH,
+                backfill_missing_deltas,
+                ensure_ann_index,
+                persist_delta,
+                rw_delta_rows,
+            )
+            from incremental_entity_extraction_spark.operators.retrieval_ann import (  # noqa: E501
+                composite_corpus,
+            )
+
+            if self.ann_model is None:
+                # trained/bucketed ONCE per (corpus, params); a resume run
+                # loads the persisted model + rows and pays zero retraining.
+                # With ``ann_rebuild_threshold`` set, drained RW entities
+                # (the accreted deltas, frozen-centroid-assigned since build)
+                # are offered as the drift training fold: when
+                # deltas-since-training exceed the threshold ratio, ensure
+                # rebuilds once with them in the k-means sample and the
+                # backfill below re-adds them under the new model.
+                delta_corpus = None
+                if self.ann_rebuild_threshold is not None and lake_rw is not None:
+                    delta_corpus = composite_corpus(
+                        lake_rw.filter(F.col("batch_id").isin(sorted(drained)))
+                        .select("id", "indexer", "embedding")
+                    )
+                self.ann_model = ensure_ann_index(
+                    composite_corpus(self.kb_ro.select("id", "indexer", "embedding")),
+                    lake.path("ann_index"),
+                    mode=self.retrieval_mode,
+                    rebuild_threshold=self.ann_rebuild_threshold,
+                    delta_corpus=delta_corpus,
+                )
+            # backfill: drained batches whose delta commit is missing (a lake
+            # written by a pre-index version, or a fingerprint-change rebuild
+            # that wiped the rows dir) are re-assigned from new_entities —
+            # tiny per-batch frames, frozen model, byte-deterministic
+            if drained:
+                backfill_missing_deltas(
+                    self.ann_model, spark, lake_rw, drained, cfg.rw_indexer_id
+                )
+        ann_model = self.ann_model
+
+        def _rw_state_df() -> DataFrame | None:
+            """ANN modes: the RW entity table as a DataFrame — lake partitions
+            of drained batches + the one not-yet-drained in-memory delta."""
+            if not ann:
+                return None
+            parts: list[DataFrame] = []
+            cur = lake.read(spark, "new_entities")
+            if cur is not None and drained:
+                parts.append(
+                    cur.filter(F.col("batch_id").isin(sorted(drained)))
+                    .drop("batch_id")
+                )
+            if last_delta_pdf is not None and len(last_delta_pdf):
+                parts.append(spark.createDataFrame(last_delta_pdf))
+            if not parts:
+                return None
+            out = parts[0]
+            for extra in parts[1:]:
+                out = out.unionByName(extra)
+            if dels:
+                out = out.filter(~F.col("id").isin(dels))
+            return out
+
+        stats_rows = []
+        # pipeline parallelism across the batch boundary: batch N's table
+        # writes drain while batch N+1 computes — the ONLY cross-batch
+        # dependency is the (tiny) RW delta, which BatchPersist.rw_delta()
+        # returns immediately.  Lineage is marked strictly after finish(), so
+        # a crash mid-overlap leaves batch N unmarked and the prefix-resume
+        # re-runs it idempotently.
+        pending: tuple | None = None
+
+        def _drain(p) -> None:
+            b_prev, bp_prev, extra, idx_rows = p
+            stats = {**bp_prev.finish(), **extra}
+            if ann_model is not None:
+                # index delta BEFORE the lineage mark: a crash in between
+                # leaves the batch unmarked, so the re-run overwrites the
+                # partition byte-identically (frozen model ⇒ deterministic
+                # assignment).  Zero-entity batches commit a marker-only
+                # persist so resume never re-scans them.
+                persist_delta(ann_model, spark, idx_rows, int(b_prev))
+            lake.mark_complete(int(b_prev), stats)
+            drained.add(int(b_prev))  # its new_entities partition is readable
+            stats_rows.append({"batch_id": int(b_prev), **stats})
+
+        try:
+            for b in todo:
+                t0 = time.time()
+                nb_turns = batch_counts[b]
+                tb = self._salted(
+                    frame.filter(F.col("batch_id") == int(b)), nb_turns
+                )
+                nil_scored, clusters_with_ids, new_entities, triples, rw_add = (
+                    run_batch(
+                        tb, self.ro_shards, rw_pdf, next_rw_id, cfg,
+                        self.cluster_mode, self.known_words, self.encoder,
+                        self.retrieval_mode, self.kb_ro,
+                        rw_df=_rw_state_df(),
+                        ann_model=ann_model, ann_extra_rows=ann_inflight,
+                        ann_allowed_batches=(
+                            [BASE_BATCH] + sorted(drained) if ann else None
+                        ),
+                        ro_shards_bc=self.ro_shards_bc,
+                    )
+                )
+                # S7 analogue: persist the enriched mention table per batch
+                # (reference pickles outdata per batch, eval_kbp.py:654-658);
+                # encodings/candidates are dropped — recomputable and
+                # dominate bytes.
+                bp = BatchPersist().start(
+                    lake, nil_scored, clusters_with_ids, new_entities, triples,
+                    self.persist_candidates, rw_pdf_precomputed=rw_add,
+                    # write-task count sized like the compute (~2000
+                    # turns/task, see BatchPersist.start): tiny batches write
+                    # one file per table instead of one per
+                    # default-parallelism partition
+                    out_parts=max(1, nb_turns // 2000),
+                )
+                # thread RW state forward (small dimension delta)
+                add_pdf = bp.rw_delta()
+                if ann:
+                    # keep only this batch's delta in memory; older batches
+                    # are read back from the lake once their writes drain
+                    last_delta_pdf = add_pdf
+                    ann_inflight = rw_delta_rows(
+                        ann_model, add_pdf, int(b), cfg.rw_indexer_id
+                    )
+                    if len(add_pdf):
+                        next_rw_id = max(next_rw_id, int(add_pdf["id"].max()) + 1)
+                elif len(add_pdf):
+                    rw_pdf = (
+                        pd.concat([rw_pdf, add_pdf], ignore_index=True)
+                        if len(rw_pdf)
+                        else add_pdf
+                    )
+                    next_rw_id = int(rw_pdf["id"].max()) + 1
+                if pending is not None:
+                    _drain(pending)
+                    pending = None
+                # wall_s = compute wall (detect→cluster→ids→RW delta); the
+                # table writes drain during the NEXT batch's compute and are
+                # not charged
+                pending = (
+                    int(b),
+                    bp,
+                    {
+                        "n_clusters": int(len(add_pdf)),
+                        "wall_s": round(time.time() - t0, 3),
+                    },
+                    ann_inflight,
+                )
+            if pending is not None:
+                _drain(pending)
+                pending = None
+        except BaseException:
+            # batch N+1's compute failed while batch N's writes were
+            # draining: join them and mark N if they succeeded (its work is
+            # valid and the prefix-resume will restart from N+1); swallow
+            # drain errors so the original failure propagates
+            if pending is not None:
+                try:
+                    _drain(pending)
+                except Exception:
+                    pass
+            raise
+
+        # a handful of driver rows — createDataFrame spreads them over
+        # defaultParallelism partitions; one write task is the right size
+        metrics_df = spark.createDataFrame(pd.DataFrame(stats_rows)).coalesce(1)
+        lake.write_partition(metrics_df, "metrics")
+        return stats_rows
 
 
 def run_incremental(
@@ -589,7 +877,7 @@ def run_incremental(
     salt_repartition: bool | None = None,
 ) -> list[dict]:
     """Loop over batch_id in ascending order, threading KB state through the
-    lake; resumable via the lineage table.
+    lake; resumable via the lineage table (``BatchLoop``).
 
     ``single_batch=True`` is the reference's ``--no-incremental`` mode
     (scripts/eval_kbp.py:773-785, which concatenates every batch into one):
@@ -607,7 +895,6 @@ def run_incremental(
     entities can never be retrieved, the same net semantics without the
     sentinel round-trip.  Deleted RW ids are never reassigned (``next_rw_id``
     is computed before the tombstone filter)."""
-    ann = retrieval_mode in ("ivf", "ivf_pq")
     dels = sorted(int(i) for i in deleted_entity_ids) if deleted_entity_ids else []
     if dels:
         kb_ro = kb_ro.filter(~F.col("id").isin(dels))
@@ -615,273 +902,12 @@ def run_incremental(
         transcripts = transcripts.withColumn(
             "batch_id", F.lit(0).cast(transcripts.schema["batch_id"].dataType)
         )
-    # ANN modes never collect the KB — that is their point
-    ro_shards = build_kb_shards(kb_ro, n_shards) if retrieval_mode == "broadcast" else []
-    # ONE broadcast of the RO KB for the whole run: per-batch re-broadcast
-    # of an unchanged KB pays a driver pickle per batch and defeats the
-    # Python workers' broadcast-id cache (fused.detect_encode_retrieve)
-    ro_shards_bc = (
-        spark.sparkContext.broadcast(ro_shards) if ro_shards else None
+    loop = BatchLoop(
+        spark, kb_ro, lake, cfg, cluster_mode, n_shards, resume, partitions,
+        known_words, persist_candidates, dels, encoder, retrieval_mode,
+        ann_rebuild_threshold, salt_repartition,
     )
-    # ONE job sizes every batch AND enumerates the batch ids (replaces the
-    # former separate count-agg + distinct queries)
-    par = spark.sparkContext.defaultParallelism
-    batch_counts = {
-        r["batch_id"]: int(r["n"])
-        for r in transcripts.groupBy("batch_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    if partitions is not None and salt_repartition is None:
-        # an explicit partition count is a request to shape the batch's
-        # partitioning (the partition-invariance tests rely on it)
-        salt_repartition = True
-    # salt_repartition True/False forces every batch; None = decide PER
-    # BATCH in the loop: the salt shuffle exists for (a) parallelism — a
-    # byte-contiguous batch in the source parquet lands in ~one scan split
-    # — and (b) hot-conversation skew; for tiny batches it buys neither
-    # (single-task fused compute is already cheap) and its ~0.2 s/batch
-    # stage is pure serial floor (profiled), so skip below ~1000
-    # turns/batch.  Per-batch, NOT the run average: one 50k-turn batch
-    # among many tiny ones must still get its salt and its task count.
-
-    def _batch_partitions(n: int) -> int:
-        # ~2000 turns per task, bounded by executor slots: tiny batches
-        # shouldn't schedule 2×cores tasks, huge ones shouldn't underfill
-        return int(min(par * 2, max(par // 2, n / 2000, 1)))
-
-    batch_ids = sorted(batch_counts)
-    # incremental contract: batch N+1's output depends on batch N's RW state,
-    # so only the longest completed PREFIX of the batch order counts as done —
-    # a gap in the lineage (mid-run corruption, manual partition delete)
-    # invalidates every later batch, which is then re-run; dynamic partition
-    # overwrite makes the re-runs byte-identical replacements.
-    done: set = set()
-    if resume:
-        completed = lake.completed_batches()
-        for b in batch_ids:
-            if b in completed:
-                done.add(b)
-            else:
-                break
-
-    # rebuild RW state from the lake (resume) — completed prefix only
-    empty_rw = pd.DataFrame(
-        columns=["id", "indexer", "wikipedia_id", "title", "descr", "type_", "embedding"]
-    )
-    drained: set[int] = {int(b) for b in done}
-    lake_rw = lake.read(spark, "new_entities")
-    last_delta_pdf: pd.DataFrame | None = None
-    if ann:
-        # ANN modes exist for the beyond-broadcast regime, so RW state must
-        # not accrete in driver memory: it stays IN the lake's
-        # ``new_entities`` table.  The driver keeps only ``next_rw_id`` plus
-        # the single in-flight delta whose async write has not drained yet
-        # (bounded at one batch); each batch's KB union reads the drained
-        # partitions back as a DataFrame (_rw_state_df).
-        rw_pdf = empty_rw
-        next_rw_id = 0
-        if lake_rw is not None and drained:
-            mx = (
-                lake_rw.filter(F.col("batch_id").isin(sorted(drained)))
-                .agg(F.max("id"))
-                .first()[0]
-            )
-            next_rw_id = int(mx) + 1 if mx is not None else 0
-    elif lake_rw is not None and done:
-        rw_pdf = lake_rw.filter(
-            F.col("batch_id").isin([int(b) for b in done])
-        ).drop("batch_id").toPandas()
-    else:
-        rw_pdf = empty_rw
-    if not ann:
-        next_rw_id = int(rw_pdf["id"].max()) + 1 if len(rw_pdf) else 0
-        if dels and len(rw_pdf):
-            rw_pdf = rw_pdf[~rw_pdf["id"].isin(dels)].reset_index(drop=True)
-
-    # ---- build-once ANN index (FAISS build/serialize/load/add semantics,
-    # pipeline/indexer/main.py:178-214; operators/ann_index.py) -----------
-    ann_model = None
-    ann_inflight: pd.DataFrame | None = None  # in-flight delta index rows
-    if ann:
-        from incremental_entity_extraction_spark.operators.ann_index import (
-            BASE_BATCH,
-            backfill_missing_deltas,
-            ensure_ann_index,
-            persist_delta,
-            rw_delta_rows,
-        )
-        from incremental_entity_extraction_spark.operators.retrieval_ann import (
-            composite_corpus,
-        )
-
-        # trained/bucketed ONCE per (corpus, params); a resume run loads the
-        # persisted model + rows and pays zero retraining.  With
-        # ``ann_rebuild_threshold`` set, drained RW entities (the accreted
-        # deltas, frozen-centroid-assigned since build) are offered as the
-        # drift training fold: when deltas-since-training exceed the
-        # threshold ratio, ensure rebuilds once with them in the k-means
-        # sample and the backfill below re-adds them under the new model.
-        delta_corpus = None
-        if ann_rebuild_threshold is not None and lake_rw is not None and drained:
-            delta_corpus = composite_corpus(
-                lake_rw.filter(F.col("batch_id").isin(sorted(drained)))
-                .select("id", "indexer", "embedding")
-            )
-        ann_model = ensure_ann_index(
-            composite_corpus(kb_ro.select("id", "indexer", "embedding")),
-            lake.path("ann_index"),
-            mode=retrieval_mode,
-            rebuild_threshold=ann_rebuild_threshold,
-            delta_corpus=delta_corpus,
-        )
-        # backfill: drained batches whose delta commit is missing (a lake
-        # written by a pre-index version, or a fingerprint-change rebuild
-        # that wiped the rows dir) are re-assigned from new_entities — tiny
-        # per-batch frames, frozen model, byte-deterministic
-        if drained:
-            backfill_missing_deltas(
-                ann_model, spark, lake_rw, drained, cfg.rw_indexer_id
-            )
-
-    def _rw_state_df() -> DataFrame | None:
-        """ANN modes: the RW entity table as a DataFrame — lake partitions
-        of drained batches + the one not-yet-drained in-memory delta."""
-        if not ann:
-            return None
-        parts: list[DataFrame] = []
-        cur = lake.read(spark, "new_entities")
-        if cur is not None and drained:
-            parts.append(
-                cur.filter(F.col("batch_id").isin(sorted(drained))).drop("batch_id")
-            )
-        if last_delta_pdf is not None and len(last_delta_pdf):
-            parts.append(spark.createDataFrame(last_delta_pdf))
-        if not parts:
-            return None
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra)
-        if dels:
-            out = out.filter(~F.col("id").isin(dels))
-        return out
-
-    stats_rows = []
-    # pipeline parallelism across the batch boundary: batch N's table writes
-    # drain while batch N+1 computes — the ONLY cross-batch dependency is the
-    # (tiny) RW delta, which BatchPersist.rw_delta() returns immediately.
-    # Lineage is marked strictly after finish(), so a crash mid-overlap
-    # leaves batch N unmarked and the prefix-resume re-runs it idempotently.
-    pending: tuple | None = None
-
-    def _drain(p) -> None:
-        b_prev, bp_prev, extra, idx_rows = p
-        stats = {**bp_prev.finish(), **extra}
-        if ann_model is not None:
-            # index delta BEFORE the lineage mark: a crash in between leaves
-            # the batch unmarked, so the re-run overwrites the partition
-            # byte-identically (frozen model ⇒ deterministic assignment).
-            # Zero-entity batches commit a marker-only persist so resume
-            # never re-scans them.
-            persist_delta(ann_model, spark, idx_rows, int(b_prev))
-        lake.mark_complete(int(b_prev), stats)
-        drained.add(int(b_prev))  # its new_entities partition is now readable
-        stats_rows.append({"batch_id": int(b_prev), **stats})
-
     try:
-        for b in batch_ids:
-            if b in done:
-                continue
-            t0 = time.time()
-            tb = transcripts.filter(F.col("batch_id") == int(b))
-            nb_turns = batch_counts.get(b, 0)
-            salt_b = (
-                salt_repartition if salt_repartition is not None
-                else nb_turns >= 1000
-            )
-            if salt_b:
-                tb = tb.repartition(
-                    partitions if partitions is not None
-                    else _batch_partitions(nb_turns),
-                    "conv_id", "turn_idx",  # turn_idx = skew salt
-                )
-            nil_scored, clusters_with_ids, new_entities, triples, rw_add = (
-                run_batch(
-                    tb, ro_shards, rw_pdf, next_rw_id, cfg, cluster_mode,
-                    known_words, encoder, retrieval_mode, kb_ro,
-                    rw_df=_rw_state_df(),
-                    ann_model=ann_model, ann_extra_rows=ann_inflight,
-                    ann_allowed_batches=(
-                        [BASE_BATCH] + sorted(drained) if ann_model is not None
-                        else None
-                    ),
-                    ro_shards_bc=ro_shards_bc,
-                )
-            )
-            # S7 analogue: persist the enriched mention table per batch
-            # (reference pickles outdata per batch, eval_kbp.py:654-658);
-            # encodings/candidates are dropped — recomputable and dominate bytes.
-            bp = BatchPersist().start(
-                lake, nil_scored, clusters_with_ids, new_entities, triples,
-                persist_candidates, rw_pdf_precomputed=rw_add,
-                # write-task count sized like the compute (~2000 turns/task,
-                # see BatchPersist.start): tiny batches write one file per
-                # table instead of one per default-parallelism partition
-                out_parts=max(1, nb_turns // 2000),
-            )
-            # thread RW state forward (small dimension delta)
-            add_pdf = bp.rw_delta()
-            if ann:
-                # keep only this batch's delta in memory; older batches are
-                # read back from the lake once their writes drain
-                last_delta_pdf = add_pdf
-                ann_inflight = rw_delta_rows(
-                    ann_model, add_pdf, int(b), cfg.rw_indexer_id
-                )
-                if len(add_pdf):
-                    next_rw_id = max(next_rw_id, int(add_pdf["id"].max()) + 1)
-            elif len(add_pdf):
-                rw_pdf = (
-                    pd.concat([rw_pdf, add_pdf], ignore_index=True)
-                    if len(rw_pdf)
-                    else add_pdf
-                )
-                next_rw_id = int(rw_pdf["id"].max()) + 1
-            if pending is not None:
-                _drain(pending)
-                pending = None
-            # wall_s = compute wall (detect→cluster→ids→RW delta); the table
-            # writes drain during the NEXT batch's compute and are not charged
-            pending = (
-                int(b),
-                bp,
-                {
-                    "n_clusters": int(len(add_pdf)),
-                    "wall_s": round(time.time() - t0, 3),
-                },
-                ann_inflight,
-            )
-        if pending is not None:
-            _drain(pending)
-            pending = None
-    except BaseException:
-        # batch N+1's compute failed while batch N's writes were draining:
-        # join them and mark N if they succeeded (its work is valid and the
-        # prefix-resume will restart from N+1); swallow drain errors so the
-        # original failure propagates
-        if pending is not None:
-            try:
-                _drain(pending)
-            except Exception:
-                pass
-        raise
+        return loop.run(transcripts)
     finally:
-        if ro_shards_bc is not None:
-            ro_shards_bc.unpersist()
-
-    if stats_rows:
-        # a handful of driver rows — createDataFrame spreads them over
-        # defaultParallelism partitions; one write task is the right size
-        metrics_df = spark.createDataFrame(pd.DataFrame(stats_rows)).coalesce(1)
-        lake.write_partition(metrics_df, "metrics")
-    return stats_rows
+        loop.close()

@@ -3,26 +3,23 @@
 The reference's "streaming" is batch-incremental — batch files processed in
 CLI order with cross-batch KB state (SURVEY.md §2.10; eval_kbp.py:781-785).
 The Spark-native mapping is a file-source stream consumed with
-``trigger(availableNow=True)`` + ``foreachBatch``: each micro-batch applies
-the same ``run_batch`` stages and advances the lake state, and the stream
-checkpoint gives exactly-once file-level progress on top of the lake's own
-batch-id lineage (two independent resume mechanisms — either alone can
-recover the run).
+``trigger(availableNow=True)`` + ``foreachBatch``; each micro-batch is one
+``BatchLoop.run`` — the same loop ``run_incremental`` runs (pipeline.py).
 
-Within a micro-batch, batch_ids are processed in ascending order so the
-incremental contract (later batches see earlier batches' discovered
-entities) holds regardless of how the source groups files.
+The lake's lineage prefix is the resume contract: a micro-batch skips the
+longest committed prefix of its batch ids and rebuilds RW state from the
+committed batches below the first one it runs, so a lineage gap re-runs
+exactly what the batch driver re-runs.  The stream checkpoint tracks only
+which files were consumed; it commits after the handler returns, and
+``BatchLoop.run`` returns only once every batch is in the lineage.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG, PipelineConfig
-from incremental_entity_extraction_spark.operators.retrieval import build_kb_shards
-from incremental_entity_extraction_spark.pipeline import Lake, persist_batch, run_batch
+from incremental_entity_extraction_spark.pipeline import BatchLoop, Lake
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -49,170 +46,24 @@ def run_streaming_incremental(
 
     ``max_files_per_trigger`` < number of files forces multiple micro-batches
     (exercises cross-epoch state threading); ``availableNow`` drains all
-    pending input then stops.  ``encoder``/``retrieval_mode`` mirror
-    ``run_incremental`` (pipeline.py) — the ANN modes (``ivf``/``ivf_pq``)
-    use the same build-once persisted index: built/loaded lazily at the
-    first micro-batch, deltas persisted synchronously per batch (streaming
-    persists synchronously anyway), so an interrupted stream resumes with
-    zero retraining exactly like the batch driver."""
-    ann = retrieval_mode in ("ivf", "ivf_pq")
-    ro_shards = (
-        build_kb_shards(kb_ro, n_shards) if retrieval_mode == "broadcast" else []
-    )
-    # one RO-KB broadcast for the stream's lifetime (batch-driver parity —
-    # see run_incremental): per-batch re-broadcast of the unchanged KB
-    # defeats the Python workers' broadcast-id cache
-    ro_shards_bc = (
-        spark.sparkContext.broadcast(ro_shards) if ro_shards else None
-    )
-    ann_model = None
-
-    def _process(batch_df, epoch_id: int) -> None:
-        nonlocal ann_model
-        # state snapshot from the lake (epoch-safe resume)
-        done = lake.completed_batches()
-        rw_df = lake.read(spark, "new_entities")
-        empty_rw = pd.DataFrame(
-            columns=[
-                "id", "indexer", "wikipedia_id", "title", "descr", "type_",
-                "embedding",
-            ]
-        )
-        if ann:
-            # ANN modes exist for the beyond-broadcast regime: RW state must
-            # not accrete in driver memory (batch-driver parity).  The
-            # driver keeps only next_rw_id; each batch's KB union reads the
-            # visible new_entities partitions back as a DataFrame —
-            # persist_batch is synchronous here, so a batch's partition is
-            # readable before the next batch runs.
-            rw_pdf = empty_rw
-            next_rw_id = 0
-            if rw_df is not None and done:
-                mx = (
-                    rw_df.filter(
-                        F.col("batch_id").isin([int(b) for b in done])
-                    ).agg(F.max("id")).first()[0]
-                )
-                next_rw_id = int(mx) + 1 if mx is not None else 0
-        elif rw_df is not None and done:
-            rw_pdf = (
-                rw_df.filter(F.col("batch_id").isin([int(b) for b in done]))
-                .drop("batch_id")
-                .toPandas()
-            )
-            next_rw_id = int(rw_pdf["id"].max()) + 1 if len(rw_pdf) else 0
-        else:
-            rw_pdf = empty_rw
-            next_rw_id = 0
-
-        if ann and ann_model is None:
-            from incremental_entity_extraction_spark.operators.ann_index import (
-                ensure_ann_index,
-            )
-            from incremental_entity_extraction_spark.operators.retrieval_ann import (
-                composite_corpus,
-            )
-
-            # batch-driver parity: drained RW entities offered as the drift
-            # training fold when the rebuild threshold is set (pipeline.py)
-            delta_corpus = None
-            if ann_rebuild_threshold is not None and rw_df is not None and done:
-                delta_corpus = composite_corpus(
-                    rw_df.filter(
-                        F.col("batch_id").isin([int(b) for b in done])
-                    ).select("id", "indexer", "embedding")
-                )
-            ann_model = ensure_ann_index(
-                composite_corpus(kb_ro.select("id", "indexer", "embedding")),
-                lake.path("ann_index"),
-                mode=retrieval_mode,
-                rebuild_threshold=ann_rebuild_threshold,
-                delta_corpus=delta_corpus,
-            )
-        if ann:
-            from incremental_entity_extraction_spark.operators.ann_index import (
-                BASE_BATCH,
-                backfill_missing_deltas,
-                persist_delta,
-                rw_delta_rows,
-            )
-
-            # backfill deltas a pre-index lake (or a rebuild) is missing;
-            # marker-only persists for zero-entity batches keep this loop
-            # empty on later epochs (shared helper — batch driver parity)
-            backfill_missing_deltas(
-                ann_model, spark, rw_df, done, cfg.rw_indexer_id
-            )
-
-        visible = sorted(int(b) for b in done)
-
-        def _rw_state_df():
-            """ANN modes: visible new_entities partitions as a DataFrame —
-            re-read per batch so driver memory stays O(1)."""
-            if not ann or not visible:
-                return None
-            cur = lake.read(spark, "new_entities")
-            if cur is None:
-                return None
-            return cur.filter(F.col("batch_id").isin(visible)).drop("batch_id")
-
-        batch_ids = sorted(
-            r["batch_id"]
-            for r in batch_df.select("batch_id").distinct().collect()
-        )
-        for b in batch_ids:
-            if b in done:
-                continue
-            tb = batch_df.filter(F.col("batch_id") == int(b))
-            nil_scored, clusters_with_ids, new_entities, triples, rw_add = (
-                run_batch(
-                    tb, ro_shards, rw_pdf, next_rw_id, cfg, cluster_mode,
-                    known_words, encoder, retrieval_mode, kb_ro,
-                    rw_df=_rw_state_df(),
-                    ann_model=ann_model,
-                    ann_allowed_batches=(
-                        [BASE_BATCH] + visible if ann_model is not None
-                        else None
-                    ),
-                    ro_shards_bc=ro_shards_bc,
-                )
-            )
-            add_pdf, _counts = persist_batch(
-                lake, nil_scored, clusters_with_ids, new_entities, triples,
-                persist_candidates, rw_pdf_precomputed=rw_add,
-            )
-            if ann:
-                # synchronous delta persist BEFORE the lineage mark — the
-                # same crash-window ordering as run_incremental._drain
-                persist_delta(
-                    ann_model, spark,
-                    rw_delta_rows(ann_model, add_pdf, int(b), cfg.rw_indexer_id),
-                    int(b),
-                )
-                visible.append(int(b))
-                if len(add_pdf):
-                    next_rw_id = max(next_rw_id, int(add_pdf["id"].max()) + 1)
-            elif len(add_pdf):
-                rw_pdf = (
-                    pd.concat([rw_pdf, add_pdf], ignore_index=True)
-                    if len(rw_pdf)
-                    else add_pdf
-                )
-                next_rw_id = int(rw_pdf["id"].max()) + 1
-            lake.mark_complete(int(b), {"epoch": int(epoch_id)})
-
-    reader = spark.readStream.schema(TRANSCRIPT_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(transcripts_path)
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", lake.path("_stream_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    pending input then stops.  The other options are ``run_incremental``'s."""
+    loop = BatchLoop(
+        spark, kb_ro, lake, cfg, cluster_mode, n_shards,
+        known_words=known_words, persist_candidates=persist_candidates,
+        encoder=encoder, retrieval_mode=retrieval_mode,
+        ann_rebuild_threshold=ann_rebuild_threshold,
     )
     try:
+        reader = spark.readStream.schema(TRANSCRIPT_DDL)
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        q = (
+            reader.parquet(transcripts_path)
+            .writeStream.foreachBatch(lambda df, _epoch: loop.run(df))
+            .option("checkpointLocation", lake.path("_stream_checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination()
     finally:
-        if ro_shards_bc is not None:
-            ro_shards_bc.unpersist()
+        loop.close()

@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from incremental_entity_extraction_spark.operators.clustering import (
     cluster_cc,
-    cluster_cc_lsh,
     nil_edges,
     nil_edges_lsh,
 )
@@ -50,7 +49,7 @@ def test_lsh_edges_subset_of_exact(spark, spark_world, cfg):
 def test_cc_lsh_partition_close_to_exact(spark, spark_world, cfg):
     nil_df = _nil_df(spark, spark_world, cfg)
     exact = _partition(cluster_cc(nil_df, cfg).toPandas())
-    lsh = _partition(cluster_cc_lsh(nil_df, cfg).toPandas())
+    lsh = _partition(cluster_cc(nil_df, cfg, lsh_threshold=0).toPandas())
     # same mention universe, and most clusters identical
     assert sorted(sum(exact, [])) == sorted(sum(lsh, []))
     same = sum(1 for c in lsh if c in exact)

@@ -66,6 +66,28 @@ def test_refresh_and_manifest_read_equals_dir_read(spark, world, make_store):
     assert _rows(spark, world, st) == plain
 
 
+def test_empty_governed_partition_is_not_pinned(spark, world, make_store):
+    """A partition committed with no files counts as ungoverned: once a
+    writer repopulates it, reads see its rows and a refresh lists its
+    files instead of keeping the vacuous empty list."""
+    st = make_store(world)
+    pdir = os.path.join(world, "batch_id=1")
+    for f in os.listdir(pdir):
+        os.remove(os.path.join(pdir, f))
+    mf.refresh_manifest(world, store=st)
+    assert mf.current_manifest(world, store=st)["files"]["batch_id=1"] == []
+    _write_batch(spark, world, 1, 500, 580, 2)
+    expect = {(i, 2 * i, 0) for i in range(100)} | {
+        (i, 2 * i, 1) for i in range(500, 580)
+    }
+    assert _rows(spark, world, st) == expect
+    mf.refresh_manifest(world, store=st)
+    got = mf.current_manifest(world, store=st)["files"]["batch_id=1"]
+    assert got == sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))
+    assert got
+    assert _rows(spark, world, st) == expect
+
+
 def test_compact_commit_and_both_crash_windows(spark, world, make_store):
     st = make_store(world)
     before = _rows(spark, world, st)

@@ -76,7 +76,8 @@ def test_ann_top1_agrees_with_exact(enriched_pair):
 
 @pytest.mark.parametrize("mode", ["ivf", "ivf_pq"])
 def test_run_batch_ann_modes_require_model(spark_world, cfg, mode):
-    """The persisted index is the only ANN path: no per-call fallback."""
+    """The persisted index is the only ANN path: no per-call fallback, and
+    no rw_pdf entities outside it."""
     import pandas as pd
 
     from incremental_entity_extraction_spark.pipeline import run_batch
@@ -85,6 +86,13 @@ def test_run_batch_ann_modes_require_model(spark_world, cfg, mode):
         run_batch(
             spark_world["transcripts"], [], pd.DataFrame(), 0, cfg,
             retrieval_mode=mode, kb_ro_df=spark_world["entities_kb"],
+        )
+    # RW state rides rw_df only: rw_pdf entities would have no index rows
+    with pytest.raises(ValueError, match="takes RW state as rw_df"):
+        run_batch(
+            spark_world["transcripts"], [], pd.DataFrame({"id": [0]}), 0, cfg,
+            retrieval_mode=mode, kb_ro_df=spark_world["entities_kb"],
+            ann_model=object(),
         )
 
 

@@ -1,5 +1,7 @@
 """Structured Streaming incremental run == batch incremental run."""
 
+import json
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -119,3 +121,36 @@ def test_streaming_ivf_pq_equals_batch_ivf_pq(spark, spark_world, world, cfg, tm
     import os
 
     assert os.path.isdir(stream_lake.path("ann_index"))
+
+
+def test_streaming_resume_after_lineage_gap(spark, spark_world, world, cfg, tmp_path):
+    """The lineage PREFIX is the streaming driver's resume contract too: with
+    batch 1's line cut from a complete lake, the stream must re-run batches
+    1.. against batch 0's RW state only, exactly like run_incremental."""
+    lake = Lake(str(tmp_path / "gap_lake"))
+    run_incremental(
+        spark, spark_world["transcripts"], spark_world["entities_kb"], lake,
+        cfg, cluster_mode="greedy_replay",
+    )
+    expected = _triples(spark, lake)
+
+    lines = open(lake.lineage_path()).read().strip().split("\n")
+    kept = [ln for ln in lines if json.loads(ln)["batch_id"] != 1]
+    assert len(kept) == len(lines) - 1
+    with open(lake.lineage_path(), "w") as f:
+        f.write("\n".join(kept) + "\n")
+
+    src = str(tmp_path / "src_gap")
+    for b in sorted(world.transcripts["batch_id"].unique()):
+        spark_world["transcripts"].filter(F.col("batch_id") == int(b)).coalesce(
+            1
+        ).write.mode("append").parquet(src)
+
+    run_streaming_incremental(
+        spark, src, spark_world["entities_kb"], lake, cfg,
+        cluster_mode="greedy_replay",
+    )
+    assert _triples(spark, lake) == expected
+    assert lake.completed_batches() == set(
+        int(b) for b in world.transcripts["batch_id"].unique()
+    )
