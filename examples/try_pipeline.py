@@ -16,8 +16,7 @@ sys.path.insert(0, ".")
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG as cfg
 from incremental_entity_extraction_spark.fixtures import make_world
 from incremental_entity_extraction_spark.operators.clustering import (
-    cluster_greedy_replay,
-    summarize_clusters_df,
+    cluster_summarize_batches,
 )
 from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
 from incremental_entity_extraction_spark.operators.kb import (
@@ -66,8 +65,7 @@ def main() -> None:
         "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
         "mention", "context_left", "context_right", "encoding",
     )
-    labels = cluster_greedy_replay(nil_df, cfg)
-    clusters = summarize_clusters_df(nil_df, labels, cfg)
+    clusters = cluster_summarize_batches(nil_df, cfg, "greedy_replay")
     clusters.select("title", "nelements", "mentions").show(5, truncate=50)
 
     print("== 6. KB augmentation (M12)")

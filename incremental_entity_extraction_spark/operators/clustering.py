@@ -1,36 +1,39 @@
-"""M8/M11 — NIL clustering + cluster summarization.
+"""M8–M11 — NIL clustering + cluster summarization.
 
-Reference: the greedyclustering service builds the full dot-product matrix
-over a batch's NIL mentions and runs a sequential last-writer-wins label
-loop with threshold 80.98... (pipeline/greedyclustering/__main__.py:30-34,
-52-59); clusters are summarized with modal title + medoid center
+Reference: each batch's NIL mentions go to one clustering service call, and
+the greedy, 3-step and TF-IDF services are interchangeable behind one port
+(pipeline/docker-compose.yml:56-91).  The greedy service builds the full
+dot-product matrix over the batch and runs a sequential last-writer-wins
+label loop with threshold 80.98... (pipeline/greedyclustering/__main__.py:
+30-34, 52-59); clusters are summarized with modal title + medoid center
 (__main__.py:63-78).
 
-Spark design (SURVEY.md §7.4): two interchangeable engines —
+Spark design: every ``cluster_mode`` is a per-batch kernel of one shape,
+``<kernel>(pdf, th)``: one batch's NIL rows as pandas in, ``CLUSTER_SCHEMA``
+rows out (``CLUSTER_KERNELS`` names them).  A kernel only decides the root
+row of each row; ``_summarize``, shared with ``summarize_clusters_df``,
+turns roots into summary rows (label = the root's mention_id, members in
+canonical (conv_id, turn_idx, start_tok) order, modal title, medoid center).
 
-* ``cc``  (default, the scale path): build the ``score > threshold`` edge
-  graph via broadcast-matrix scoring (each partition scores its rows against
-  the broadcast NIL matrix — an embarrassingly parallel n×n block sweep),
-  then run iterative min-label propagation (connected components) with
-  ``localCheckpoint`` every iteration to cut lineage (SURVEY.md §4).
-  Deterministic: the component label is the lexicographically smallest
-  member mention_id.
+* ``cc`` (default): components of the ``score > threshold`` graph; label =
+  the lexicographically smallest member mention_id.
+* ``greedy_replay``: the reference's sequential loop in canonical order —
+  bit-identical to the oracle.
+* ``three_step`` / ``tfidf``: the reference's alternative services (M9/M10).
 
-* ``greedy_replay`` (strict-parity mode): ``applyInPandas`` per batch
-  replaying the reference's exact sequential loop in canonical
-  (conv_id, turn_idx, start_tok) order.  Bit-identical to the oracle; only
-  usable while a batch's NIL set fits one task (the reference has the same
-  single-node constraint).
-
-At 10^12-turn scale the NIL set per batch is bounded by the NIL rate (~10%)
-of a batch slice; the cc engine's edge sweep shards the matrix over mention
-partitions, and giant components are bounded by the threshold (hot keys are
-handled upstream by the salted conv_id repartition in the pipeline driver).
+pipeline.run_batch runs the kernel on the driver while a batch's NIL set is
+small, and otherwise in one applyInPandas task per batch
+(``cluster_summarize_batches``) — the reference has the same single-node
+constraint.  Only ``cc`` has a distributed path past one task: edges by a
+broadcast block-row sweep (``nil_edges``; LSH-blocked above
+``lsh_threshold`` rows, ``nil_edges_lsh``), components by large-star /
+small-star rounds (``connected_components_star``), then
+``summarize_clusters_df``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -43,13 +46,8 @@ from incremental_entity_extraction_spark.functions.cluster_math import (
     greedy_cluster_labels,
     medoid_index,
     modal_value,
-)
-
-_LABEL_SCHEMA = T.StructType(
-    [
-        T.StructField("mention_id", T.StringType(), False),
-        T.StructField("cluster_label", T.StringType(), False),
-    ]
+    three_step_cluster_labels,
+    tfidf_cluster_labels,
 )
 
 CLUSTER_SCHEMA = T.StructType(
@@ -63,10 +61,25 @@ CLUSTER_SCHEMA = T.StructType(
         T.StructField("center", T.ArrayType(T.FloatType()), False),
     ]
 )
+_CLUSTER_COLS = [f.name for f in CLUSTER_SCHEMA.fields]
+_CANONICAL = ["conv_id", "turn_idx", "start_tok"]
+
+# mode -> kernel NAME: pipeline resolves the name in its own namespace at
+# call time, so a wrapper installed there (perfbench's tracer) sees the call
+CLUSTER_KERNELS = {
+    "cc": "cc_summarize_pdf",
+    "greedy_replay": "greedy_summarize_pdf",
+    "three_step": "three_step_summarize_pdf",
+    "tfidf": "tfidf_summarize_pdf",
+}
+
+
+def _matrix(encodings) -> np.ndarray:
+    return np.stack([np.asarray(e, dtype=np.float32) for e in encodings])
 
 
 # --------------------------------------------------------------------------
-# engine 1: connected components on the threshold graph
+# cc's distributed path: threshold-graph edges + connected components
 # --------------------------------------------------------------------------
 def nil_edges(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Edge list (src, dst) where dot(enc_src, enc_dst) > threshold, src≠dst,
@@ -82,7 +95,7 @@ def nil_edges(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         return spark.createDataFrame(
             [], "batch_id int, src string, dst string"
         )
-    mat = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
+    mat = _matrix(pdf["encoding"])
     ids = pdf["mention_id"].to_numpy()
     batches = pdf["batch_id"].to_numpy()
     bc = spark.sparkContext.broadcast((mat, ids, batches))
@@ -101,10 +114,7 @@ def nil_edges(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         for pdf_part in it:
             if len(pdf_part) == 0:
                 continue
-            enc = np.stack(
-                [np.asarray(e, dtype=np.float32) for e in pdf_part["encoding"]]
-            )
-            scores = enc @ all_mat.T
+            scores = _matrix(pdf_part["encoding"]) @ all_mat.T
             src_ids = pdf_part["mention_id"].to_numpy()
             src_b = pdf_part["batch_id"].to_numpy()
             rows, cols = np.where(scores > th)
@@ -179,7 +189,6 @@ def cluster_cc(
     nil_df: DataFrame,
     cfg: PipelineConfig,
     lsh_threshold: int = 200_000,
-    small_graph_edges: int = 100_000,
     n_rows: int | None = None,
 ) -> DataFrame:
     """CC engine: (mention_id, cluster_label) for all NIL mentions.
@@ -201,91 +210,38 @@ def cluster_cc(
         edges = nil_edges_lsh(nil_df, cfg)
     else:
         edges = nil_edges(nil_df, cfg)
-    return connected_components_star(
-        nil_df.select("mention_id"), edges, small_graph_edges=small_graph_edges
-    )
+    return connected_components_star(nil_df.select("mention_id"), edges)
 
 
 # --------------------------------------------------------------------------
-# engine 2: strict greedy replay (reference-exact)
+# per-batch kernels and the one summary builder (A2/A3/A10)
 # --------------------------------------------------------------------------
-def cluster_greedy_replay(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """applyInPandas per batch: replay the reference's sequential loop in
-    canonical order; label = mention_id of the cluster's label row."""
-    th = float(cfg.greedy_threshold)
-
-    def _replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "turn_idx", "start_tok"]).reset_index(
-            drop=True
-        )
-        enc = (
-            np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
-            if len(pdf)
-            else np.zeros((0, 1), np.float32)
-        )
-        labels = greedy_cluster_labels(enc, th)
-        return pd.DataFrame(
-            {
-                "mention_id": pdf["mention_id"],
-                "cluster_label": pdf["mention_id"].iloc[labels].to_numpy(),
-            }
-        )
-
-    return nil_df.select(
-        "batch_id", "conv_id", "turn_idx", "start_tok", "mention_id", "encoding"
-    ).groupBy("batch_id").applyInPandas(_replay, schema=_LABEL_SCHEMA)
-
-
-def cluster_summarize_greedy(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """greedy_replay + summarization fused into ONE ``groupBy(batch_id)``
-    pass: the replay task already holds the whole batch's NIL rows in
-    canonical order, so the cluster summaries (modal title, medoid center,
-    member lists) are computed in place — one shuffle + one Python stage
-    instead of two of each.  Label assignments are recovered downstream
-    JVM-side by exploding ``mentions_id`` (run_batch), so the output is
-    exactly ``summarize_clusters_df(nil_df, cluster_greedy_replay(nil_df))``
-    (member lists are in canonical batch order in both)."""
-    th = float(cfg.greedy_threshold)
-
-    def _replay_summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        return greedy_summarize_pdf(pdf, th)
-
-    return nil_df.select(
-        "batch_id", "conv_id", "turn_idx", "start_tok", "mention_id",
-        "mention", "encoding",
-    ).groupBy("batch_id").applyInPandas(_replay_summarize, schema=CLUSTER_SCHEMA)
-
-
-def greedy_summarize_pdf(pdf: pd.DataFrame, th: float) -> pd.DataFrame:
-    """One batch's NIL rows (pandas) -> cluster summary rows — the
-    ``cluster_summarize_greedy`` task kernel as a plain function, shared by
-    the applyInPandas wrapper and the driver-gated tiny-batch path
-    (pipeline.run_batch), so both produce identical rows by construction."""
-    pdf = pdf.sort_values(["conv_id", "turn_idx", "start_tok"]).reset_index(
-        drop=True
-    )
+def _summarize(
+    pdf: pd.DataFrame, roots: Callable[[pd.DataFrame, np.ndarray], np.ndarray]
+) -> pd.DataFrame:
+    """The summary builder every kernel ends in.  Sorts ``pdf`` (one batch's
+    NIL rows, or one cluster's) into canonical order, asks
+    ``roots(pdf, enc)`` for the root row index of each row, and emits one
+    CLUSTER_SCHEMA row per root: label = the root's mention_id, members in
+    canonical order, modal title, medoid center."""
     if len(pdf) == 0:
-        return pd.DataFrame(columns=[f.name for f in CLUSTER_SCHEMA.fields])
-    enc = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
-    labels = greedy_cluster_labels(enc, th)  # root row index per row
-    rows = []
+        return pd.DataFrame(columns=_CLUSTER_COLS)
+    pdf = pdf.sort_values(_CANONICAL).reset_index(drop=True)
+    enc = _matrix(pdf["encoding"])
+    root = np.asarray(roots(pdf, enc))
+    ids, mentions = pdf["mention_id"].tolist(), pdf["mention"].tolist()
     batch_id = int(pdf["batch_id"].iloc[0])
-    for root in pd.unique(labels):
-        members = np.where(labels == root)[0]  # canonical order preserved
+    rows = []
+    for r in pd.unique(root):
+        members = np.flatnonzero(root == r)  # canonical order preserved
         sub_enc = enc[members]
-        mentions = [pdf["mention"].iloc[i] for i in members]
-        rows.append(
-            {
-                "cluster_label": pdf["mention_id"].iloc[int(root)],
-                "batch_id": batch_id,
-                "title": modal_value(mentions),
-                "nelements": len(members),
-                "mentions_id": [pdf["mention_id"].iloc[i] for i in members],
-                "mentions": mentions,
-                "center": sub_enc[medoid_index(sub_enc)].tolist(),
-            }
-        )
-    return pd.DataFrame(rows, columns=[f.name for f in CLUSTER_SCHEMA.fields])
+        ms = [mentions[i] for i in members]
+        rows.append((
+            ids[r], batch_id, modal_value(ms), len(members),
+            [ids[i] for i in members], ms,
+            sub_enc[medoid_index(sub_enc)].tolist(),
+        ))
+    return pd.DataFrame(rows, columns=_CLUSTER_COLS)
 
 
 def min_rank_labels(
@@ -325,88 +281,87 @@ def min_rank_labels(
     return label
 
 
-def cluster_summarize_cc(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """CC edges + components + summarization fused into ONE
-    ``groupBy(batch_id)`` pass — the small-batch fast path for
-    ``cluster_mode='cc'`` (pipeline.run_batch gates on NIL count,
-    ``pipeline.CC_FUSED_MAX``); the composed distributed chain
-    (``cluster_cc`` → ``summarize_clusters_df``) remains the path above the
-    gate and its output is identical (tested row-for-row).
-
-    Inside the task: threshold the dot-product graph (chunked matmul, same
-    f32 kernel as ``nil_edges``), find components by vectorized min-RANK
-    propagation over the boolean adjacency (rank = lexicographic order of
-    mention_id — the CC engines' string-min label contract), then emit the
-    same summary rows as ``summarize_clusters_df`` (members in canonical
-    (conv_id, turn_idx, start_tok) order, modal title, medoid center).
-    """
-    th = float(cfg.greedy_threshold)
-
-    def _cc_summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        return cc_summarize_pdf(pdf, th)
-
-    return nil_df.select(
-        "batch_id", "conv_id", "turn_idx", "start_tok", "mention_id",
-        "mention", "encoding",
-    ).groupBy("batch_id").applyInPandas(_cc_summarize, schema=CLUSTER_SCHEMA)
+def _cc_roots(ids: np.ndarray, enc: np.ndarray, th: float) -> np.ndarray:
+    """Root row per row: the component's lexicographically smallest
+    mention_id (the label contract of ``connected_components_star``).
+    Thresholds the dot-product graph in chunked f32 matmul tiles (≈8 MB, the
+    same kernel as ``nil_edges``), then runs ``min_rank_labels`` with rank =
+    string order of mention_id."""
+    n = len(ids)
+    inv = np.argsort(ids.astype(object), kind="stable")  # rank -> row
+    rank = np.empty(n, dtype=np.int64)
+    rank[inv] = np.arange(n)
+    chunk = max(1, min(4096, (1 << 21) // n))
+    adj_chunks: list[np.ndarray] = []
+    for i0 in range(0, n, chunk):
+        A = enc[i0 : i0 + chunk] @ enc.T > th
+        np.fill_diagonal(A[:, i0 : i0 + chunk], False)
+        adj_chunks.append(A)
+    return inv[min_rank_labels(adj_chunks, rank, inv)]
 
 
 def cc_summarize_pdf(pdf: pd.DataFrame, th: float) -> pd.DataFrame:
-    """One batch's NIL rows (pandas) -> cluster summary rows — the
-    ``cluster_summarize_cc`` task kernel as a plain function, shared by the
-    applyInPandas wrapper and the driver-gated tiny-batch path
-    (pipeline.run_batch), so both produce identical rows by construction."""
-    pdf = pdf.sort_values(["conv_id", "turn_idx", "start_tok"]).reset_index(
-        drop=True
+    """``cc``: connected components of the ``score > th`` graph."""
+    return _summarize(
+        pdf, lambda p, enc: _cc_roots(p["mention_id"].to_numpy(), enc, th)
     )
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(columns=[f.name for f in CLUSTER_SCHEMA.fields])
-    enc = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
-    ids = pdf["mention_id"].to_numpy()
-    # lexicographic rank of each mention_id (string order == the label
-    # contract of connected_components_star / _components_union_find)
-    order = np.argsort(ids.astype(object), kind="stable")
-    rank = np.empty(n, dtype=np.int64)
-    rank[order] = np.arange(n)
-    # boolean adjacency, chunked to keep each score tile ≈ 8 MB
-    chunk = max(1, min(4096, (1 << 21) // max(n, 1)))
-    adj_chunks: list[np.ndarray] = []
-    for i0 in range(0, n, chunk):
-        S = enc[i0 : i0 + chunk] @ enc.T
-        A = S > th
-        np.fill_diagonal(A[:, i0 : i0 + chunk], False)
-        adj_chunks.append(A)
-    inv = np.empty(n, dtype=np.int64)  # rank -> row index
-    inv[rank] = np.arange(n)
-    label = min_rank_labels(adj_chunks, rank, inv)
-    rows = []
-    batch_id = int(pdf["batch_id"].iloc[0])
-    for root_rank in pd.unique(label):
-        members = np.where(label == root_rank)[0]  # canonical order
-        sub_enc = enc[members]
-        mentions = [pdf["mention"].iloc[i] for i in members]
-        rows.append(
-            {
-                "cluster_label": ids[inv[int(root_rank)]],
-                "batch_id": batch_id,
-                "title": modal_value(mentions),
-                "nelements": len(members),
-                "mentions_id": [ids[i] for i in members],
-                "mentions": mentions,
-                "center": sub_enc[medoid_index(sub_enc)].tolist(),
-            }
-        )
-    return pd.DataFrame(rows, columns=[f.name for f in CLUSTER_SCHEMA.fields])
 
 
-# --------------------------------------------------------------------------
-# summarization (A2/A3/A10)
-# --------------------------------------------------------------------------
+def greedy_summarize_pdf(pdf: pd.DataFrame, th: float) -> pd.DataFrame:
+    """``greedy_replay``: the reference's sequential loop at ``th``."""
+    return _summarize(pdf, lambda p, enc: greedy_cluster_labels(enc, th))
+
+
+def three_step_summarize_pdf(pdf: pd.DataFrame, th: float) -> pd.DataFrame:
+    """``three_step`` (M9): string, cosine and centroid single-link steps at
+    the reference service's own thresholds, so ``th`` is unused."""
+    return _summarize(
+        pdf, lambda p, enc: three_step_cluster_labels(list(p["mention"]), enc)
+    )
+
+
+def tfidf_summarize_pdf(pdf: pd.DataFrame, th: float) -> pd.DataFrame:
+    """``tfidf`` (M10): the blended char-bigram/context TF-IDF kernel and
+    greedy loop at the reference service's threshold (0.984375,
+    pipeline/docker-compose.yml:91), so ``th`` is unused.  Needs the
+    ``context_left`` / ``context_right`` columns."""
+
+    def roots(p: pd.DataFrame, enc: np.ndarray) -> np.ndarray:
+        ctx = p["context_left"].fillna("") + " " + p["context_right"].fillna("")
+        return tfidf_cluster_labels(list(p["mention"]), list(ctx))
+
+    return _summarize(pdf, roots)
+
+
+def kernel_frame(nil_df: DataFrame, cluster_mode: str) -> DataFrame:
+    """The NIL columns the mode's kernel reads (contexts only for tfidf)."""
+    extra = ["context_left", "context_right"] if cluster_mode == "tfidf" else []
+    return nil_df.select(
+        "batch_id", *_CANONICAL, "mention_id", "mention", "encoding", *extra
+    )
+
+
+def cluster_summarize_batches(
+    nil_df: DataFrame, cfg: PipelineConfig, cluster_mode: str
+) -> DataFrame:
+    """The mode's kernel in one applyInPandas task per batch — the
+    executor-side twin of the pipeline's driver path, same rows."""
+    kernel = globals()[CLUSTER_KERNELS[cluster_mode]]
+    th = float(cfg.greedy_threshold)
+
+    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        return kernel(pdf, th)
+
+    return kernel_frame(nil_df, cluster_mode).groupBy("batch_id").applyInPandas(
+        _batch, schema=CLUSTER_SCHEMA
+    )
+
+
 def summarize_clusters_df(
     nil_df: DataFrame, labels: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
-    """Per-cluster summary row: modal title, size, member lists, medoid center.
+    """Per-cluster summary rows for (mention_id, cluster_label) labels whose
+    label is a member's mention_id (every engine's contract).
 
     groupBy(cluster_label) + applyInPandas — the medoid needs the member
     encodings in one place; cluster sizes are bounded by the threshold graph
@@ -414,111 +369,34 @@ def summarize_clusters_df(
     >25 unique mentions, threestepclustering/__main__.py:174-189).
     """
     joined = nil_df.select(
-        "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
-        "mention", "encoding",
+        "mention_id", *_CANONICAL, "batch_id", "mention", "encoding",
     ).join(labels, "mention_id")
 
-    def _summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "turn_idx", "start_tok"]).reset_index(
-            drop=True
-        )
-        enc = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
-        med = medoid_index(enc)
-        return pd.DataFrame(
-            {
-                "cluster_label": [pdf["cluster_label"].iloc[0]],
-                "batch_id": [int(pdf["batch_id"].iloc[0])],
-                "title": [modal_value(list(pdf["mention"]))],
-                "nelements": [len(pdf)],
-                "mentions_id": [list(pdf["mention_id"])],
-                "mentions": [list(pdf["mention"])],
-                "center": [enc[med].tolist()],
-            }
+    def _cluster(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _summarize(
+            pdf,
+            lambda p, enc: np.full(
+                len(p), list(p["mention_id"]).index(p["cluster_label"].iloc[0])
+            ),
         )
 
     return joined.groupBy("cluster_label").applyInPandas(
-        _summarize, schema=CLUSTER_SCHEMA
+        _cluster, schema=CLUSTER_SCHEMA
     )
-
-
-# --------------------------------------------------------------------------
-# engines 3/4: 3-step clustering (M9) and TF-IDF feature clustering (M10)
-# --------------------------------------------------------------------------
-def cluster_three_step(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """M9 — per-batch applyInPandas running the 3-step kernel
-    (functions.cluster_math.three_step_cluster_labels) in canonical order;
-    label = mention_id of the cluster's root row."""
-    from incremental_entity_extraction_spark.functions.cluster_math import (
-        three_step_cluster_labels,
-    )
-
-    def _replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "turn_idx", "start_tok"]).reset_index(
-            drop=True
-        )
-        if len(pdf) == 0:
-            return pd.DataFrame({"mention_id": [], "cluster_label": []})
-        enc = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
-        labels = three_step_cluster_labels(list(pdf["mention"]), enc)
-        return pd.DataFrame(
-            {
-                "mention_id": pdf["mention_id"],
-                "cluster_label": pdf["mention_id"].iloc[labels].to_numpy(),
-            }
-        )
-
-    return nil_df.select(
-        "batch_id", "conv_id", "turn_idx", "start_tok", "mention_id",
-        "mention", "encoding",
-    ).groupBy("batch_id").applyInPandas(_replay, schema=_LABEL_SCHEMA)
-
-
-def cluster_tfidf(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """M10 — per-batch applyInPandas running the blended char-bigram/context
-    TF-IDF kernel + greedy loop (threshold 0.984375,
-    pipeline/docker-compose.yml:91)."""
-    from incremental_entity_extraction_spark.functions.cluster_math import (
-        tfidf_cluster_labels,
-    )
-
-    def _replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["conv_id", "turn_idx", "start_tok"]).reset_index(
-            drop=True
-        )
-        if len(pdf) == 0:
-            return pd.DataFrame({"mention_id": [], "cluster_label": []})
-        contexts = (
-            pdf["context_left"].fillna("") + " " + pdf["context_right"].fillna("")
-        )
-        labels = tfidf_cluster_labels(list(pdf["mention"]), list(contexts))
-        return pd.DataFrame(
-            {
-                "mention_id": pdf["mention_id"],
-                "cluster_label": pdf["mention_id"].iloc[labels].to_numpy(),
-            }
-        )
-
-    return nil_df.select(
-        "batch_id", "conv_id", "turn_idx", "start_tok", "mention_id",
-        "mention", "context_left", "context_right",
-    ).groupBy("batch_id").applyInPandas(_replay, schema=_LABEL_SCHEMA)
 
 
 # --------------------------------------------------------------------------
 # scale hardening: LSH pre-blocking for giant NIL sets
 # --------------------------------------------------------------------------
-def nil_edges_lsh(
-    nil_df: DataFrame,
-    cfg: PipelineConfig,
-    n_planes: int = 6,
-    n_tables: int = 8,
-    seed: int = 23,
-) -> DataFrame:
+_LSH_PLANES, _LSH_TABLES, _LSH_SEED = 6, 8, 23
+
+
+def nil_edges_lsh(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Edge list via sign-projection LSH blocking — no broadcast of the NIL
     matrix, no n² sweep.
 
-    Each of ``n_tables`` hash tables buckets vectors by the sign pattern of
-    ``n_planes`` random projections; candidate pairs are generated within
+    Each of ``_LSH_TABLES`` hash tables buckets vectors by the sign pattern
+    of ``_LSH_PLANES`` random projections; candidate pairs are generated within
     (batch_id, table, bucket) groups and verified exactly.  For the greedy
     threshold's cosine regime (> 0.81), 6 planes × 8 tables collide a
     qualifying pair with p ≈ 0.91+ (higher for tighter pairs), and the CC
@@ -528,8 +406,10 @@ def nil_edges_lsh(
     """
     spark = nil_df.sparkSession
     dim = cfg.dim
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, dim, n_planes)).astype(np.float32)
+    rng = np.random.default_rng(_LSH_SEED)
+    planes = rng.standard_normal(
+        (_LSH_TABLES, dim, _LSH_PLANES)
+    ).astype(np.float32)
     bc = spark.sparkContext.broadcast(planes)
     th = float(cfg.greedy_threshold)
 
@@ -548,7 +428,7 @@ def nil_edges_lsh(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            X = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
+            X = _matrix(pdf["encoding"])
             frames = []
             for t_i in range(P.shape[0]):
                 signs = (X @ P[t_i]) > 0
@@ -581,7 +461,7 @@ def nil_edges_lsh(
     def _verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame({"batch_id": [], "src": [], "dst": []})
-        X = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
+        X = _matrix(pdf["encoding"])
         S = X @ X.T
         ii, jj = np.where(np.triu(S > th, k=1))
         ids = pdf["mention_id"].to_numpy()
@@ -601,7 +481,7 @@ def nil_edges_lsh(
 
 
 # --------------------------------------------------------------------------
-# alternative CC: large-star / small-star (O(log n) rounds)
+# components: large-star / small-star (O(log n) rounds)
 # --------------------------------------------------------------------------
 def _star_pass(e: DataFrame, large: bool) -> DataFrame:
     """One large-star (connect strictly-greater neighbors to the

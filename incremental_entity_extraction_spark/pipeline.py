@@ -43,16 +43,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG, PipelineConfig
-from incremental_entity_extraction_spark.operators.clustering import (
+# the four per-batch kernels are imported for _driver_cluster_assign, which
+# resolves them through this module's globals at call time
+from incremental_entity_extraction_spark.operators.clustering import (  # noqa: F401
+    CLUSTER_KERNELS,
     CLUSTER_SCHEMA,
     cc_summarize_pdf,
     cluster_cc,
-    cluster_summarize_cc,
-    cluster_summarize_greedy,
-    cluster_three_step,
-    cluster_tfidf,
+    cluster_summarize_batches,
     greedy_summarize_pdf,
+    kernel_frame,
     summarize_clusters_df,
+    tfidf_summarize_pdf,
+    three_step_summarize_pdf,
 )
 
 from incremental_entity_extraction_spark.operators.fused import (
@@ -73,28 +76,18 @@ from incremental_entity_extraction_spark.operators.triples import (
     mention_triples,
 )
 
-# cc-mode fused fast path gate: batches whose NIL set is at most this many
-# rows run edges+CC+summaries in ONE applyInPandas(batch) task
-# (cluster_summarize_cc) instead of the composed distributed chain — the
-# per-batch job latency of the composed chain dominates wall clock for the
-# small NIL graphs typical of incremental batches.  8192 rows bounds the
-# per-task score matrix at 8192² f32 = 256 MB in ~8 MB tiles; above the
-# gate the distributed chain (broadcast sweep / LSH blocking + adaptive
-# star-CC) runs unchanged.
-CC_FUSED_MAX = 8192
-
-# driver fast-path gate: batches whose NIL set is at most this many rows are
-# clustered + summarized + id-assigned ON THE DRIVER (same kernels —
-# clustering.cc_summarize_pdf / greedy_summarize_pdf — on the collected
-# frame) and re-parallelized via createDataFrame.  The fused task path this
-# replaces is ONE applyInPandas group — a single executor thread doing the
-# identical single-threaded kernel work — so below the gate the driver path
-# is the same compute minus an applyInPandas shuffle, a global window, and a
-# localCheckpoint (≈0.3 s/batch of pure job latency at sf0.1).  Sized to
-# CC_FUSED_MAX: the collect is ≤8192 encodings (~8 MB at dim 256) and the
-# kernel's score tiles are chunked at 8 MB either way; above the gate the
-# distributed chain (broadcast sweep / LSH + star-CC) runs unchanged.
-DRIVER_CLUSTER_MAX = CC_FUSED_MAX
+# driver gate: batches whose NIL set is at most this many rows are
+# clustered + summarized + id-assigned ON THE DRIVER (the mode's per-batch
+# kernel, clustering.CLUSTER_KERNELS, on the collected frame) and
+# re-parallelized via createDataFrame.  Above the gate the same kernel runs
+# in one applyInPandas task per batch — a single executor thread doing the
+# identical single-threaded work — so below it the driver path is the same
+# compute minus an applyInPandas shuffle, a global window and a
+# localCheckpoint (≈0.3 s/batch of pure job latency at sf0.1).  8192 rows
+# bound the collect at ~8 MB of encodings (dim 256) and the cc score matrix
+# at 256 MB in ~8 MB tiles.  Above the gate, cc alone runs the distributed
+# chain (broadcast sweep / LSH + star-CC) instead of one task.
+DRIVER_CLUSTER_MAX = 8192
 
 _CLUSTERS_WITH_IDS_SCHEMA = T.StructType(
     list(CLUSTER_SCHEMA.fields)
@@ -108,22 +101,21 @@ _CLUSTERS_WITH_IDS_SCHEMA = T.StructType(
 def _driver_cluster_assign(
     nil_df: DataFrame, cfg: PipelineConfig, cluster_mode: str, next_rw_id: int
 ) -> tuple[DataFrame, pd.DataFrame]:
-    """Tiny-NIL-batch fast path: collect, run the SAME per-batch kernel the
-    fused applyInPandas stage runs, assign ids in the SAME canonical order
-    as operators/kb.assign_new_entity_ids (nelements desc, title asc,
-    first-member asc — pandas stable sort ≡ the window sort; UTF-8 byte
-    order ≡ Python str order on all codepoints), and re-parallelize.
-    Output rows are identical to the fused path's (pinned by
+    """Tiny-NIL-batch fast path: collect, run the SAME per-batch kernel
+    ``clustering.cluster_summarize_batches`` runs, assign ids in the SAME
+    canonical order as operators/kb.assign_new_entity_ids (nelements desc,
+    title asc, first-member asc — pandas stable sort ≡ the window sort;
+    UTF-8 byte order ≡ Python str order on all codepoints), and
+    re-parallelize.
+    Output rows are identical to the paths above the gate (pinned by
     tests/test_pipeline_e2e.py gate-parity).  Returns (DataFrame, the same
     rows as pandas) so the caller can derive the RW delta driver-side
     instead of collecting back rows the driver just created."""
     spark = nil_df.sparkSession
-    pdf = nil_df.select(
-        "batch_id", "conv_id", "turn_idx", "start_tok", "mention_id",
-        "mention", "encoding",
-    ).toPandas()
+    pdf = kernel_frame(nil_df, cluster_mode).toPandas()
     th = float(cfg.greedy_threshold)
-    kernel = cc_summarize_pdf if cluster_mode == "cc" else greedy_summarize_pdf
+    # looked up at call time, so a wrapper patched onto this module sees it
+    kernel = globals()[CLUSTER_KERNELS[cluster_mode]]
     parts = [kernel(g, th) for _, g in pdf.groupby("batch_id", sort=True)]
     cols = [f.name for f in CLUSTER_SCHEMA.fields]
     clusters = (
@@ -266,6 +258,11 @@ def run_batch(
     through the lake's ``new_entities`` table so driver memory never
     accretes); a non-empty ``rw_pdf`` raises, because its entities would
     have KB metadata but no index rows."""
+    if cluster_mode not in CLUSTER_KERNELS:
+        raise ValueError(
+            f"unknown cluster_mode {cluster_mode!r}: "
+            f"expected {' | '.join(CLUSTER_KERNELS)}"
+        )
     rw_bc = None  # per-batch RW broadcast; unpersisted after the barrier
     if retrieval_mode in ("ivf", "ivf_pq"):
         if ann_model is None:
@@ -333,8 +330,8 @@ def run_batch(
             )
     # two materialization barriers by design (SURVEY.md §3.1): clustering is
     # iterative, and the KB append is the batch boundary.  The NIL count the
-    # cc fast-path gate needs rides this checkpoint action as an Observation
-    # — no standalone count job per batch.
+    # driver gate needs rides this checkpoint action as an Observation — no
+    # standalone count job per batch.
     try:
         nil_scored = predict_nil(enriched, cfg)
         gate_obs = Observation()
@@ -356,7 +353,7 @@ def run_batch(
     )
     n_nil = int(gate_obs.get["n_nil"] or 0)
     rw_add_pdf = None  # driver-gated batches precompute the RW delta
-    if cluster_mode in ("cc", "greedy_replay") and n_nil <= DRIVER_CLUSTER_MAX:
+    if n_nil <= DRIVER_CLUSTER_MAX:
         # tiny-batch driver path: same kernels, no applyInPandas shuffle, no
         # window job, no checkpoint — replaces ≈0.3 s of per-batch job
         # latency with one small collect (_driver_cluster_assign docstring)
@@ -364,57 +361,22 @@ def run_batch(
             nil_df, cfg, cluster_mode, next_rw_id
         )
         rw_add_pdf = new_entity_rows_pdf(clusters_pdf, cfg)
-        labels = clusters_with_ids.select(
-            F.explode("mentions_id").alias("mention_id"), "cluster_label"
-        )
-    elif cluster_mode == "greedy_replay":
-        # fused replay+summarize: one shuffle/Python stage and ONE checkpoint
-        # instead of two of each; labels recovered JVM-side from the member
-        # lists (output proven identical to the composed chain by the e2e
-        # oracle-parity tests)
-        clusters = cluster_summarize_greedy(nil_df, cfg)
-        clusters_with_ids = assign_new_entity_ids(
-            clusters, next_rw_id, cfg
-        ).localCheckpoint()
-        labels = clusters_with_ids.select(
-            F.explode("mentions_id").alias("mention_id"), "cluster_label"
-        )
-    elif cluster_mode == "cc" and n_nil <= CC_FUSED_MAX:
-        # NOTE: with the default DRIVER_CLUSTER_MAX == CC_FUSED_MAX this
-        # branch is the gate-parity CONTROL ARM, reached only when tests
-        # force DRIVER_CLUSTER_MAX down (test_pipeline_e2e) or a deployment
-        # lowers the driver gate (e.g. a memory-constrained driver) — it is
-        # kept as the fused single-task path between the two gates.
-        # small-batch fast path: edges+CC+summaries in one task per batch
-        # (cluster_summarize_cc docstring); labels recovered by exploding
-        # the member lists, exactly like the greedy_replay fused path
-        clusters = cluster_summarize_cc(nil_df, cfg)
-        clusters_with_ids = assign_new_entity_ids(
-            clusters, next_rw_id, cfg
-        ).localCheckpoint()
-        labels = clusters_with_ids.select(
-            F.explode("mentions_id").alias("mention_id"), "cluster_label"
-        )
     else:
-        if cluster_mode == "three_step":
-            labels = cluster_three_step(nil_df, cfg)
-        elif cluster_mode == "tfidf":
-            labels = cluster_tfidf(nil_df, cfg)
-        elif cluster_mode == "cc":
+        if cluster_mode == "cc":
             # n_nil from the checkpoint Observation: no standalone count job
-            labels = cluster_cc(nil_df, cfg, n_rows=n_nil)
-        else:
-            raise ValueError(
-                f"unknown cluster_mode {cluster_mode!r}: "
-                "expected cc | greedy_replay | three_step | tfidf"
+            clusters = summarize_clusters_df(
+                nil_df, cluster_cc(nil_df, cfg, n_rows=n_nil), cfg
             )
-        # labels/clusters are small; checkpoint so the downstream actions
-        # (table writes + triples) don't each replay the clustering chain
-        labels = labels.localCheckpoint()
-        clusters = summarize_clusters_df(nil_df, labels, cfg)
+        else:
+            clusters = cluster_summarize_batches(nil_df, cfg, cluster_mode)
+        # clusters are small; checkpoint so the downstream actions (table
+        # writes + triples) don't each replay the clustering
         clusters_with_ids = assign_new_entity_ids(
             clusters, next_rw_id, cfg
         ).localCheckpoint()
+    labels = clusters_with_ids.select(
+        F.explode("mentions_id").alias("mention_id"), "cluster_label"
+    )
     new_entities = new_entity_rows(clusters_with_ids, cfg)
 
     triples = mention_triples(nil_scored, cfg).unionByName(

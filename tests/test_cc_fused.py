@@ -1,7 +1,7 @@
-"""The cc-mode small-batch fast path (cluster_summarize_cc: edges + CC +
-summaries in one task) must emit EXACTLY the rows of the composed
-distributed chain (cluster_cc → summarize_clusters_df), and the pipeline
-must stay oracle-exact when forced onto the composed chain."""
+"""The cc per-batch kernel (cc_summarize_pdf: edges + CC + summaries in one
+task, run here through cluster_summarize_batches) must emit EXACTLY the rows
+of the composed distributed chain (cluster_cc → summarize_clusters_df), and
+the pipeline must stay oracle-exact when forced onto the composed chain."""
 
 import numpy as np
 import pandas as pd
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from incremental_entity_extraction_spark.operators.clustering import (
     cluster_cc,
-    cluster_summarize_cc,
+    cluster_summarize_batches,
     summarize_clusters_df,
 )
 
@@ -62,29 +62,38 @@ def _rows(df):
 
 
 def test_fused_cc_equals_composed_chain(spark, cfg, nil_df):
-    fused = cluster_summarize_cc(nil_df, cfg)
+    fused = cluster_summarize_batches(nil_df, cfg, "cc")
     composed = summarize_clusters_df(nil_df, cluster_cc(nil_df, cfg), cfg)
     assert _rows(fused) == _rows(composed)
 
 
 def test_fused_cc_labels_are_min_members(spark, cfg, nil_df):
-    for r in cluster_summarize_cc(nil_df, cfg).collect():
+    for r in cluster_summarize_batches(nil_df, cfg, "cc").collect():
         assert r["cluster_label"] == min(r["mentions_id"])  # string min
 
 
 def test_pipeline_composed_chain_still_oracle_exact(
     spark, spark_world, world, oracle_result, cfg, tmp_lake, monkeypatch
 ):
-    """Force the gate to 0 so run_batch takes the composed distributed
-    chain — it must still match the oracle (the fast path is tested by the
-    default-path e2e tests, which sit below the gate)."""
+    """Force the driver gate below every batch so run_batch takes the
+    composed distributed chain — it must still match the oracle (the driver
+    path is tested by the default-path e2e tests, which sit below the
+    gate)."""
     import incremental_entity_extraction_spark.pipeline as P
 
-    monkeypatch.setattr(P, "CC_FUSED_MAX", 0)
+    calls = []
+
+    def spy(*a, **k):
+        calls.append(1)
+        return cluster_cc(*a, **k)
+
+    monkeypatch.setattr(P, "DRIVER_CLUSTER_MAX", -1)
+    monkeypatch.setattr(P, "cluster_cc", spy)
     P.run_incremental(
         spark, spark_world["transcripts"], spark_world["entities_kb"],
         tmp_lake, cfg, cluster_mode="cc",
     )
+    assert calls, "run_batch never reached the distributed cc chain"
     got = spark.read.parquet(tmp_lake.path("triples")).toPandas()
     _, _, exp, _ = oracle_result
     gset = set(map(tuple, got[["subj", "pred", "obj"]].itertuples(index=False)))

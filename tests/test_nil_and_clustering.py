@@ -11,7 +11,7 @@ from incremental_entity_extraction_spark.functions.cluster_math import (
 )
 from incremental_entity_extraction_spark.operators.clustering import (
     cluster_cc,
-    cluster_greedy_replay,
+    cluster_summarize_batches,
     summarize_clusters_df,
 )
 from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
@@ -68,13 +68,20 @@ def test_nil_logistic_closed_form_sanity(cfg):
     assert nil_score_from_features(30.0, 5.0, cfg) < 0.01
 
 
+def _greedy_labels(nil_df, cfg):
+    """(mention_id, cluster_label) from the greedy_replay kernel's rows."""
+    return cluster_summarize_batches(nil_df, cfg, "greedy_replay").select(
+        F.explode("mentions_id").alias("mention_id"), "cluster_label"
+    )
+
+
 def test_greedy_replay_matches_oracle_loop(spark, spark_world, world, cfg):
     nil_scored = _nil_scored(spark, spark_world, cfg)
     nil_df = nil_scored.filter(F.col("is_nil")).select(
         "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
         "mention", "encoding",
     )
-    labels = cluster_greedy_replay(nil_df, cfg).toPandas()
+    labels = _greedy_labels(nil_df, cfg).toPandas()
 
     exp_nil, enc = _oracle_nil_scored(world, cfg)
     mask = exp_nil["is_nil"].to_numpy()
@@ -150,7 +157,7 @@ def test_summarize_clusters_fields(spark, spark_world, cfg):
         "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
         "mention", "encoding",
     )
-    labels = cluster_greedy_replay(nil_df, cfg)
+    labels = _greedy_labels(nil_df, cfg)
     clusters = summarize_clusters_df(nil_df, labels, cfg).toPandas()
     assert (clusters["nelements"] == clusters["mentions_id"].map(len)).all()
     for _, row in clusters.iterrows():

@@ -156,17 +156,19 @@ def test_partition_invariance(spark, spark_world, cfg, tmp_path, mode):
     pd.testing.assert_frame_equal(ents[0], ents[1])
 
 
-@pytest.mark.parametrize("mode", ["greedy_replay", "cc"])
+@pytest.mark.parametrize("mode", ["greedy_replay", "cc", "three_step", "tfidf"])
 def test_driver_gate_parity_with_distributed_path(
     spark, spark_world, cfg, tmp_path, mode, monkeypatch
 ):
     """The tiny-batch driver fast path (pipeline.DRIVER_CLUSTER_MAX) must be
-    byte-identical to the fused distributed path it replaces: same triples,
-    same new-entity ids/titles, same prev_clusters rows."""
+    byte-identical to the path above the gate (cc: the distributed chain;
+    the other modes: the same kernel in one applyInPandas task per batch):
+    same triples, same new-entity rows (embeddings included), same
+    prev_clusters rows."""
     import incremental_entity_extraction_spark.pipeline as pl
 
     outs, ents, prevs = [], [], []
-    for gate in (pl.DRIVER_CLUSTER_MAX, -1):  # driver path vs forced fused
+    for gate in (pl.DRIVER_CLUSTER_MAX, -1):  # driver path vs above the gate
         monkeypatch.setattr(pl, "DRIVER_CLUSTER_MAX", gate)
         lk = pl.Lake(str(tmp_path / f"gate_{mode}_{gate}"))
         run_incremental(
@@ -180,10 +182,9 @@ def test_driver_gate_parity_with_distributed_path(
         outs.append(
             _triple_set(spark.read.parquet(lk.path("triples")).toPandas())
         )
+        ent = spark.read.parquet(lk.path("new_entities")).toPandas()
         ents.append(
-            spark.read.parquet(lk.path("new_entities"))
-            .toPandas()
-            .drop(columns=["embedding"])
+            ent.assign(embedding=ent["embedding"].map(tuple))
             .sort_values("id")
             .reset_index(drop=True)
         )

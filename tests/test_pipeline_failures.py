@@ -2,6 +2,9 @@
 completed work (its writes drain and its lineage mark lands), and the
 prefix-resume must finish the run to a byte-identical result."""
 
+import re
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,3 +75,14 @@ def test_two_fresh_runs_are_byte_identical(spark, spark_world, cfg, tmp_path):
         ne = spark.read.parquet(lk.path("new_entities")).toPandas()
         ids.append(sorted(zip(ne["id"], ne["title"])))
     assert ids[0] == ids[1]
+
+
+def test_unknown_cluster_mode_raises_before_retrieval(cfg):
+    """A bad cluster_mode fails at the top of run_batch: the batch frame is
+    None here, so any detection/retrieval work would fail differently."""
+    want = (
+        "unknown cluster_mode 'kmeans': "
+        "expected cc | greedy_replay | three_step | tfidf"
+    )
+    with pytest.raises(ValueError, match=re.escape(want)):
+        pl.run_batch(None, [], pd.DataFrame(), 0, cfg, cluster_mode="kmeans")

@@ -179,7 +179,7 @@ def test_fused_kernel_bit_identical_fuzz(texts, max_tok):
 )
 @settings(max_examples=80, deadline=None)
 def test_min_rank_labels_match_bfs_oracle(n, edges, rnd):
-    """cluster_summarize_cc's vectorized component search == BFS per
+    """cc_summarize_pdf's vectorized component search == BFS per
     component, for any graph (incl. chains, the old worst case) and any
     rank permutation, at several chunk sizes."""
     from incremental_entity_extraction_spark.operators.clustering import (
