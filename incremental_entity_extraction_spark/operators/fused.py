@@ -11,6 +11,12 @@ This operator runs the same three kernels (detection, featurizer,
 tiled top-k) inside one worker pass and emits the full enriched mention
 rows.  Output is bit-identical to the composed chain (tests assert it);
 the composed operators remain for unit testing and ad-hoc composition.
+
+Both retrieval modes run here.  The shards are either ``KBShard``s (the
+whole KB broadcast; exact) or the persisted IVF index
+(``ann_index.IVFShard``: centroids + the visible row files, read per task
+from the probed row groups; approximate).  Either way a batch crosses
+into Python once, and candidates leave hydrated and ranked.
 """
 
 from __future__ import annotations
@@ -27,9 +33,9 @@ from incremental_entity_extraction_spark.config import PipelineConfig
 from incremental_entity_extraction_spark.functions.fused_kernel import (
     fused_mentions_frame,
 )
+from incremental_entity_extraction_spark.operators.ann_index import _list_array
 from incremental_entity_extraction_spark.operators.retrieval import (
     CANDIDATE_STRUCT,
-    KBShard,
     topk_candidates_columnar,
 )
 
@@ -52,15 +58,6 @@ FUSED_SCHEMA = T.StructType(
     + [T.StructField("candidates", T.ArrayType(CANDIDATE_STRUCT), False)]
 )
 
-def _encoding_list_array(enc: np.ndarray) -> pa.ListArray:
-    """(n, dim) float32 matrix -> arrow list<float> column, zero per-row work
-    (one flat values buffer + arithmetic offsets)."""
-    n, dim = enc.shape
-    return pa.ListArray.from_arrays(
-        pa.array(np.arange(n + 1, dtype=np.int64) * dim, type=pa.int32()),
-        pa.array(enc.ravel(), type=pa.float32()),
-    )
-
 
 def _row_chunks(n: int, width: int) -> Iterator[tuple[int, int]]:
     """Slice [0, n) so each chunk's flat list buffers stay below the int32
@@ -68,7 +65,7 @@ def _row_chunks(n: int, width: int) -> Iterator[tuple[int, int]]:
     it at ~2M mentions × dim 1024, but the failure would be an ArrowInvalid
     task error (or a silent int32 cumsum wrap in the candidates offsets),
     so split instead.  ``width`` must be the WIDEST per-row list the caller
-    emits: max(dim, top_k) for the retrieve variant, dim for encode-only."""
+    emits: max(dim, top_k)."""
     max_rows = max(1, ((1 << 31) - 1) // max(width, 1))
     for s in range(0, n, max_rows):
         yield s, min(s + max_rows, n)
@@ -81,16 +78,12 @@ def _candidates_list_array(
     wids: np.ndarray,
     titles: np.ndarray,
     sc: np.ndarray,
-    norm2: float,
+    norm_sc: np.ndarray,
 ) -> pa.ListArray:
-    """Flat columnar top-k output -> arrow list<struct> candidates column.
-
-    norm_score divides in float64 then rounds once to float32 — the same
-    rounding path as the row-major kernel's ``float(score/norm2)`` followed
-    by Spark's FloatType cast, so the two assemblies are bit-identical."""
+    """Flat columnar top-k output (``topk_candidates_columnar``) -> arrow
+    list<struct> candidates column."""
     offsets = np.zeros(len(counts) + 1, dtype=np.int32)
     np.cumsum(counts, out=offsets[1:])
-    norm_sc = (sc.astype(np.float64) / norm2).astype(np.float32)
     struct = pa.StructArray.from_arrays(
         [
             pa.array(ids, type=pa.int64()),
@@ -121,13 +114,17 @@ def _base_arrays(out: pd.DataFrame) -> list[pa.Array]:
 def detect_encode_retrieve(
     transcripts: DataFrame,
     cfg: PipelineConfig,
-    shards: list[KBShard],
+    shards: list,
     known_words: frozenset | None = None,
     encoder=None,
     shards_bc=None,
     extra_shards_bc=None,
 ) -> DataFrame:
     """transcripts -> enriched mention rows (encoding + sorted candidates).
+
+    ``shards`` is a list of one shard kind (``topk_candidates_columnar``):
+    ``KBShard``s, or an ``ann_index.IVFShard`` index shard followed by any
+    per-batch IVF shards (drained delta files, the in-flight delta rows).
 
     ``encoder`` is the M4 pluggable-contract point: a picklable callable
     ``(windows: list[list[str]], weights: list[list[float]]) ->
@@ -139,7 +136,7 @@ def detect_encode_retrieve(
     so the reference's dot-product thresholds keep their meaning
     (config.py docstring).
 
-    ``shards_bc`` is an already-created ``Broadcast[list[KBShard]]`` reused
+    ``shards_bc`` is an already-created ``Broadcast`` of such a list, reused
     ACROSS calls; ``shards`` must then be ``[]`` (enforced — any per-call
     extra goes through ``extra_shards_bc`` below, never an inline list this
     function would have to broadcast and could never unpersist).  The
@@ -202,12 +199,11 @@ def detect_encode_retrieve(
                 yield pa.RecordBatch.from_arrays(
                     _base_arrays(o)
                     + [
-                        _encoding_list_array(enc[s:e]),
+                        _list_array(enc[s:e]),
                         _candidates_list_array(
                             *topk_candidates_columnar(
                                 enc[s:e], shard_list, k_cfg, norm2
-                            ),
-                            norm2,
+                            )
                         ),
                     ],
                     names=[f.name for f in FUSED_SCHEMA.fields],
@@ -215,35 +211,3 @@ def detect_encode_retrieve(
 
     cols = ["conv_id", "turn_idx", "batch_id", "text"]
     return transcripts.select(*cols).mapInArrow(_fused, schema=FUSED_SCHEMA)
-
-
-def detect_encode(
-    transcripts: DataFrame,
-    cfg: PipelineConfig,
-    known_words: frozenset | None = None,
-    encoder=None,
-) -> DataFrame:
-    """Fused detect→encode WITHOUT retrieval — one Python hop for callers
-    that retrieve through a join/ANN stage instead of the shard broadcast
-    (run_batch retrieval_mode='ivf').  Same kernels and encoder contract as
-    ``detect_encode_retrieve``; output = ENCODED_SCHEMA."""
-    dim, norm, max_tok = cfg.dim, cfg.vector_norm, cfg.max_context_tokens
-
-    def _de(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            res = fused_mentions_frame(
-                rb.to_pandas(), known_words, max_tok, dim, norm, encoder,
-                with_encoding_col=False,
-            )
-            if res is None:
-                continue
-            out, enc = res
-            for s, e in _row_chunks(len(out), dim):
-                o = out.iloc[s:e] if (s, e) != (0, len(out)) else out
-                yield pa.RecordBatch.from_arrays(
-                    _base_arrays(o) + [_encoding_list_array(enc[s:e])],
-                    names=[f.name for f in ENCODED_SCHEMA.fields],
-                )
-
-    cols = ["conv_id", "turn_idx", "batch_id", "text"]
-    return transcripts.select(*cols).mapInArrow(_de, schema=ENCODED_SCHEMA)

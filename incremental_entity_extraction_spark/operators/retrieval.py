@@ -36,6 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from incremental_entity_extraction_spark.config import PipelineConfig
+from incremental_entity_extraction_spark.operators.ann_index import (
+    IVFShard,
+    ivf_topk_columnar,
+)
 
 CANDIDATE_STRUCT = T.StructType(
     [
@@ -126,13 +130,17 @@ def retrieve_topk(
 
 
 def topk_candidates_columnar(
-    enc: np.ndarray, shard_list: list[KBShard], k: int, norm2: float
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Exact top-k candidates for an encoding matrix vs broadcast shards, as
+    enc: np.ndarray, shard_list: list, k: int, norm2: float
+) -> tuple:
+    """Top-k candidates for an encoding matrix vs broadcast shards, as
     COLUMNAR flat arrays: ``(counts, ids, indexer, wikipedia_id, title,
-    score)`` where row ``r``'s candidates are the slice
+    score, norm_score)`` where row ``r``'s candidates are the slice
     ``[counts[:r].sum() : counts[:r+1].sum())`` in global rank order
     (score desc, indexer asc, id asc).
+
+    Two shard kinds: ``KBShard`` (exact, the whole KB in the broadcast) and
+    the persisted IVF index (``ann_index.IVFShard``, index shard first),
+    which ``ann_index.ivf_topk_columnar`` searches.
 
     Per-shard, per-tile top-k, then merge (two-level top-k, SURVEY.md W1).
     Entity tiles keep the score block cache-resident (chunk × _ENT_TILE
@@ -140,6 +148,8 @@ def topk_candidates_columnar(
     and collapses under concurrent workers.  No per-row Python: the flat
     arrays feed Arrow struct/list builders directly (operators/fused.py).
     """
+    if shard_list and isinstance(shard_list[0], IVFShard):
+        return ivf_topk_columnar(enc, shard_list, k, norm2)
     n = len(enc)
     counts = np.zeros(n, dtype=np.int32)
     f_ids, f_idxr, f_wids, f_titles, f_sc = [], [], [], [], []
@@ -191,13 +201,17 @@ def topk_candidates_columnar(
             else np.empty(0, dtype=dtype)
         )
 
+    sc = _cat(f_sc, np.float32)
     return (
         counts,
         _cat(f_ids, np.int64),
         _cat(f_idxr, np.int32),
         _cat(f_wids, np.int64),
         _cat(f_titles, object),
-        _cat(f_sc, np.float32),
+        sc,
+        # f64 division rounded once to f32: the row-major kernel's
+        # float(score / norm2) followed by Spark's FloatType cast
+        (sc.astype(np.float64) / norm2).astype(np.float32),
     )
 
 
@@ -207,7 +221,7 @@ def topk_candidates_kernel(
     """Row-major list-of-dicts view of ``topk_candidates_columnar`` — kept
     for the composable ``retrieve_topk`` operator and the NumPy-oracle
     tests; the fused hot path consumes the columnar form directly."""
-    counts, ids, idxr, wids, titles, sc = topk_candidates_columnar(
+    counts, ids, idxr, wids, titles, sc, norm_sc = topk_candidates_columnar(
         enc, shard_list, k, norm2
     )
     cands_col: list[list[dict]] = []
@@ -221,7 +235,7 @@ def topk_candidates_kernel(
                     "wikipedia_id": int(wids[j]),
                     "title": str(titles[j]),
                     "score": float(sc[j]),
-                    "norm_score": float(sc[j] / norm2),
+                    "norm_score": float(norm_sc[j]),
                 }
                 for j in range(pos, pos + int(c))
             ]

@@ -221,9 +221,20 @@ class Lake:
             f.write(json.dumps({"batch_id": batch_id, **stats}) + "\n")
 
 
+RETRIEVAL_MODES = ("broadcast", "ivf")
+
+
+def _check_retrieval_mode(mode: str) -> None:
+    if mode not in RETRIEVAL_MODES:
+        raise ValueError(
+            f"unknown retrieval_mode {mode!r}: "
+            f"expected {' | '.join(RETRIEVAL_MODES)}"
+        )
+
+
 def run_batch(
     transcripts_batch: DataFrame,
-    ro_shards: list[KBShard],
+    ro_shards: list,
     rw_pdf: pd.DataFrame,
     next_rw_id: int,
     cfg: PipelineConfig,
@@ -231,11 +242,7 @@ def run_batch(
     known_words: frozenset | None = None,
     encoder=None,
     retrieval_mode: str = "broadcast",
-    kb_ro_df: DataFrame | None = None,
-    rw_df: DataFrame | None = None,
     ann_model=None,
-    ann_extra_rows=None,
-    ann_allowed_batches: list[int] | None = None,
     ro_shards_bc=None,
 ):
     """One batch: transcripts -> (nil_scored, clusters_with_ids, new_entities,
@@ -245,89 +252,70 @@ def run_batch(
     driver-gated clustering path ran (None otherwise) — pass it to
     ``BatchPersist.start(rw_pdf_precomputed=...)`` to skip the collect job.
 
-    ``retrieval_mode='broadcast'`` (default): KB shards broadcast, fused
-    single-hop detect→encode→retrieve — exact, for KBs within the broadcast
-    budget (the reference's regime).  ``'ivf'`` / ``'ivf_pq'``: the KB stays
-    a DataFrame (``kb_ro_df`` + the RW delta) and candidates come from the
-    PERSISTED ANN index ``ann_model`` (required — ``BatchLoop`` builds one
-    per run, operators/ann_index.py), scanned with frozen
-    centroids/codebooks — approximate, for entity dimensions beyond
-    broadcast.  ``ann_extra_rows`` is the one in-flight delta and
-    ``ann_allowed_batches`` the drained-batch visibility set.  These modes
-    take RW state only as ``rw_df`` (a DataFrame — ``BatchLoop`` threads it
-    through the lake's ``new_entities`` table so driver memory never
-    accretes); a non-empty ``rw_pdf`` raises, because its entities would
-    have KB metadata but no index rows."""
+    Both retrieval modes run ONE fused detect→encode→retrieve stage
+    (operators/fused.py); they differ only in the shard kind.
+
+    * ``'broadcast'`` (default): ``ro_shards`` are the RO KB's ``KBShard``s
+      and ``rw_pdf`` is the whole RW KB — exact, for KBs within the
+      broadcast budget (the reference's regime).
+    * ``'ivf'``: ``ro_shards`` starts with the persisted index's
+      ``ann_index.IVFShard`` (``ann_index.index_shard``), optionally
+      followed by shards of delta files drained since it was broadcast;
+      ``rw_pdf`` is the one in-flight RW delta, assigned under
+      ``ann_model``'s frozen centroids here (``BatchLoop`` builds the model
+      once per run) — approximate, for entity dimensions beyond broadcast.
+
+    ``ro_shards_bc`` (``BatchLoop``) is the ONE broadcast of
+    ``ro_shards[:1]`` reused across the run's batches; the rest of the
+    shards and the RW shard ride one per-batch broadcast that is
+    unpersisted after the ``nil_scored`` checkpoint.  Without it, every
+    shard is broadcast for this call alone."""
+    _check_retrieval_mode(retrieval_mode)
     if cluster_mode not in CLUSTER_KERNELS:
         raise ValueError(
             f"unknown cluster_mode {cluster_mode!r}: "
             f"expected {' | '.join(CLUSTER_KERNELS)}"
         )
-    rw_bc = None  # per-batch RW broadcast; unpersisted after the barrier
-    if retrieval_mode in ("ivf", "ivf_pq"):
-        if ann_model is None:
-            raise ValueError(
-                f"retrieval_mode={retrieval_mode!r} needs a prebuilt ann_model "
-                "(run_incremental builds one; see operators/ann_index.py)"
-            )
-        if len(rw_pdf):
-            raise ValueError(
-                f"retrieval_mode={retrieval_mode!r} takes RW state as rw_df, "
-                "not rw_pdf"
-            )
-        from incremental_entity_extraction_spark.operators.fused import (
-            detect_encode,
-        )
-        from incremental_entity_extraction_spark.operators.retrieval_ann import (
-            retrieve_topk_indexed,
+    if retrieval_mode == "ivf":
+        from incremental_entity_extraction_spark.operators.ann_index import (
+            rows_shard,
+            rw_delta_rows,
         )
 
-        kb_cols = ["id", "indexer", "wikipedia_id", "title", "embedding"]
-        kb_df = kb_ro_df.select(*kb_cols)
-        if rw_df is not None:
-            kb_df = kb_df.unionByName(rw_df.select(*kb_cols))
-        # one fused detect+encode hop (not two chained mapInPandas), then
-        # the distributed ANN scan — the KB is never collected or broadcast.
-        # Checkpointed because the enriched plan references it twice (the
-        # query side of the ANN search AND the join-back mentions side) —
-        # without it the detect+encode kernel would run once per branch.
-        encoded = detect_encode(
-            transcripts_batch, cfg, known_words=known_words, encoder=encoder
-        ).localCheckpoint()
-        enriched = retrieve_topk_indexed(
-            encoded, kb_df, cfg, ann_model,
-            extra_rows=ann_extra_rows,
-            allowed_batches=ann_allowed_batches,
-        )
+        if ann_model is None or not ro_shards:
+            raise ValueError(
+                "retrieval_mode='ivf' needs a prebuilt ann_model and its "
+                "index shard (BatchLoop builds both; operators/ann_index.py)"
+            )
+        inflight = rows_shard(rw_delta_rows(ann_model, rw_pdf, cfg.rw_indexer_id))
+        rw_shards = list(ro_shards[1:]) + ([inflight] if inflight else [])
+        ro_shards = ro_shards[:1]
     else:
-        # fused single-hop stage (operators/fused.py): one Python worker per
-        # task instead of three chained ones; identical output to the composed
-        # detect_mentions → encode_mentions_df → retrieve_topk chain.
-        # ``ro_shards_bc`` (BatchLoop) reuses ONE broadcast of the RO
-        # KB across every batch — only the small RW shard is broadcast per
-        # batch; direct callers without it keep the single-broadcast path.
         rw_shards = (
             [KBShard(rw_pdf.reset_index(drop=True))] if len(rw_pdf) else []
         )
-        if ro_shards_bc is not None:
-            # run_batch owns the per-batch RW broadcast so it can be
-            # unpersisted after the nil_scored checkpoint barrier — letting
-            # the fused stage broadcast it internally would leak one
-            # Broadcast of the growing RW KB per batch over a long stream
-            if rw_shards:
-                rw_bc = transcripts_batch.sparkSession.sparkContext.broadcast(
-                    rw_shards
-                )
-            enriched = detect_encode_retrieve(
-                transcripts_batch, cfg, [], known_words=known_words,
-                encoder=encoder, shards_bc=ro_shards_bc,
-                extra_shards_bc=rw_bc,
+    # fused single-hop stage (operators/fused.py): one Python worker per
+    # task instead of three chained ones; identical output to the composed
+    # detect_mentions → encode_mentions_df → retrieve_topk chain.
+    rw_bc = None  # per-batch RW broadcast; unpersisted after the barrier
+    if ro_shards_bc is not None:
+        # run_batch owns the per-batch RW broadcast so it can be
+        # unpersisted after the nil_scored checkpoint barrier — letting
+        # the fused stage broadcast it internally would leak one
+        # Broadcast of the growing RW KB per batch over a long stream
+        if rw_shards:
+            rw_bc = transcripts_batch.sparkSession.sparkContext.broadcast(
+                rw_shards
             )
-        else:
-            enriched = detect_encode_retrieve(
-                transcripts_batch, cfg, list(ro_shards) + rw_shards,
-                known_words=known_words, encoder=encoder,
-            )
+        enriched = detect_encode_retrieve(
+            transcripts_batch, cfg, [], known_words=known_words,
+            encoder=encoder, shards_bc=ro_shards_bc, extra_shards_bc=rw_bc,
+        )
+    else:
+        enriched = detect_encode_retrieve(
+            transcripts_batch, cfg, list(ro_shards) + rw_shards,
+            known_words=known_words, encoder=encoder,
+        )
     # two materialization barriers by design (SURVEY.md §3.1): clustering is
     # iterative, and the KB append is the batch boundary.  The NIL count the
     # driver gate needs rides this checkpoint action as an Observation — no
@@ -504,15 +492,20 @@ class BatchLoop:
     runs it once over the whole frame, the streaming driver once per
     micro-batch (streaming/incremental.py).
 
-    The loop object owns the run-lifetime state — the ONE broadcast of the
-    RO KB (per-batch re-broadcast of an unchanged KB pays a driver pickle
-    per batch and defeats the Python workers' broadcast-id cache,
-    fused.detect_encode_retrieve) and, in the ANN modes, the persisted index
-    model, built or loaded at the first ``run``.  Everything else is
-    re-derived from the lake at each ``run``, so the lineage prefix is the
-    only resume contract.  ``dels`` are tombstoned entity ids, filtered out
-    of the RW state (the caller filters ``kb_ro``); ``close`` releases the
-    broadcast."""
+    The loop object owns the loop-lifetime state — the ONE broadcast of the
+    RO KB in broadcast mode (per-batch re-broadcast of an unchanged KB pays
+    a driver pickle per batch and defeats the Python workers'
+    broadcast-id cache, fused.detect_encode_retrieve) and, in ivf mode, the
+    persisted index model, built or loaded at the first ``run``.  In ivf
+    mode each ``run`` broadcasts the index shard once (centroids,
+    ``n_probe``, tombstones, the visible row files); deltas drained during
+    the run and the one in-flight delta ride ``run_batch``'s per-batch
+    broadcast, so the driver never holds more RW state than one batch's
+    delta.  Everything else is re-derived from the lake at each ``run``,
+    so the lineage prefix is the only resume contract.  ``dels`` are
+    tombstoned entity ids: filtered out of the RW state in broadcast mode
+    (the caller filters ``kb_ro``), masked before the top-k in ivf mode;
+    ``close`` releases the broadcast."""
 
     spark: SparkSession
     kb_ro: DataFrame
@@ -531,11 +524,11 @@ class BatchLoop:
     salt_repartition: bool | None = None
 
     def __post_init__(self) -> None:
-        self.ann = self.retrieval_mode in ("ivf", "ivf_pq")
-        # ANN modes never collect the KB — that is their point
+        _check_retrieval_mode(self.retrieval_mode)
+        self.ann = self.retrieval_mode == "ivf"
+        # ivf mode never collects the KB — that is its point
         self.ro_shards = (
-            build_kb_shards(self.kb_ro, self.n_shards)
-            if self.retrieval_mode == "broadcast" else []
+            [] if self.ann else build_kb_shards(self.kb_ro, self.n_shards)
         )
         self.ro_shards_bc = (
             self.spark.sparkContext.broadcast(self.ro_shards)
@@ -611,14 +604,11 @@ class BatchLoop:
             "id", "indexer", "wikipedia_id", "title", "descr", "type_",
             "embedding",
         ])
-        last_delta_pdf: pd.DataFrame | None = None
         if ann:
-            # ANN modes exist for the beyond-broadcast regime, so RW state
-            # must not accrete in driver memory: it stays IN the lake's
-            # ``new_entities`` table.  The driver keeps only ``next_rw_id``
-            # plus the single in-flight delta whose async write has not
-            # drained yet (bounded at one batch); each batch's KB union reads
-            # the drained partitions back as a DataFrame (_rw_state_df).
+            # ivf mode exists for the beyond-broadcast regime, so RW state
+            # must not accrete in driver memory: drained entities live in
+            # the index's delta files, and rw_pdf holds only the one
+            # in-flight delta whose write has not drained yet
             next_rw_id = 0
             if lake_rw is not None:
                 mx = (
@@ -640,12 +630,13 @@ class BatchLoop:
 
         # ---- build-once ANN index (FAISS build/serialize/load/add
         # semantics, pipeline/indexer/main.py:178-214; operators/ann_index.py)
-        ann_inflight: pd.DataFrame | None = None  # in-flight delta index rows
+        ro_shards, ro_shards_bc = self.ro_shards, self.ro_shards_bc
         if ann:
             from incremental_entity_extraction_spark.operators.ann_index import (
-                BASE_BATCH,
+                IVFShard,
                 backfill_missing_deltas,
                 ensure_ann_index,
+                index_shard,
                 persist_delta,
                 rw_delta_rows,
             )
@@ -669,44 +660,27 @@ class BatchLoop:
                         .select("id", "indexer", "embedding")
                     )
                 self.ann_model = ensure_ann_index(
-                    composite_corpus(self.kb_ro.select("id", "indexer", "embedding")),
+                    composite_corpus(self.kb_ro.select(
+                        "id", "indexer", "wikipedia_id", "title", "embedding"
+                    )),
                     lake.path("ann_index"),
                     mode=self.retrieval_mode,
                     rebuild_threshold=self.ann_rebuild_threshold,
                     delta_corpus=delta_corpus,
                 )
             # backfill: drained batches whose delta commit is missing (a lake
-            # written by a pre-index version, or a fingerprint-change rebuild
-            # that wiped the rows dir) are re-assigned from new_entities —
-            # tiny per-batch frames, frozen model, byte-deterministic
+            # written by an older index layout, or a fingerprint-change
+            # rebuild that wiped the rows) are re-assigned from new_entities
+            # — tiny per-batch frames, frozen model, byte-deterministic
             if drained:
                 backfill_missing_deltas(
                     self.ann_model, spark, lake_rw, drained, cfg.rw_indexer_id
                 )
+            # the run's index shard: base + drained delta files, resolved
+            # here once so no task lists a directory
+            ro_shards = [index_shard(self.ann_model, drained, dels)]
+            ro_shards_bc = spark.sparkContext.broadcast(ro_shards)
         ann_model = self.ann_model
-
-        def _rw_state_df() -> DataFrame | None:
-            """ANN modes: the RW entity table as a DataFrame — lake partitions
-            of drained batches + the one not-yet-drained in-memory delta."""
-            if not ann:
-                return None
-            parts: list[DataFrame] = []
-            cur = lake.read(spark, "new_entities")
-            if cur is not None and drained:
-                parts.append(
-                    cur.filter(F.col("batch_id").isin(sorted(drained)))
-                    .drop("batch_id")
-                )
-            if last_delta_pdf is not None and len(last_delta_pdf):
-                parts.append(spark.createDataFrame(last_delta_pdf))
-            if not parts:
-                return None
-            out = parts[0]
-            for extra in parts[1:]:
-                out = out.unionByName(extra)
-            if dels:
-                out = out.filter(~F.col("id").isin(dels))
-            return out
 
         stats_rows = []
         # pipeline parallelism across the batch boundary: batch N's table
@@ -718,15 +692,24 @@ class BatchLoop:
         pending: tuple | None = None
 
         def _drain(p) -> None:
-            b_prev, bp_prev, extra, idx_rows = p
+            b_prev, bp_prev, extra, add_prev = p
             stats = {**bp_prev.finish(), **extra}
-            if ann_model is not None:
+            if ann:
                 # index delta BEFORE the lineage mark: a crash in between
-                # leaves the batch unmarked, so the re-run overwrites the
-                # partition byte-identically (frozen model ⇒ deterministic
+                # leaves the batch unmarked, so the re-run rewrites the
+                # file byte-identically (frozen model ⇒ deterministic
                 # assignment).  Zero-entity batches commit a marker-only
                 # persist so resume never re-scans them.
-                persist_delta(ann_model, spark, idx_rows, int(b_prev))
+                persist_delta(
+                    ann_model, spark,
+                    rw_delta_rows(ann_model, add_prev, cfg.rw_indexer_id),
+                    int(b_prev),
+                )
+                fkey = ann_model.file_key(int(b_prev))
+                if fkey is not None:
+                    # visible to the next batches through their per-batch
+                    # broadcast; the run's index shard stays as broadcast
+                    ro_shards.append(IVFShard(files=[fkey]))
             lake.mark_complete(int(b_prev), stats)
             drained.add(int(b_prev))  # its new_entities partition is readable
             stats_rows.append({"batch_id": int(b_prev), **stats})
@@ -740,15 +723,10 @@ class BatchLoop:
                 )
                 nil_scored, clusters_with_ids, new_entities, triples, rw_add = (
                     run_batch(
-                        tb, self.ro_shards, rw_pdf, next_rw_id, cfg,
+                        tb, ro_shards, rw_pdf, next_rw_id, cfg,
                         self.cluster_mode, self.known_words, self.encoder,
-                        self.retrieval_mode, self.kb_ro,
-                        rw_df=_rw_state_df(),
-                        ann_model=ann_model, ann_extra_rows=ann_inflight,
-                        ann_allowed_batches=(
-                            [BASE_BATCH] + sorted(drained) if ann else None
-                        ),
-                        ro_shards_bc=self.ro_shards_bc,
+                        self.retrieval_mode, ann_model=ann_model,
+                        ro_shards_bc=ro_shards_bc,
                     )
                 )
                 # S7 analogue: persist the enriched mention table per batch
@@ -767,12 +745,9 @@ class BatchLoop:
                 # thread RW state forward (small dimension delta)
                 add_pdf = bp.rw_delta()
                 if ann:
-                    # keep only this batch's delta in memory; older batches
-                    # are read back from the lake once their writes drain
-                    last_delta_pdf = add_pdf
-                    ann_inflight = rw_delta_rows(
-                        ann_model, add_pdf, int(b), cfg.rw_indexer_id
-                    )
+                    # keep only this batch's delta in memory; it reaches the
+                    # index files when the batch drains
+                    rw_pdf = add_pdf
                     if len(add_pdf):
                         next_rw_id = max(next_rw_id, int(add_pdf["id"].max()) + 1)
                 elif len(add_pdf):
@@ -795,7 +770,7 @@ class BatchLoop:
                         "n_clusters": int(len(add_pdf)),
                         "wall_s": round(time.time() - t0, 3),
                     },
-                    ann_inflight,
+                    add_pdf,
                 )
             if pending is not None:
                 _drain(pending)
@@ -811,6 +786,9 @@ class BatchLoop:
                 except Exception:
                     pass
             raise
+        finally:
+            if ann:
+                ro_shards_bc.unpersist()
 
         # a handful of driver rows — createDataFrame spreads them over
         # defaultParallelism partitions; one write task is the right size

@@ -56,12 +56,10 @@ def main() -> None:
     )
     p.add_argument(
         "--retrieval-mode", default="broadcast",
-        choices=["broadcast", "ivf", "ivf_pq"],
+        choices=["broadcast", "ivf"],
         help="'ivf' keeps the KB distributed (no broadcast, build-once "
         "persisted index) — for entity dimensions beyond executor memory; "
-        "'ivf_pq' additionally stores ~8-byte PQ codes instead of raw "
-        "vectors in the index (exact re-rank restores scores) — for KBs "
-        "whose raw vectors dwarf cluster memory; both approximate recall",
+        "approximate recall",
     )
     p.add_argument(
         "--persist-candidates", action="store_true",

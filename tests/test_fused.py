@@ -36,39 +36,6 @@ def test_fused_equals_composed(spark, spark_world, cfg):
         )
 
 
-def test_detect_encode_equals_fused_minus_candidates(spark, spark_world, cfg):
-    """The retrieval-free fused hop must be bit-identical to the full fused
-    stage with the candidates column dropped."""
-    from incremental_entity_extraction_spark.operators.fused import detect_encode
-    from incremental_entity_extraction_spark.operators.retrieval import (
-        build_kb_shards,
-    )
-    import numpy as np
-
-    t = spark_world["transcripts"].limit(60)
-    shards = build_kb_shards(spark_world["entities_kb"], 1)
-    full = (
-        detect_encode_retrieve(t, cfg, shards)
-        .drop("candidates")
-        .toPandas()
-        .sort_values("mention_id")
-        .reset_index(drop=True)
-    )
-    lite = (
-        detect_encode(t, cfg)
-        .toPandas()
-        .sort_values("mention_id")
-        .reset_index(drop=True)
-    )
-    assert list(full.columns) == list(lite.columns)
-    for col in full.columns:
-        if col == "encoding":
-            for a, b in zip(full[col], lite[col]):
-                assert np.array_equal(np.asarray(a), np.asarray(b))
-        else:
-            assert list(full[col]) == list(lite[col])
-
-
 def test_shards_bc_rejects_inline_extra_shards(spark_world, cfg):
     """shards_bc + non-empty shards would force an internal per-call
     broadcast nobody could unpersist (the O(batches x KB) leak

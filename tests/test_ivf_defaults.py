@@ -2,12 +2,17 @@
 auto-derivation and the 25% probe ratio (similarity_search._derive_ivf_params,
 applied by ann_index.build_ann_index)."""
 
+import dataclasses
+
 import numpy as np
 from pyspark.sql import types as T
 
 from incremental_entity_extraction_spark.operators.ann_index import (
-    ann_index_search,
     build_ann_index,
+    index_shard,
+)
+from incremental_entity_extraction_spark.operators.retrieval import (
+    topk_candidates_columnar,
 )
 from incremental_entity_extraction_spark.operators.similarity_search import (
     kmeans_centroids,
@@ -28,21 +33,26 @@ def _df(spark, X, ids=None):
     )
 
 
+def _search(model, Q, k, n_probe=None):
+    """query index -> neighbor ids in rank order."""
+    if n_probe is not None:
+        model = dataclasses.replace(model, n_probe=n_probe)
+    counts, ids, *_ = topk_candidates_columnar(Q, [index_shard(model)], k, 1.0)
+    bounds = np.r_[0, np.cumsum(counts)]
+    return [ids[s:e].tolist() for s, e in zip(bounds[:-1], bounds[1:])]
+
+
 def test_auto_centroids_sqrt_n(spark, tmp_path):
     rng = np.random.default_rng(7)
     n = 900  # sqrt -> 30 centroids
     X = rng.normal(size=(n, 8)).astype(np.float32)
     model = build_ann_index(_df(spark, X), str(tmp_path / "idx"))
     assert model.centroids.shape[0] == 30
-    q = _df(spark, X[:5], ids=range(10_000, 10_005))
-    out = ann_index_search(
-        model, spark, q, k=3, n_probe=30, exclude_self=False
-    ).toPandas()
-    assert len(out) == 15
+    got = _search(model, X[:5], 3, n_probe=30)
+    assert [len(g) for g in got] == [3] * 5
     # with n_probe == all 30 auto-derived buckets this is exact: every query
     # (a corpus member) must find itself at rank 1
-    top = out[out["rank"] == 1].sort_values("query_id")
-    assert list(top["neighbor_id"]) == [0, 1, 2, 3, 4]
+    assert [g[0] for g in got] == [0, 1, 2, 3, 4]
 
 
 def test_kmeans_caps_centroids_to_sample(spark):
@@ -59,10 +69,9 @@ def test_auto_probe_finds_twin_duplicates(spark, tmp_path):
     X = np.vstack([base, base])  # ids 0..299 and twins 300..599
     model = build_ann_index(_df(spark, X), str(tmp_path / "idx"))
     assert model.n_probe == 6  # sqrt(600) -> 24 buckets, 25% probed
-    q = _df(spark, X[:10], ids=range(10))
-    out = ann_index_search(model, spark, q, k=1, exclude_self=True).toPandas()
-    top = out[out["rank"] == 1].set_index("query_id")["neighbor_id"]
-    assert all(top[i] == i + 300 for i in range(10))
+    # a twin ties its original on cosine; the key breaks the tie
+    got = _search(model, X[:10], 2)
+    assert got == [[i, i + 300] for i in range(10)]
 
 
 def test_zip_check_stands_down_without_source_tree(tmp_path):

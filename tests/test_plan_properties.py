@@ -128,50 +128,33 @@ def test_parquet_filter_pushdown(spark, tmp_path):
     assert "ReadSchema" in plan and "b:" not in plan.split("ReadSchema")[1].split("\n")[0]
 
 
-def test_ann_index_search_plan(spark, embs, tmp_path):
-    """The persisted-index search must scan the rows table with bucket
-    partition filters (pruned listing), keep Python vectorized
-    (MapInPandas, no BatchEvalPython), and bound the global top-k below
-    the window — and the pq re-rank must join the broadcast shortlist,
-    never cross queries with the corpus."""
+def test_ann_index_search_plan(spark, spark_world, tmp_path):
+    """ivf retrieval is the fused stage with the persisted index as its
+    shard: the enriched plan is one Arrow pass with NO exchange — no query
+    collect, no index-table scan, window, join or groupBy."""
     from incremental_entity_extraction_spark.operators.ann_index import (
-        ann_index_search,
         build_ann_index,
+        index_shard,
+    )
+    from incremental_entity_extraction_spark.operators.fused import (
+        detect_encode_retrieve,
+    )
+    from incremental_entity_extraction_spark.operators.retrieval_ann import (
+        composite_corpus,
     )
 
-    c = embs.withColumnRenamed("emb_id", "vec_id")
-    q = c.limit(20)
-    model = build_ann_index(c, str(tmp_path / "idx"), mode="ivf",
-                            n_centroids=8, seed=11)
-    nn = ann_index_search(model, spark, q, k=5, exclude_self=True)
-    plan = plan_of(nn)
-    _assert_clean(plan, allow_single_partition=False, label="ann_index_search")
-    assert "MapInPandas" in plan
-    assert "WindowGroupLimit" in plan
-    # the bucket/added_batch filters land on the parquet source as
-    # partition filters (pruned file listing, not a post-scan filter)
-    assert "PartitionFilters" in plan and "bucket" in plan.split(
-        "PartitionFilters"
-    )[1][:400]
-
-    pq_model = build_ann_index(c, str(tmp_path / "pq_idx"), mode="ivf_pq",
-                               n_centroids=8, seed=11)
-    nn_pq = ann_index_search(
-        pq_model, spark, q, k=5, rerank=32, rerank_corpus=c,
-        exclude_self=True,
+    model = build_ann_index(
+        composite_corpus(spark_world["entities_kb"]), str(tmp_path / "idx")
     )
-    plan_pq = plan_of(nn_pq)
-    _assert_clean(plan_pq, allow_single_partition=False,
-                  label="ann_index_search_pq")
-    assert "BroadcastHashJoin" in plan_pq  # shortlist re-rank join
-
-    nn_cg = ann_index_search(
-        model, spark, q, k=5, exclude_self=True, query_mode="cogroup"
+    df = detect_encode_retrieve(
+        spark_world["transcripts"], cfg, [index_shard(model)]
     )
-    plan_cg = plan_of(nn_cg)
-    _assert_clean(plan_cg, allow_single_partition=False,
-                  label="ann_index_search_cogroup")
-    assert "FlatMapCoGroupsInPandas" in plan_cg
+    plan = plan_of(df)
+    _assert_clean(plan, allow_single_partition=False, label="ivf enriched")
+    assert "Exchange" not in plan, "ivf retrieval must not shuffle"
+    assert "MapInArrow" in plan
+    for frag in ("Window", "Join", "Aggregate", "FileScan parquet"):
+        assert frag not in plan, f"ivf enriched plan has a {frag}"
 
 
 def test_manifest_read_partition_prunes(spark, tmp_path):

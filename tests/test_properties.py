@@ -252,10 +252,13 @@ def test_columnar_topk_matches_brute_force(n_m, n_e, k, seed):
         }
     )
     shards = [KBShard(pdf)] if n_e else []
-    counts, ids, idxr, wids, titles, sc = topk_candidates_columnar(
+    counts, ids, idxr, wids, titles, sc, norm_sc = topk_candidates_columnar(
         enc, shards, k, 100.0
     )
     assert counts.sum() == len(ids) == len(sc)
+    np.testing.assert_array_equal(
+        norm_sc, (sc.astype(np.float64) / 100.0).astype(np.float32)
+    )
     if n_e == 0:
         assert counts.sum() == 0
         return

@@ -1,44 +1,44 @@
 """ANN retrieval path (KB-beyond-broadcast): candidate contract parity with
-the broadcast engine and end-to-end pipeline quality vs the oracle."""
+the broadcast engine, the retrieval-mode guard, and end-to-end pipeline
+quality vs the oracle."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from incremental_entity_extraction_spark.operators.ann_index import build_ann_index
-from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
-from incremental_entity_extraction_spark.operators.mentions import detect_mentions
+from incremental_entity_extraction_spark.operators.ann_index import (
+    build_ann_index,
+    index_shard,
+)
+from incremental_entity_extraction_spark.operators.fused import (
+    detect_encode_retrieve,
+)
 from incremental_entity_extraction_spark.operators.retrieval import (
     build_kb_shards,
-    retrieve_topk,
+    topk_candidates_columnar,
 )
 from incremental_entity_extraction_spark.operators.retrieval_ann import (
     composite_corpus,
-    retrieve_topk_indexed,
 )
 
 
 def _build(kb, path, **kw):
-    return build_ann_index(
-        composite_corpus(kb.select("id", "indexer", "embedding")), path, **kw
-    )
+    return build_ann_index(composite_corpus(kb), path, **kw)
 
 
 @pytest.fixture(scope="module")
 def enriched_pair(spark, spark_world, cfg, tmp_path_factory):
-    encoded = encode_mentions_df(
-        detect_mentions(spark_world["transcripts"]), cfg
-    ).localCheckpoint()
+    t = spark_world["transcripts"]
     kb = spark_world["entities_kb"]
-    shards = build_kb_shards(kb, 1)
-    exact = retrieve_topk(encoded, cfg, shards).toPandas().set_index("mention_id")
+
+    def run(shards):
+        return (
+            detect_encode_retrieve(t, cfg, shards)
+            .toPandas().set_index("mention_id").sort_index()
+        )
+
     model = _build(kb, str(tmp_path_factory.mktemp("ann") / "idx"))
-    ann = (
-        retrieve_topk_indexed(encoded, kb, cfg, model)
-        .toPandas()
-        .set_index("mention_id")
-    )
-    return exact.sort_index(), ann.sort_index()
+    return run(build_kb_shards(kb, 1)), run([index_shard(model)])
 
 
 def test_ann_candidate_contract(enriched_pair, cfg):
@@ -56,6 +56,17 @@ def test_ann_candidate_contract(enriched_pair, cfg):
     for cands in ann["candidates"].head(50):
         scores = [x["score"] for x in cands]
         assert scores == sorted(scores, reverse=True)
+    # metadata hydrated from the index rows themselves: the same fields
+    # the broadcast KB carries for the same entity
+    meta = {
+        (x["indexer"], x["id"]): (x["wikipedia_id"], x["title"])
+        for cands in exact["candidates"] for x in cands
+    }
+    for cands in ann["candidates"]:
+        for x in cands:
+            key = (x["indexer"], x["id"])
+            if key in meta:
+                assert (x["wikipedia_id"], x["title"]) == meta[key]
 
 
 def test_ann_top1_agrees_with_exact(enriched_pair):
@@ -74,10 +85,9 @@ def test_ann_top1_agrees_with_exact(enriched_pair):
     assert agree / n >= 0.9, f"top-1 agreement {agree / n:.3f}"
 
 
-@pytest.mark.parametrize("mode", ["ivf", "ivf_pq"])
+@pytest.mark.parametrize("mode", ["ivf"])
 def test_run_batch_ann_modes_require_model(spark_world, cfg, mode):
-    """The persisted index is the only ANN path: no per-call fallback, and
-    no rw_pdf entities outside it."""
+    """The persisted index is the only ANN path: no per-call fallback."""
     import pandas as pd
 
     from incremental_entity_extraction_spark.pipeline import run_batch
@@ -85,14 +95,34 @@ def test_run_batch_ann_modes_require_model(spark_world, cfg, mode):
     with pytest.raises(ValueError, match="needs a prebuilt ann_model"):
         run_batch(
             spark_world["transcripts"], [], pd.DataFrame(), 0, cfg,
-            retrieval_mode=mode, kb_ro_df=spark_world["entities_kb"],
+            retrieval_mode=mode,
         )
-    # RW state rides rw_df only: rw_pdf entities would have no index rows
-    with pytest.raises(ValueError, match="takes RW state as rw_df"):
+
+
+@pytest.mark.parametrize("mode", ["IVF", "ivf_pq"])
+def test_unknown_retrieval_mode_is_rejected(spark, spark_world, cfg, tmp_path,
+                                            mode):
+    """A misspelled or retired mode raises before anything runs — it once
+    ran silently against an empty RO KB and linked nothing."""
+    import pandas as pd
+
+    from incremental_entity_extraction_spark.pipeline import (
+        Lake,
+        run_batch,
+        run_incremental,
+    )
+
+    lake = Lake(str(tmp_path / "lake"))
+    with pytest.raises(ValueError, match=r"broadcast \| ivf"):
+        run_incremental(
+            spark, spark_world["transcripts"], spark_world["entities_kb"],
+            lake, cfg, retrieval_mode=mode,
+        )
+    assert not (tmp_path / "lake").exists()
+    with pytest.raises(ValueError, match=r"broadcast \| ivf"):
         run_batch(
-            spark_world["transcripts"], [], pd.DataFrame({"id": [0]}), 0, cfg,
-            retrieval_mode=mode, kb_ro_df=spark_world["entities_kb"],
-            ann_model=object(),
+            spark_world["transcripts"], [], pd.DataFrame(), 0, cfg,
+            retrieval_mode=mode,
         )
 
 
@@ -145,36 +175,14 @@ def test_large_indexer_decodes_exactly(spark, cfg, tmp_path):
         "id long, indexer int, wikipedia_id long, title string, "
         "embedding array<float>",
     )
-    mentions = spark.createDataFrame(
-        [("m0", [float(x) for x in vecs[0]])],
-        "mention_id string, encoding array<float>",
-    )
     model = _build(kb, str(tmp_path / "idx"), n_centroids=2, n_probe=2)
-    out = retrieve_topk_indexed(mentions, kb, cfg, model).collect()
-    cands = out[0]["candidates"]
-    assert len(cands) > 0
-    assert all(c["indexer"] == big_indexer for c in cands)
-    assert cands[0]["id"] == 0  # self-similar vector decodes to the right id
-
-
-def test_pipeline_e2e_with_ivf_pq_retrieval(spark, spark_world, world, cfg, tmp_path):
-    """retrieval_mode='ivf_pq': codes in the index, exact re-rank from the
-    KB vectors — triples must still match the oracle at P/R >= 0.95."""
-    from incremental_entity_extraction_spark.oracle import oracle_run_incremental
-    from incremental_entity_extraction_spark.pipeline import Lake, run_incremental
-
-    _, _, ot, _ = oracle_run_incremental(world.transcripts, world.entities_kb, cfg)
-    oset = set(map(tuple, ot[["subj", "pred", "obj"]].itertuples(index=False)))
-    lake = Lake(str(tmp_path / "pq_lake"))
-    run_incremental(
-        spark, spark_world["transcripts"], spark_world["entities_kb"], lake, cfg,
-        cluster_mode="greedy_replay", retrieval_mode="ivf_pq",
+    counts, ids, idxr, wids, titles, _, _ = topk_candidates_columnar(
+        vecs[:1], [index_shard(model)], cfg.top_k, 1.0
     )
-    st = spark.read.parquet(lake.path("triples")).toPandas()
-    sset = set(map(tuple, st[["subj", "pred", "obj"]].itertuples(index=False)))
-    p = len(sset & oset) / len(sset)
-    r = len(sset & oset) / len(oset)
-    assert p >= 0.95 and r >= 0.95, f"ivf_pq-mode triples P={p:.3f} R={r:.3f}"
+    assert counts[0] == 6
+    assert (idxr == big_indexer).all()
+    assert ids[0] == 0  # self-similar vector decodes to the right id
+    assert (wids == 100 + ids).all() and list(titles) == [f"t{i}" for i in ids]
 
 
 def test_ann_modes_train_once_and_resume_trains_zero(
@@ -214,38 +222,32 @@ def test_ann_modes_train_once_and_resume_trains_zero(
             lake, cfg, cluster_mode="greedy_replay", retrieval_mode="ivf",
         )
         assert len(calls) == 1, "resume retrained the persisted index"
+
+        # a base built elsewhere from a metadata-less corpus (perfbench's
+        # set-up does this) is reused: its rows are rewritten with the KB's
+        # metadata under the frozen centroids, never retrained
+        kb = spark_world["entities_kb"]
+        pre = Lake(str(tmp_path / "prebuilt_lake"))
+        ai.build_ann_index(
+            composite_corpus(kb.select("id", "indexer", "embedding")),
+            pre.path("ann_index"),
+        )
+        assert len(calls) == 2
+        run_incremental(
+            spark, spark_world["transcripts"], kb, pre, cfg,
+            cluster_mode="greedy_replay", retrieval_mode="ivf",
+        )
+        assert len(calls) == 2, "the pipeline retrained a reusable base"
+        linked = (
+            spark.read.parquet(pre.path("mentions"))
+            .filter(~F.col("is_nil") & (F.col("top_indexer") == cfg.ro_indexer_id))
+            .select("top_wikipedia_id", "top_title").toPandas()
+        )
+        assert len(linked) and (linked["top_wikipedia_id"] >= 0).all()
+        assert (linked["top_title"] != "").all()
     finally:
         ss.kmeans_centroids = orig
         ai.kmeans_centroids = orig
-
-
-def test_ivf_pq_resume_is_byte_identical(spark, spark_world, cfg, tmp_path):
-    from pyspark.sql import functions as F
-
-    from incremental_entity_extraction_spark.pipeline import Lake, run_incremental
-
-    def _triples(lake):
-        pdf = spark.read.parquet(lake.path("triples")).toPandas()
-        return set(map(tuple, pdf[["subj", "pred", "obj"]].itertuples(index=False)))
-
-    full = Lake(str(tmp_path / "pq_full"))
-    run_incremental(
-        spark, spark_world["transcripts"], spark_world["entities_kb"], full,
-        cfg, cluster_mode="greedy_replay", retrieval_mode="ivf_pq",
-    )
-    part = Lake(str(tmp_path / "pq_part"))
-    run_incremental(
-        spark,
-        spark_world["transcripts"].filter(F.col("batch_id") <= 1),
-        spark_world["entities_kb"], part, cfg,
-        cluster_mode="greedy_replay", retrieval_mode="ivf_pq",
-    )
-    stats = run_incremental(
-        spark, spark_world["transcripts"], spark_world["entities_kb"], part,
-        cfg, cluster_mode="greedy_replay", retrieval_mode="ivf_pq",
-    )
-    assert [s["batch_id"] for s in stats] == [2, 3]
-    assert _triples(part) == _triples(full)
 
 
 def test_ivf_resume_is_byte_identical_and_driver_state_bounded(

@@ -92,28 +92,29 @@ def test_resume_with_dataless_new_entities(spark, spark_world, cfg, tmp_path):
     assert [s["batch_id"] for s in stats] == [1]
 
 
-def test_streaming_ivf_pq_equals_batch_ivf_pq(spark, spark_world, world, cfg, tmp_path):
+def test_streaming_ivf_equals_batch_ivf(spark, spark_world, world, cfg, tmp_path):
     """ANN retrieval in the streaming driver rides the SAME build-once
     persisted index as the batch driver (built at the first micro-batch,
-    deltas persisted per batch before the lineage mark): a multi-epoch
-    ivf_pq stream must emit exactly the batch ivf_pq run's triples."""
-    batch_lake = Lake(str(tmp_path / "b_pq_lake"))
+    deltas persisted per batch before the lineage mark, each micro-batch
+    broadcasting the index shard it sees): a multi-epoch ivf stream must
+    emit exactly the batch ivf run's triples."""
+    batch_lake = Lake(str(tmp_path / "b_ivf_lake"))
     run_incremental(
         spark, spark_world["transcripts"], spark_world["entities_kb"],
-        batch_lake, cfg, cluster_mode="greedy_replay", retrieval_mode="ivf_pq",
+        batch_lake, cfg, cluster_mode="greedy_replay", retrieval_mode="ivf",
     )
     expected = _triples(spark, batch_lake)
 
-    src = str(tmp_path / "src_pq")
+    src = str(tmp_path / "src_ivf")
     for b in sorted(world.transcripts["batch_id"].unique()):
         spark_world["transcripts"].filter(F.col("batch_id") == int(b)).coalesce(
             1
         ).write.mode("append").parquet(src)
 
-    stream_lake = Lake(str(tmp_path / "s_pq_lake"))
+    stream_lake = Lake(str(tmp_path / "s_ivf_lake"))
     run_streaming_incremental(
         spark, src, spark_world["entities_kb"], stream_lake, cfg,
-        cluster_mode="greedy_replay", retrieval_mode="ivf_pq",
+        cluster_mode="greedy_replay", retrieval_mode="ivf",
         max_files_per_trigger=1,  # one micro-batch per file: index deltas
                                   # must thread across epochs
     )

@@ -9,6 +9,7 @@ candidate)."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from incremental_entity_extraction_spark.pipeline import Lake, run_incremental
@@ -89,3 +90,41 @@ def test_deleted_rw_ids_are_not_reassigned(spark, spark_world, cfg, tmp_path):
     later = ne2.filter(F.col("batch_id") > first_batch)
     reused = later.filter(F.col("id") == victim_rw).count()
     assert reused == 0, "deleted RW id was recycled"
+
+
+@pytest.mark.parametrize("retrieval_mode", ["broadcast", "ivf"])
+def test_rw_tombstone_resume_keeps_full_candidate_lists(
+    spark, spark_world, cfg, tmp_path, retrieval_mode
+):
+    """A tombstoned RW entity is masked BEFORE the top-k in both engines:
+    resuming with batch 0's RW id 3 deleted, every later candidate list
+    still holds top_k entries and none of them is the deleted id (in ivf
+    mode the entity keeps its index rows; dropping it after selection
+    would leave a hole in the list)."""
+    t, kb = spark_world["transcripts"], spark_world["entities_kb"]
+    lake = Lake(str(tmp_path / "lake"))
+    run_incremental(
+        spark, t.filter(F.col("batch_id") == 0), kb, lake, cfg,
+        cluster_mode="greedy_replay", retrieval_mode=retrieval_mode,
+    )
+    victim = 3
+    ne = spark.read.parquet(lake.path("new_entities"))
+    assert ne.filter(F.col("id") == victim).count() == 1
+
+    stats = run_incremental(
+        spark, t, kb, lake, cfg, cluster_mode="greedy_replay",
+        retrieval_mode=retrieval_mode, persist_candidates=True,
+        deleted_entity_ids={victim},
+    )
+    assert [s["batch_id"] for s in stats] == [1, 2, 3]
+    sizes = (
+        spark.read.parquet(lake.path("candidates"))
+        .select(
+            F.size("candidates").alias("n"),
+            F.exists("candidates", lambda c: c["id"] == victim).alias("hit"),
+        )
+        .toPandas()
+    )
+    assert len(sizes) > 0
+    assert (sizes["n"] == cfg.top_k).all()
+    assert not sizes["hit"].any()
