@@ -21,7 +21,7 @@ from incremental_entity_extraction_spark.operators.clustering import (
 from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
 from incremental_entity_extraction_spark.operators.kb import (
     assign_new_entity_ids,
-    new_entity_rows,
+    new_entity_rows_pdf,
 )
 from incremental_entity_extraction_spark.operators.mentions import detect_mentions
 from incremental_entity_extraction_spark.operators.nil import predict_nil
@@ -69,10 +69,10 @@ def main() -> None:
     clusters.select("title", "nelements", "mentions").show(5, truncate=50)
 
     print("== 6. KB augmentation (M12)")
-    with_ids = assign_new_entity_ids(clusters, start_id=0, cfg=cfg)
-    new_entity_rows(with_ids, cfg).select(
-        "id", "indexer", "wikipedia_id", "title"
-    ).show(5)
+    with_ids = assign_new_entity_ids(clusters.toPandas(), start_id=0, cfg=cfg)
+    print(new_entity_rows_pdf(with_ids, cfg)[
+        ["id", "indexer", "wikipedia_id", "title"]
+    ].head(5))
 
     spark.stop()
 

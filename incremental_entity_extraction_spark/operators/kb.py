@@ -4,15 +4,18 @@ Reference: cluster centers are appended to the RW FAISS index with ids
 ``ntotal-n .. ntotal`` and COPY'd into Postgres
 (pipeline/indexer/main.py:178-214; scripts/eval_kbp.py:626-652).
 
-Deterministic id assignment (SURVEY.md §4 #3): ``row_number()`` over the
+Deterministic id assignment (SURVEY.md §4 #3): contiguous ids over the
 canonical cluster ordering (nelements desc, title asc, first-member asc)
 offset by the previous RW max — never ``monotonically_increasing_id``
-(non-deterministic under task retry).  The global window is safe: the row
-set is one batch's *clusters* (small by construction), not its mentions.
+(non-deterministic under task retry).  One batch's *clusters* are small by
+construction and already on the driver (pipeline.run_batch), so the
+ordering is a stable pandas sort there.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -20,22 +23,25 @@ from incremental_entity_extraction_spark.config import PipelineConfig
 
 
 def assign_new_entity_ids(
-    clusters: DataFrame, start_id: int, cfg: PipelineConfig
-) -> DataFrame:
-    """Adds (index_id, index_indexer) to cluster rows; ids contiguous from
-    ``start_id`` in canonical order."""
-    w = Window.orderBy(
-        F.desc("nelements"),
-        F.asc("title"),
-        F.asc(F.element_at("mentions_id", 1)),
+    clusters: pd.DataFrame, start_id: int, cfg: PipelineConfig
+) -> pd.DataFrame:
+    """Cluster rows sorted into canonical order, with ``index_id`` (int64,
+    contiguous from ``start_id``) and ``index_indexer`` added.  Python str
+    order equals UTF-8 byte order on every code point, so the order is the
+    one a Spark sort on the same keys gives."""
+    out = (
+        clusters.assign(_first=[m[0] for m in clusters["mentions_id"]])
+        .sort_values(
+            ["nelements", "title", "_first"],
+            ascending=[False, True, True],
+            kind="stable",
+        )
+        .drop(columns="_first")
+        .reset_index(drop=True)
     )
-    # explicit long: F.lit(python_int) is IntegerType while start_id fits
-    # int32, so without the cast the column TYPE would silently flip to
-    # long at the 2^31-th entity — a schema break mid-lake
-    return clusters.withColumn(
-        "index_id",
-        (F.row_number().over(w) - 1 + F.lit(start_id)).cast("long"),
-    ).withColumn("index_indexer", F.lit(cfg.rw_indexer_id))
+    out["index_id"] = np.arange(len(out), dtype=np.int64) + int(start_id)
+    out["index_indexer"] = np.int32(cfg.rw_indexer_id)
+    return out
 
 
 def contiguous_ids(
@@ -88,59 +94,23 @@ def contiguous_ids(
     )
 
 
-def new_entity_rows_pdf(clusters_pdf, cfg: PipelineConfig):
-    """Driver-side pandas twin of ``new_entity_rows`` minus ``batch_id`` —
-    exactly the frame ``BatchPersist.rw_delta`` would collect.  Exists for
-    the driver-gated tiny-batch path (pipeline._driver_cluster_assign),
-    which already HOLDS the cluster frame on the driver: collecting back
-    rows the driver just created costs a Spark job (~0.15-0.2 s/batch of
-    the profiled per-batch floor).  Value parity with the Spark path: ids
-    are int64 by construction, ``substring(1, n)`` ≡ ``str.slice(0, n)``
-    code point for code point, and centers carry the same float32 values
-    (f32 → Python float → f32 is lossless)."""
-    import numpy as np
-    import pandas as pd
-
-    c = clusters_pdf.reset_index(drop=True)
+def new_entity_rows_pdf(clusters: pd.DataFrame, cfg: PipelineConfig) -> pd.DataFrame:
+    """Cluster rows with ids -> rows of the ``new_entities`` table minus
+    ``batch_id`` (the entities dimension: id, indexer, wikipedia_id, title,
+    descr, type_, embedding; wikipedia_id = -1 for discovered entities,
+    pipeline/indexer/main.py:207).  The RW delta threaded to the next batch
+    and the rows the driver writes."""
+    c = clusters.reset_index(drop=True)
     return pd.DataFrame(
         {
             "id": c["index_id"].astype("int64"),
             "indexer": c["index_indexer"].astype("int32"),
             "wikipedia_id": np.full(len(c), -1, dtype=np.int64),
-            # astype("string") preserves nulls (astype(str) would stringify
-            # NaN/None into "nan"/"None" — a silent parity break with the
-            # Spark twin, whose F.substring propagates null)
+            # astype("string") keeps a null title null (astype(str) would
+            # stringify it into "None")
             "title": c["title"].astype("string").str.slice(0, cfg.max_title_len),
             "descr": np.full(len(c), "", dtype=object),
             "type_": np.full(len(c), None, dtype=object),
             "embedding": c["center"],
         }
     )
-
-
-def new_entity_rows(clusters_with_ids: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Cluster summaries -> rows for the ``new_entities`` lake table
-    (schema matches the entities dimension: id, indexer, wikipedia_id,
-    title, descr, type_, embedding; wikipedia_id = -1 for discovered
-    entities, pipeline/indexer/main.py:207).  Select list memoized per
-    (SparkContext, max_title_len) — rebuilt every batch otherwise
-    (~0.04 s/batch of Py4J)."""
-    from incremental_entity_extraction_spark.functions.expr_cache import (
-        cached_exprs,
-    )
-
-    cols = cached_exprs(
-        clusters_with_ids.sparkSession.sparkContext,
-        ("new_entity_rows", cfg.max_title_len),
-        lambda: [
-            F.col("index_id").cast("long").alias("id"),
-            F.col("index_indexer").cast("int").alias("indexer"),
-            F.lit(-1).cast("long").alias("wikipedia_id"),
-            F.substring("title", 1, cfg.max_title_len).alias("title"),
-            F.lit("").alias("descr"),
-            F.lit(None).cast("string").alias("type_"),
-            F.col("center").alias("embedding"),
-            F.col("batch_id"),
-        ],
-    )
-    return clusters_with_ids.select(*cols)

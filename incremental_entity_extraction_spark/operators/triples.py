@@ -9,14 +9,18 @@ KB delta.  Triple vocabulary:
 * (mention_id,       'member_of',       new:<rw_id>)       NIL
 * (new:<rw_id>,      'canonical_name',  modal title)       per cluster
 
-Pure column expressions + unionByName — no UDFs, no extra shuffles beyond
-the cluster-label join.
+The mention triples are pure column expressions over the enriched mention
+table — no UDFs, no shuffles.  The cluster triples are built on the driver
+from the batch's cluster rows, which are already there (pipeline.run_batch):
+no join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from incremental_entity_extraction_spark.config import PipelineConfig
 from incremental_entity_extraction_spark.functions.expr_cache import (
@@ -69,41 +73,24 @@ def mention_triples(nil_scored: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def cluster_triples(
-    nil_scored: DataFrame, labels: DataFrame, clusters_with_ids: DataFrame
+    spark: SparkSession, clusters: pd.DataFrame, batch_type: T.DataType
 ) -> DataFrame:
-    """'member_of' + 'canonical_name' triples.  labels: (mention_id,
-    cluster_label); clusters_with_ids adds index_id per cluster_label."""
-    is_nil, member_cols, canon_cols = cached_exprs(
-        nil_scored.sparkSession.sparkContext,
-        ("cluster_triples",),
-        lambda: (
-            F.col("is_nil"),
-            [
-                F.col("mention_id").alias("subj"),
-                F.lit("member_of").alias("pred"),
-                F.concat(F.lit("new:"), F.col("index_id")).alias("obj"),
-                F.col("conv_id"),
-                F.col("batch_id"),
-            ],
-            [
-                F.concat(F.lit("new:"), F.col("index_id")).alias("subj"),
-                F.lit("canonical_name").alias("pred"),
-                F.col("title").alias("obj"),
-                F.lit(None).cast("string").alias("conv_id"),
-                F.col("batch_id"),
-            ],
-        ),
+    """'member_of' + 'canonical_name' triples of one batch's cluster rows
+    with ids (``mentions_id``, ``index_id``, ``title``, ``batch_id``), as a
+    frame ``unionByName``-compatible with ``mention_triples`` (``batch_type``
+    is its batch_id type).  A member's conv_id is the prefix of its
+    composite ``mention_id = f"{conv_id}:{turn_idx}:{start_tok}"``
+    (operators/mentions.py)."""
+    rows = []
+    for members, index_id, title, batch_id in zip(
+        clusters["mentions_id"], clusters["index_id"], clusters["title"],
+        clusters["batch_id"],
+    ):
+        entity, b = f"new:{index_id}", int(batch_id)
+        rows += [(m, "member_of", entity, m.rsplit(":", 2)[0], b) for m in members]
+        rows.append((entity, "canonical_name", title, None, b))
+    schema = T.StructType(
+        [T.StructField(c, T.StringType()) for c in TRIPLE_COLS[:-1]]
+        + [T.StructField("batch_id", batch_type)]
     )
-    # the broadcast wraps a DataFrame — per-batch by necessity, not cached
-    cluster_ids = F.broadcast(
-        clusters_with_ids.select("cluster_label", "index_id", "title", "batch_id")
-    )
-    member_t = (
-        nil_scored.filter(is_nil)
-        .select("mention_id", "conv_id", "batch_id")
-        .join(labels, "mention_id")
-        .join(cluster_ids.select("cluster_label", "index_id"), "cluster_label")
-        .select(*member_cols)
-    )
-    canon_t = clusters_with_ids.select(*canon_cols)
-    return member_t.unionByName(canon_t)
+    return spark.createDataFrame(rows, schema)

@@ -14,13 +14,16 @@ resumable (north_rule):
 * ``triples``        — the KG, partitioned by batch_id.
 * ``lineage``        — one row per completed batch (checkpoint marker);
   resume = skip the longest committed prefix of the batch order.
-* ``metrics``        — per-batch counters + timings (+ eval metrics when gold
-  labels are supplied).
+* ``metrics``        — per-batch counters + timings, written as each batch
+  commits.
 
-Writes use dynamic partition overwrite on batch_id, so re-running a batch
-after a crash replaces exactly its own partitions — ids stay deterministic
-because they are ``row_number`` over canonical order + previous max
-(operators/kb.py), not a function of task scheduling.
+Every write replaces exactly the batch's own partition, so re-running a
+batch after a crash is idempotent.  ``mentions`` and ``triples`` are Spark
+writes with dynamic partition overwrite on batch_id (``Lake.write_partition``);
+``new_entities``, ``prev_clusters`` and ``metrics`` are already on the
+driver and are written there with pyarrow (``Lake.put_partition``).  Ids
+stay deterministic because they are contiguous over canonical order +
+previous max (operators/kb.py), not a function of task scheduling.
 
 Skew: per-batch work is repartitioned on (conv_id, turn_idx) — the turn
 index acts as the salt, so a hot conversation (Zipf head) spreads across
@@ -32,18 +35,19 @@ from __future__ import annotations
 import itertools
 import json
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG, PipelineConfig
-# the four per-batch kernels are imported for _driver_cluster_assign, which
+# the four per-batch kernels are imported for _driver_clusters, which
 # resolves them through this module's globals at call time
 from incremental_entity_extraction_spark.operators.clustering import (  # noqa: F401
     CLUSTER_KERNELS,
@@ -63,7 +67,6 @@ from incremental_entity_extraction_spark.operators.fused import (
 )
 from incremental_entity_extraction_spark.operators.kb import (
     assign_new_entity_ids,
-    new_entity_rows,
     new_entity_rows_pdf,
 )
 from incremental_entity_extraction_spark.operators.nil import predict_nil
@@ -76,73 +79,56 @@ from incremental_entity_extraction_spark.operators.triples import (
     mention_triples,
 )
 
-# driver gate: batches whose NIL set is at most this many rows are
-# clustered + summarized + id-assigned ON THE DRIVER (the mode's per-batch
-# kernel, clustering.CLUSTER_KERNELS, on the collected frame) and
-# re-parallelized via createDataFrame.  Above the gate the same kernel runs
-# in one applyInPandas task per batch — a single executor thread doing the
-# identical single-threaded work — so below it the driver path is the same
-# compute minus an applyInPandas shuffle, a global window and a
-# localCheckpoint (≈0.3 s/batch of pure job latency at sf0.1).  8192 rows
-# bound the collect at ~8 MB of encodings (dim 256) and the cc score matrix
-# at 256 MB in ~8 MB tiles.  Above the gate, cc alone runs the distributed
-# chain (broadcast sweep / LSH + star-CC) instead of one task.
+# driver gate: batches whose NIL set is at most this many rows are collected
+# and clustered + summarized ON THE DRIVER (the mode's per-batch kernel,
+# clustering.CLUSTER_KERNELS).  Above the gate the same kernel runs in one
+# applyInPandas task per batch — a single executor thread doing the
+# identical single-threaded work — and cc alone runs the distributed chain
+# (broadcast sweep / LSH + star-CC) instead; either way the summary rows are
+# then collected.  Below the gate the driver path is the same compute minus
+# an applyInPandas shuffle.  8192 rows bound the collect at ~8 MB of
+# encodings (dim 256) and the cc score matrix at 256 MB in ~8 MB tiles.
 DRIVER_CLUSTER_MAX = 8192
 
-_CLUSTERS_WITH_IDS_SCHEMA = T.StructType(
-    list(CLUSTER_SCHEMA.fields)
-    + [
-        T.StructField("index_id", T.LongType(), False),
-        T.StructField("index_indexer", T.IntegerType(), False),
-    ]
-)
+# pyarrow schemas of the driver-written tables; Lake.read gives them the
+# Spark types the Spark writers gave them (batch_id is the partition)
+_DRIVER_TABLES = {
+    "new_entities": pa.schema([
+        ("id", pa.int64()),
+        ("indexer", pa.int32()),
+        ("wikipedia_id", pa.int64()),
+        ("title", pa.string()),
+        ("descr", pa.string()),
+        ("type_", pa.string()),
+        ("embedding", pa.list_(pa.float32())),
+    ]),
+    "prev_clusters": pa.schema([
+        ("cluster_label", pa.string()),
+        ("title", pa.string()),
+        ("nelements", pa.int32()),
+        ("mentions_id", pa.list_(pa.string())),
+        ("mentions", pa.list_(pa.string())),
+        ("index_id", pa.int64()),
+        ("index_indexer", pa.int32()),
+    ]),
+}
 
 
-def _driver_cluster_assign(
-    nil_df: DataFrame, cfg: PipelineConfig, cluster_mode: str, next_rw_id: int
-) -> tuple[DataFrame, pd.DataFrame]:
-    """Tiny-NIL-batch fast path: collect, run the SAME per-batch kernel
-    ``clustering.cluster_summarize_batches`` runs, assign ids in the SAME
-    canonical order as operators/kb.assign_new_entity_ids (nelements desc,
-    title asc, first-member asc — pandas stable sort ≡ the window sort;
-    UTF-8 byte order ≡ Python str order on all codepoints), and
-    re-parallelize.
-    Output rows are identical to the paths above the gate (pinned by
-    tests/test_pipeline_e2e.py gate-parity).  Returns (DataFrame, the same
-    rows as pandas) so the caller can derive the RW delta driver-side
-    instead of collecting back rows the driver just created."""
-    spark = nil_df.sparkSession
+def _driver_clusters(
+    nil_df: DataFrame, cfg: PipelineConfig, cluster_mode: str
+) -> pd.DataFrame:
+    """Tiny-NIL-batch path: collect the NIL rows and run the SAME per-batch
+    kernel ``clustering.cluster_summarize_batches`` runs, on the driver.
+    Rows are identical to the paths above the gate (pinned by
+    tests/test_pipeline_e2e.py gate-parity)."""
     pdf = kernel_frame(nil_df, cluster_mode).toPandas()
     th = float(cfg.greedy_threshold)
     # looked up at call time, so a wrapper patched onto this module sees it
     kernel = globals()[CLUSTER_KERNELS[cluster_mode]]
     parts = [kernel(g, th) for _, g in pdf.groupby("batch_id", sort=True)]
-    cols = [f.name for f in CLUSTER_SCHEMA.fields]
-    clusters = (
-        pd.concat(parts, ignore_index=True)
-        if parts
-        else pd.DataFrame(columns=cols)
-    )
-    if len(clusters):
-        clusters = (
-            clusters.assign(_first=clusters["mentions_id"].str[0])
-            .sort_values(
-                ["nelements", "title", "_first"],
-                ascending=[False, True, True],
-                kind="stable",
-            )
-            .drop(columns="_first")
-            .reset_index(drop=True)
-        )
-    clusters["index_id"] = np.arange(len(clusters), dtype=np.int64) + int(
-        next_rw_id
-    )
-    clusters["index_indexer"] = np.int32(cfg.rw_indexer_id)
-    clusters = clusters[cols + ["index_id", "index_indexer"]]
-    return (
-        spark.createDataFrame(clusters, schema=_CLUSTERS_WITH_IDS_SCHEMA),
-        clusters,
-    )
+    if not parts:
+        return pd.DataFrame(columns=[f.name for f in CLUSTER_SCHEMA.fields])
+    return pd.concat(parts, ignore_index=True)
 
 
 @dataclass
@@ -166,6 +152,29 @@ class Lake:
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
         df.write.mode("overwrite").partitionBy("batch_id").parquet(self.path(table))
+
+    def put_partition(self, table: str, batch_id: int, rows: pa.Table) -> None:
+        """Replace ``table``'s ``batch_id=N`` partition with ``rows``, as
+        one parquet file written on the driver.  The file is staged in a
+        hidden sibling (readers skip dot-names) and swapped in by rename, so
+        a re-run replaces the partition whole; no rows remove it (Spark's
+        dynamic overwrite leaves a partition the frame has no rows for).
+        Plain encoding and no schema metadata: dictionaries and the arrow
+        schema would only grow these small files past Spark's own."""
+        base = self.path(table)
+        part = os.path.join(base, f"batch_id={int(batch_id)}")
+        stage = os.path.join(base, f".batch_id={int(batch_id)}.tmp")
+        shutil.rmtree(stage, ignore_errors=True)
+        if rows.num_rows:
+            os.makedirs(stage)
+            pq.write_table(
+                rows.replace_schema_metadata(None),
+                os.path.join(stage, "part-00000.parquet"),
+                use_dictionary=False, store_schema=False,
+            )
+        shutil.rmtree(part, ignore_errors=True)
+        if rows.num_rows:
+            os.rename(stage, part)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         p = self.path(table)
@@ -245,12 +254,13 @@ def run_batch(
     ann_model=None,
     ro_shards_bc=None,
 ):
-    """One batch: transcripts -> (nil_scored, clusters_with_ids, new_entities,
-    triples, rw_add_pdf).  Nothing is collected except the (small)
-    cluster/new-entity tables needed to thread state to the next batch.
-    ``rw_add_pdf`` is the RW delta already in pandas form when the
-    driver-gated clustering path ran (None otherwise) — pass it to
-    ``BatchPersist.start(rw_pdf_precomputed=...)`` to skip the collect job.
+    """One batch: transcripts -> (nil_scored, clusters, triples).  Nothing
+    is collected except the batch's (small) cluster rows: ``clusters`` is
+    pandas, one ``CLUSTER_SCHEMA`` row per new entity plus its
+    ``index_id`` / ``index_indexer``, in id order.  ``BatchPersist`` writes
+    ``new_entities`` and ``prev_clusters`` from it and threads the RW delta
+    to the next batch; its ``member_of`` / ``canonical_name`` triples are
+    built from it on the driver and ride ``triples``' one Spark write.
 
     Both retrieval modes run ONE fused detect→encode→retrieve stage
     (operators/fused.py); they differ only in the shard kind.
@@ -340,53 +350,46 @@ def run_batch(
         "mention", "context_left", "context_right", "encoding",
     )
     n_nil = int(gate_obs.get["n_nil"] or 0)
-    rw_add_pdf = None  # driver-gated batches precompute the RW delta
     if n_nil <= DRIVER_CLUSTER_MAX:
-        # tiny-batch driver path: same kernels, no applyInPandas shuffle, no
-        # window job, no checkpoint — replaces ≈0.3 s of per-batch job
-        # latency with one small collect (_driver_cluster_assign docstring)
-        clusters_with_ids, clusters_pdf = _driver_cluster_assign(
-            nil_df, cfg, cluster_mode, next_rw_id
-        )
-        rw_add_pdf = new_entity_rows_pdf(clusters_pdf, cfg)
+        # tiny-batch driver path: same kernels, no applyInPandas shuffle
+        clusters = _driver_clusters(nil_df, cfg, cluster_mode)
     else:
         if cluster_mode == "cc":
             # n_nil from the checkpoint Observation: no standalone count job
-            clusters = summarize_clusters_df(
+            summaries = summarize_clusters_df(
                 nil_df, cluster_cc(nil_df, cfg, n_rows=n_nil), cfg
             )
         else:
-            clusters = cluster_summarize_batches(nil_df, cfg, cluster_mode)
-        # clusters are small; checkpoint so the downstream actions (table
-        # writes + triples) don't each replay the clustering
-        clusters_with_ids = assign_new_entity_ids(
-            clusters, next_rw_id, cfg
-        ).localCheckpoint()
-    labels = clusters_with_ids.select(
-        F.explode("mentions_id").alias("mention_id"), "cluster_label"
-    )
-    new_entities = new_entity_rows(clusters_with_ids, cfg)
-
+            summaries = cluster_summarize_batches(nil_df, cfg, cluster_mode)
+        clusters = summaries.toPandas()
+    clusters = assign_new_entity_ids(clusters, next_rw_id, cfg)
     triples = mention_triples(nil_scored, cfg).unionByName(
-        cluster_triples(nil_scored, labels, clusters_with_ids)
+        cluster_triples(
+            nil_scored.sparkSession, clusters,
+            nil_scored.schema["batch_id"].dataType,
+        )
     )
-    return nil_scored, clusters_with_ids, new_entities, triples, rw_add_pdf
+    return nil_scored, clusters, triples
 
 
 class BatchPersist:
     """Async persist of one batch's lake tables.
 
-    ``start`` submits every independent job (4-5 table writes + the RW-delta
-    collect) to a thread pool at once — the inputs are ``localCheckpoint``-ed
-    in ``run_batch`` so the jobs share no recomputation, and concurrent
-    submission overlaps their fixed per-job scheduling cost (the dominant
-    term for small batches).  Mention/NIL stats ride the mentions write via
-    ``Observation`` instead of a separate aggregation job.
+    ``start`` submits every write to a thread pool at once.  ``mentions``
+    and ``triples`` (+ ``candidates``) are Spark writes of the
+    ``localCheckpoint``-ed ``nil_scored``, so they share no recomputation
+    and concurrent submission overlaps their fixed per-job scheduling cost
+    (the dominant term for small batches); mention/NIL stats ride the
+    mentions write via ``Observation``.  ``new_entities`` and
+    ``prev_clusters`` come from the cluster rows already on the driver and
+    are written there with pyarrow (``Lake.put_partition``): a Spark write
+    of a few dozen rows costs ~0.2 s of CPU, pyarrow ~2 ms.
 
-    ``rw_delta`` blocks only on the (tiny) new-entities collect — the one
-    cross-batch data dependency — so the driver can start computing batch
-    N+1 while batch N's writes drain; ``finish`` joins the writes and must
-    complete before batch N is marked in the lineage.
+    ``rw_delta`` returns the new-entities rows for RW-state threading — the
+    one cross-batch data dependency — without waiting on any write, so the
+    driver can start computing batch N+1 while batch N's writes drain;
+    ``finish`` joins the writes and must complete before batch N is marked
+    in the lineage.
 
     The wide ``candidates array<struct>`` column is NOT persisted in
     ``mentions`` — it dominates bytes at scale and is recomputable; pass
@@ -397,19 +400,18 @@ class BatchPersist:
     def __init__(self) -> None:
         self._ex: ThreadPoolExecutor | None = None
         self._futs: list = []
-        self._fut_pdf = None
         self._pdf: pd.DataFrame | None = None
         self._obs: Observation | None = None
 
     def start(
         self,
         lake: Lake,
+        batch_id: int,
         nil_scored: DataFrame,
-        clusters_with_ids: DataFrame,
-        new_entities: DataFrame,
+        clusters: pd.DataFrame,
         triples: DataFrame,
+        cfg: PipelineConfig,
         persist_candidates: bool = False,
-        rw_pdf_precomputed: pd.DataFrame | None = None,
         out_parts: int | None = None,
     ) -> "BatchPersist":
         self._obs = Observation()
@@ -433,16 +435,6 @@ class BatchPersist:
         jobs: list[tuple[DataFrame, str]] = [
             (_sized(mentions_out), "mentions"),
             (_sized(triples), "triples"),
-            (_sized(new_entities), "new_entities"),
-            (
-                _sized(
-                    clusters_with_ids.select(
-                        "cluster_label", "title", "nelements", "mentions_id",
-                        "mentions", "index_id", "index_indexer", "batch_id",
-                    )
-                ),
-                "prev_clusters",
-            ),
         ]
         if persist_candidates:
             jobs.append(
@@ -453,23 +445,25 @@ class BatchPersist:
                     "candidates",
                 )
             )
-        self._ex = ThreadPoolExecutor(max_workers=len(jobs) + 1)
+        self._pdf = new_entity_rows_pdf(clusters, cfg)
+        local = {"new_entities": self._pdf, "prev_clusters": clusters}
+        self._ex = ThreadPoolExecutor(max_workers=len(jobs) + len(local))
         self._futs = [self._ex.submit(lake.write_partition, df, t) for df, t in jobs]
-        if rw_pdf_precomputed is not None:
-            # driver-gated batches already hold the delta rows in pandas
-            # (kb.new_entity_rows_pdf) — no collect job needed
-            self._pdf = rw_pdf_precomputed
-        else:
-            self._fut_pdf = self._ex.submit(
-                new_entities.drop("batch_id").toPandas
+        self._futs += [
+            self._ex.submit(
+                lake.put_partition, t, batch_id,
+                pa.Table.from_pandas(
+                    pdf, schema=_DRIVER_TABLES[t], preserve_index=False
+                ),
             )
+            for t, pdf in local.items()
+        ]
         return self
 
     def rw_delta(self) -> pd.DataFrame:
-        """The new-entities rows for RW-state threading (blocks only on the
-        small collect — or returns immediately when precomputed — never on
-        the table writes)."""
-        return self._pdf if self._fut_pdf is None else self._fut_pdf.result()
+        """The new-entities rows for RW-state threading (never waits on the
+        table writes)."""
+        return self._pdf
 
     def finish(self) -> dict:
         """Join all writes; returns the observed mention/NIL stats.  Must
@@ -710,6 +704,9 @@ class BatchLoop:
                     # visible to the next batches through their per-batch
                     # broadcast; the run's index shard stays as broadcast
                     ro_shards.append(IVFShard(files=[fkey]))
+            # the batch's metrics row, before the lineage mark: a run that
+            # fails later still leaves metrics for every batch it committed
+            lake.put_partition("metrics", b_prev, pa.Table.from_pylist([stats]))
             lake.mark_complete(int(b_prev), stats)
             drained.add(int(b_prev))  # its new_entities partition is readable
             stats_rows.append({"batch_id": int(b_prev), **stats})
@@ -721,21 +718,19 @@ class BatchLoop:
                 tb = self._salted(
                     frame.filter(F.col("batch_id") == int(b)), nb_turns
                 )
-                nil_scored, clusters_with_ids, new_entities, triples, rw_add = (
-                    run_batch(
-                        tb, ro_shards, rw_pdf, next_rw_id, cfg,
-                        self.cluster_mode, self.known_words, self.encoder,
-                        self.retrieval_mode, ann_model=ann_model,
-                        ro_shards_bc=ro_shards_bc,
-                    )
+                nil_scored, clusters, triples = run_batch(
+                    tb, ro_shards, rw_pdf, next_rw_id, cfg,
+                    self.cluster_mode, self.known_words, self.encoder,
+                    self.retrieval_mode, ann_model=ann_model,
+                    ro_shards_bc=ro_shards_bc,
                 )
                 # S7 analogue: persist the enriched mention table per batch
                 # (reference pickles outdata per batch, eval_kbp.py:654-658);
                 # encodings/candidates are dropped — recomputable and
                 # dominate bytes.
                 bp = BatchPersist().start(
-                    lake, nil_scored, clusters_with_ids, new_entities, triples,
-                    self.persist_candidates, rw_pdf_precomputed=rw_add,
+                    lake, int(b), nil_scored, clusters, triples, cfg,
+                    self.persist_candidates,
                     # write-task count sized like the compute (~2000
                     # turns/task, see BatchPersist.start): tiny batches write
                     # one file per table instead of one per
@@ -789,11 +784,6 @@ class BatchLoop:
         finally:
             if ann:
                 ro_shards_bc.unpersist()
-
-        # a handful of driver rows — createDataFrame spreads them over
-        # defaultParallelism partitions; one write task is the right size
-        metrics_df = spark.createDataFrame(pd.DataFrame(stats_rows)).coalesce(1)
-        lake.write_partition(metrics_df, "metrics")
         return stats_rows
 
 

@@ -8,8 +8,27 @@ Iceberg catalog configs.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+# worker_daemon.py: re-reads a zip on sys.path only when it changed, instead
+# of once per task
+DAEMON_MODULE = "incremental_entity_extraction_spark.worker_daemon"
+
+
+def daemon_importable(env: Mapping[str, str], cwd: str) -> bool:
+    """Whether the Python worker daemon that the JVM this process launches
+    starts (``python -m <module>``, in the JVM's cwd, with its PYTHONPATH)
+    can import ``DAEMON_MODULE``: the package root is on ``PYTHONPATH``, or
+    it is ``cwd``, which ``-m`` puts on ``sys.path`` unless
+    ``PYTHONSAFEPATH`` is set.  A ``--py-files`` zip does not count: it
+    reaches a worker per task, after the daemon has started."""
+    roots = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if not env.get("PYTHONSAFEPATH"):
+        roots.append(cwd)
+    rel = os.path.join(*DAEMON_MODULE.split(".")) + ".py"
+    return any(os.path.isfile(os.path.join(cwd, r, rel)) for r in roots)
 
 
 def get_spark(
@@ -39,6 +58,8 @@ def get_spark(
         # being written (resume semantics, SURVEY.md §2.10)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
+    if daemon_importable(os.environ, os.getcwd()):
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -48,14 +48,14 @@ def test_composite_order_cols(spark):
     assert list(out["id"]) == [0, 1, 2, 3, 4]
 
 
-def test_new_entity_rows_pdf_parity_including_null_title(spark):
-    """new_entity_rows_pdf (the driver-gated collect-free RW delta) must be
-    value-identical to the Spark twin minus batch_id — INCLUDING a null
-    title, which astype(str) would silently stringify to "None" while
-    F.substring propagates null (round-6 advice)."""
+def test_new_entity_rows_pdf_parity_including_null_title(spark, tmp_lake):
+    """new_entity_rows_pdf (the RW delta and the rows the driver writes to
+    ``new_entities``) must give the values Spark's ``F.substring`` twin
+    gave — INCLUDING a null title, which astype(str) would silently
+    stringify to "None" while F.substring propagates null (round-6 advice).
+    The twin is gone; Spark's values are pinned literally."""
     from incremental_entity_extraction_spark.config import PipelineConfig
     from incremental_entity_extraction_spark.operators.kb import (
-        new_entity_rows,
         new_entity_rows_pdf,
     )
 
@@ -70,15 +70,25 @@ def test_new_entity_rows_pdf_parity_including_null_title(spark):
         }
     )
     got = new_entity_rows_pdf(clusters_pdf, cfg)
-    spark_rows = (
-        new_entity_rows(spark.createDataFrame(clusters_pdf), cfg)
-        .drop("batch_id")
-        .toPandas()
-    )
-    assert list(got.columns) == list(spark_rows.columns)
-    for col in ("id", "indexer", "wikipedia_id", "descr", "type_"):
-        assert list(got[col]) == list(spark_rows[col])
-    # null stays null on BOTH paths; truncation identical
-    for a, b in zip(got["title"], spark_rows["title"]):
-        assert (pd.isna(a) and b is None) or a == b
+    assert list(got.columns) == [
+        "id", "indexer", "wikipedia_id", "title", "descr", "type_", "embedding",
+    ]
+    assert list(got["id"]) == [10, 11, 12]
+    assert list(got["indexer"]) == [2, 2, 2]
+    assert list(got["wikipedia_id"]) == [-1, -1, -1]
+    assert list(got["descr"]) == ["", "", ""]
+    assert list(got["type_"]) == [None, None, None]
+    assert [list(e) for e in got["embedding"]] == [[1.0, 0.0], [0.0, 1.0], [0.5, 0.5]]
+    # null stays null; truncation is by code point
     assert list(got["title"][:2]) == ["short", "a very l"]
+    assert pd.isna(got["title"][2])
+    # and read back from the table the driver writes
+    import pyarrow as pa
+
+    from incremental_entity_extraction_spark.pipeline import _DRIVER_TABLES
+
+    tmp_lake.put_partition("new_entities", 0, pa.Table.from_pandas(
+        got, schema=_DRIVER_TABLES["new_entities"], preserve_index=False
+    ))
+    back = tmp_lake.read(spark, "new_entities").toPandas().sort_values("id")
+    assert list(back["title"]) == ["short", "a very l", None]

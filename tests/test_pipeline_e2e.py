@@ -164,10 +164,11 @@ def test_driver_gate_parity_with_distributed_path(
     byte-identical to the path above the gate (cc: the distributed chain;
     the other modes: the same kernel in one applyInPandas task per batch):
     same triples, same new-entity rows (embeddings included), same
-    prev_clusters rows."""
+    prev_clusters rows (every column), and the same read-back schema of
+    every per-batch table."""
     import incremental_entity_extraction_spark.pipeline as pl
 
-    outs, ents, prevs = [], [], []
+    outs, ents, prevs, schemas = [], [], [], []
     for gate in (pl.DRIVER_CLUSTER_MAX, -1):  # driver path vs above the gate
         monkeypatch.setattr(pl, "DRIVER_CLUSTER_MAX", gate)
         lk = pl.Lake(str(tmp_path / f"gate_{mode}_{gate}"))
@@ -188,13 +189,38 @@ def test_driver_gate_parity_with_distributed_path(
             .sort_values("id")
             .reset_index(drop=True)
         )
+        prev = spark.read.parquet(lk.path("prev_clusters")).toPandas()
         prevs.append(
-            spark.read.parquet(lk.path("prev_clusters"))
-            .select("cluster_label", "title", "nelements", "batch_id")
-            .toPandas()
+            prev.assign(**{
+                c: prev[c].map(tuple) for c in ("mentions_id", "mentions")
+            })
             .sort_values(["batch_id", "cluster_label"])
             .reset_index(drop=True)
         )
+        schemas.append({
+            t: lk.read(spark, t).schema
+            for t in ("new_entities", "prev_clusters", "metrics", "triples")
+        })
     assert outs[0] == outs[1]
     pd.testing.assert_frame_equal(ents[0], ents[1])
+    assert list(prevs[0].columns) == [
+        "cluster_label", "title", "nelements", "mentions_id", "mentions",
+        "index_id", "index_indexer", "batch_id",
+    ]
     pd.testing.assert_frame_equal(prevs[0], prevs[1])
+    assert schemas[0] == schemas[1]
+
+
+def test_mention_id_prefix_is_conv_id(spark, spark_world, cfg, tmp_lake):
+    """The driver builds member_of triples' conv_id from the composite
+    mention_id (operators/triples.cluster_triples), so the prefix before
+    its last two ':' fields must be the conv_id of every stored mention."""
+    _run(spark, spark_world, tmp_lake, cfg, "cc")
+    m = tmp_lake.read(spark, "mentions").select("mention_id", "conv_id").toPandas()
+    assert len(m)
+    assert (m["mention_id"].str.rsplit(":", n=2).str[0] == m["conv_id"]).all()
+    t = tmp_lake.read(spark, "triples").toPandas()
+    member = t[t["pred"] == "member_of"]
+    assert len(member)
+    got = dict(zip(m["mention_id"], m["conv_id"]))
+    assert all(got[s] == c for s, c in zip(member["subj"], member["conv_id"]))

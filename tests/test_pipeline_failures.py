@@ -56,6 +56,37 @@ def test_failed_later_batch_keeps_earlier_lineage_and_resumes(
     assert _triples_set(spark, flaky_lake) == want
 
 
+def test_failed_run_keeps_metrics_of_committed_batches(
+    spark, spark_world, cfg, tmp_path, monkeypatch
+):
+    """Each batch's metrics row is written as the batch commits: when the
+    second of three batches fails, the first batch's row exists and holds
+    its lineage stats."""
+    import json
+
+    lake = pl.Lake(str(tmp_path / "lake"))
+    orig = pl.run_batch
+    calls = {"n": 0}
+
+    def flaky_run_batch(*a, **k):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated executor loss")
+        return orig(*a, **k)
+
+    monkeypatch.setattr(pl, "run_batch", flaky_run_batch)
+    with pytest.raises(RuntimeError, match="simulated"):
+        pl.run_incremental(
+            spark, spark_world["transcripts"].filter(F.col("batch_id") <= 2),
+            spark_world["entities_kb"], lake, cfg, cluster_mode="cc",
+        )
+    assert lake.completed_batches() == {0}
+    with open(lake.lineage_path()) as f:
+        (line,) = [json.loads(ln) for ln in f]
+    got = lake.read(spark, "metrics").toPandas()
+    assert got.to_dict("records") == [line]
+
+
 def test_two_fresh_runs_are_byte_identical(spark, spark_world, cfg, tmp_path):
     """Determinism contract: same input, two fresh lakes -> identical triple
     sets AND identical new-entity id assignments (no task-scheduling order
