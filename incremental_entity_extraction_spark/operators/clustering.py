@@ -333,12 +333,10 @@ def tfidf_summarize_pdf(pdf: pd.DataFrame, th: float) -> pd.DataFrame:
     return _summarize(pdf, roots)
 
 
-def kernel_frame(nil_df: DataFrame, cluster_mode: str) -> DataFrame:
+def kernel_columns(cluster_mode: str) -> list[str]:
     """The NIL columns the mode's kernel reads (contexts only for tfidf)."""
     extra = ["context_left", "context_right"] if cluster_mode == "tfidf" else []
-    return nil_df.select(
-        "batch_id", *_CANONICAL, "mention_id", "mention", "encoding", *extra
-    )
+    return ["batch_id", *_CANONICAL, "mention_id", "mention", "encoding", *extra]
 
 
 def cluster_summarize_batches(
@@ -352,8 +350,10 @@ def cluster_summarize_batches(
     def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
         return kernel(pdf, th)
 
-    return kernel_frame(nil_df, cluster_mode).groupBy("batch_id").applyInPandas(
-        _batch, schema=CLUSTER_SCHEMA
+    return (
+        nil_df.select(*kernel_columns(cluster_mode))
+        .groupBy("batch_id")
+        .applyInPandas(_batch, schema=CLUSTER_SCHEMA)
     )
 
 

@@ -1,7 +1,7 @@
 """Lake maintenance: small-file compaction for incrementally-written tables.
 
 The incremental pipeline writes one file-set per (table, batch_id) partition
-per batch (pipeline.Lake.write_partition and Lake.put_partition), and the
+per batch (pipeline.Lake.put_partition), and the
 streaming driver does the same per micro-batch — at 10^12-turn scale that
 accretes thousands of small parquet files per partition, and small files
 are the classic lake killer (every scan pays per-file open/footer costs;

@@ -9,88 +9,67 @@ KB delta.  Triple vocabulary:
 * (mention_id,       'member_of',       new:<rw_id>)       NIL
 * (new:<rw_id>,      'canonical_name',  modal title)       per cluster
 
-The mention triples are pure column expressions over the enriched mention
-table — no UDFs, no shuffles.  The cluster triples are built on the driver
-from the batch's cluster rows, which are already there (pipeline.run_batch):
-no join.
+Both halves are built on the driver with pyarrow from rows already there
+(pipeline.run_batch): the batch's mention rows, collected once as Arrow,
+and its cluster rows.  No Spark job, no join.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from incremental_entity_extraction_spark.config import PipelineConfig
-from incremental_entity_extraction_spark.functions.expr_cache import (
-    cached_exprs,
+
+# the ``triples`` table minus its batch_id partition, as Spark's writer gave it
+TRIPLES_SCHEMA = pa.schema(
+    [(c, pa.string()) for c in ("subj", "pred", "obj", "conv_id")]
 )
 
-TRIPLE_COLS = ["subj", "pred", "obj", "conv_id", "batch_id"]
 
-
-def _mention_triple_exprs(cfg: PipelineConfig) -> tuple:
-    """(mentions-select, linked-filter, linked-select) expression
-    templates — memoized per (SparkContext, ro_indexer_id)."""
-    turn_uri = F.concat_ws("#", "conv_id", "turn_idx")
-    mentions_cols = [
-        turn_uri.alias("subj"),
-        F.lit("mentions").alias("pred"),
-        F.col("mention_id").alias("obj"),
-        F.col("conv_id"),
-        F.col("batch_id"),
-    ]
-    not_nil = ~F.col("is_nil")
-    linked_cols = [
-        F.col("mention_id").alias("subj"),
-        F.lit("linked_to").alias("pred"),
-        F.when(
-            F.col("top_indexer") == cfg.ro_indexer_id,
-            F.concat(F.lit("wiki:"), F.col("top_wikipedia_id")),
-        )
-        .otherwise(F.concat(F.lit("new:"), F.col("top_id")))
-        .alias("obj"),
-        F.col("conv_id"),
-        F.col("batch_id"),
-    ]
-    return mentions_cols, not_nil, linked_cols
-
-
-def mention_triples(nil_scored: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """'mentions' + 'linked_to' triples from the enriched mention table.
-    Expression templates cached per (SparkContext, indexer id) — this plan
-    is rebuilt every batch and its Py4J construction cost is a serial
-    floor term (~0.06 s/batch)."""
-    mentions_cols, not_nil, linked_cols = cached_exprs(
-        nil_scored.sparkSession.sparkContext,
-        ("mention_triples", cfg.ro_indexer_id),
-        lambda: _mention_triple_exprs(cfg),
+def _triples(subj, pred: str, obj, conv_id) -> pa.Table:
+    return pa.Table.from_arrays(
+        [subj, pa.repeat(pred, len(subj)), obj, conv_id], schema=TRIPLES_SCHEMA
     )
-    mentions_t = nil_scored.select(*mentions_cols)
-    linked_t = nil_scored.filter(not_nil).select(*linked_cols)
-    return mentions_t.unionByName(linked_t)
 
 
-def cluster_triples(
-    spark: SparkSession, clusters: pd.DataFrame, batch_type: T.DataType
-) -> DataFrame:
+def mention_triples(mentions: pa.Table, cfg: PipelineConfig) -> pa.Table:
+    """'mentions' + 'linked_to' triples of one batch's mention rows (the
+    ``mentions`` table's columns).  A linked row with a null id gets a null
+    object, as Spark's ``concat`` gave it."""
+    def text(col):
+        return pc.cast(col, pa.string())
+
+    turn_uri = pc.binary_join_element_wise(
+        mentions["conv_id"], text(mentions["turn_idx"]), "#"
+    )
+    linked = mentions.filter(pc.invert(mentions["is_nil"]))
+    target = pc.if_else(
+        pc.equal(linked["top_indexer"], cfg.ro_indexer_id),
+        pc.binary_join_element_wise("wiki:", text(linked["top_wikipedia_id"]), ""),
+        pc.binary_join_element_wise("new:", text(linked["top_id"]), ""),
+    )
+    return pa.concat_tables([
+        _triples(turn_uri, "mentions", mentions["mention_id"], mentions["conv_id"]),
+        _triples(linked["mention_id"], "linked_to", target, linked["conv_id"]),
+    ])
+
+
+def cluster_triples(clusters: pd.DataFrame) -> pa.Table:
     """'member_of' + 'canonical_name' triples of one batch's cluster rows
-    with ids (``mentions_id``, ``index_id``, ``title``, ``batch_id``), as a
-    frame ``unionByName``-compatible with ``mention_triples`` (``batch_type``
-    is its batch_id type).  A member's conv_id is the prefix of its
-    composite ``mention_id = f"{conv_id}:{turn_idx}:{start_tok}"``
+    with ids (``mentions_id``, ``index_id``, ``title``).  A member's conv_id
+    is the prefix of its composite
+    ``mention_id = f"{conv_id}:{turn_idx}:{start_tok}"``
     (operators/mentions.py)."""
     rows = []
-    for members, index_id, title, batch_id in zip(
-        clusters["mentions_id"], clusters["index_id"], clusters["title"],
-        clusters["batch_id"],
+    for members, index_id, title in zip(
+        clusters["mentions_id"], clusters["index_id"], clusters["title"]
     ):
-        entity, b = f"new:{index_id}", int(batch_id)
-        rows += [(m, "member_of", entity, m.rsplit(":", 2)[0], b) for m in members]
-        rows.append((entity, "canonical_name", title, None, b))
-    schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in TRIPLE_COLS[:-1]]
-        + [T.StructField("batch_id", batch_type)]
+        entity = f"new:{index_id}"
+        rows += [(m, "member_of", entity, m.rsplit(":", 2)[0]) for m in members]
+        rows.append((entity, "canonical_name", title, None))
+    cols = list(zip(*rows)) if rows else [()] * len(TRIPLES_SCHEMA)
+    return pa.Table.from_arrays(
+        [pa.array(c, pa.string()) for c in cols], schema=TRIPLES_SCHEMA
     )
-    return spark.createDataFrame(rows, schema)

@@ -18,12 +18,14 @@ resumable (north_rule):
   commits.
 
 Every write replaces exactly the batch's own partition, so re-running a
-batch after a crash is idempotent.  ``mentions`` and ``triples`` are Spark
-writes with dynamic partition overwrite on batch_id (``Lake.write_partition``);
-``new_entities``, ``prev_clusters`` and ``metrics`` are already on the
-driver and are written there with pyarrow (``Lake.put_partition``).  Ids
-stay deterministic because they are contiguous over canonical order +
-previous max (operators/kb.py), not a function of task scheduling.
+batch after a crash is idempotent.  No table is a Spark write: each batch
+crosses from Spark to the driver once, as one Arrow collect after the NIL
+checkpoint, and the driver writes ``mentions``, ``triples``,
+``candidates``, ``new_entities``, ``prev_clusters`` and ``metrics`` from it
+with pyarrow (``Lake.put_partition``: one file per ``batch_id=N/``, and a
+re-run with no rows removes the partition).  Ids stay deterministic because
+they are contiguous over canonical order + previous max (operators/kb.py),
+not a function of task scheduling.
 
 Skew: per-batch work is repartitioned on (conv_id, turn_idx) — the turn
 index acts as the salt, so a hot conversation (Zipf head) spreads across
@@ -42,6 +44,7 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +59,7 @@ from incremental_entity_extraction_spark.operators.clustering import (  # noqa: 
     cluster_cc,
     cluster_summarize_batches,
     greedy_summarize_pdf,
-    kernel_frame,
+    kernel_columns,
     summarize_clusters_df,
     tfidf_summarize_pdf,
     three_step_summarize_pdf,
@@ -75,6 +78,7 @@ from incremental_entity_extraction_spark.operators.retrieval import (
     build_kb_shards,
 )
 from incremental_entity_extraction_spark.operators.triples import (
+    TRIPLES_SCHEMA,
     cluster_triples,
     mention_triples,
 )
@@ -90,8 +94,9 @@ from incremental_entity_extraction_spark.operators.triples import (
 # encodings (dim 256) and the cc score matrix at 256 MB in ~8 MB tiles.
 DRIVER_CLUSTER_MAX = 8192
 
-# pyarrow schemas of the driver-written tables; Lake.read gives them the
-# Spark types the Spark writers gave them (batch_id is the partition)
+# pyarrow schemas of the lake tables the driver writes, each the one Spark's
+# writer gave it (batch_id is the partition), so a lake that mixes older
+# Spark-written partitions with driver-written ones reads through Lake.read
 _DRIVER_TABLES = {
     "new_entities": pa.schema([
         ("id", pa.int64()),
@@ -111,17 +116,54 @@ _DRIVER_TABLES = {
         ("index_id", pa.int64()),
         ("index_indexer", pa.int32()),
     ]),
+    "mentions": pa.schema([
+        pa.field("mention_id", pa.string(), False),
+        pa.field("conv_id", pa.string(), False),
+        pa.field("turn_idx", pa.int32(), False),
+        pa.field("start_tok", pa.int32(), False),
+        pa.field("mention", pa.string(), False),
+        ("context_left", pa.string()),
+        ("context_right", pa.string()),
+        ("max_bi", pa.float32()),
+        ("secondiff", pa.float64()),
+        ("nil_score", pa.float64()),
+        ("is_nil", pa.bool_()),
+        ("top_id", pa.int64()),
+        ("top_indexer", pa.int32()),
+        ("top_wikipedia_id", pa.int64()),
+        ("top_title", pa.string()),
+    ]),
+    "triples": TRIPLES_SCHEMA,
+    "candidates": pa.schema([
+        pa.field("mention_id", pa.string(), False),
+        pa.field("candidates", pa.list_(pa.field("element", pa.struct([
+            pa.field("id", pa.int64(), False),
+            pa.field("indexer", pa.int32(), False),
+            ("wikipedia_id", pa.int64()),
+            ("title", pa.string()),
+            pa.field("score", pa.float32(), False),
+            pa.field("norm_score", pa.float32(), False),
+        ]))), False),
+    ]),
 }
 
 
+def _pinned(rows: pa.Table, table: str) -> pa.Table:
+    """``rows``' columns of ``table``, cast to its pinned schema."""
+    schema = _DRIVER_TABLES[table]
+    return rows.select(schema.names).cast(schema)
+
+
 def _driver_clusters(
-    nil_df: DataFrame, cfg: PipelineConfig, cluster_mode: str
+    rows: pa.Table, cfg: PipelineConfig, cluster_mode: str
 ) -> pd.DataFrame:
-    """Tiny-NIL-batch path: collect the NIL rows and run the SAME per-batch
-    kernel ``clustering.cluster_summarize_batches`` runs, on the driver.
-    Rows are identical to the paths above the gate (pinned by
-    tests/test_pipeline_e2e.py gate-parity)."""
-    pdf = kernel_frame(nil_df, cluster_mode).toPandas()
+    """Tiny-NIL-batch path: the SAME per-batch kernel
+    ``clustering.cluster_summarize_batches`` runs, on the NIL slice of the
+    batch's collected rows.  Rows are identical to the paths above the
+    gate (pinned by tests/test_pipeline_e2e.py gate-parity)."""
+    pdf = (
+        rows.filter(rows["is_nil"]).select(kernel_columns(cluster_mode)).to_pandas()
+    )
     th = float(cfg.greedy_threshold)
     # looked up at call time, so a wrapper patched onto this module sees it
     kernel = globals()[CLUSTER_KERNELS[cluster_mode]]
@@ -143,6 +185,9 @@ class Lake:
 
     def write_partition(self, df: DataFrame, table: str) -> None:
         """Idempotent: dynamic overwrite of only the batch_id partitions in df.
+        The pipeline no longer calls it (every lake table is driver-written,
+        ``put_partition``); it stays as the Spark writer that older lakes'
+        partitions came from, which the resume tests rebuild with it.
 
         The dynamic mode is asserted here (it is a runtime-settable conf)
         rather than trusted from session setup: under Spark's default STATIC
@@ -253,14 +298,29 @@ def run_batch(
     retrieval_mode: str = "broadcast",
     ann_model=None,
     ro_shards_bc=None,
+    persist_candidates: bool = False,
 ):
-    """One batch: transcripts -> (nil_scored, clusters, triples).  Nothing
-    is collected except the batch's (small) cluster rows: ``clusters`` is
-    pandas, one ``CLUSTER_SCHEMA`` row per new entity plus its
-    ``index_id`` / ``index_indexer``, in id order.  ``BatchPersist`` writes
-    ``new_entities`` and ``prev_clusters`` from it and threads the RW delta
-    to the next batch; its ``member_of`` / ``canonical_name`` triples are
-    built from it on the driver and ride ``triples``' one Spark write.
+    """One batch: transcripts -> (tables, clusters), everything on the
+    driver.  After the ``nil_scored`` checkpoint the batch crosses to the
+    driver ONCE, as one Arrow collect of the mention rows, plus the NIL
+    encodings below ``DRIVER_CLUSTER_MAX`` (the clustering kernel's input)
+    and the candidate lists when ``persist_candidates``.
+
+    * ``tables``: pyarrow tables of ``mentions``, ``triples`` and
+      ``candidates`` in their pinned schemas (``candidates`` empty unless
+      persisted), for ``BatchPersist`` to write.  The ``mentions`` /
+      ``linked_to`` triples come from the mention rows, the ``member_of``
+      / ``canonical_name`` ones from ``clusters``.
+    * ``clusters``: pandas, one ``CLUSTER_SCHEMA`` row per new entity plus
+      its ``index_id`` / ``index_indexer``, in id order; ``BatchPersist``
+      writes ``new_entities`` and ``prev_clusters`` from it and threads the
+      RW delta to the next batch.
+
+    Driver memory: one batch's mention rows (≈200–300 B each, plus the
+    candidate lists when persisted) and, below the gate only, the NIL
+    encodings (≤ ``DRIVER_CLUSTER_MAX`` × dim floats).  Above the gate the
+    clustering reads the checkpoint in Spark and only its summary rows are
+    collected.
 
     Both retrieval modes run ONE fused detect→encode→retrieve stage
     (operators/fused.py); they differ only in the shard kind.
@@ -345,15 +405,24 @@ def run_batch(
             # stranding one grown-RW-shard broadcast per retry
             rw_bc.unpersist()
 
-    nil_df = nil_scored.filter(F.col("is_nil")).select(
-        "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
-        "mention", "context_left", "context_right", "encoding",
-    )
     n_nil = int(gate_obs.get["n_nil"] or 0)
-    if n_nil <= DRIVER_CLUSTER_MAX:
+    on_driver = n_nil <= DRIVER_CLUSTER_MAX
+    # the batch's one crossing to the driver: every lake table is written
+    # from these rows
+    cols = [*_DRIVER_TABLES["mentions"].names, "batch_id"]
+    if on_driver:
+        cols.append(F.when(F.col("is_nil"), F.col("encoding")).alias("encoding"))
+    if persist_candidates:
+        cols.append("candidates")
+    rows = nil_scored.select(*cols).toArrow()
+    if on_driver:
         # tiny-batch driver path: same kernels, no applyInPandas shuffle
-        clusters = _driver_clusters(nil_df, cfg, cluster_mode)
+        clusters = _driver_clusters(rows, cfg, cluster_mode)
     else:
+        nil_df = nil_scored.filter(F.col("is_nil")).select(
+            "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
+            "mention", "context_left", "context_right", "encoding",
+        )
         if cluster_mode == "cc":
             # n_nil from the checkpoint Observation: no standalone count job
             summaries = summarize_clusters_df(
@@ -363,27 +432,34 @@ def run_batch(
             summaries = cluster_summarize_batches(nil_df, cfg, cluster_mode)
         clusters = summaries.toPandas()
     clusters = assign_new_entity_ids(clusters, next_rw_id, cfg)
-    triples = mention_triples(nil_scored, cfg).unionByName(
-        cluster_triples(
-            nil_scored.sparkSession, clusters,
-            nil_scored.schema["batch_id"].dataType,
-        )
-    )
-    return nil_scored, clusters, triples
+    mentions = _pinned(rows, "mentions")
+    tables = {
+        "mentions": mentions,
+        "triples": pa.concat_tables(
+            [mention_triples(mentions, cfg), cluster_triples(clusters)]
+        ),
+        "candidates": (
+            _pinned(rows, "candidates") if persist_candidates
+            else _DRIVER_TABLES["candidates"].empty_table()
+        ),
+    }
+    return tables, clusters
 
 
 class BatchPersist:
-    """Async persist of one batch's lake tables.
+    """Async persist of one batch's lake tables, all written on the driver
+    with pyarrow (``Lake.put_partition``): a Spark write of a few hundred
+    rows costs ~0.2 s of CPU, pyarrow ~5 ms.
 
-    ``start`` submits every write to a thread pool at once.  ``mentions``
-    and ``triples`` (+ ``candidates``) are Spark writes of the
-    ``localCheckpoint``-ed ``nil_scored``, so they share no recomputation
-    and concurrent submission overlaps their fixed per-job scheduling cost
-    (the dominant term for small batches); mention/NIL stats ride the
-    mentions write via ``Observation``.  ``new_entities`` and
-    ``prev_clusters`` come from the cluster rows already on the driver and
-    are written there with pyarrow (``Lake.put_partition``): a Spark write
-    of a few dozen rows costs ~0.2 s of CPU, pyarrow ~2 ms.
+    ``start`` submits every write to a thread pool at once: ``mentions``,
+    ``triples`` and ``candidates`` as ``run_batch`` built them, and
+    ``new_entities`` / ``prev_clusters`` from the cluster rows.  An empty
+    table removes the batch's earlier partition, so a re-run that finds no
+    mentions, or that no longer persists candidates, leaves none of the
+    earlier attempt's rows.  The mention / NIL counts are read off the
+    ``mentions`` rows.  The driver holds the batch's tables until
+    ``finish``: its mention rows, its triples and its cluster rows (see
+    ``run_batch`` for the bound).
 
     ``rw_delta`` returns the new-entities rows for RW-state threading — the
     one cross-batch data dependency — without waiting on any write, so the
@@ -401,62 +477,31 @@ class BatchPersist:
         self._ex: ThreadPoolExecutor | None = None
         self._futs: list = []
         self._pdf: pd.DataFrame | None = None
-        self._obs: Observation | None = None
+        self._stats: dict = {}
 
     def start(
         self,
         lake: Lake,
         batch_id: int,
-        nil_scored: DataFrame,
+        tables: dict[str, pa.Table],
         clusters: pd.DataFrame,
-        triples: DataFrame,
         cfg: PipelineConfig,
-        persist_candidates: bool = False,
-        out_parts: int | None = None,
     ) -> "BatchPersist":
-        self._obs = Observation()
-        mentions_out = nil_scored.drop("encoding", "candidates").observe(
-            self._obs,
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.sum(F.when(F.col("is_nil"), 1).otherwise(0)).alias("n_nil"),
-        )
-
-        # ``out_parts`` (round 8, guide §6 small-files): the write-task count
-        # the batch's row volume justifies — run_incremental passes
-        # ~turns/2000, the same per-task sizing _batch_partitions uses for
-        # compute.  Without it a 1 250-turn batch wrote every table through
-        # 16-32 tasks (driver-created frames inherit defaultParallelism), so
-        # a 4-batch sf0.1 lake held 269 parquet files and each write job
-        # paid a multi-task commit.  coalesce NEVER increases partitioning,
-        # so big batches keep their write parallelism unchanged.
-        def _sized(df: DataFrame) -> DataFrame:
-            return df.coalesce(out_parts) if out_parts else df
-
-        jobs: list[tuple[DataFrame, str]] = [
-            (_sized(mentions_out), "mentions"),
-            (_sized(triples), "triples"),
-        ]
-        if persist_candidates:
-            jobs.append(
-                (
-                    _sized(
-                        nil_scored.select("mention_id", "candidates", "batch_id")
-                    ),
-                    "candidates",
-                )
-            )
+        mentions = tables["mentions"]
+        self._stats = {
+            "n_mentions": mentions.num_rows,
+            "n_nil": int(pc.sum(mentions["is_nil"]).as_py() or 0),
+        }
         self._pdf = new_entity_rows_pdf(clusters, cfg)
-        local = {"new_entities": self._pdf, "prev_clusters": clusters}
-        self._ex = ThreadPoolExecutor(max_workers=len(jobs) + len(local))
-        self._futs = [self._ex.submit(lake.write_partition, df, t) for df, t in jobs]
-        self._futs += [
-            self._ex.submit(
-                lake.put_partition, t, batch_id,
-                pa.Table.from_pandas(
-                    pdf, schema=_DRIVER_TABLES[t], preserve_index=False
-                ),
+        writes = dict(tables)
+        for t, pdf in (("new_entities", self._pdf), ("prev_clusters", clusters)):
+            writes[t] = pa.Table.from_pandas(
+                pdf, schema=_DRIVER_TABLES[t], preserve_index=False
             )
-            for t, pdf in local.items()
+        self._ex = ThreadPoolExecutor(max_workers=len(writes))
+        self._futs = [
+            self._ex.submit(lake.put_partition, t, batch_id, rows)
+            for t, rows in writes.items()
         ]
         return self
 
@@ -466,18 +511,14 @@ class BatchPersist:
         return self._pdf
 
     def finish(self) -> dict:
-        """Join all writes; returns the observed mention/NIL stats.  Must
+        """Join all writes; returns the batch's mention/NIL counts.  Must
         run before the batch is marked complete in the lineage."""
         try:
             for f in self._futs:
                 f.result()
         finally:
             self._ex.shutdown(wait=False)
-        got = self._obs.get
-        return {
-            "n_mentions": int(got["n_mentions"]),
-            "n_nil": int(got["n_nil"] or 0),
-        }
+        return self._stats
 
 
 @dataclass
@@ -581,8 +622,8 @@ class BatchLoop:
         # state, so only the longest committed PREFIX of the batch order
         # counts as done — a gap in the lineage (mid-run corruption, manual
         # partition delete) invalidates every later batch, which is then
-        # re-run; dynamic partition overwrite makes the re-runs
-        # byte-identical replacements.
+        # re-run; each re-run replaces its batch_id=N partitions whole
+        # (Lake.put_partition), byte-identically.
         completed = lake.completed_batches() if self.resume else set()
         todo = list(
             itertools.dropwhile(lambda b: b in completed, sorted(batch_counts))
@@ -718,25 +759,18 @@ class BatchLoop:
                 tb = self._salted(
                     frame.filter(F.col("batch_id") == int(b)), nb_turns
                 )
-                nil_scored, clusters, triples = run_batch(
+                tables, clusters = run_batch(
                     tb, ro_shards, rw_pdf, next_rw_id, cfg,
                     self.cluster_mode, self.known_words, self.encoder,
                     self.retrieval_mode, ann_model=ann_model,
                     ro_shards_bc=ro_shards_bc,
+                    persist_candidates=self.persist_candidates,
                 )
                 # S7 analogue: persist the enriched mention table per batch
                 # (reference pickles outdata per batch, eval_kbp.py:654-658);
                 # encodings/candidates are dropped — recomputable and
                 # dominate bytes.
-                bp = BatchPersist().start(
-                    lake, int(b), nil_scored, clusters, triples, cfg,
-                    self.persist_candidates,
-                    # write-task count sized like the compute (~2000
-                    # turns/task, see BatchPersist.start): tiny batches write
-                    # one file per table instead of one per
-                    # default-parallelism partition
-                    out_parts=max(1, nb_turns // 2000),
-                )
+                bp = BatchPersist().start(lake, int(b), tables, clusters, cfg)
                 # thread RW state forward (small dimension delta)
                 add_pdf = bp.rw_delta()
                 if ann:

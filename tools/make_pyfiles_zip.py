@@ -99,10 +99,20 @@ def require_fresh_zip(zip_path: str = ZIP_PATH, root: str = ROOT) -> None:
 
 
 def build(zip_path: str = ZIP_PATH, root: str = ROOT) -> str:
+    """Write the zip reproducibly: entries in sorted order, each with a
+    fixed timestamp and mode, so the same tree always gives the same
+    bytes."""
     os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for arc, body in source_entries(root).items():
-            z.writestr(arc.replace(os.sep, "/"), body)
+    entries = {
+        arc.replace(os.sep, "/"): body for arc, body in source_entries(root).items()
+    }
+    with zipfile.ZipFile(zip_path, "w") as z:
+        for arc, body in sorted(entries.items()):
+            info = zipfile.ZipInfo(arc, date_time=(1980, 1, 1, 0, 0, 0))
+            info.compress_type = zipfile.ZIP_DEFLATED
+            info.create_system = 3  # unix, so external_attr holds the mode
+            info.external_attr = 0o644 << 16
+            z.writestr(info, body)
     return zip_path
 
 
