@@ -202,9 +202,9 @@ def cluster_cc(
     id.
 
     ``n_rows``: the NIL row count when the caller already knows it (the
-    pipeline's gate count rides an ``Observation`` on the checkpoint
-    action) — passing it skips this function's one standalone ``count()``
-    job, which exists only to pick the edge-generation path."""
+    pipeline counts it off the batch's collected rows) — passing it skips
+    this function's one standalone ``count()`` job, which exists only to
+    pick the edge-generation path."""
     n = nil_df.count() if n_rows is None else int(n_rows)
     if n > lsh_threshold:
         edges = nil_edges_lsh(nil_df, cfg)

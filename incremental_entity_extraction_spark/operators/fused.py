@@ -1,4 +1,4 @@
-"""Fused detect→encode→retrieve stage: ONE mapInPandas hop.
+"""Fused detect→encode→retrieve→NIL stage: ONE mapInArrow hop.
 
 The composable operators (mentions.py, encode.py, retrieval.py) are three
 chained ``mapInPandas`` stages.  Spark runs each as its own PythonRunner, so
@@ -7,10 +7,12 @@ a single task chains three Python workers and every intermediate row
 boundary three times.  At 32 cores that is ~96 concurrent Python workers —
 measured 2-3× slower than this fused single-hop stage on the same data.
 
-This operator runs the same three kernels (detection, featurizer,
-tiled top-k) inside one worker pass and emits the full enriched mention
-rows.  Output is bit-identical to the composed chain (tests assert it);
-the composed operators remain for unit testing and ad-hoc composition.
+This operator runs the same kernels (detection, featurizer, tiled top-k,
+then ``nil.nil_columns`` on the flat top-k arrays) inside one worker pass
+and emits the full enriched, NIL-scored mention rows.  Output is
+bit-identical to the composed chain followed by ``nil.predict_nil`` (tests
+assert it); the composed operators remain for unit testing and ad-hoc
+composition.
 
 Both retrieval modes run here.  The shards are either ``KBShard``s (the
 whole KB broadcast; exact) or the persisted IVF index
@@ -34,6 +36,10 @@ from incremental_entity_extraction_spark.functions.fused_kernel import (
     fused_mentions_frame,
 )
 from incremental_entity_extraction_spark.operators.ann_index import _list_array
+from incremental_entity_extraction_spark.operators.nil import (
+    NIL_FIELDS,
+    nil_columns,
+)
 from incremental_entity_extraction_spark.operators.retrieval import (
     CANDIDATE_STRUCT,
     topk_candidates_columnar,
@@ -56,6 +62,7 @@ ENCODED_SCHEMA = T.StructType(
 FUSED_SCHEMA = T.StructType(
     ENCODED_SCHEMA.fields
     + [T.StructField("candidates", T.ArrayType(CANDIDATE_STRUCT), False)]
+    + NIL_FIELDS
 )
 
 
@@ -71,29 +78,35 @@ def _row_chunks(n: int, width: int) -> Iterator[tuple[int, int]]:
         yield s, min(s + max_rows, n)
 
 
-def _candidates_list_array(
-    counts: np.ndarray,
+def _candidate_arrays(
     ids: np.ndarray,
     idxr: np.ndarray,
     wids: np.ndarray,
     titles: np.ndarray,
     sc: np.ndarray,
     norm_sc: np.ndarray,
+) -> list[pa.Array]:
+    """Flat columnar top-k output (``topk_candidates_columnar``) -> the
+    arrow arrays of the ``CANDIDATE_STRUCT`` fields."""
+    return [
+        pa.array(ids, type=pa.int64()),
+        pa.array(idxr, type=pa.int32()),
+        pa.array(wids, type=pa.int64()),
+        pa.array(titles, type=pa.string()),
+        pa.array(sc, type=pa.float32()),
+        pa.array(norm_sc, type=pa.float32()),
+    ]
+
+
+def _candidates_list_array(
+    counts: np.ndarray, fields: list[pa.Array]
 ) -> pa.ListArray:
-    """Flat columnar top-k output (``topk_candidates_columnar``) -> arrow
-    list<struct> candidates column."""
+    """``_candidate_arrays`` + per-row counts -> arrow list<struct>
+    candidates column."""
     offsets = np.zeros(len(counts) + 1, dtype=np.int32)
     np.cumsum(counts, out=offsets[1:])
     struct = pa.StructArray.from_arrays(
-        [
-            pa.array(ids, type=pa.int64()),
-            pa.array(idxr, type=pa.int32()),
-            pa.array(wids, type=pa.int64()),
-            pa.array(titles, type=pa.string()),
-            pa.array(sc, type=pa.float32()),
-            pa.array(norm_sc, type=pa.float32()),
-        ],
-        names=[f.name for f in CANDIDATE_STRUCT.fields],
+        fields, names=[f.name for f in CANDIDATE_STRUCT.fields]
     )
     return pa.ListArray.from_arrays(pa.array(offsets), struct)
 
@@ -120,7 +133,8 @@ def detect_encode_retrieve(
     shards_bc=None,
     extra_shards_bc=None,
 ) -> DataFrame:
-    """transcripts -> enriched mention rows (encoding + sorted candidates).
+    """transcripts -> enriched mention rows: encoding, sorted candidates and
+    the ``nil.NIL_FIELDS`` columns (``max_bi`` … ``is_nil``, ``top_*``).
 
     ``shards`` is a list of one shard kind (``topk_candidates_columnar``):
     ``KBShard``s, or an ``ann_index.IVFShard`` index shard followed by any
@@ -152,10 +166,10 @@ def detect_encode_retrieve(
     function broadcast the growing RW shard every batch with nothing ever
     unpersisting it would leak O(batches × RW-KB bytes) on the driver and
     in every worker's broadcast registry.  ``run_batch`` creates the RW
-    broadcast, passes it here, and unpersists it once the batch's
-    materialization barrier (the ``nil_scored`` localCheckpoint) has run —
-    after which the fused stage can never re-execute under the lake's
-    existing localCheckpoint recovery contract."""
+    broadcast, passes it here, and unpersists it once the batch's one
+    Arrow collect of this stage has returned (or failed) — nothing reads
+    the stage again after that: above the clustering gate the NIL rows go
+    back to Spark from the collected table, not from this plan."""
     spark = transcripts.sparkSession
     if extra_shards_bc is not None and shards:
         raise ValueError("pass the per-call extra via EITHER shards or "
@@ -191,20 +205,21 @@ def detect_encode_retrieve(
                 continue
             out, enc = res
             # columnar assembly end-to-end: the encoding column comes
-            # straight from the flat (n, dim) matrix and the candidates
-            # column from the kernel's flat top-k arrays — no per-row lists,
-            # no per-candidate dicts (the last per-row Python on this path)
+            # straight from the flat (n, dim) matrix, the candidates and
+            # NIL columns from the kernel's flat top-k arrays — no per-row
+            # lists, no per-candidate dicts
             for s, e in _row_chunks(len(out), max(dim, k_cfg)):
                 o = out.iloc[s:e] if (s, e) != (0, len(out)) else out
+                counts, *flat = topk_candidates_columnar(
+                    enc[s:e], shard_list, k_cfg, norm2
+                )
+                fields = _candidate_arrays(*flat)
                 yield pa.RecordBatch.from_arrays(
                     _base_arrays(o)
                     + [
                         _list_array(enc[s:e]),
-                        _candidates_list_array(
-                            *topk_candidates_columnar(
-                                enc[s:e], shard_list, k_cfg, norm2
-                            )
-                        ),
+                        _candidates_list_array(counts, fields),
+                        *nil_columns(counts, *fields[:5], cfg),
                     ],
                     names=[f.name for f in FUSED_SCHEMA.fields],
                 )

@@ -19,7 +19,7 @@ of anything row-sized:
   are all whole-stage-codegen arithmetic).  d is tiny (2 deployed features),
   so the driver-side Newton solve is O(d³) on a 3×3 matrix;
 * the result converts into a ``PipelineConfig`` via ``to_config`` so the
-  closed-form ``nil_score_expr`` (operators/nil.py) consumes the trained
+  closed-form ``nil_columns`` kernel (operators/nil.py) consumes the trained
   model unchanged.
 
 IRLS on a strictly convex penalized log-likelihood converges quadratically;

@@ -18,12 +18,13 @@ resumable (north_rule):
   commits.
 
 Every write replaces exactly the batch's own partition, so re-running a
-batch after a crash is idempotent.  No table is a Spark write: each batch
-crosses from Spark to the driver once, as one Arrow collect after the NIL
-checkpoint, and the driver writes ``mentions``, ``triples``,
-``candidates``, ``new_entities``, ``prev_clusters`` and ``metrics`` from it
-with pyarrow (``Lake.put_partition``: one file per ``batch_id=N/``, and a
-re-run with no rows removes the partition).  Ids stay deterministic because
+batch after a crash is idempotent.  A batch is one Spark job: the fused
+detect→encode→retrieve→NIL stage (operators/fused.py) runs inside the one
+Arrow collect that brings its rows to the driver, and the driver writes
+``mentions``, ``triples``, ``candidates``, ``new_entities``,
+``prev_clusters`` and ``metrics`` from it with pyarrow
+(``Lake.put_partition``: one file per ``batch_id=N/``, and a re-run with
+no rows removes the partition).  Ids stay deterministic because
 they are contiguous over canonical order + previous max (operators/kb.py),
 not a function of task scheduling.
 
@@ -46,7 +47,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -72,7 +73,6 @@ from incremental_entity_extraction_spark.operators.kb import (
     assign_new_entity_ids,
     new_entity_rows_pdf,
 )
-from incremental_entity_extraction_spark.operators.nil import predict_nil
 from incremental_entity_extraction_spark.operators.retrieval import (
     KBShard,
     build_kb_shards,
@@ -83,15 +83,16 @@ from incremental_entity_extraction_spark.operators.triples import (
     mention_triples,
 )
 
-# driver gate: batches whose NIL set is at most this many rows are collected
-# and clustered + summarized ON THE DRIVER (the mode's per-batch kernel,
-# clustering.CLUSTER_KERNELS).  Above the gate the same kernel runs in one
+# driver gate: batches whose NIL set is at most this many rows are
+# clustered + summarized ON THE DRIVER (the mode's per-batch kernel,
+# clustering.CLUSTER_KERNELS) from the batch's collected rows.  Above the
+# gate those NIL rows go back to Spark: the same kernel runs in one
 # applyInPandas task per batch — a single executor thread doing the
 # identical single-threaded work — and cc alone runs the distributed chain
 # (broadcast sweep / LSH + star-CC) instead; either way the summary rows are
 # then collected.  Below the gate the driver path is the same compute minus
-# an applyInPandas shuffle.  8192 rows bound the collect at ~8 MB of
-# encodings (dim 256) and the cc score matrix at 256 MB in ~8 MB tiles.
+# an applyInPandas shuffle.  8192 rows bound the cc score matrix at 256 MB
+# in ~8 MB tiles.
 DRIVER_CLUSTER_MAX = 8192
 
 # pyarrow schemas of the lake tables the driver writes, each the one Spark's
@@ -155,15 +156,13 @@ def _pinned(rows: pa.Table, table: str) -> pa.Table:
 
 
 def _driver_clusters(
-    rows: pa.Table, cfg: PipelineConfig, cluster_mode: str
+    nil: pa.Table, cfg: PipelineConfig, cluster_mode: str
 ) -> pd.DataFrame:
     """Tiny-NIL-batch path: the SAME per-batch kernel
-    ``clustering.cluster_summarize_batches`` runs, on the NIL slice of the
-    batch's collected rows.  Rows are identical to the paths above the
-    gate (pinned by tests/test_pipeline_e2e.py gate-parity)."""
-    pdf = (
-        rows.filter(rows["is_nil"]).select(kernel_columns(cluster_mode)).to_pandas()
-    )
+    ``clustering.cluster_summarize_batches`` runs, on the batch's collected
+    NIL rows.  Rows are identical to the paths above the gate (pinned by
+    tests/test_pipeline_e2e.py gate-parity)."""
+    pdf = nil.select(kernel_columns(cluster_mode)).to_pandas()
     th = float(cfg.greedy_threshold)
     # looked up at call time, so a wrapper patched onto this module sees it
     kernel = globals()[CLUSTER_KERNELS[cluster_mode]]
@@ -301,10 +300,10 @@ def run_batch(
     persist_candidates: bool = False,
 ):
     """One batch: transcripts -> (tables, clusters), everything on the
-    driver.  After the ``nil_scored`` checkpoint the batch crosses to the
-    driver ONCE, as one Arrow collect of the mention rows, plus the NIL
-    encodings below ``DRIVER_CLUSTER_MAX`` (the clustering kernel's input)
-    and the candidate lists when ``persist_candidates``.
+    driver.  The batch is ONE Spark job: the fused stage scores NIL itself,
+    and the batch crosses to the driver once, as one Arrow collect of the
+    mention rows plus the NIL rows' encodings (the clustering input) and
+    the candidate lists when ``persist_candidates``.
 
     * ``tables``: pyarrow tables of ``mentions``, ``triples`` and
       ``candidates`` in their pinned schemas (``candidates`` empty unless
@@ -316,13 +315,17 @@ def run_batch(
       writes ``new_entities`` and ``prev_clusters`` from it and threads the
       RW delta to the next batch.
 
-    Driver memory: one batch's mention rows (≈200–300 B each, plus the
-    candidate lists when persisted) and, below the gate only, the NIL
-    encodings (≤ ``DRIVER_CLUSTER_MAX`` × dim floats).  Above the gate the
-    clustering reads the checkpoint in Spark and only its summary rows are
-    collected.
+    Driver memory, on both sides of the clustering gate: one batch's
+    mention rows (≈200–300 B each, plus the candidate lists when persisted)
+    and its NIL encodings (n_nil × dim × 4 B).  ``DRIVER_CLUSTER_MAX``
+    decides only where clustering runs: at or below it the mode's kernel
+    runs on the driver; above it the NIL slice goes back to Spark
+    (``createDataFrame``) for ``cluster_cc`` or
+    ``cluster_summarize_batches``, and only the summary rows come back.
+    A lost executor makes Spark retry the tasks of the one job; a batch
+    that still fails is not marked, and the resume re-runs it.
 
-    Both retrieval modes run ONE fused detect→encode→retrieve stage
+    Both retrieval modes run ONE fused detect→encode→retrieve→NIL stage
     (operators/fused.py); they differ only in the shard kind.
 
     * ``'broadcast'`` (default): ``ro_shards`` are the RO KB's ``KBShard``s
@@ -338,8 +341,8 @@ def run_batch(
     ``ro_shards_bc`` (``BatchLoop``) is the ONE broadcast of
     ``ro_shards[:1]`` reused across the run's batches; the rest of the
     shards and the RW shard ride one per-batch broadcast that is
-    unpersisted after the ``nil_scored`` checkpoint.  Without it, every
-    shard is broadcast for this call alone."""
+    unpersisted after the collect.  Without it, every shard is broadcast
+    for this call alone."""
     _check_retrieval_mode(retrieval_mode)
     if cluster_mode not in CLUSTER_KERNELS:
         raise ValueError(
@@ -366,13 +369,14 @@ def run_batch(
         )
     # fused single-hop stage (operators/fused.py): one Python worker per
     # task instead of three chained ones; identical output to the composed
-    # detect_mentions → encode_mentions_df → retrieve_topk chain.
-    rw_bc = None  # per-batch RW broadcast; unpersisted after the barrier
+    # detect_mentions → encode_mentions_df → retrieve_topk → predict_nil
+    # chain.
+    rw_bc = None  # per-batch RW broadcast; unpersisted after the collect
     if ro_shards_bc is not None:
         # run_batch owns the per-batch RW broadcast so it can be
-        # unpersisted after the nil_scored checkpoint barrier — letting
-        # the fused stage broadcast it internally would leak one
-        # Broadcast of the growing RW KB per batch over a long stream
+        # unpersisted once the collect has run — letting the fused stage
+        # broadcast it internally would leak one Broadcast of the growing
+        # RW KB per batch over a long stream
         if rw_shards:
             rw_bc = transcripts_batch.sparkSession.sparkContext.broadcast(
                 rw_shards
@@ -386,45 +390,39 @@ def run_batch(
             transcripts_batch, cfg, list(ro_shards) + rw_shards,
             known_words=known_words, encoder=encoder,
         )
-    # two materialization barriers by design (SURVEY.md §3.1): clustering is
-    # iterative, and the KB append is the batch boundary.  The NIL count the
-    # driver gate needs rides this checkpoint action as an Observation — no
-    # standalone count job per batch.
-    try:
-        nil_scored = predict_nil(enriched, cfg)
-        gate_obs = Observation()
-        nil_scored = nil_scored.observe(
-            gate_obs, F.sum(F.col("is_nil").cast("long")).alias("n_nil")
-        ).localCheckpoint()
-    finally:
-        if rw_bc is not None:
-            # once the eager checkpoint materialized the fused stage this
-            # batch's RW broadcast is dead weight (driver pickle + every
-            # worker's broadcast registry); the finally keeps a FAILED
-            # batch (e.g. transient executor loss mid-checkpoint) from
-            # stranding one grown-RW-shard broadcast per retry
-            rw_bc.unpersist()
-
-    n_nil = int(gate_obs.get["n_nil"] or 0)
-    on_driver = n_nil <= DRIVER_CLUSTER_MAX
-    # the batch's one crossing to the driver: every lake table is written
-    # from these rows
-    cols = [*_DRIVER_TABLES["mentions"].names, "batch_id"]
-    if on_driver:
-        cols.append(F.when(F.col("is_nil"), F.col("encoding")).alias("encoding"))
+    # the batch's one Spark job and its one crossing to the driver: every
+    # lake table, and the clustering input on both sides of the gate, is
+    # built from these rows
+    cols = [
+        *_DRIVER_TABLES["mentions"].names, "batch_id",
+        F.when(F.col("is_nil"), F.col("encoding")).alias("encoding"),
+    ]
     if persist_candidates:
         cols.append("candidates")
-    rows = nil_scored.select(*cols).toArrow()
-    if on_driver:
+    try:
+        rows = enriched.select(*cols).toArrow()
+    finally:
+        if rw_bc is not None:
+            # the collect ran the fused stage, and nothing reads it again:
+            # this batch's RW broadcast is dead weight (driver pickle +
+            # every worker's broadcast registry); the finally keeps a
+            # FAILED batch from stranding one grown-RW-shard broadcast per
+            # retry
+            rw_bc.unpersist()
+
+    n_nil = int(pc.sum(rows["is_nil"]).as_py() or 0)
+    # Table.filter with no match gives a table createDataFrame rejects (an
+    # empty list column with no chunk); slice(0, 0) keeps one
+    nil = rows.filter(rows["is_nil"]) if n_nil else rows.slice(0, 0)
+    if n_nil <= DRIVER_CLUSTER_MAX:
         # tiny-batch driver path: same kernels, no applyInPandas shuffle
-        clusters = _driver_clusters(rows, cfg, cluster_mode)
+        clusters = _driver_clusters(nil, cfg, cluster_mode)
     else:
-        nil_df = nil_scored.filter(F.col("is_nil")).select(
+        nil_df = transcripts_batch.sparkSession.createDataFrame(nil.select([
             "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
             "mention", "context_left", "context_right", "encoding",
-        )
+        ]))
         if cluster_mode == "cc":
-            # n_nil from the checkpoint Observation: no standalone count job
             summaries = summarize_clusters_df(
                 nil_df, cluster_cc(nil_df, cfg, n_rows=n_nil), cfg
             )

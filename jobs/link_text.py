@@ -39,7 +39,6 @@ def main() -> None:
     from incremental_entity_extraction_spark.operators.fused import (
         detect_encode_retrieve,
     )
-    from incremental_entity_extraction_spark.operators.nil import predict_nil
     from incremental_entity_extraction_spark.operators.retrieval import (
         build_kb_shards,
     )
@@ -58,7 +57,7 @@ def main() -> None:
         "conv_id string, turn_idx int, role string, text string, tool string, batch_id int",
     )
     shards = build_kb_shards(kb, n_shards=1)
-    out = predict_nil(detect_encode_retrieve(transcripts, cfg, shards), cfg)
+    out = detect_encode_retrieve(transcripts, cfg, shards)
     rows = out.select(
         "turn_idx", "mention", "is_nil", "top_title",
         F.round("max_bi", 2).alias("score"),

@@ -8,15 +8,12 @@ from incremental_entity_extraction_spark.operators.clustering import (
     nil_edges_lsh,
 )
 from incremental_entity_extraction_spark.operators.fused import detect_encode_retrieve
-from incremental_entity_extraction_spark.operators.nil import predict_nil
 from incremental_entity_extraction_spark.operators.retrieval import build_kb_shards
 
 
 def _nil_df(spark, spark_world, cfg):
     shards = build_kb_shards(spark_world["entities_kb"], 1)
-    ns = predict_nil(
-        detect_encode_retrieve(spark_world["transcripts"], cfg, shards), cfg
-    )
+    ns = detect_encode_retrieve(spark_world["transcripts"], cfg, shards)
     return ns.filter(F.col("is_nil")).select(
         "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
         "mention", "encoding",

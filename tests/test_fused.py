@@ -1,10 +1,12 @@
-"""Fused detect→encode→retrieve stage must equal the composed chain."""
+"""Fused detect→encode→retrieve→NIL stage must equal the composed chain."""
 
 import numpy as np
+import pandas as pd
 
 from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
 from incremental_entity_extraction_spark.operators.fused import detect_encode_retrieve
 from incremental_entity_extraction_spark.operators.mentions import detect_mentions
+from incremental_entity_extraction_spark.operators.nil import NIL_FIELDS, predict_nil
 from incremental_entity_extraction_spark.operators.retrieval import (
     build_kb_shards,
     retrieve_topk,
@@ -16,11 +18,11 @@ def test_fused_equals_composed(spark, spark_world, cfg):
     fused = detect_encode_retrieve(
         spark_world["transcripts"], cfg, shards
     ).toPandas().sort_values("mention_id").reset_index(drop=True)
-    composed = retrieve_topk(
+    composed = predict_nil(retrieve_topk(
         encode_mentions_df(detect_mentions(spark_world["transcripts"]), cfg),
         cfg,
         shards,
-    ).toPandas().sort_values("mention_id").reset_index(drop=True)
+    ), cfg).toPandas().sort_values("mention_id").reset_index(drop=True)
 
     assert list(fused["mention_id"]) == list(composed["mention_id"])
     assert list(fused["mention"]) == list(composed["mention"])
@@ -34,6 +36,8 @@ def test_fused_equals_composed(spark, spark_world, cfg):
         np.testing.assert_allclose(
             [c["score"] for c in fc], [c["score"] for c in cc], rtol=1e-5
         )
+    nil_cols = [f.name for f in NIL_FIELDS]
+    pd.testing.assert_frame_equal(fused[nil_cols], composed[nil_cols])
 
 
 def test_shards_bc_rejects_inline_extra_shards(spark_world, cfg):

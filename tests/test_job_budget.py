@@ -1,9 +1,9 @@
 """Spark jobs per batch: a regression budget for the batch path.
 
-Each batch runs the fused stage into the ``nil_scored`` checkpoint (one
-job) and crosses to the driver once, as one Arrow collect (one job); every
-lake table is then written by the driver.  A change that puts a Spark job
-back on the batch path — a Spark write, a count, a second collect — fails
+Each batch is one Spark job: the fused detect→encode→retrieve→NIL stage
+runs inside the batch's one Arrow collect, and every lake table is then
+written by the driver.  A change that puts a Spark job back on the batch
+path — a Spark write, a count, a checkpoint, a second collect — fails
 here.  The conftest world's batches are below the salt-shuffle size
 (``BatchLoop._salted``), which would add one job per batch.
 """
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 import incremental_entity_extraction_spark.pipeline as pl
 
-JOBS_PER_BATCH = 2
+JOBS_PER_BATCH = 1
 
 
 def _jobs(spark, run) -> int:

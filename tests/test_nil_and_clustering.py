@@ -68,6 +68,33 @@ def test_nil_logistic_closed_form_sanity(cfg):
     assert nil_score_from_features(30.0, 5.0, cfg) < 0.01
 
 
+def test_nil_columns_rows_with_zero_one_and_many_candidates(cfg):
+    """``nil_columns`` over flat top-k arrays: a row with no candidates is
+    NIL with score 0.0 and null features and top_*; a lone candidate's
+    margin is over 0.0; scores equal the oracle's closed form exactly."""
+    import pyarrow as pa
+
+    from incremental_entity_extraction_spark.operators.nil import nil_columns
+
+    counts = np.array([0, 1, 3, 0, 2])
+    score = np.array([71.3, 90.1, 40.2, 39.9, 55.5, 55.5], dtype=np.float32)
+    ids = pa.array(np.arange(6, dtype=np.int64) + 100)
+    titles = pa.array([f"t{i}" for i in range(6)])
+    cols = nil_columns(counts, ids, ids, ids, titles, score, cfg)
+    max_bi, secondiff, nil_score, is_nil, top_id, _, _, top_title = (
+        c.to_pylist() for c in cols
+    )
+    s = score.astype(np.float64)
+    feats = [None, (s[0], s[0]), (s[1], s[1] - s[2]), None, (s[4], 0.0)]
+    want = [0.0 if f is None else nil_score_from_features(*f, cfg) for f in feats]
+    assert nil_score == want
+    assert is_nil == [f is None or w < cfg.nil_threshold for f, w in zip(feats, want)]
+    assert secondiff == [None if f is None else f[1] for f in feats]
+    assert max_bi == [None, s[0], s[1], None, s[4]]
+    assert top_id == [None, 100, 101, None, 104]
+    assert top_title == [None, "t0", "t1", None, "t4"]
+
+
 def _greedy_labels(nil_df, cfg):
     """(mention_id, cluster_label) from the greedy_replay kernel's rows."""
     return cluster_summarize_batches(nil_df, cfg, "greedy_replay").select(

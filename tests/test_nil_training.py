@@ -1,14 +1,15 @@
 """NIL-model training (reference feature_ablation_study.py:365-426 analogue):
 the distributed scaler+IRLS fit must reproduce a driver-side NumPy IRLS
 oracle on the same data, and the trained weights must flow back through
-PipelineConfig into the closed-form nil_score_expr unchanged."""
+PipelineConfig into the closed-form nil_columns kernel unchanged."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from incremental_entity_extraction_spark.operators.nil import nil_score_expr
+from incremental_entity_extraction_spark.operators.nil import nil_columns
 from incremental_entity_extraction_spark.operators.nil_training import fit_nil_model
 
 
@@ -69,20 +70,23 @@ def test_fit_matches_numpy_irls_oracle(trained):
     assert model.weights[0] > model.weights[1] > 0
 
 
-def test_trained_config_drives_nil_score_expr(trained, spark, cfg):
-    """to_config -> nil_score_expr must score exactly like the model."""
+def test_trained_config_drives_nil_score_expr(trained, cfg):
+    """to_config -> nil_columns must score exactly like the model."""
     pdf, model = trained
     tuned = model.to_config(cfg)
     sub = pdf.head(200)
-    sdf = spark.createDataFrame(sub[["max_bi", "secondiff"]])
-    got = (
-        sdf.select(
-            nil_score_expr(F.col("max_bi"), F.col("secondiff"), tuned).alias("s")
-        )
-        .toPandas()["s"]
-        .to_numpy()
+    n = len(sub)
+    # two candidates per row, scored max_bi and max_bi - secondiff
+    score = np.column_stack(
+        [sub["max_bi"], sub["max_bi"] - sub["secondiff"]]
+    ).ravel()
+    meta = pa.array(np.arange(2 * n))
+    cols = nil_columns(np.full(n, 2), meta, meta, meta, meta, score, tuned)
+    secondiff = cols[1].to_numpy()
+    got = cols[2].to_numpy()
+    want = model.predict_scores(
+        np.column_stack([sub["max_bi"].to_numpy(), secondiff])
     )
-    want = model.predict_scores(sub[["max_bi", "secondiff"]].to_numpy())
     assert np.allclose(got, want, atol=1e-12)
 
 
@@ -93,7 +97,6 @@ def test_fit_on_pipeline_feature_dump(spark, spark_world, world, cfg):
     from incremental_entity_extraction_spark.operators.fused import (
         detect_encode_retrieve,
     )
-    from incremental_entity_extraction_spark.operators.nil import predict_nil
     from incremental_entity_extraction_spark.operators.oracle_modes import (
         nil_feature_dump,
     )
@@ -102,9 +105,7 @@ def test_fit_on_pipeline_feature_dump(spark, spark_world, world, cfg):
     )
 
     shards = build_kb_shards(spark_world["entities_kb"], 1)
-    enriched = predict_nil(
-        detect_encode_retrieve(spark_world["transcripts"], cfg, shards), cfg
-    )
+    enriched = detect_encode_retrieve(spark_world["transcripts"], cfg, shards)
     gold = spark.createDataFrame(world.gold_mentions)
     feats = nil_feature_dump(enriched, cfg).join(
         join_gold(enriched, gold).select("mention_id", "gold_nil"), "mention_id"

@@ -7,7 +7,6 @@ from incremental_entity_extraction_spark.evaluation.metrics import (
     linking_recall_at_k,
 )
 from incremental_entity_extraction_spark.operators.fused import detect_encode_retrieve
-from incremental_entity_extraction_spark.operators.nil import predict_nil
 from incremental_entity_extraction_spark.operators.oracle_modes import (
     correct_candidates,
     correct_nil,
@@ -18,8 +17,7 @@ from incremental_entity_extraction_spark.operators.retrieval import build_kb_sha
 
 def _with_gold(spark, spark_world, world, cfg):
     shards = build_kb_shards(spark_world["entities_kb"], 1)
-    enriched = detect_encode_retrieve(spark_world["transcripts"], cfg, shards)
-    nil_scored = predict_nil(enriched, cfg)
+    nil_scored = detect_encode_retrieve(spark_world["transcripts"], cfg, shards)
     gold = spark.createDataFrame(world.gold_mentions)
     return join_gold(nil_scored, gold).localCheckpoint()
 

@@ -224,3 +224,29 @@ def test_mention_id_prefix_is_conv_id(spark, spark_world, cfg, tmp_lake):
     assert len(member)
     got = dict(zip(m["mention_id"], m["conv_id"]))
     assert all(got[s] == c for s, c in zip(member["subj"], member["conv_id"]))
+
+
+def test_mention_nil_scores_equal_oracle_formula(spark, spark_world, cfg, tmp_lake):
+    """Every stored ``nil_score`` equals the oracle's closed form
+    (``oracle.reference.nil_score_from_features``) exactly, not to a
+    tolerance: Spark's ``exp`` (``StrictMath.exp``) is one ulp off NumPy's
+    on some rows of this world, so a NIL score computed in the JVM fails
+    here."""
+    from incremental_entity_extraction_spark.oracle.reference import (
+        nil_score_from_features,
+    )
+
+    _run(spark, spark_world, tmp_lake, cfg, "cc")
+    m = tmp_lake.read(spark, "mentions").toPandas()
+    has = m["max_bi"].notna()
+    assert has.sum() > 100
+    scored = m[has]
+    want = [
+        nil_score_from_features(float(mb), float(sd), cfg)
+        for mb, sd in zip(scored["max_bi"], scored["secondiff"])
+    ]
+    assert list(scored["nil_score"]) == want
+    assert list(scored["is_nil"]) == [s < cfg.nil_threshold for s in want]
+    none = m[~has]
+    assert (none["nil_score"] == 0.0).all() and none["is_nil"].all()
+    assert none["secondiff"].isna().all() and none["top_id"].isna().all()
