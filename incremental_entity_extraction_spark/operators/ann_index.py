@@ -26,8 +26,9 @@ one task here:
   batch (temp + rename) before the batch's ``delta_ok_N`` marker.
 * ``IVFShard`` / ``ivf_topk_columnar`` — the search.  The index shard
   (centroids, ``n_probe``, tombstones, the visible file list) is broadcast
-  once per run; the in-flight delta rides the per-batch broadcast as a
-  rows shard.  Each task probes its queries, reads only the probed row
+  once per window of batches (``pipeline.BatchLoop``); the deltas the
+  window's batches add are searched on the driver as rows shards under the
+  same centroids.  Each task probes its queries, reads only the probed row
   groups (selected from footer statistics, cached per Python worker
   under a byte cap),
   scores exactly within them and emits hydrated, ranked candidates — no
@@ -517,8 +518,8 @@ def assign_delta(
     titles: np.ndarray | None = None,
 ) -> pa.Table:
     """FAISS-``add`` analogue: assign new vectors under the FROZEN model.
-    Returns the index rows (not yet persisted) so the caller can keep the
-    one in-flight delta in memory and persist it when the batch drains.
+    Returns the index rows (not yet persisted) so the caller can search the
+    window's deltas in memory and persist each when its batch drains.
     Missing metadata is stored as -1 / ""."""
     n = len(ids)
     return _rows_table(
@@ -663,9 +664,8 @@ class IVFShard:
     The INDEX shard holds ``centroids``, ``n_probe``, the tombstoned entity
     ids ``dels`` and the visible ``files`` — ``(path, size, mtime_ns)``
     keys the driver resolved, so no task lists a directory.  Further shards
-    in the same list add ``files`` (deltas drained since the index shard
-    was broadcast) or ``rows`` (the in-flight delta, ``bucket -> block``);
-    their ``centroids`` is None."""
+    in the same list add ``files`` or ``rows`` (a delta not yet drained,
+    ``bucket -> block``); their ``centroids`` is None."""
 
     __slots__ = ("centroids", "n_probe", "dels", "files", "rows")
 
@@ -689,7 +689,7 @@ def index_shard(model: AnnIndexModel, batches=(), dels=()) -> IVFShard:
 
 
 def rows_shard(rows: pa.Table | None) -> IVFShard | None:
-    """The in-flight delta's rows as a shard; None when it is empty."""
+    """A delta's index rows as a shard; None when it is empty."""
     if rows is None or not len(rows):
         return None
     return IVFShard(rows=_split_blocks(rows))

@@ -458,7 +458,7 @@ def nil_edges_lsh(nil_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         ]
     )
 
-    def _verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _verify(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame({"batch_id": [], "src": [], "dst": []})
         X = _matrix(pdf["encoding"])

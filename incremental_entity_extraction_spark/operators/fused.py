@@ -99,16 +99,24 @@ def _candidate_arrays(
 
 
 def _candidates_list_array(
-    counts: np.ndarray, fields: list[pa.Array]
+    counts: np.ndarray,
+    fields: list[pa.Array],
+    list_type: pa.ListType | None = None,
 ) -> pa.ListArray:
     """``_candidate_arrays`` + per-row counts -> arrow list<struct>
-    candidates column."""
+    candidates column, of ``list_type`` when given (a collected column's
+    own, whose non-null fields a cast could not reach)."""
     offsets = np.zeros(len(counts) + 1, dtype=np.int32)
     np.cumsum(counts, out=offsets[1:])
-    struct = pa.StructArray.from_arrays(
-        fields, names=[f.name for f in CANDIDATE_STRUCT.fields]
-    )
-    return pa.ListArray.from_arrays(pa.array(offsets), struct)
+    if list_type is None:
+        struct = pa.StructArray.from_arrays(
+            fields, names=[f.name for f in CANDIDATE_STRUCT.fields]
+        )
+    else:
+        struct = pa.StructArray.from_arrays(
+            fields, fields=list(list_type.value_type)
+        )
+    return pa.ListArray.from_arrays(pa.array(offsets), struct, type=list_type)
 
 
 def _base_arrays(out: pd.DataFrame) -> list[pa.Array]:
@@ -137,8 +145,8 @@ def detect_encode_retrieve(
     the ``nil.NIL_FIELDS`` columns (``max_bi`` … ``is_nil``, ``top_*``).
 
     ``shards`` is a list of one shard kind (``topk_candidates_columnar``):
-    ``KBShard``s, or an ``ann_index.IVFShard`` index shard followed by any
-    per-batch IVF shards (drained delta files, the in-flight delta rows).
+    ``KBShard``s, or an ``ann_index.IVFShard`` index shard optionally
+    followed by further IVF shards (delta files or rows).
 
     ``encoder`` is the M4 pluggable-contract point: a picklable callable
     ``(windows: list[list[str]], weights: list[list[float]]) ->
@@ -163,13 +171,13 @@ def detect_encode_retrieve(
 
     ``extra_shards_bc`` lets the CALLER own the per-call extra broadcast's
     lifecycle (``shards`` must then be ``[]``): a loop that let this
-    function broadcast the growing RW shard every batch with nothing ever
-    unpersisting it would leak O(batches × RW-KB bytes) on the driver and
-    in every worker's broadcast registry.  ``run_batch`` creates the RW
-    broadcast, passes it here, and unpersists it once the batch's one
-    Arrow collect of this stage has returned (or failed) — nothing reads
-    the stage again after that: above the clustering gate the NIL rows go
-    back to Spark from the collected table, not from this plan."""
+    function broadcast the growing RW shard every window with nothing ever
+    unpersisting it would leak O(windows × RW-KB bytes) on the driver and
+    in every worker's broadcast registry.  ``pipeline.BatchLoop`` creates
+    the RW broadcast, passes it here, and unpersists it once the window's
+    one Arrow collect of this stage has returned (or failed) — nothing
+    reads the stage again after that: above the clustering gate the NIL
+    rows go back to Spark from the collected table, not from this plan."""
     spark = transcripts.sparkSession
     if extra_shards_bc is not None and shards:
         raise ValueError("pass the per-call extra via EITHER shards or "
@@ -185,7 +193,7 @@ def detect_encode_retrieve(
         )
     bc = spark.sparkContext.broadcast(shards) if shards_bc is None else shards_bc
     # an EMPTY extra list gets no broadcast at all — broadcasting [] per
-    # batch would reintroduce the per-batch broadcast-id churn (and a
+    # window would reintroduce the broadcast-id churn (and a
     # driver-side leak over a long stream) this parameter exists to remove
     bc_extra = extra_shards_bc
     dim, norm, max_tok = cfg.dim, cfg.vector_norm, cfg.max_context_tokens

@@ -31,6 +31,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,6 +56,13 @@ CANDIDATE_STRUCT = T.StructType(
 
 _SCORE_CHUNK_ROWS = 1024  # mention rows scored per matmul block
 _ENT_TILE = 2048          # entity columns per score tile (cache-resident)
+
+
+def _pair_scores(Q: np.ndarray, V: np.ndarray) -> np.ndarray:
+    """``S[i, j] = Q[i] · V[i, j]`` in f32, each entry reduced in one fixed
+    order from its own pair only (einsum, like ``ann_index._dots``), so a
+    score never depends on the shape of the block it was computed in."""
+    return np.einsum("id,ijd->ij", Q, V)
 
 
 class KBShard:
@@ -147,6 +156,16 @@ def topk_candidates_columnar(
     floats ≈ 8 MB) — a full chunk × n_entities block is DRAM-bandwidth-bound
     and collapses under concurrent workers.  No per-row Python: the flat
     arrays feed Arrow struct/list builders directly (operators/fused.py).
+
+    The BLAS score blocks only SELECT: a pool of the best ``2k`` per row
+    is re-scored exactly (``_pair_scores``) and ranked on those scores.  A
+    BLAS product rounds each entry by its block's shape (OpenBLAS sends
+    small blocks to a different kernel), so the same (mention, entity)
+    pair could score one ulp apart depending on which mentions share its
+    chunk and which entities share its tile; the re-scored values do not
+    depend on either, so a batch ranks the same alone, inside a window of
+    batches or on any partitioning, and two top-k lists merge exactly
+    (``merge_candidates``).
     """
     if shard_list and isinstance(shard_list[0], IVFShard):
         return ivf_topk_columnar(enc, shard_list, k, norm2)
@@ -155,38 +174,39 @@ def topk_candidates_columnar(
     f_ids, f_idxr, f_wids, f_titles, f_sc = [], [], [], [], []
     for lo in range(0, n, _SCORE_CHUNK_ROWS):
         chunk = enc[lo : lo + _SCORE_CHUNK_ROWS]
-        parts = []
-        for shard in shard_list:
-            n_shard = shard.E.shape[0]
-            if n_shard == 0:
-                continue
-            rows = np.arange(len(chunk))[:, None]
-            for t0 in range(0, n_shard, _ENT_TILE):
-                tile = shard.E[t0 : t0 + _ENT_TILE]
-                scores = chunk @ tile.T  # [c, tile]
-                kk = min(k, scores.shape[1])
+        rows = np.arange(len(chunk))[:, None]
+        parts = []  # (BLAS scores, shard number, shard row) per tile
+        for s, shard in enumerate(shard_list):
+            for t0 in range(0, shard.E.shape[0], _ENT_TILE):
+                scores = chunk @ shard.E[t0 : t0 + _ENT_TILE].T  # [c, tile]
+                kk = min(2 * k, scores.shape[1])
                 idx = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-                gidx = idx + t0
-                parts.append(
-                    (
-                        scores[rows, idx],
-                        shard.ids[gidx],
-                        shard.indexer[gidx],
-                        shard.wikipedia_id[gidx],
-                        shard.title[gidx],
-                    )
-                )
+                parts.append((scores[rows, idx], np.full_like(idx, s), idx + t0))
         if not parts:
             continue
-        sc = np.concatenate([p[0] for p in parts], axis=1)
-        ids = np.concatenate([p[1] for p in parts], axis=1)
-        idxr = np.concatenate([p[2] for p in parts], axis=1)
-        wids = np.concatenate([p[3] for p in parts], axis=1)
-        titles = np.concatenate([p[4] for p in parts], axis=1)
-        kk = min(k, sc.shape[1])
+        sc, src, gidx = (np.concatenate(p, axis=1) for p in zip(*parts))
+        if sc.shape[1] > 2 * k:
+            pool = np.argpartition(-sc, 2 * k - 1, axis=1)[:, : 2 * k]
+            src, gidx = src[rows, pool], gidx[rows, pool]
+        shape = src.shape
+        src, gidx = src.ravel(), gidx.ravel()
+        vecs = np.empty((len(src), chunk.shape[1]), np.float32)
+        ids = np.empty(len(src), np.int64)
+        idxr = np.empty(len(src), np.int32)
+        wids = np.empty(len(src), np.int64)
+        titles = np.empty(len(src), object)
+        for s, shard in enumerate(shard_list):
+            at = np.flatnonzero(src == s) if len(shard_list) > 1 else slice(None)
+            g = gidx[at]
+            vecs[at], ids[at], idxr[at] = shard.E[g], shard.ids[g], shard.indexer[g]
+            wids[at], titles[at] = shard.wikipedia_id[g], shard.title[g]
+        ids, idxr, wids, titles = (
+            a.reshape(shape) for a in (ids, idxr, wids, titles)
+        )
+        sc = _pair_scores(chunk, vecs.reshape(*shape, -1))
+        kk = min(k, shape[1])
         # deterministic global order: score desc, indexer asc, id asc
         order = np.lexsort((ids, idxr, -sc), axis=1)[:, :kk]
-        rows = np.arange(len(chunk))[:, None]
         counts[lo : lo + len(chunk)] = kk
         f_sc.append(sc[rows, order].ravel())
         f_ids.append(ids[rows, order].ravel())
@@ -212,6 +232,50 @@ def topk_candidates_columnar(
         # f64 division rounded once to f32: the row-major kernel's
         # float(score / norm2) followed by Spark's FloatType cast
         (sc.astype(np.float64) / norm2).astype(np.float32),
+    )
+
+
+def merge_candidates(
+    lists: pa.ListArray,
+    counts: np.ndarray,
+    fields: list[pa.Array],
+    k: int,
+    by_norm: bool,
+) -> tuple[np.ndarray, list[pa.Array]]:
+    """Per row, the top ``k`` of the union of two candidate lists, each
+    already the top ``k`` of its own entities: ``lists`` (a
+    ``CANDIDATE_STRUCT`` list column) and the flat arrays ``fields`` that
+    ``counts`` slices row by row (``topk_candidates_columnar``'s layout).
+    Returns the merged ``(counts, fields)`` in that layout.
+
+    The order is the kernels' own, and it is total, so the top ``k`` of
+    two top-``k`` lists is the top ``k`` of all their entities: score
+    descending, then (indexer, id) ascending.  ``by_norm`` is the IVF
+    kernel's: keep the top ``k`` by ``norm_score`` (the f32 cosine) with
+    the same tie-break, then order them by score."""
+    flat = dict(zip((f.name for f in CANDIDATE_STRUCT.fields),
+                    lists.flatten().flatten()))
+    n = len(lists)
+    q = np.concatenate([
+        np.repeat(np.arange(n),
+                  pc.fill_null(pc.list_value_length(lists), 0).to_numpy()),
+        np.repeat(np.arange(n), counts),
+    ])
+    cols = [
+        pa.concat_arrays([flat[f.name], b.cast(flat[f.name].type)])
+        for f, b in zip(CANDIDATE_STRUCT.fields, fields)
+    ]
+    ids, idxr, sc, norm = (
+        cols[i].to_numpy(zero_copy_only=False) for i in (0, 1, 4, 5)
+    )
+    sel = norm if by_norm else sc
+    o = np.lexsort((ids, idxr, -sel, q))
+    keep = o[np.arange(len(o)) - np.searchsorted(q[o], q[o]) < k]
+    if by_norm:
+        keep = keep[np.lexsort((ids[keep], idxr[keep], -sc[keep], q[keep]))]
+    return (
+        np.bincount(q[keep], minlength=n).astype(np.int32),
+        [c.take(keep) for c in cols],
     )
 
 

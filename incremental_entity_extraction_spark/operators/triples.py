@@ -10,8 +10,8 @@ KB delta.  Triple vocabulary:
 * (new:<rw_id>,      'canonical_name',  modal title)       per cluster
 
 Both halves are built on the driver with pyarrow from rows already there
-(pipeline.run_batch): the batch's mention rows, collected once as Arrow,
-and its cluster rows.  No Spark job, no join.
+(pipeline.run_batch): the batch's mention rows, its slice of the window's
+one Arrow collect, and its cluster rows.  No Spark job, no join.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Incremental pipeline driver: lake layout, per-batch run, checkpoint/resume.
+"""Incremental pipeline driver: lake layout, windowed batch loop, checkpoint/resume.
 
 Reference lifecycle (scripts/eval_kbp.py:734-805): reset RW KB, then for each
 batch file in CLI order run encode → retrieve → NIL → cluster → add-to-KB →
@@ -9,7 +9,7 @@ Here the state is lake tables, so every batch is idempotent and the run is
 resumable (north_rule):
 
 * ``new_entities``   — the RW index (id, indexer, embedding, ...), partitioned
-  by batch_id; re-broadcast at each batch boundary (SURVEY.md §1.6).
+  by batch_id; re-broadcast at each window boundary (SURVEY.md §1.6).
 * ``prev_clusters``  — cluster summaries per batch.
 * ``triples``        — the KG, partitioned by batch_id.
 * ``lineage``        — one row per completed batch (checkpoint marker);
@@ -18,19 +18,28 @@ resumable (north_rule):
   commits.
 
 Every write replaces exactly the batch's own partition, so re-running a
-batch after a crash is idempotent.  A batch is one Spark job: the fused
+batch after a crash is idempotent.  A WINDOW of consecutive batches (at
+most ``WINDOW_MAX_TURNS`` turns) is one Spark job: the fused
 detect→encode→retrieve→NIL stage (operators/fused.py) runs inside the one
-Arrow collect that brings its rows to the driver, and the driver writes
-``mentions``, ``triples``, ``candidates``, ``new_entities``,
-``prev_clusters`` and ``metrics`` from it with pyarrow
-(``Lake.put_partition``: one file per ``batch_id=N/``, and a re-run with
-no rows removes the partition).  Ids stay deterministic because
-they are contiguous over canonical order + previous max (operators/kb.py),
-not a function of task scheduling.
+Arrow collect that brings the window's rows to the driver, retrieving
+against the KB as it stood at window start.  Only the RW entities change
+between batches (the reference's RW index, eval_kbp.py:626-652), so each
+batch is then finished on the driver with no Spark job (``run_batch``):
+its rows search the entities that the window's earlier batches added,
+merge those candidates into their own and re-score NIL, which gives
+exactly the candidates a per-batch loop would have found.  The driver
+writes ``mentions``, ``triples``, ``candidates``, ``new_entities``,
+``prev_clusters`` and ``metrics`` with pyarrow (``Lake.put_partition``:
+one file per ``batch_id=N/``, and a re-run with no rows removes the
+partition).  Ids stay deterministic because they are contiguous over
+canonical order + previous max (operators/kb.py), not a function of task
+scheduling, and each batch's rows are written in (conv_id, turn_idx,
+start_tok) order, whatever partitions the window job spread them over.
 
-Skew: per-batch work is repartitioned on (conv_id, turn_idx) — the turn
-index acts as the salt, so a hot conversation (Zipf head) spreads across
-partitions instead of pinning one task (SURVEY.md §4 "salted repartition").
+Skew: a window of ≥ 1 000 turns is repartitioned on (conv_id, turn_idx) —
+the turn index acts as the salt, so a hot conversation (Zipf head) spreads
+across partitions instead of pinning one task (SURVEY.md §4 "salted
+repartition").
 """
 
 from __future__ import annotations
@@ -43,6 +52,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -67,15 +77,23 @@ from incremental_entity_extraction_spark.operators.clustering import (  # noqa: 
 )
 
 from incremental_entity_extraction_spark.operators.fused import (
+    _candidate_arrays,
+    _candidates_list_array,
     detect_encode_retrieve,
 )
 from incremental_entity_extraction_spark.operators.kb import (
     assign_new_entity_ids,
     new_entity_rows_pdf,
 )
+from incremental_entity_extraction_spark.operators.nil import (
+    NIL_FIELDS,
+    nil_columns,
+)
 from incremental_entity_extraction_spark.operators.retrieval import (
     KBShard,
     build_kb_shards,
+    merge_candidates,
+    topk_candidates_columnar,
 )
 from incremental_entity_extraction_spark.operators.triples import (
     TRIPLES_SCHEMA,
@@ -94,6 +112,12 @@ from incremental_entity_extraction_spark.operators.triples import (
 # an applyInPandas shuffle.  8192 rows bound the cc score matrix at 256 MB
 # in ~8 MB tiles.
 DRIVER_CLUSTER_MAX = 8192
+
+# turns per window: consecutive batches whose turns sum to at most this run
+# as ONE Spark job (a window holds at least one batch).  It bounds the
+# driver memory of a window's rows (``run_batch``): 50 000 turns is ~30 000
+# mentions, ~30 MB of 256-d encodings.
+WINDOW_MAX_TURNS = 50_000
 
 # pyarrow schemas of the lake tables the driver writes, each the one Spark's
 # writer gave it (batch_id is the partition), so a lake that mixes older
@@ -277,33 +301,78 @@ class Lake:
 RETRIEVAL_MODES = ("broadcast", "ivf")
 
 
-def _check_retrieval_mode(mode: str) -> None:
-    if mode not in RETRIEVAL_MODES:
+def _check_modes(retrieval_mode: str, cluster_mode: str) -> None:
+    if retrieval_mode not in RETRIEVAL_MODES:
         raise ValueError(
-            f"unknown retrieval_mode {mode!r}: "
+            f"unknown retrieval_mode {retrieval_mode!r}: "
             f"expected {' | '.join(RETRIEVAL_MODES)}"
+        )
+    if cluster_mode not in CLUSTER_KERNELS:
+        raise ValueError(
+            f"unknown cluster_mode {cluster_mode!r}: "
+            f"expected {' | '.join(CLUSTER_KERNELS)}"
         )
 
 
+def _merge_window_entities(
+    rows: pa.Table, shards: list, cfg: PipelineConfig, by_norm: bool
+) -> pa.Table:
+    """``rows`` with the top-k of ``shards`` merged into their candidates
+    and the ``nil.NIL_FIELDS`` columns re-scored from the merged lists."""
+    enc = pc.list_flatten(rows["encoding"]).to_numpy()
+    counts, *flat = topk_candidates_columnar(
+        enc.reshape(rows.num_rows, -1), shards, cfg.top_k,
+        float(cfg.vector_norm) ** 2,
+    )
+    counts, fields = merge_candidates(
+        rows["candidates"].combine_chunks(), counts, _candidate_arrays(*flat),
+        cfg.top_k, by_norm,
+    )
+    new = dict(zip(
+        [f.name for f in NIL_FIELDS], nil_columns(counts, *fields[:5], cfg)
+    ))
+    new["candidates"] = _candidates_list_array(
+        counts, fields, rows.schema.field("candidates").type
+    )
+    for name, col in new.items():
+        i = rows.schema.get_field_index(name)
+        rows = rows.set_column(i, rows.schema.field(i), col)
+    return rows
+
+
 def run_batch(
-    transcripts_batch: DataFrame,
-    ro_shards: list,
-    rw_pdf: pd.DataFrame,
+    rows: pa.Table,
+    shards: list,
     next_rw_id: int,
     cfg: PipelineConfig,
     cluster_mode: str = "cc",
-    known_words: frozenset | None = None,
-    encoder=None,
     retrieval_mode: str = "broadcast",
-    ann_model=None,
-    ro_shards_bc=None,
     persist_candidates: bool = False,
+    spark: SparkSession | None = None,
 ):
-    """One batch: transcripts -> (tables, clusters), everything on the
-    driver.  The batch is ONE Spark job: the fused stage scores NIL itself,
-    and the batch crosses to the driver once, as one Arrow collect of the
-    mention rows plus the NIL rows' encodings (the clustering input) and
-    the candidate lists when ``persist_candidates``.
+    """One batch, finished on the driver from its rows of the window job
+    (``BatchLoop``): ``(tables, clusters)``.  No Spark job runs here unless
+    the batch's NIL set is above ``DRIVER_CLUSTER_MAX``.
+
+    ``rows`` are the batch's ``fused.FUSED_SCHEMA`` rows in (conv_id,
+    turn_idx, start_tok) order: every mention with its encoding, its
+    candidates against the KB as it stood at window start, and the NIL
+    columns scored from them.  ``shards`` are the RW entities that the
+    window's earlier batches added (``[]`` for a window's first batch),
+    searched here with the fused stage's kernel
+    (``retrieval.topk_candidates_columnar``):
+
+    * ``'broadcast'``: ``KBShard``s;
+    * ``'ivf'``: the index shard's centroids, ``n_probe`` and tombstones
+      (an ``ann_index.IVFShard`` with no files) followed by one rows shard
+      per in-window delta — only the probed buckets count, as in the
+      window job.
+
+    Their candidates merge into the rows' own (``retrieval.merge_candidates``,
+    in the kernel's total order) and NIL is re-scored
+    (``nil.nil_columns``), so every row ends with exactly the candidates
+    and NIL score it would have had against the KB at its own batch's
+    start.
 
     * ``tables``: pyarrow tables of ``mentions``, ``triples`` and
       ``candidates`` in their pinned schemas (``candidates`` empty unless
@@ -315,101 +384,27 @@ def run_batch(
       writes ``new_entities`` and ``prev_clusters`` from it and threads the
       RW delta to the next batch.
 
-    Driver memory, on both sides of the clustering gate: one batch's
-    mention rows (≈200–300 B each, plus the candidate lists when persisted)
-    and its NIL encodings (n_nil × dim × 4 B).  ``DRIVER_CLUSTER_MAX``
-    decides only where clustering runs: at or below it the mode's kernel
-    runs on the driver; above it the NIL slice goes back to Spark
-    (``createDataFrame``) for ``cluster_cc`` or
-    ``cluster_summarize_batches``, and only the summary rows come back.
-    A lost executor makes Spark retry the tasks of the one job; a batch
-    that still fails is not marked, and the resume re-runs it.
-
-    Both retrieval modes run ONE fused detect→encode→retrieve→NIL stage
-    (operators/fused.py); they differ only in the shard kind.
-
-    * ``'broadcast'`` (default): ``ro_shards`` are the RO KB's ``KBShard``s
-      and ``rw_pdf`` is the whole RW KB — exact, for KBs within the
-      broadcast budget (the reference's regime).
-    * ``'ivf'``: ``ro_shards`` starts with the persisted index's
-      ``ann_index.IVFShard`` (``ann_index.index_shard``), optionally
-      followed by shards of delta files drained since it was broadcast;
-      ``rw_pdf`` is the one in-flight RW delta, assigned under
-      ``ann_model``'s frozen centroids here (``BatchLoop`` builds the model
-      once per run) — approximate, for entity dimensions beyond broadcast.
-
-    ``ro_shards_bc`` (``BatchLoop``) is the ONE broadcast of
-    ``ro_shards[:1]`` reused across the run's batches; the rest of the
-    shards and the RW shard ride one per-batch broadcast that is
-    unpersisted after the collect.  Without it, every shard is broadcast
-    for this call alone."""
-    _check_retrieval_mode(retrieval_mode)
-    if cluster_mode not in CLUSTER_KERNELS:
+    Driver memory: ONE WINDOW's mention rows (``WINDOW_MAX_TURNS``), each
+    with its encoding (n × dim × 4 B), its candidate list and ≈200–300 B
+    of text, held until the window's last batch is finished.
+    ``DRIVER_CLUSTER_MAX`` decides only where clustering runs: at or below
+    it the mode's kernel runs on the driver; above it the NIL slice goes
+    back to Spark (``createDataFrame`` on ``spark``) for ``cluster_cc`` or
+    ``cluster_summarize_batches``, and only the summary rows come back."""
+    _check_modes(retrieval_mode, cluster_mode)
+    if (
+        retrieval_mode == "ivf" and shards
+        and getattr(shards[0], "centroids", None) is None
+    ):
         raise ValueError(
-            f"unknown cluster_mode {cluster_mode!r}: "
-            f"expected {' | '.join(CLUSTER_KERNELS)}"
+            "retrieval_mode='ivf' needs the index shard first: the "
+            "window's new entities are probed under its centroids "
+            "(ann_index.IVFShard)"
         )
-    if retrieval_mode == "ivf":
-        from incremental_entity_extraction_spark.operators.ann_index import (
-            rows_shard,
-            rw_delta_rows,
+    if shards and rows.num_rows:
+        rows = _merge_window_entities(
+            rows, shards, cfg, by_norm=retrieval_mode == "ivf"
         )
-
-        if ann_model is None or not ro_shards:
-            raise ValueError(
-                "retrieval_mode='ivf' needs a prebuilt ann_model and its "
-                "index shard (BatchLoop builds both; operators/ann_index.py)"
-            )
-        inflight = rows_shard(rw_delta_rows(ann_model, rw_pdf, cfg.rw_indexer_id))
-        rw_shards = list(ro_shards[1:]) + ([inflight] if inflight else [])
-        ro_shards = ro_shards[:1]
-    else:
-        rw_shards = (
-            [KBShard(rw_pdf.reset_index(drop=True))] if len(rw_pdf) else []
-        )
-    # fused single-hop stage (operators/fused.py): one Python worker per
-    # task instead of three chained ones; identical output to the composed
-    # detect_mentions → encode_mentions_df → retrieve_topk → predict_nil
-    # chain.
-    rw_bc = None  # per-batch RW broadcast; unpersisted after the collect
-    if ro_shards_bc is not None:
-        # run_batch owns the per-batch RW broadcast so it can be
-        # unpersisted once the collect has run — letting the fused stage
-        # broadcast it internally would leak one Broadcast of the growing
-        # RW KB per batch over a long stream
-        if rw_shards:
-            rw_bc = transcripts_batch.sparkSession.sparkContext.broadcast(
-                rw_shards
-            )
-        enriched = detect_encode_retrieve(
-            transcripts_batch, cfg, [], known_words=known_words,
-            encoder=encoder, shards_bc=ro_shards_bc, extra_shards_bc=rw_bc,
-        )
-    else:
-        enriched = detect_encode_retrieve(
-            transcripts_batch, cfg, list(ro_shards) + rw_shards,
-            known_words=known_words, encoder=encoder,
-        )
-    # the batch's one Spark job and its one crossing to the driver: every
-    # lake table, and the clustering input on both sides of the gate, is
-    # built from these rows
-    cols = [
-        *_DRIVER_TABLES["mentions"].names, "batch_id",
-        F.when(F.col("is_nil"), F.col("encoding")).alias("encoding"),
-    ]
-    if persist_candidates:
-        cols.append("candidates")
-    try:
-        rows = enriched.select(*cols).toArrow()
-    finally:
-        if rw_bc is not None:
-            # the collect ran the fused stage, and nothing reads it again:
-            # this batch's RW broadcast is dead weight (driver pickle +
-            # every worker's broadcast registry); the finally keeps a
-            # FAILED batch from stranding one grown-RW-shard broadcast per
-            # retry
-            rw_bc.unpersist()
-
     n_nil = int(pc.sum(rows["is_nil"]).as_py() or 0)
     # Table.filter with no match gives a table createDataFrame rejects (an
     # empty list column with no chunk); slice(0, 0) keeps one
@@ -418,7 +413,7 @@ def run_batch(
         # tiny-batch driver path: same kernels, no applyInPandas shuffle
         clusters = _driver_clusters(nil, cfg, cluster_mode)
     else:
-        nil_df = transcripts_batch.sparkSession.createDataFrame(nil.select([
+        nil_df = (spark or SparkSession.active()).createDataFrame(nil.select([
             "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
             "mention", "context_left", "context_right", "encoding",
         ]))
@@ -519,26 +514,89 @@ class BatchPersist:
         return self._stats
 
 
+def _windows(todo: list[int], batch_counts: dict[int, int]) -> list[list[int]]:
+    """``todo`` cut into windows: runs of consecutive batches whose turns
+    sum to at most ``WINDOW_MAX_TURNS``; a larger batch is a window alone."""
+    windows: list[list[int]] = []
+    turns = 0
+    for b in todo:
+        if windows and turns + batch_counts[b] <= WINDOW_MAX_TURNS:
+            windows[-1].append(b)
+            turns += batch_counts[b]
+        else:
+            windows.append([b])
+            turns = batch_counts[b]
+    return windows
+
+
+def _batch_counts(frame: DataFrame) -> dict[int, int]:
+    """Turns per ``batch_id`` in ONE Spark job with no shuffle: each task
+    counts its partition's batch ids (``pc.value_counts``) and the driver
+    sums one row per (batch, partition), so it holds O(batches ×
+    partitions), not O(turns).  A ``groupBy`` count is two jobs under
+    AQE."""
+
+    def _count(batches):
+        seen: dict = {}
+        for rb in batches:
+            vc = pc.value_counts(rb.column(0))
+            for b, n in zip(vc.field("values").to_pylist(),
+                            vc.field("counts").to_pylist()):
+                seen[b] = seen.get(b, 0) + n
+        if seen:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(list(seen), pa.int64()),
+                 pa.array(list(seen.values()), pa.int64())],
+                names=["batch_id", "n"],
+            )
+
+    counts: dict[int, int] = {}
+    rows = frame.select("batch_id").mapInArrow(_count, "batch_id long, n long")
+    for b, n in rows.collect():
+        counts[b] = counts.get(b, 0) + n
+    return counts
+
+
 @dataclass
 class BatchLoop:
     """The incremental batch loop that both drivers step: ``run_incremental``
     runs it once over the whole frame, the streaming driver once per
     micro-batch (streaming/incremental.py).
 
-    The loop object owns the loop-lifetime state — the ONE broadcast of the
-    RO KB in broadcast mode (per-batch re-broadcast of an unchanged KB pays
-    a driver pickle per batch and defeats the Python workers'
-    broadcast-id cache, fused.detect_encode_retrieve) and, in ivf mode, the
-    persisted index model, built or loaded at the first ``run``.  In ivf
-    mode each ``run`` broadcasts the index shard once (centroids,
-    ``n_probe``, tombstones, the visible row files); deltas drained during
-    the run and the one in-flight delta ride ``run_batch``'s per-batch
-    broadcast, so the driver never holds more RW state than one batch's
-    delta.  Everything else is re-derived from the lake at each ``run``,
-    so the lineage prefix is the only resume contract.  ``dels`` are
-    tombstoned entity ids: filtered out of the RW state in broadcast mode
-    (the caller filters ``kb_ro``), masked before the top-k in ivf mode;
-    ``close`` releases the broadcast."""
+    ``run`` cuts the batches to do into windows (``WINDOW_MAX_TURNS``) and
+    runs ONE Spark job per window: the fused detect→encode→retrieve→NIL
+    stage over all the window's turns, against the shards as they stood at
+    window start, collected once as Arrow (``_collect_window``).  Each
+    batch is then finished on the driver (``run_batch``, called once per
+    batch through this module's global), searching the RW entities that
+    the window's earlier batches added.  A batch therefore adds no Spark
+    job; only a NIL set above ``DRIVER_CLUSTER_MAX`` sends its clustering
+    back to Spark.
+
+    The shards at window start:
+
+    * broadcast mode: the RO KB — broadcast ONCE per loop (a per-batch
+      re-broadcast of an unchanged KB pays a driver pickle and defeats
+      the Python workers' broadcast-id cache, fused.detect_encode_retrieve)
+      — plus one per-window broadcast of the RW rows committed before the
+      window;
+    * ivf mode: ``ann_index.index_shard`` over the persisted index model
+      (built or loaded at the first ``run``) and every drained delta file,
+      broadcast per window; the driver holds no RW state beyond the
+      window's deltas.
+
+    A window's shards are built only after the previous window's last
+    batch has drained, so they hold every batch before it.  Windows are
+    re-formed from the lake at each ``run``: the lineage prefix is the only
+    resume contract.  A window job that fails marks none of its batches,
+    and the resume re-forms windows from the first uncommitted batch; a
+    lost executor makes Spark retry the tasks of the one job first.  A
+    batch that fails on the driver leaves the window's earlier batches
+    committed.  Driver memory is one window's rows (``run_batch``).
+
+    ``dels`` are tombstoned entity ids: filtered out of the RW state in
+    broadcast mode (the caller filters ``kb_ro``), masked before the top-k
+    in ivf mode; ``close`` releases the RO broadcast."""
 
     spark: SparkSession
     kb_ro: DataFrame
@@ -557,15 +615,12 @@ class BatchLoop:
     salt_repartition: bool | None = None
 
     def __post_init__(self) -> None:
-        _check_retrieval_mode(self.retrieval_mode)
+        # a bad mode fails here, before any Spark job
+        _check_modes(self.retrieval_mode, self.cluster_mode)
         self.ann = self.retrieval_mode == "ivf"
         # ivf mode never collects the KB — that is its point
-        self.ro_shards = (
-            [] if self.ann else build_kb_shards(self.kb_ro, self.n_shards)
-        )
-        self.ro_shards_bc = (
-            self.spark.sparkContext.broadcast(self.ro_shards)
-            if self.ro_shards else None
+        self.ro_shards_bc = None if self.ann else self.spark.sparkContext.broadcast(
+            build_kb_shards(self.kb_ro, self.n_shards)
         )
         self.ann_model = None
 
@@ -575,16 +630,16 @@ class BatchLoop:
             self.ro_shards_bc = None
 
     def _salted(self, tb: DataFrame, n_turns: int) -> DataFrame:
-        """salt_repartition True/False forces every batch; None decides PER
-        BATCH: an explicit ``partitions`` is a request to shape the batch's
-        partitioning (the partition-invariance tests rely on it); otherwise
-        the salt shuffle exists for (a) parallelism — a byte-contiguous
-        batch in the source parquet lands in ~one scan split — and (b)
-        hot-conversation skew; for tiny batches it buys neither
-        (single-task fused compute is already cheap) and its ~0.2 s/batch
-        stage is pure serial floor (profiled), so skip below ~1000
-        turns/batch.  Per-batch, NOT the run average: one 50k-turn batch
-        among many tiny ones must still get its salt and its task count."""
+        """salt_repartition True/False forces every window; None decides PER
+        WINDOW: an explicit ``partitions`` is a request to shape the
+        window's partitioning (the partition-invariance tests rely on it);
+        otherwise the salt shuffle exists for (a) parallelism — a
+        byte-contiguous batch in the source parquet lands in ~one scan
+        split — and (b) hot-conversation skew; for tiny windows it buys
+        neither (single-task fused compute is already cheap) and its
+        ~0.2 s stage is pure serial floor (profiled), so skip below ~1000
+        turns.  A computed task count of 1 skips it too: a hash shuffle
+        into one partition buys neither."""
         salt = (
             self.salt_repartition if self.salt_repartition is not None
             else self.partitions is not None or n_turns >= 1000
@@ -594,28 +649,61 @@ class BatchLoop:
         if self.partitions is not None:
             n = self.partitions
         else:
-            # ~2000 turns per task, bounded by executor slots: tiny batches
+            # ~2000 turns per task, bounded by executor slots: tiny windows
             # shouldn't schedule 2×cores tasks, huge ones shouldn't underfill
             par = self.spark.sparkContext.defaultParallelism
             n = int(min(par * 2, max(par // 2, n_turns / 2000, 1)))
+        if n == 1:
+            return tb
         return tb.repartition(n, "conv_id", "turn_idx")  # turn_idx = skew salt
 
+    def _collect_window(
+        self,
+        frame: DataFrame,
+        window: list[int],
+        n_turns: int,
+        rw_pdf: pd.DataFrame,
+        index=None,
+    ) -> pa.Table:
+        """The window's ONE Spark job: the fused stage over its turns,
+        collected as Arrow — every mention with its encoding, its
+        candidates and NIL columns against the RO KB (``index``, the IVF
+        index shard, in ivf mode) and the RW rows ``rw_pdf`` — sorted by
+        (batch_id, conv_id, turn_idx, start_tok).  The per-window
+        broadcasts are released once the collect has run or failed."""
+        sc = self.spark.sparkContext
+        if self.ann:
+            shards_bc, extra_bc = sc.broadcast([index]), None
+        else:
+            shards_bc = self.ro_shards_bc
+            extra_bc = sc.broadcast([KBShard(rw_pdf)]) if len(rw_pdf) else None
+        tb = self._salted(frame.filter(F.col("batch_id").isin(window)), n_turns)
+        try:
+            rows = detect_encode_retrieve(
+                tb, self.cfg, [], known_words=self.known_words,
+                encoder=self.encoder, shards_bc=shards_bc,
+                extra_shards_bc=extra_bc,
+            ).toArrow()
+        finally:
+            for bc in (extra_bc, shards_bc if self.ann else None):
+                if bc is not None:
+                    bc.unpersist()
+        return rows.sort_by([
+            (c, "ascending")
+            for c in ("batch_id", "conv_id", "turn_idx", "start_tok")
+        ])
+
     def run(self, frame: DataFrame) -> list[dict]:
-        """Run the frame's batches in ascending batch_id order; returns one
-        stats row per batch run.  Every batch's writes have drained and its
-        lineage mark has landed when this returns — ``foreachBatch`` needs
-        that, because the stream checkpoint commits when the handler
-        returns."""
+        """Run the frame's batches in ascending batch_id order, one window
+        at a time; returns one stats row per batch run.  Every batch's
+        writes have drained and its lineage mark has landed when this
+        returns — ``foreachBatch`` needs that, because the stream
+        checkpoint commits when the handler returns."""
         spark, lake, cfg, ann, dels = (
             self.spark, self.lake, self.cfg, self.ann, self.dels
         )
         # ONE job sizes every batch AND enumerates the batch ids
-        batch_counts = {
-            r["batch_id"]: int(r["n"])
-            for r in frame.groupBy("batch_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+        batch_counts = _batch_counts(frame)
         # incremental contract: batch N+1's output depends on batch N's RW
         # state, so only the longest committed PREFIX of the batch order
         # counts as done — a gap in the lineage (mid-run corruption, manual
@@ -640,8 +728,8 @@ class BatchLoop:
         if ann:
             # ivf mode exists for the beyond-broadcast regime, so RW state
             # must not accrete in driver memory: drained entities live in
-            # the index's delta files, and rw_pdf holds only the one
-            # in-flight delta whose write has not drained yet
+            # the index's delta files, and the driver holds only the
+            # current window's deltas
             next_rw_id = 0
             if lake_rw is not None:
                 mx = (
@@ -663,7 +751,6 @@ class BatchLoop:
 
         # ---- build-once ANN index (FAISS build/serialize/load/add
         # semantics, pipeline/indexer/main.py:178-214; operators/ann_index.py)
-        ro_shards, ro_shards_bc = self.ro_shards, self.ro_shards_bc
         if ann:
             from incremental_entity_extraction_spark.operators.ann_index import (
                 IVFShard,
@@ -671,6 +758,7 @@ class BatchLoop:
                 ensure_ann_index,
                 index_shard,
                 persist_delta,
+                rows_shard,
                 rw_delta_rows,
             )
             from incremental_entity_extraction_spark.operators.retrieval_ann import (  # noqa: E501
@@ -709,15 +797,14 @@ class BatchLoop:
                 backfill_missing_deltas(
                     self.ann_model, spark, lake_rw, drained, cfg.rw_indexer_id
                 )
-            # the run's index shard: base + drained delta files, resolved
-            # here once so no task lists a directory
-            ro_shards = [index_shard(self.ann_model, drained, dels)]
-            ro_shards_bc = spark.sparkContext.broadcast(ro_shards)
+            # the in-window search probes under the index's centroids and
+            # masks its tombstones
+            probe = IVFShard(self.ann_model.centroids, self.ann_model.n_probe, dels)
         ann_model = self.ann_model
 
         stats_rows = []
         # pipeline parallelism across the batch boundary: batch N's table
-        # writes drain while batch N+1 computes — the ONLY cross-batch
+        # writes drain while batch N+1 is finished — the ONLY cross-batch
         # dependency is the (tiny) RW delta, which BatchPersist.rw_delta()
         # returns immediately.  Lineage is marked strictly after finish(), so
         # a crash mid-overlap leaves batch N unmarked and the prefix-resume
@@ -725,7 +812,7 @@ class BatchLoop:
         pending: tuple | None = None
 
         def _drain(p) -> None:
-            b_prev, bp_prev, extra, add_prev = p
+            b_prev, bp_prev, extra, delta = p
             stats = {**bp_prev.finish(), **extra}
             if ann:
                 # index delta BEFORE the lineage mark: a crash in between
@@ -733,79 +820,82 @@ class BatchLoop:
                 # file byte-identically (frozen model ⇒ deterministic
                 # assignment).  Zero-entity batches commit a marker-only
                 # persist so resume never re-scans them.
-                persist_delta(
-                    ann_model, spark,
-                    rw_delta_rows(ann_model, add_prev, cfg.rw_indexer_id),
-                    int(b_prev),
-                )
-                fkey = ann_model.file_key(int(b_prev))
-                if fkey is not None:
-                    # visible to the next batches through their per-batch
-                    # broadcast; the run's index shard stays as broadcast
-                    ro_shards.append(IVFShard(files=[fkey]))
+                persist_delta(ann_model, spark, delta, int(b_prev))
             # the batch's metrics row, before the lineage mark: a run that
             # fails later still leaves metrics for every batch it committed
             lake.put_partition("metrics", b_prev, pa.Table.from_pylist([stats]))
             lake.mark_complete(int(b_prev), stats)
-            drained.add(int(b_prev))  # its new_entities partition is readable
+            drained.add(int(b_prev))  # its delta file joins the next index shard
             stats_rows.append({"batch_id": int(b_prev), **stats})
 
         try:
-            for b in todo:
-                t0 = time.time()
-                nb_turns = batch_counts[b]
-                tb = self._salted(
-                    frame.filter(F.col("batch_id") == int(b)), nb_turns
-                )
-                tables, clusters = run_batch(
-                    tb, ro_shards, rw_pdf, next_rw_id, cfg,
-                    self.cluster_mode, self.known_words, self.encoder,
-                    self.retrieval_mode, ann_model=ann_model,
-                    ro_shards_bc=ro_shards_bc,
-                    persist_candidates=self.persist_candidates,
-                )
-                # S7 analogue: persist the enriched mention table per batch
-                # (reference pickles outdata per batch, eval_kbp.py:654-658);
-                # encodings/candidates are dropped — recomputable and
-                # dominate bytes.
-                bp = BatchPersist().start(lake, int(b), tables, clusters, cfg)
-                # thread RW state forward (small dimension delta)
-                add_pdf = bp.rw_delta()
-                if ann:
-                    # keep only this batch's delta in memory; it reaches the
-                    # index files when the batch drains
-                    rw_pdf = add_pdf
-                    if len(add_pdf):
-                        next_rw_id = max(next_rw_id, int(add_pdf["id"].max()) + 1)
-                elif len(add_pdf):
-                    rw_pdf = (
-                        pd.concat([rw_pdf, add_pdf], ignore_index=True)
-                        if len(rw_pdf)
-                        else add_pdf
-                    )
-                    next_rw_id = int(rw_pdf["id"].max()) + 1
+            for window in _windows(todo, batch_counts):
                 if pending is not None:
+                    # the window's shards must hold every earlier batch
                     _drain(pending)
                     pending = None
-                # wall_s = compute wall (detect→cluster→ids→RW delta); the
-                # table writes drain during the NEXT batch's compute and are
-                # not charged
-                pending = (
-                    int(b),
-                    bp,
-                    {
-                        "n_clusters": int(len(add_pdf)),
-                        "wall_s": round(time.time() - t0, 3),
-                    },
-                    add_pdf,
+                t0 = time.time()
+                rows = self._collect_window(
+                    frame, window, sum(batch_counts[b] for b in window), rw_pdf,
+                    index_shard(ann_model, drained, dels) if ann else None,
                 )
+                ends = np.searchsorted(
+                    rows["batch_id"].to_numpy(), window, side="right"
+                )
+                new: list = []  # shards of the entities this window added
+                for b, lo, hi in zip(window, [0, *ends[:-1]], ends):
+                    tables, clusters = run_batch(
+                        rows.slice(lo, hi - lo),
+                        [probe, *new] if ann and new else new,
+                        next_rw_id, cfg, self.cluster_mode,
+                        self.retrieval_mode, self.persist_candidates, spark,
+                    )
+                    # S7 analogue: persist the enriched mention table per
+                    # batch (reference pickles outdata per batch,
+                    # eval_kbp.py:654-658); encodings/candidates are dropped
+                    # — recomputable and dominate bytes.
+                    bp = BatchPersist().start(lake, int(b), tables, clusters, cfg)
+                    # thread RW state forward (small dimension delta)
+                    add_pdf = bp.rw_delta()
+                    delta = None
+                    if len(add_pdf):
+                        next_rw_id = max(next_rw_id, int(add_pdf["id"].max()) + 1)
+                        if ann:
+                            # reaches the index files when the batch drains
+                            delta = rw_delta_rows(
+                                ann_model, add_pdf, cfg.rw_indexer_id
+                            )
+                            new.append(rows_shard(delta))
+                        else:
+                            rw_pdf = (
+                                pd.concat([rw_pdf, add_pdf], ignore_index=True)
+                                if len(rw_pdf) else add_pdf
+                            )
+                            new.append(KBShard(add_pdf))
+                    if pending is not None:
+                        _drain(pending)
+                        pending = None
+                    # wall_s = compute wall (the window job for its first
+                    # batch, then cluster→ids→RW delta); the table writes
+                    # drain during the NEXT batch's compute and are not
+                    # charged
+                    pending = (
+                        int(b),
+                        bp,
+                        {
+                            "n_clusters": int(len(add_pdf)),
+                            "wall_s": round(time.time() - t0, 3),
+                        },
+                        delta,
+                    )
+                    t0 = time.time()
             if pending is not None:
                 _drain(pending)
                 pending = None
         except BaseException:
-            # batch N+1's compute failed while batch N's writes were
-            # draining: join them and mark N if they succeeded (its work is
-            # valid and the prefix-resume will restart from N+1); swallow
+            # a batch failed while the previous one's writes were draining:
+            # join them and mark it if they succeeded (its work is valid and
+            # the prefix-resume will restart from the failed batch); swallow
             # drain errors so the original failure propagates
             if pending is not None:
                 try:
@@ -813,9 +903,6 @@ class BatchLoop:
                 except Exception:
                     pass
             raise
-        finally:
-            if ann:
-                ro_shards_bc.unpersist()
         return stats_rows
 
 

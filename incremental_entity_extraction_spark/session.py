@@ -37,6 +37,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The engine's local session: ``local[cores]``, AQE, Arrow, dynamic
+    partition overwrite, the ``worker_daemon`` when the package is
+    importable, and a warmed Python worker pool.  ``extra_conf`` is
+    applied last and overrides any of these.
+
+    DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+    is off: pyspark 4 otherwise captures the Python call site of every
+    ``F.*`` and DataFrame call, at several py4j round trips plus an
+    ``inspect.stack`` each.  The price is that an analysis error's
+    DataFrame query context no longer names the Python line that built
+    the failing expression; pass the setting as ``"true"`` in
+    ``extra_conf`` to get it back."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -57,6 +69,8 @@ def get_spark(
         # idempotent batch re-runs: overwrite only the batch_id partitions
         # being written (resume semantics, SURVEY.md §2.10)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # no per-call Python call-site capture (docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if daemon_importable(os.environ, os.getcwd()):
         builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)

@@ -59,3 +59,16 @@ def test_cluster_cc_auto_switch_threshold(spark, spark_world, cfg):
     # full partition of the NIL set
     out = cluster_cc(nil_df, cfg, lsh_threshold=0).toPandas()
     assert len(out) == nil_df.count()
+
+
+def test_lsh_edges_infer_the_grouped_eval_type(spark, spark_world, cfg):
+    """Both parameters of the LSH verify function are annotated, so
+    ``applyInPandas`` infers its eval type without a ``UserWarning`` (a
+    half-annotated function warned on every call)."""
+    import warnings
+
+    nil_df = _nil_df(spark, spark_world, cfg)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        edges = nil_edges_lsh(nil_df, cfg).collect()
+    assert all(e["src"] != e["dst"] for e in edges)

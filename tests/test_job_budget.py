@@ -1,11 +1,12 @@
-"""Spark jobs per batch: a regression budget for the batch path.
+"""Spark jobs per batch and per run: a regression budget for the batch path.
 
-Each batch is one Spark job: the fused detect→encode→retrieve→NIL stage
-runs inside the batch's one Arrow collect, and every lake table is then
+A window of batches is one Spark job: the fused detect→encode→retrieve→NIL
+stage runs inside the window's one Arrow collect, each batch is then
+finished on the driver (``pipeline.run_batch``), and every lake table is
 written by the driver.  A change that puts a Spark job back on the batch
 path — a Spark write, a count, a checkpoint, a second collect — fails
-here.  The conftest world's batches are below the salt-shuffle size
-(``BatchLoop._salted``), which would add one job per batch.
+here.  The conftest world is one window, below the salt-shuffle size
+(``BatchLoop._salted``), which would add one job per window.
 """
 
 import pytest
@@ -13,7 +14,11 @@ from pyspark.sql import functions as F
 
 import incremental_entity_extraction_spark.pipeline as pl
 
-JOBS_PER_BATCH = 1
+JOBS_PER_BATCH = 0
+# per run on the conftest world: the KB shards (broadcast) or the four jobs
+# that build the IVF index on a fresh lake (ivf), then the one batch-sizing
+# job and the one window job
+JOBS_PER_RUN = {"broadcast": 3, "ivf": 6}
 
 
 def _jobs(spark, run) -> int:
@@ -40,3 +45,14 @@ def test_spark_jobs_per_batch(spark, spark_world, cfg, tmp_path, retrieval_mode)
         ))
         assert len(lake.completed_batches()) == n
     assert (jobs[4] - jobs[2]) / 2 <= JOBS_PER_BATCH, jobs
+
+
+@pytest.mark.parametrize("retrieval_mode", ["broadcast", "ivf"])
+def test_spark_jobs_per_run(spark, spark_world, cfg, tmp_path, retrieval_mode):
+    lake = pl.Lake(str(tmp_path / "lake"))
+    jobs = _jobs(spark, lambda: pl.run_incremental(
+        spark, spark_world["transcripts"], spark_world["entities_kb"], lake,
+        cfg, cluster_mode="cc", retrieval_mode=retrieval_mode,
+    ))
+    assert lake.completed_batches() == {0, 1, 2, 3}
+    assert jobs <= JOBS_PER_RUN[retrieval_mode], jobs

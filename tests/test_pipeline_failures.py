@@ -4,7 +4,6 @@ prefix-resume must finish the run to a byte-identical result."""
 
 import re
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,12 +107,25 @@ def test_two_fresh_runs_are_byte_identical(spark, spark_world, cfg, tmp_path):
     assert ids[0] == ids[1]
 
 
-def test_unknown_cluster_mode_raises_before_retrieval(cfg):
-    """A bad cluster_mode fails at the top of run_batch: the batch frame is
-    None here, so any detection/retrieval work would fail differently."""
+def test_unknown_cluster_mode_raises_before_retrieval(
+    spark, spark_world, cfg, tmp_path
+):
+    """A bad cluster_mode fails before the window job retrieves anything:
+    ``run_incremental`` raises before any Spark job and leaves no lake, and
+    ``run_batch`` raises at its top (its rows are None here, so any
+    retrieval work would fail differently)."""
     want = (
         "unknown cluster_mode 'kmeans': "
         "expected cc | greedy_replay | three_step | tfidf"
     )
+    tracker = spark.sparkContext.statusTracker()
+    j0 = max(tracker.getJobIdsForGroup(None), default=-1)
     with pytest.raises(ValueError, match=re.escape(want)):
-        pl.run_batch(None, [], pd.DataFrame(), 0, cfg, cluster_mode="kmeans")
+        pl.run_incremental(
+            spark, spark_world["transcripts"], spark_world["entities_kb"],
+            pl.Lake(str(tmp_path / "lake")), cfg, cluster_mode="kmeans",
+        )
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == j0
+    assert not (tmp_path / "lake").exists()
+    with pytest.raises(ValueError, match=re.escape(want)):
+        pl.run_batch(None, [], 0, cfg, cluster_mode="kmeans")

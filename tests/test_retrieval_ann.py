@@ -86,16 +86,21 @@ def test_ann_top1_agrees_with_exact(enriched_pair):
 
 
 @pytest.mark.parametrize("mode", ["ivf"])
-def test_run_batch_ann_modes_require_model(spark_world, cfg, mode):
-    """The persisted index is the only ANN path: no per-call fallback."""
-    import pandas as pd
+def test_run_batch_ann_modes_require_model(cfg, mode):
+    """The persisted index is the only ANN path: a batch's in-window
+    entities are probed under the index shard's centroids, so a shard
+    list without it raises instead of falling back."""
+    import pyarrow as pa
 
+    from incremental_entity_extraction_spark.operators.ann_index import (
+        IVFShard,
+    )
     from incremental_entity_extraction_spark.pipeline import run_batch
 
-    with pytest.raises(ValueError, match="needs a prebuilt ann_model"):
+    with pytest.raises(ValueError, match="needs the index shard"):
         run_batch(
-            spark_world["transcripts"], [], pd.DataFrame(), 0, cfg,
-            retrieval_mode=mode,
+            pa.table({"is_nil": pa.array([], pa.bool_())}),
+            [IVFShard(rows={})], 0, cfg, retrieval_mode=mode,
         )
 
 
@@ -104,8 +109,6 @@ def test_unknown_retrieval_mode_is_rejected(spark, spark_world, cfg, tmp_path,
                                             mode):
     """A misspelled or retired mode raises before anything runs — it once
     ran silently against an empty RO KB and linked nothing."""
-    import pandas as pd
-
     from incremental_entity_extraction_spark.pipeline import (
         Lake,
         run_batch,
@@ -120,10 +123,7 @@ def test_unknown_retrieval_mode_is_rejected(spark, spark_world, cfg, tmp_path,
         )
     assert not (tmp_path / "lake").exists()
     with pytest.raises(ValueError, match=r"broadcast \| ivf"):
-        run_batch(
-            spark_world["transcripts"], [], pd.DataFrame(), 0, cfg,
-            retrieval_mode=mode,
-        )
+        run_batch(None, [], 0, cfg, retrieval_mode=mode)
 
 
 def test_pipeline_e2e_with_ivf_retrieval(spark, spark_world, world, cfg, tmp_path):
