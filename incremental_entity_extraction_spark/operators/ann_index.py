@@ -14,6 +14,8 @@ one task here:
   it with pyarrow as ``rows/added_batch=-1/part-<partition>.parquet``,
   sorted by ``(bucket, id)`` with one row group per bucket, plus a tiny
   ``model.npz`` (centroids + params + fingerprints + the base file names).
+  A corpus that is its own training sample and one file's worth of rows
+  is bucketed and written by the driver instead, to the same bytes.
   Rows carry their own metadata: ``bucket, id (composite key), vecn,
   wikipedia_id, title``.
 * ``load_ann_index`` / ``ensure_ann_index`` — the deserialize half; a
@@ -54,7 +56,6 @@ from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
@@ -70,6 +71,7 @@ from incremental_entity_extraction_spark.operators.similarity_search import (
     _derive_ivf_params,
     _normalize,
     kmeans_centroids,
+    vector_matrix,
 )
 
 BASE_BATCH = -1          # added_batch value of the build-time corpus rows
@@ -307,31 +309,55 @@ def _write_rows(path: str, rows: pa.Table) -> None:
     os.replace(tmp, path)
 
 
-def _write_base(cvec: DataFrame, model: AnnIndexModel, n: int) -> None:
-    """Each build task buckets its partition under ``model.centroids`` and
-    writes it with pyarrow as ``part-<partition>.parquet``; the names land
-    in ``model.base_files`` (the caller saves the model after).  Partitions
-    are coalesced (no shuffle) to about ``_BASE_FILE_ROWS`` rows each, so a
-    small corpus is one file and a large one stays spread over tasks."""
-    sc = cvec.sparkSession.sparkContext
-    bc_C = sc.broadcast(model.centroids)
+def _base_rows(centroids: np.ndarray, tbl: pa.Table) -> pa.Table:
+    """Corpus rows ``(id, vec, wikipedia_id, title)`` -> index rows under
+    ``centroids``; missing metadata is stored as -1 / ""."""
+    return _rows_table(
+        centroids,
+        tbl.column("id").to_numpy(),
+        vector_matrix(tbl.column("vec")),
+        tbl.column("wikipedia_id").fill_null(-1).to_numpy(),
+        tbl.column("title").fill_null("").to_numpy(zero_copy_only=False),
+    )
+
+
+def _fits_driver(n: int, n_extra: int, train_size: int) -> bool:
+    """Whether the base is built on the driver: the k-means sample is the
+    whole corpus already (so the driver holds it anyway), and the base is
+    one file.  Above that, build tasks write the base (``_write_base``)."""
+    return n + n_extra <= train_size and n <= _BASE_FILE_ROWS
+
+
+def _write_base(
+    cvec: DataFrame, model: AnnIndexModel, n: int, local: pa.Table | None = None
+) -> None:
+    """Write the base rows under ``model.centroids``; their file names land
+    in ``model.base_files`` (the caller saves the model after).
+
+    ``local`` is the corpus already collected on the driver, passed when it
+    ``_fits_driver``: the driver buckets it and writes one
+    ``part-0.parquet``, with no Spark job.  Otherwise each build task
+    buckets its partition and writes it with pyarrow as
+    ``part-<partition>.parquet``.  Partitions are coalesced (no shuffle) to
+    about ``_BASE_FILE_ROWS`` rows each, so a small corpus is one file, the
+    same bytes as the driver's, and a large one stays spread over tasks."""
     out = model.base_path
     shutil.rmtree(out, ignore_errors=True)
+    if local is not None:
+        _write_rows(os.path.join(out, _ROWS_FILE),
+                    _base_rows(model.centroids, local))
+        model.base_files = (_ROWS_FILE,)
+        return
+    sc = cvec.sparkSession.sparkContext
+    bc_C = sc.broadcast(model.centroids)
 
     def _write(it):
         rbs = [rb for rb in it if rb.num_rows]
         if not rbs:
             return
-        tbl = pa.Table.from_batches(rbs)
-        vec = pc.list_flatten(tbl.column("vec")).to_numpy()
         name = f"part-{TaskContext.get().partitionId()}.parquet"
-        _write_rows(os.path.join(out, name), _rows_table(
-            bc_C.value,
-            tbl.column("id").to_numpy(),
-            vec.reshape(tbl.num_rows, -1),
-            tbl.column("wikipedia_id").fill_null(-1).to_numpy(),
-            tbl.column("title").fill_null("").to_numpy(zero_copy_only=False),
-        ))
+        _write_rows(os.path.join(out, name),
+                    _base_rows(bc_C.value, pa.Table.from_batches(rbs)))
         yield pa.RecordBatch.from_pydict({"name": [name]})
 
     n_files = max(1, -(-n // _BASE_FILE_ROWS))
@@ -361,6 +387,13 @@ def build_ann_index(
     ``wikipedia_id`` / ``title`` (``retrieval_ann.composite_corpus`` passes
     them through); the rows store them so the search hydrates in place.
 
+    When the sample is the whole corpus and the base is one file
+    (``_fits_driver``: ``n + n_extra <= train_size`` and ``n <=
+    _BASE_FILE_ROWS``), the training collect takes every corpus column and
+    the driver writes the base from it, so the build starts no Python
+    worker; the files are byte-identical to the Spark build's.  Above that
+    rule the build tasks write the base (``_write_base``).
+
     ``train_extra`` (same id/vec columns as ``corpus``) folds accreted
     delta vectors into the k-means TRAINING sample only — persisted base
     rows stay corpus-only, so the base/delta bookkeeping (and the
@@ -379,15 +412,26 @@ def build_ann_index(
         raise ValueError("build_ann_index: empty corpus")
     n_centroids, n_probe = _derive_ivf_params(n, n_centroids, n_probe)
     n_extra = 0
-    train_vec = cvec.select("id", "vec")
     if train_extra is not None:
         evec = train_extra.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
         )
         n_extra = evec.count()
+    local = None
+    if _fits_driver(n, n_extra, train_size):
+        # the whole corpus, then the extra vectors: the order the union
+        # below gives, so the centroids do not depend on the path
+        local = cvec.toArrow()
+        X = vector_matrix(local.column("vec"))
+        if n_extra:
+            X = np.concatenate(
+                [X, vector_matrix(evec.select("vec").toArrow().column("vec"))]
+            )
+    else:
+        train_vec = cvec.select("id", "vec")
         if n_extra:
             train_vec = train_vec.unionByName(evec)
-    X = _coarse_sample(train_vec, n + n_extra, train_size, seed)
+        X = _coarse_sample(train_vec, n + n_extra, train_size, seed)
     model = AnnIndexModel(
         path=path, centroids=kmeans_centroids(X, n_centroids, seed=seed),
         n_probe=n_probe, seed=seed, n_corpus=n, corpus_fp=fp,
@@ -404,7 +448,7 @@ def build_ann_index(
     shutil.rmtree(model.rows_path, ignore_errors=True)
     for mk in _delta_marker_files(path):
         os.remove(mk)
-    _write_base(cvec, model, n)
+    _write_base(cvec, model, n, local)
     _save_model(model)
     return model
 
@@ -497,7 +541,8 @@ def ensure_ann_index(
                     )
             if existing.meta_fp != meta_fp or existing.base_keys() is None:
                 existing.meta_fp = meta_fp
-                _write_base(cvec, existing, n)
+                local = cvec.toArrow() if _fits_driver(n, 0, train_size) else None
+                _write_base(cvec, existing, n, local)
                 _save_model(existing)
             if existing.n_probe != want_p:
                 existing.n_probe = want_p
@@ -700,7 +745,7 @@ def _split_blocks(rows: pa.Table) -> dict:
     title)}`` NumPy blocks."""
     bucket = rows.column("bucket").to_numpy()
     keys = rows.column("id").to_numpy()
-    V = pc.list_flatten(rows.column("vecn")).to_numpy().reshape(len(keys), -1)
+    V = vector_matrix(rows.column("vecn"))
     wid = rows.column("wikipedia_id").to_numpy()
     title = rows.column("title").to_numpy(zero_copy_only=False)
     cuts = np.flatnonzero(np.diff(bucket)) + 1

@@ -14,6 +14,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -113,6 +115,14 @@ def _derive_ivf_params(
     return n_centroids, n_probe
 
 
+def vector_matrix(col: pa.ChunkedArray | pa.Array) -> np.ndarray:
+    """An arrow ``list<float|double>`` column of equal-length vectors ->
+    (n, dim) float32 matrix, by one flatten (no per-row Python work)."""
+    n = len(col)
+    flat = pc.list_flatten(col).to_numpy().astype(np.float32, copy=False)
+    return flat.reshape(n, len(flat) // n if n else 0)
+
+
 def _coarse_sample(cvec: DataFrame, n: int, train_size: int, seed: int) -> np.ndarray:
     """Deterministic ≤train_size training sample — the only collect."""
     frac = min(1.0, train_size / n)
@@ -121,6 +131,4 @@ def _coarse_sample(cvec: DataFrame, n: int, train_size: int, seed: int) -> np.nd
         if frac < 1.0
         else cvec.select("vec")
     )
-    return np.stack(
-        [np.asarray(v, dtype=np.float32) for v in sample.toPandas()["vec"]]
-    )
+    return vector_matrix(sample.toArrow().column("vec"))

@@ -12,8 +12,8 @@ from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
-# worker_daemon.py: re-reads a zip on sys.path only when it changed, instead
-# of once per task
+# worker_daemon.py: imports the stages' modules once before it forks the
+# workers, and re-reads a zip on sys.path only when it changed
 DAEMON_MODULE = "incremental_entity_extraction_spark.worker_daemon"
 
 
@@ -38,9 +38,13 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """The engine's local session: ``local[cores]``, AQE, Arrow, dynamic
-    partition overwrite, the ``worker_daemon`` when the package is
-    importable, and a warmed Python worker pool.  ``extra_conf`` is
-    applied last and overrides any of these.
+    partition overwrite and the ``worker_daemon`` when the package is
+    importable.  ``extra_conf`` is applied last and overrides any of these.
+
+    It runs no Spark job.  The first Python job of a SparkContext starts
+    the worker daemon, which imports the libraries the stages use once and
+    forks each worker from there (``worker_daemon``), so no warm-up job is
+    needed to keep that import cost out of later jobs.
 
     DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
     is off: pyspark 4 otherwise captures the Python call site of every
@@ -79,49 +83,4 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Round 8: warm the Python worker pool AT SESSION CREATION, not just
-    # where a caller remembers to (warm_python_workers docstring: a real
-    # cluster pays the per-worker import storm once at executor startup, so
-    # it is not a per-operator cost) — previously only the pipeline bench
-    # legs warmed, and the first Python-stage query of any other session
-    # paid the 32-worker storm inside its own wall.  Idempotent per
-    # SparkContext (application-id guard), so repeat get_spark calls and
-    # the bench's explicit warm_python_workers cost one no-op check.
-    warm_python_workers(spark)
     return spark
-
-
-_WARMED_APPS: set = set()
-
-
-def warm_python_workers(spark: SparkSession, waves: int = 2) -> None:
-    """Warm the Python-worker pool before timing a benchmark.
-
-    Local mode forks one Python daemon worker per core; the first task each
-    worker runs pays the numpy/pandas/pyarrow import storm (all workers
-    importing simultaneously contend on CPU — ~20s at 32 workers vs ~3s
-    steady-state for the same job).  A real cluster pays this once at
-    executor startup, so benchmarks exclude it by running one trivial
-    Arrow-UDF wave per worker first.  One warm per SparkContext: repeat
-    calls (e.g. get_spark already warmed this session) return immediately.
-    """
-    import pandas as pd  # noqa: F401
-
-    app_id = spark.sparkContext.applicationId
-    if app_id in _WARMED_APPS:
-        return
-    _WARMED_APPS.add(app_id)
-    cores = spark.sparkContext.defaultParallelism
-    df = spark.range(cores * waves).repartition(cores * waves)
-
-    def _touch(batches):
-        # force the heavy imports the pipeline UDFs need
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        import incremental_entity_extraction_spark.functions.featurizer  # noqa: F401
-
-        for pdf in batches:
-            yield pdf
-
-    df.mapInPandas(_touch, schema="id long").count()

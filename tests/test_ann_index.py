@@ -151,6 +151,68 @@ def test_rows_layout_one_file_row_group_per_bucket(spark, built, tmp_path):
     assert search(split, Q, 5) == search(one, Q, 5)
 
 
+def _base_bytes(model):
+    """Base file name -> bytes."""
+    base = {}
+    for name in model.base_files:
+        with open(os.path.join(model.base_path, name), "rb") as f:
+            base[name] = f.read()
+    return base
+
+
+def _index_files(model):
+    """(``model.npz`` bytes, base file bytes) of a persisted index."""
+    with open(os.path.join(model.path, "model.npz"), "rb") as f:
+        return f.read(), _base_bytes(model)
+
+
+def test_driver_base_write_matches_spark_write(spark, built, tmp_path):
+    """Under one model, the driver's base write and the build tasks' write
+    produce the same ``part-0.parquet``, byte for byte."""
+    model, embs = built
+    cvec = ai._corpus_frame(embs, "vec_id", "embedding").repartition(3)
+    on_driver = dataclasses.replace(model, path=str(tmp_path / "driver"))
+    ai._write_base(cvec, on_driver, 400, cvec.toArrow())
+    in_tasks = dataclasses.replace(model, path=str(tmp_path / "tasks"))
+    ai._write_base(cvec, in_tasks, 400)
+    assert on_driver.base_files == in_tasks.base_files == ("part-0.parquet",)
+    assert _base_bytes(on_driver) == _base_bytes(in_tasks)
+
+
+@pytest.mark.parametrize("extra", [False, True])
+def test_driver_build_matches_spark_build(spark, embs, tmp_path, monkeypatch,
+                                          extra):
+    """A corpus within the rule (its own training sample, one base file) is
+    built on the driver with no build task; forcing the build tasks gives
+    the same index files.  Extra training vectors follow the corpus, as in
+    the build tasks' union."""
+    train_extra = None
+    if extra:
+        train_extra = embs.filter(F.col("vec_id") < 50).withColumn(
+            "embedding", F.transform("embedding", lambda x: x * -1.0)
+        )
+
+    def build(name):
+        return build_ann_index(
+            embs, str(tmp_path / name), n_centroids=12, seed=11,
+            train_extra=train_extra,
+        )
+
+    spark_write = ai._write_base
+    with monkeypatch.context() as m:
+        def no_tasks(cvec, model, n, local=None):
+            assert local is not None, "the build ran Spark tasks"
+            return spark_write(cvec, model, n, local)
+
+        m.setattr(ai, "_write_base", no_tasks)
+        on_driver = build("driver")
+    with monkeypatch.context() as m:
+        m.setattr(ai, "_fits_driver", lambda *a: False)
+        in_tasks = build("tasks")
+    assert on_driver.n_delta_at_build == (50 if extra else 0)
+    assert _index_files(on_driver) == _index_files(in_tasks)
+
+
 def test_worker_cache_byte_cap(built):
     """A search that probes more row groups than the cache may hold gives
     the same results, and the cache stays under its cap."""

@@ -1,8 +1,11 @@
 """The package's Python worker daemon (worker_daemon.py): Spark tasks run
-under it, and it re-reads a zip archive on sys.path only when the archive
-changed."""
+under it, it imports the stages' libraries before it forks the workers, and
+it re-reads a zip archive on sys.path only when the archive changed."""
 
+import json
 import os
+import subprocess
+import sys
 import uuid
 import zipfile
 import zipimport
@@ -14,6 +17,19 @@ from incremental_entity_extraction_spark.session import (
 )
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PREIMPORTED = (
+    "numpy",
+    "pandas",
+    "pyarrow",
+    "incremental_entity_extraction_spark.operators.fused",
+)
+
+
+def _python(code: str, env=None) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, env=env, capture_output=True,
+        text=True, timeout=180,
+    )
 
 
 def _zip(path, modules: dict) -> None:
@@ -86,3 +102,50 @@ def test_daemon_importable_decision(tmp_path):
     assert not daemon_importable({"PYTHONPATH": zipped}, other)
     # a relative entry resolves against the cwd the daemon starts in
     assert daemon_importable({"PYTHONPATH": os.path.basename(ROOT)}, os.path.dirname(ROOT))
+
+
+def test_daemon_imports_stage_modules_before_it_forks():
+    """A task cannot show this (a worker reused from an earlier job holds the
+    modules either way), so the daemon runs in its own process with Spark's
+    manager, which forks the workers, replaced by a probe of ``sys.modules``."""
+    code = f"""
+import json, sys
+import pyspark.daemon
+before = set(sys.modules)
+pyspark.daemon.manager = lambda: print(json.dumps(
+    {{"before": sorted(before), "at_fork": sorted(sys.modules)}}))
+from incremental_entity_extraction_spark import worker_daemon
+worker_daemon.main()
+"""
+    out = _python(code)
+    assert out.returncode == 0, out.stderr
+    got = json.loads(out.stdout.splitlines()[-1])
+    assert set(PREIMPORTED) <= set(got["at_fork"])
+    assert PREIMPORTED[-1] not in got["before"]
+
+
+def test_fork_after_preimport_runs_blas_in_the_child():
+    """The workers fork from a process that has loaded BLAS; with its
+    threads unpinned, a child's matmul must still finish (no pool lock
+    inherited mid-use)."""
+    code = f"""
+import os, signal, sys
+import numpy as np
+for m in {PREIMPORTED!r}:
+    __import__(m)
+a = np.random.default_rng(0).random((512, 512))
+assert np.isfinite(a @ a).all()
+pid = os.fork()
+if pid == 0:
+    signal.alarm(60)  # a deadlocked child dies instead of hanging
+    b = np.random.default_rng(1).random((512, 512))
+    os._exit(0 if np.isfinite(b @ b).all() else 3)
+_, status = os.waitpid(pid, 0)
+sys.exit(os.waitstatus_to_exitcode(status))
+"""
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")
+    }
+    out = _python(code, env)
+    assert out.returncode == 0, (out.returncode, out.stderr)
