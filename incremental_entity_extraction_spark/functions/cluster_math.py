@@ -2,27 +2,92 @@
 
 * ``greedy_cluster_labels`` — the reference's sequential last-writer-wins
   label loop (semantics of pipeline/greedyclustering/__main__.py:30-34).
+* ``component_roots`` — union-find over edges that arrive in tiles: the
+  components of ``cc`` (``threshold_pairs``) and of the single-link steps.
 * ``modal_value`` — most-frequent value with deterministic ties (A3).
 * ``medoid_index`` — KMedoids-k=1 center (TimeEvolving.py:123-131; A10).
+
+The dot-product kernels score ``tile_rows(n)`` rows against all ``n`` at a
+time, so their memory is O(n·tile), never O(n²).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
+
 import numpy as np
+
+
+def tile_rows(n: int) -> int:
+    """Rows per score tile: about 2M scores (8 MB of float32), at most 4096
+    rows."""
+    return max(1, min(4096, (1 << 21) // max(n, 1)))
+
+
+def threshold_pairs(
+    enc: np.ndarray, threshold: float
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """The ``(row, col)`` pairs with ``enc[row] @ enc[col] > threshold``,
+    one ``tile_rows`` tile of ``enc @ enc.T`` at a time (self-pairs
+    included; a union ignores them)."""
+    chunk = tile_rows(len(enc))
+    for i0 in range(0, len(enc), chunk):
+        rows, cols = np.nonzero(enc[i0 : i0 + chunk] @ enc.T > threshold)
+        yield rows + i0, cols
+
+
+def component_roots(
+    n: int,
+    pair_tiles: Iterable[tuple[np.ndarray, np.ndarray]],
+    rank: np.ndarray | None = None,
+) -> np.ndarray:
+    """Root row of each of ``n`` rows: the member of smallest ``rank`` (a
+    permutation of ``0..n-1``; default the row index) of its component in
+    the undirected graph whose edges arrive as ``pair_tiles``, an iterable
+    of ``(a, b)`` row-index arrays.  A tile is unioned and dropped before
+    the next is read.
+
+    The forest lives in rank space and stays flat between rounds: every
+    rank points at its component's smallest rank.  A round hooks the
+    larger root of each still-split pair under the smallest root it meets
+    (``np.minimum.at``), then pointer jumping flattens the forest again;
+    every round removes at least one root, so a tile takes a few rounds,
+    not a pass per edge."""
+    rank = np.arange(n) if rank is None else np.asarray(rank)
+    parent = np.arange(n)
+    for a, b in pair_tiles:
+        a, b = parent[rank[a]], parent[rank[b]]
+        while True:
+            split = a != b
+            if not split.any():
+                break
+            lo = np.minimum(a[split], b[split])
+            hi = np.maximum(a[split], b[split])
+            np.minimum.at(parent, hi, lo)
+            while True:
+                up = parent[parent]
+                if np.array_equal(up, parent):
+                    break
+                parent = up
+            a, b = parent[lo], parent[hi]
+    row_of = np.empty(n, dtype=np.intp)
+    row_of[rank] = np.arange(n)
+    return row_of[parent[rank]]
 
 
 def greedy_cluster_labels(enc: np.ndarray, threshold: float) -> np.ndarray:
     """Sequential label propagation over the dot-product matrix: for each row
     i in order, every j with ``scores[i, j] > threshold`` takes i's current
     label (last writer wins).  Order-dependent by design — callers must feed
-    rows in the canonical (conv_id, turn_idx, start_tok) order."""
+    rows in the canonical (conv_id, turn_idx, start_tok) order.  Scores one
+    ``tile_rows`` tile at a time (one tile up to 1 448 rows)."""
     n = len(enc)
     labels = np.arange(n)
-    if n == 0:
-        return labels
-    scores = enc @ enc.T
-    for i in range(n):
-        labels[scores[i] > threshold] = labels[i]
+    chunk = tile_rows(n)
+    for i0 in range(0, n, chunk):
+        above = enc[i0 : i0 + chunk] @ enc.T > threshold
+        for r, row in enumerate(above):
+            labels[row] = labels[i0 + r]
     return labels
 
 
@@ -37,43 +102,35 @@ def modal_value(values) -> str:
     return min(v for v, c in counts.items() if c == best_count)
 
 
+def distance_totals(enc: np.ndarray) -> np.ndarray:
+    """Each member's total Euclidean distance to all members, a block of
+    rows at a time (about 2M differences per block).  Every total reduces
+    its own row, so the blocks give the bits of the one-shot m×m×dim
+    formula."""
+    m, dim = enc.shape
+    step = max(1, (1 << 21) // max(m * dim, 1))
+    tot = []
+    for i0 in range(0, m, step):
+        d2 = ((enc[i0 : i0 + step, None, :] - enc[None, :, :]) ** 2).sum(-1)
+        tot.append(np.sqrt(np.maximum(d2, 0)).sum(1))
+    return np.concatenate(tot)
+
+
 def medoid_index(enc: np.ndarray) -> int:
     """Member minimizing total Euclidean distance to the others; ties ->
     lowest index."""
     if len(enc) == 1:
         return 0
-    d2 = ((enc[:, None, :] - enc[None, :, :]) ** 2).sum(-1)
-    tot = np.sqrt(np.maximum(d2, 0)).sum(1)
-    return int(np.argmin(tot))
-
-
-def _union_find_components(n: int, edges) -> np.ndarray:
-    """Union-find connected components; returns min-index root labels."""
-    parent = np.arange(n)
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for i, j in edges:
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            # keep the smaller index as root => deterministic labels
-            if ri < rj:
-                parent[rj] = ri
-            else:
-                parent[ri] = rj
-    return np.array([find(i) for i in range(n)])
+    return int(np.argmin(distance_totals(enc)))
 
 
 def single_link_labels(dist: np.ndarray, threshold: float) -> np.ndarray:
     """Single-link agglomerative clustering with a distance cutoff ≡
-    connected components on the dist <= threshold graph (exact equivalence)."""
-    n = len(dist)
-    ii, jj = np.where(np.triu(dist <= threshold, k=1))
-    return _union_find_components(n, zip(ii.tolist(), jj.tolist()))
+    connected components on the dist <= threshold graph (exact equivalence);
+    label = the component's smallest row index."""
+    return component_roots(
+        len(dist), [np.nonzero(np.triu(dist <= threshold, k=1))]
+    )
 
 
 def three_step_cluster_labels(
@@ -133,14 +190,18 @@ def three_step_cluster_labels(
     cn = np.linalg.norm(centroids, axis=1)
     cn[cn == 0] = 1.0
     centroids = centroids / cn[:, None]
-    edges = []
+    ea: list[int] = []
+    eb: list[int] = []
     for i in range(k):
         for j in range(i + 1, k):
             if 1.0 - float(centroids[i] @ centroids[j]) <= centroid_threshold:
                 cross = enc[sub_groups[i]] @ enc[sub_groups[j]].T
                 if cross.max(initial=-np.inf) > merge_dot_gate:
-                    edges.append((i, j))
-    group_root = _union_find_components(k, edges)
+                    ea.append(i)
+                    eb.append(j)
+    group_root = component_roots(
+        k, [(np.asarray(ea, dtype=np.intp), np.asarray(eb, dtype=np.intp))]
+    )
     labels = np.empty(n, dtype=np.int64)
     for gi, members in enumerate(sub_groups):
         labels[members] = group_root[gi]

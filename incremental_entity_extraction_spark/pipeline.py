@@ -66,12 +66,11 @@ from incremental_entity_extraction_spark.config import DEFAULT_CONFIG, PipelineC
 from incremental_entity_extraction_spark.operators.clustering import (  # noqa: F401
     CLUSTER_KERNELS,
     CLUSTER_SCHEMA,
+    QUADRATIC_MODES,
     cc_summarize_pdf,
-    cluster_cc,
     cluster_summarize_batches,
     greedy_summarize_pdf,
     kernel_columns,
-    summarize_clusters_df,
     tfidf_summarize_pdf,
     three_step_summarize_pdf,
 )
@@ -101,16 +100,15 @@ from incremental_entity_extraction_spark.operators.triples import (
     mention_triples,
 )
 
-# driver gate: batches whose NIL set is at most this many rows are
-# clustered + summarized ON THE DRIVER (the mode's per-batch kernel,
-# clustering.CLUSTER_KERNELS) from the batch's collected rows.  Above the
-# gate those NIL rows go back to Spark: the same kernel runs in one
-# applyInPandas task per batch — a single executor thread doing the
-# identical single-threaded work — and cc alone runs the distributed chain
-# (broadcast sweep / LSH + star-CC) instead; either way the summary rows are
-# then collected.  Below the gate the driver path is the same compute minus
-# an applyInPandas shuffle.  8192 rows bound the cc score matrix at 256 MB
-# in ~8 MB tiles.
+# driver gate of the modes whose kernels hold n×n matrices
+# (clustering.QUADRATIC_MODES: three_step, tfidf).  A batch of theirs with
+# at most this many NIL rows is clustered + summarized ON THE DRIVER (the
+# mode's per-batch kernel, clustering.CLUSTER_KERNELS) from the batch's
+# collected rows; above it the NIL rows go back to Spark, the same kernel
+# runs in one applyInPandas task per batch, and the summary rows are
+# collected.  8192 rows bound tfidf's float64 kernel matrix at 512 MB.
+# cc and greedy_replay score in row tiles (O(n·tile) memory) and run on the
+# driver at every NIL size.
 DRIVER_CLUSTER_MAX = 8192
 
 # turns per window: consecutive batches whose turns sum to at most this run
@@ -182,9 +180,11 @@ def _pinned(rows: pa.Table, table: str) -> pa.Table:
 def _driver_clusters(
     nil: pa.Table, cfg: PipelineConfig, cluster_mode: str
 ) -> pd.DataFrame:
-    """Tiny-NIL-batch path: the SAME per-batch kernel
+    """The driver path: the SAME per-batch kernel
     ``clustering.cluster_summarize_batches`` runs, on the batch's collected
-    NIL rows.  Rows are identical to the paths above the gate (pinned by
+    NIL rows.  Every cc and greedy_replay batch takes it, and a three_step
+    or tfidf batch at or below ``DRIVER_CLUSTER_MAX`` NIL rows; its rows
+    are identical to that Spark path's (pinned by
     tests/test_pipeline_e2e.py gate-parity)."""
     pdf = nil.select(kernel_columns(cluster_mode)).to_pandas()
     th = float(cfg.greedy_threshold)
@@ -352,7 +352,7 @@ def run_batch(
 ):
     """One batch, finished on the driver from its rows of the window job
     (``BatchLoop``): ``(tables, clusters)``.  No Spark job runs here unless
-    the batch's NIL set is above ``DRIVER_CLUSTER_MAX``.
+    a three_step or tfidf batch's NIL set is above ``DRIVER_CLUSTER_MAX``.
 
     ``rows`` are the batch's ``fused.FUSED_SCHEMA`` rows in (conv_id,
     turn_idx, start_tok) order: every mention with its encoding, its
@@ -387,9 +387,11 @@ def run_batch(
     Driver memory: ONE WINDOW's mention rows (``WINDOW_MAX_TURNS``), each
     with its encoding (n × dim × 4 B), its candidate list and ≈200–300 B
     of text, held until the window's last batch is finished.
-    ``DRIVER_CLUSTER_MAX`` decides only where clustering runs: at or below
-    it the mode's kernel runs on the driver; above it the NIL slice goes
-    back to Spark (``createDataFrame`` on ``spark``) for ``cluster_cc`` or
+    Clustering runs the mode's kernel on the driver; cc and greedy_replay
+    hold one score tile at a time (``cluster_math.tile_rows``), so they do
+    at every NIL size.  ``DRIVER_CLUSTER_MAX`` decides only where a
+    three_step or tfidf batch clusters: above it the NIL slice goes back to
+    Spark (``createDataFrame`` on ``spark``) for
     ``cluster_summarize_batches``, and only the summary rows come back."""
     _check_modes(retrieval_mode, cluster_mode)
     if (
@@ -409,21 +411,13 @@ def run_batch(
     # Table.filter with no match gives a table createDataFrame rejects (an
     # empty list column with no chunk); slice(0, 0) keeps one
     nil = rows.filter(rows["is_nil"]) if n_nil else rows.slice(0, 0)
-    if n_nil <= DRIVER_CLUSTER_MAX:
-        # tiny-batch driver path: same kernels, no applyInPandas shuffle
+    if cluster_mode not in QUADRATIC_MODES or n_nil <= DRIVER_CLUSTER_MAX:
         clusters = _driver_clusters(nil, cfg, cluster_mode)
     else:
-        nil_df = (spark or SparkSession.active()).createDataFrame(nil.select([
-            "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
-            "mention", "context_left", "context_right", "encoding",
-        ]))
-        if cluster_mode == "cc":
-            summaries = summarize_clusters_df(
-                nil_df, cluster_cc(nil_df, cfg, n_rows=n_nil), cfg
-            )
-        else:
-            summaries = cluster_summarize_batches(nil_df, cfg, cluster_mode)
-        clusters = summaries.toPandas()
+        nil_df = (spark or SparkSession.active()).createDataFrame(
+            nil.select(kernel_columns(cluster_mode))
+        )
+        clusters = cluster_summarize_batches(nil_df, cfg, cluster_mode).toPandas()
     clusters = assign_new_entity_ids(clusters, next_rw_id, cfg)
     mentions = _pinned(rows, "mentions")
     tables = {
@@ -570,8 +564,8 @@ class BatchLoop:
     batch is then finished on the driver (``run_batch``, called once per
     batch through this module's global), searching the RW entities that
     the window's earlier batches added.  A batch therefore adds no Spark
-    job; only a NIL set above ``DRIVER_CLUSTER_MAX`` sends its clustering
-    back to Spark.
+    job; only a three_step or tfidf NIL set above ``DRIVER_CLUSTER_MAX``
+    sends its clustering back to Spark.
 
     The shards at window start:
 

@@ -1,9 +1,10 @@
 """Triples parity for the configuration the benchmark measures:
-``cluster_mode='cc'`` (star-CC + LSH-capable blocking) over a
-``fixtures.make_world`` world at the benchmark's dim=256 — so the
-perfbench workloads are backed by a correctness gate on the same engine,
-same generator, same feature dimension (a smaller world; the physics of the
-operators do not change with row count, only the wall clock does)."""
+``cluster_mode='cc'`` (the driver's tiled union-find over the threshold
+graph) over a ``fixtures.make_world`` world at the benchmark's dim=256 —
+so the perfbench workloads are backed by a correctness gate on the same
+engine, same generator, same feature dimension (a smaller world; the
+physics of the operators do not change with row count, only the wall
+clock does)."""
 
 from dataclasses import replace
 

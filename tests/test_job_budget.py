@@ -57,3 +57,22 @@ def test_spark_jobs_per_run(spark, spark_world, cfg, tmp_path, retrieval_mode):
     ))
     assert lake.completed_batches() == {0, 1, 2, 3}
     assert jobs <= JOBS_PER_RUN[retrieval_mode], jobs
+
+
+@pytest.mark.parametrize("cluster_mode", ["cc", "greedy_replay"])
+def test_tiled_modes_start_no_clustering_job(
+    spark, spark_world, cfg, tmp_path, monkeypatch, cluster_mode
+):
+    """cc and greedy_replay cluster on the driver at every NIL size: with
+    ``DRIVER_CLUSTER_MAX`` below every batch's NIL count, a run starts
+    exactly the jobs of the default run."""
+    jobs = []
+    for gate in (pl.DRIVER_CLUSTER_MAX, -1):
+        monkeypatch.setattr(pl, "DRIVER_CLUSTER_MAX", gate)
+        lake = pl.Lake(str(tmp_path / f"gate{gate}"))
+        jobs.append(_jobs(spark, lambda: pl.run_incremental(
+            spark, spark_world["transcripts"], spark_world["entities_kb"],
+            lake, cfg, cluster_mode=cluster_mode,
+        )))
+        assert lake.completed_batches() == {0, 1, 2, 3}
+    assert jobs[1] == jobs[0], jobs

@@ -156,16 +156,16 @@ def test_partition_invariance(spark, spark_world, cfg, tmp_path, mode):
     pd.testing.assert_frame_equal(ents[0], ents[1])
 
 
-@pytest.mark.parametrize("mode", ["greedy_replay", "cc", "three_step", "tfidf"])
+@pytest.mark.parametrize("mode", ["three_step", "tfidf"])
 def test_driver_gate_parity_with_distributed_path(
     spark, spark_world, cfg, tmp_path, mode, monkeypatch
 ):
-    """The tiny-batch driver fast path (pipeline.DRIVER_CLUSTER_MAX) must be
-    byte-identical to the path above the gate (cc: the distributed chain;
-    the other modes: the same kernel in one applyInPandas task per batch):
-    same triples, same new-entity rows (embeddings included), same
-    prev_clusters rows (every column), and the same read-back schema of
-    every per-batch table."""
+    """For the modes the gate applies to (clustering.QUADRATIC_MODES), the
+    driver path (at or below pipeline.DRIVER_CLUSTER_MAX) must be
+    byte-identical to the path above the gate (the same kernel in one
+    applyInPandas task per batch): same triples, same new-entity rows
+    (embeddings included), same prev_clusters rows (every column), and the
+    same read-back schema of every per-batch table."""
     import incremental_entity_extraction_spark.pipeline as pl
 
     outs, ents, prevs, schemas = [], [], [], []

@@ -168,8 +168,15 @@ def test_fused_kernel_bit_identical_fuzz(texts, max_tok):
 
 
 # ---------------------------------------------------------------------------
-# round-4 kernels: min-rank CC (pointer doubling) and columnar top-k
+# round-4 kernels: tiled union-find CC and columnar top-k
 # ---------------------------------------------------------------------------
+def _row_tiles(A: np.ndarray, chunk: int):
+    """A boolean adjacency as (row, col) pairs, ``chunk`` rows per tile."""
+    for i0 in range(0, len(A), chunk):
+        r, c = np.nonzero(A[i0 : i0 + chunk])
+        yield r + i0, c
+
+
 @given(
     st.integers(min_value=1, max_value=40),
     st.lists(
@@ -178,25 +185,25 @@ def test_fused_kernel_bit_identical_fuzz(texts, max_tok):
     st.randoms(use_true_random=False),
 )
 @settings(max_examples=80, deadline=None)
-def test_min_rank_labels_match_bfs_oracle(n, edges, rnd):
-    """cc_summarize_pdf's vectorized component search == BFS per
-    component, for any graph (incl. chains, the old worst case) and any
-    rank permutation, at several chunk sizes."""
-    from incremental_entity_extraction_spark.operators.clustering import (
-        min_rank_labels,
+def test_component_roots_match_bfs_oracle(n, edges, rnd):
+    """cc's union-find (cluster_math.component_roots) == BFS per component
+    of the undirected graph, for any graph (incl. chains) given as a
+    one-directional adjacency (each edge scored in one row only), any rank
+    permutation, at tile sizes 1, 3 and n."""
+    from incremental_entity_extraction_spark.functions.cluster_math import (
+        component_roots,
     )
 
     A = np.zeros((n, n), dtype=bool)
     for a, b in edges:
-        if a < n and b < n and a != b:
-            A[a, b] = A[b, a] = True
+        if a < n and b < n:
+            A[a, b] = True
+    und = A | A.T
     perm = list(range(n))
     rnd.shuffle(perm)
     rank = np.asarray(perm, dtype=np.int64)
-    inv = np.empty(n, dtype=np.int64)
-    inv[rank] = np.arange(n)
 
-    # BFS oracle: min rank over each connected component
+    # BFS oracle: the row of min rank over each connected component
     expected = np.empty(n, dtype=np.int64)
     seen = np.zeros(n, dtype=bool)
     for s in range(n):
@@ -207,17 +214,33 @@ def test_min_rank_labels_match_bfs_oracle(n, edges, rnd):
         while stack:
             u = stack.pop()
             comp.append(u)
-            for v in np.flatnonzero(A[u]):
+            for v in np.flatnonzero(und[u]):
                 if not seen[v]:
                     seen[v] = True
                     stack.append(int(v))
-        mr = rank[comp].min()
-        expected[comp] = mr
+        expected[comp] = comp[int(np.argmin(rank[comp]))]
 
     for chunk in (1, 3, n):
-        chunks = [A[i : i + chunk] for i in range(0, n, chunk)]
-        got = min_rank_labels(chunks, rank, inv)
+        got = component_roots(n, _row_tiles(A, chunk), rank)
         np.testing.assert_array_equal(got, expected)
+
+
+def test_component_roots_take_one_directional_pairs_as_undirected():
+    """A pair scored above the threshold in one row only still joins its
+    two rows: row 0 (rank 0) lists row 1, row 1 lists nobody, and both
+    end under row 0 — whichever tile holds the pair."""
+    from incremental_entity_extraction_spark.functions.cluster_math import (
+        component_roots,
+    )
+
+    A = np.zeros((3, 3), dtype=bool)
+    A[0, 1] = True  # 0 -> 1 only
+    A[2, 1] = True  # 2 -> 1 only
+    for chunk in (1, 3):
+        got = component_roots(3, _row_tiles(A, chunk), np.array([0, 1, 2]))
+        np.testing.assert_array_equal(got, [0, 0, 0])
+        got = component_roots(3, _row_tiles(A, chunk), np.array([2, 1, 0]))
+        np.testing.assert_array_equal(got, [2, 2, 2])
 
 
 @given(

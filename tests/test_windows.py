@@ -55,11 +55,13 @@ def _snapshot(root: str) -> dict:
     return snap
 
 
-def _run(spark, spark_world, cfg, lake, mode, transcripts=None):
+def _run(
+    spark, spark_world, cfg, lake, mode, transcripts=None, cluster_mode="cc"
+):
     return pl.run_incremental(
         spark,
         spark_world["transcripts"] if transcripts is None else transcripts,
-        spark_world["entities_kb"], lake, cfg, cluster_mode="cc",
+        spark_world["entities_kb"], lake, cfg, cluster_mode=cluster_mode,
         retrieval_mode=mode, persist_candidates=True,
     )
 
@@ -69,7 +71,12 @@ def _run(spark, spark_world, cfg, lake, mode, transcripts=None):
 def test_lake_is_identical_for_every_window_size(
     spark, spark_world, world, cfg, tmp_path, monkeypatch, mode, gate
 ):
+    """``distributed`` clusters every batch in Spark: a gated mode
+    (three_step; cc always clusters on the driver) with
+    ``DRIVER_CLUSTER_MAX`` below every NIL count."""
+    cluster_mode = "cc"
     if gate == "distributed":
+        cluster_mode = "three_step"
         monkeypatch.setattr(pl, "DRIVER_CLUSTER_MAX", -1)
     sizes = world.transcripts.groupby("batch_id").size()
     counts = {b: int(n) for b, n in sizes.items()}
@@ -85,7 +92,7 @@ def test_lake_is_identical_for_every_window_size(
         monkeypatch.setattr(pl, "WINDOW_MAX_TURNS", limit)
         assert pl._windows(sorted(counts), counts) == windows
         lake = pl.Lake(str(tmp_path / name))
-        _run(spark, spark_world, cfg, lake, mode, transcripts)
+        _run(spark, spark_world, cfg, lake, mode, transcripts, cluster_mode)
         assert lake.completed_batches() == {0, 1, 2, 3}
         snaps[name] = _snapshot(lake.root)
     want = snaps.pop("1-batch")
