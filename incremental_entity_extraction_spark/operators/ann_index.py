@@ -29,12 +29,12 @@ one task here:
 * ``IVFShard`` / ``ivf_topk_columnar`` — the search.  The index shard
   (centroids, ``n_probe``, tombstones, the visible file list) is broadcast
   once per window of batches (``pipeline.BatchLoop``); the deltas the
-  window's batches add are searched on the driver as rows shards under the
-  same centroids.  Each task probes its queries, reads only the probed row
-  groups (selected from footer statistics, cached per Python worker
-  under a byte cap),
-  scores exactly within them and emits hydrated, ranked candidates — no
-  query collect, no directory listing, no shuffle, no join.
+  window's batches add are merged in on the driver under the same
+  centroids (``pipeline._merge_window_entities``).  Each task probes its
+  queries, reads only the probed row groups (selected from footer
+  statistics, cached per Python worker under a byte cap), scores exactly
+  within them and emits hydrated, ranked candidates — no query collect,
+  no directory listing, no shuffle, no join.
 
 Visibility is the caller's file list, never a directory listing: an
 undrained batch's file may exist on disk (a crash after the persist,
@@ -709,18 +709,15 @@ class IVFShard:
     The INDEX shard holds ``centroids``, ``n_probe``, the tombstoned entity
     ids ``dels`` and the visible ``files`` — ``(path, size, mtime_ns)``
     keys the driver resolved, so no task lists a directory.  Further shards
-    in the same list add ``files`` or ``rows`` (a delta not yet drained,
-    ``bucket -> block``); their ``centroids`` is None."""
+    in the same list add ``files``; their ``centroids`` is None."""
 
-    __slots__ = ("centroids", "n_probe", "dels", "files", "rows")
+    __slots__ = ("centroids", "n_probe", "dels", "files")
 
-    def __init__(self, centroids=None, n_probe=0, dels=(), files=(),
-                 rows=None):
+    def __init__(self, centroids=None, n_probe=0, dels=(), files=()):
         self.centroids = centroids
         self.n_probe = int(n_probe)
         self.dels = np.asarray(sorted(dels), dtype=np.int64)
         self.files = tuple(files)
-        self.rows = rows
 
 
 def index_shard(model: AnnIndexModel, batches=(), dels=()) -> IVFShard:
@@ -731,13 +728,6 @@ def index_shard(model: AnnIndexModel, batches=(), dels=()) -> IVFShard:
         model.centroids, model.n_probe, dels,
         [*(model.base_keys() or ()), *(k for k in deltas if k is not None)],
     )
-
-
-def rows_shard(rows: pa.Table | None) -> IVFShard | None:
-    """A delta's index rows as a shard; None when it is empty."""
-    if rows is None or not len(rows):
-        return None
-    return IVFShard(rows=_split_blocks(rows))
 
 
 def _split_blocks(rows: pa.Table) -> dict:
@@ -837,7 +827,6 @@ def ivf_topk_columnar(
     index = shards[0]
     C, dels = index.centroids, index.dels
     files = [f for s in shards for f in s.files]
-    inflight = [s.rows for s in shards if s.rows]
     _WORKER_CACHE.retain(files)
     npb = min(index.n_probe, C.shape[0])
     parts = []
@@ -850,7 +839,7 @@ def ivf_topk_columnar(
         ub, starts = np.unique(bs, return_index=True)
         ends = np.r_[starts[1:], len(bs)]
         ub = ub.tolist()
-        sources = [_WORKER_CACHE.get(f, ub) for f in files] + inflight
+        sources = [_WORKER_CACHE.get(f, ub) for f in files]
         for b, s, e in zip(ub, starts, ends):
             qidx = qs[s:e]
             for src in sources:

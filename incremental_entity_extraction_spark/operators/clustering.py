@@ -99,15 +99,19 @@ def _summarize(
     pdf = pdf.sort_values(_CANONICAL).reset_index(drop=True)
     enc = _matrix(pdf["encoding"])
     root = np.asarray(roots(pdf, enc))
+    # one stable sort groups each root's members, still in canonical order;
+    # a group's first member is its root's first appearance (pd.unique order)
+    order = np.argsort(root, kind="stable")
+    groups = np.split(order, np.flatnonzero(np.diff(root[order])) + 1)
+    groups.sort(key=lambda g: g[0])
     ids, mentions = pdf["mention_id"].tolist(), pdf["mention"].tolist()
     batch_id = int(pdf["batch_id"].iloc[0])
     rows = []
-    for r in pd.unique(root):
-        members = np.flatnonzero(root == r)  # canonical order preserved
+    for members in groups:
         sub_enc = enc[members]
         ms = [mentions[i] for i in members]
         rows.append((
-            ids[r], batch_id, modal_value(ms), len(members),
+            ids[root[members[0]]], batch_id, modal_value(ms), len(members),
             [ids[i] for i in members], ms,
             sub_enc[medoid_index(sub_enc)].tolist(),
         ))

@@ -146,7 +146,7 @@ def detect_encode_retrieve(
 
     ``shards`` is a list of one shard kind (``topk_candidates_columnar``):
     ``KBShard``s, or an ``ann_index.IVFShard`` index shard optionally
-    followed by further IVF shards (delta files or rows).
+    followed by further IVF shards (delta files).
 
     ``encoder`` is the M4 pluggable-contract point: a picklable callable
     ``(windows: list[list[str]], weights: list[list[float]]) ->

@@ -242,17 +242,18 @@ def merge_candidates(
     k: int,
     by_norm: bool,
 ) -> tuple[np.ndarray, list[pa.Array]]:
-    """Per row, the top ``k`` of the union of two candidate lists, each
-    already the top ``k`` of its own entities: ``lists`` (a
-    ``CANDIDATE_STRUCT`` list column) and the flat arrays ``fields`` that
-    ``counts`` slices row by row (``topk_candidates_columnar``'s layout).
+    """Per row, the top ``k`` of the union of two candidate lists:
+    ``lists`` (a ``CANDIDATE_STRUCT`` list column) and the flat arrays
+    ``fields`` that ``counts`` slices row by row
+    (``topk_candidates_columnar``'s layout; a row may hold any number).
     Returns the merged ``(counts, fields)`` in that layout.
 
-    The order is the kernels' own, and it is total, so the top ``k`` of
-    two top-``k`` lists is the top ``k`` of all their entities: score
-    descending, then (indexer, id) ascending.  ``by_norm`` is the IVF
-    kernel's: keep the top ``k`` by ``norm_score`` (the f32 cosine) with
-    the same tie-break, then order them by score."""
+    The order is the kernels' own, and it is total, so when each list
+    holds every entity of its side that could make the row's top ``k`` (a
+    top-``k`` list does), the result is the top ``k`` of all their
+    entities: score descending, then (indexer, id) ascending.
+    ``by_norm`` is the IVF kernel's: keep the top ``k`` by ``norm_score``
+    (the f32 cosine) with the same tie-break, then order them by score."""
     flat = dict(zip((f.name for f in CANDIDATE_STRUCT.fields),
                     lists.flatten().flatten()))
     n = len(lists)

@@ -25,13 +25,14 @@ Arrow collect that brings the window's rows to the driver, retrieving
 against the KB as it stood at window start.  Only the RW entities change
 between batches (the reference's RW index, eval_kbp.py:626-652), so each
 batch is then finished on the driver with no Spark job (``run_batch``):
-its rows search the entities that the window's earlier batches added,
-merge those candidates into their own and re-score NIL, which gives
-exactly the candidates a per-batch loop would have found.  The driver
-writes ``mentions``, ``triples``, ``candidates``, ``new_entities``,
-``prev_clusters`` and ``metrics`` with pyarrow (``Lake.put_partition``:
-one file per ``batch_id=N/``, and a re-run with no rows removes the
-partition).  Ids stay deterministic because they are contiguous over
+the entities that the window's earlier batches added are merged into its
+rows' candidates, scoring only the (row, entity) pairs that can enter a
+row's top k (``_merge_window_entities``), and NIL is re-scored on the rows
+they reach, which gives exactly the candidates a per-batch loop would have
+found.  The driver writes ``mentions``, ``triples``, ``candidates``,
+``new_entities``, ``prev_clusters`` and ``metrics`` with pyarrow
+(``Lake.put_partition``: one file per ``batch_id=N/``, and a re-run with
+no rows removes the partition).  Ids stay deterministic because they are contiguous over
 canonical order + previous max (operators/kb.py), not a function of task
 scheduling, and each batch's rows are written in (conv_id, turn_idx,
 start_tok) order, whatever partitions the window job spread them over.
@@ -61,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG, PipelineConfig
+from incremental_entity_extraction_spark.functions.cluster_math import tile_rows
 # the four per-batch kernels are imported for _driver_clusters, which
 # resolves them through this module's globals at call time
 from incremental_entity_extraction_spark.operators.clustering import (  # noqa: F401
@@ -75,6 +77,7 @@ from incremental_entity_extraction_spark.operators.clustering import (  # noqa: 
     three_step_summarize_pdf,
 )
 
+from incremental_entity_extraction_spark.operators.ann_index import IVFShard, _dots
 from incremental_entity_extraction_spark.operators.fused import (
     _candidate_arrays,
     _candidates_list_array,
@@ -90,9 +93,14 @@ from incremental_entity_extraction_spark.operators.nil import (
 )
 from incremental_entity_extraction_spark.operators.retrieval import (
     KBShard,
+    _pair_scores,
     build_kb_shards,
     merge_candidates,
-    topk_candidates_columnar,
+)
+from incremental_entity_extraction_spark.operators.retrieval_ann import _IDX_SHIFT
+from incremental_entity_extraction_spark.operators.similarity_search import (
+    _normalize,
+    vector_matrix,
 )
 from incremental_entity_extraction_spark.operators.triples import (
     TRIPLES_SCHEMA,
@@ -314,35 +322,183 @@ def _check_modes(retrieval_mode: str, cluster_mode: str) -> None:
         )
 
 
+@dataclass(frozen=True)
+class WindowEntities:
+    """The RW entities that a window's earlier batches added, as the
+    in-window merge (``_merge_window_entities``) scores them.
+
+    Broadcast mode (``of_rw``): ``E`` holds their embeddings.  ivf mode
+    (``of_index_rows``): ``E`` holds their index rows' unit vectors,
+    ``bucket`` the IVF bucket each was assigned under the frozen centroids,
+    and ``probe`` the index shard (centroids, ``n_probe``, tombstones) the
+    window job searched under."""
+
+    E: np.ndarray
+    ids: np.ndarray
+    indexer: np.ndarray
+    wikipedia_id: np.ndarray
+    title: np.ndarray
+    bucket: np.ndarray | None = None
+    probe: IVFShard | None = None
+
+    @classmethod
+    def of_rw(cls, pdf: pd.DataFrame) -> "WindowEntities":
+        """``new_entities`` rows, converted as the window job's RW shard
+        converts them (``retrieval.KBShard``)."""
+        s = KBShard(pdf)
+        return cls(s.E, s.ids, s.indexer, s.wikipedia_id, s.title)
+
+    @classmethod
+    def of_index_rows(cls, rows: pa.Table, probe: IVFShard) -> "WindowEntities":
+        """Index delta rows (``ann_index.rw_delta_rows``) under ``probe``."""
+        keys = rows["id"].to_numpy()
+        return cls(
+            vector_matrix(rows["vecn"]), keys % _IDX_SHIFT,
+            (keys // _IDX_SHIFT).astype(np.int32),
+            rows["wikipedia_id"].to_numpy(),
+            rows["title"].to_numpy(zero_copy_only=False),
+            rows["bucket"].to_numpy(), probe,
+        )
+
+
+def _norm_bound(X: np.ndarray, gamma: float) -> np.ndarray:
+    """An upper bound on each row's L2 norm: the float32 sum of squares
+    (within a factor 1 ± γ_d of the real one) and its square root (within
+    1 ± u), divided by their worst-case shrink."""
+    sq = np.einsum("ij,ij->i", X, X)
+    return np.sqrt(sq).astype(np.float64) / ((1 - 2.0 ** -24) * np.sqrt(1 - gamma))
+
+
 def _merge_window_entities(
-    rows: pa.Table, shards: list, cfg: PipelineConfig, by_norm: bool
+    rows: pa.Table, ents: WindowEntities, cfg: PipelineConfig
 ) -> pa.Table:
-    """``rows`` with the top-k of ``shards`` merged into their candidates
-    and the ``nil.NIL_FIELDS`` columns re-scored from the merged lists."""
-    enc = pc.list_flatten(rows["encoding"]).to_numpy()
-    counts, *flat = topk_candidates_columnar(
-        enc.reshape(rows.num_rows, -1), shards, cfg.top_k,
-        float(cfg.vector_norm) ** 2,
-    )
-    counts, fields = merge_candidates(
-        rows["candidates"].combine_chunks(), counts, _candidate_arrays(*flat),
-        cfg.top_k, by_norm,
-    )
+    """``rows`` with ``ents`` merged into their candidates: exactly what
+    the fused stage's top-k over ``ents`` followed by
+    ``retrieval.merge_candidates`` and ``nil.nil_columns`` gives every
+    row, computed only for the (row, entity) pairs that can enter a row's
+    top ``k``.
+
+    A row's SELECTION key is the one its top ``k`` is kept by: ``score``
+    in broadcast mode, ``norm_score`` (the f32 cosine of the unit vectors)
+    in ivf mode.  One row tile at a time (``cluster_math.tile_rows`` of
+    the entity count, so memory is O(tile × entities)), one BLAS product
+    of the tile's query vectors against ``E`` gives each pair an
+    approximate key, used only to select.  A pair is kept when
+
+    * its BLAS key ``b`` is at least the row's k-th key ``s_k`` (the lowest
+      selection key of its ``k`` candidates) minus ``2·γ_d·|q|·max|e|``
+      (``max|e|`` over the window's entities), or its row has fewer than
+      ``k`` candidates;
+    * and, in ivf mode, the row probes the entity's bucket (its
+      ``n_probe`` nearest centroids, computed as the window job computes
+      them) and the entity's id is not tombstoned.
+
+    The margin is rigorous.  A float32 dot product of ``d`` terms, summed
+    in any order, with or without FMA, is within ``γ_d·Σ|q_i·e_i| ≤
+    γ_d·|q|·|e|`` of the real one (Cauchy–Schwarz), where ``γ_d =
+    d·u / (1 − d·u)`` and ``u = 2⁻²⁴``.  The BLAS key and the exact key
+    (an einsum, a different order) are both within that of the real
+    value, so an entity whose exact key reaches ``s_k`` (ties included:
+    the tie-break on (indexer, id) may still let it in) has ``b ≥ s_k −
+    2·γ_d·|q|·|e|``.  A dropped pair's exact key is below ``s_k``, and
+    all ``k`` candidates beat it.  The bound is evaluated in float64 from
+    norms rounded up past their own float32 rounding (``_norm_bound``).
+
+    Only kept pairs are re-scored, per pair, with the kernels' own einsum
+    (``retrieval._pair_scores``: the same bits as the window job's
+    ``_pair_scores`` / ``ann_index._dots`` for the same pair, whatever
+    block it sits in; tests/test_properties.py pins that).  Those whose
+    exact key is below ``s_k`` are dropped; the rest are merged into their
+    rows' lists in the kernels' order (``merge_candidates``), and only the
+    rows they reach are NIL re-scored.  Only those rows'
+    ``candidates`` and ``NIL_FIELDS`` are replaced; every other byte of
+    ``rows`` stays as it was."""
+    k, ivf, n = cfg.top_k, ents.probe is not None, rows.num_rows
+    norm2 = float(cfg.vector_norm) ** 2
+    enc = pc.list_flatten(rows["encoding"]).to_numpy().reshape(n, -1)
+    Q = _normalize(enc) if ivf else enc
+    E = ents.E
+    lists = rows["candidates"].combine_chunks()
+    counts = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+    sel = pc.struct_field(
+        pc.list_flatten(lists), "norm_score" if ivf else "score"
+    ).to_numpy()
+    kth = np.full(n, -np.inf)  # -inf: a row short of k takes any entity
+    full = counts >= k
+    first = np.cumsum(counts) - counts
+    kth[full] = sel[first[full, None] + np.arange(k)].min(axis=1)
+    du = Q.shape[1] * 2.0 ** -24
+    gamma = du / (1 - du)  # γ_d
+    # kth - 2·γ_d·|q|·max|e|: below it no pair's exact key can reach kth
+    floor = kth - 2 * gamma * _norm_bound(Q, gamma) * _norm_bound(E, gamma).max()
+    if ivf:
+        C = ents.probe.centroids
+        npb = min(ents.probe.n_probe, len(C))
+        alive = ~np.isin(ents.ids, ents.probe.dels)
+    tile, step = tile_rows(len(E)), tile_rows(Q.shape[1])
+    reached, merged = [], []
+    for t0 in range(0, n, tile):
+        keep = Q[t0 : t0 + tile] @ E.T >= floor[t0 : t0 + tile, None]
+        if ivf:  # the window job's probes, of the rows that kept a pair
+            hit = np.flatnonzero(keep.any(axis=1))
+            probed = np.zeros((len(hit), len(C)), bool)
+            np.put_along_axis(
+                probed, np.argsort(-_dots(Q[t0 + hit], C), axis=1)[:, :npb],
+                True, axis=1,
+            )
+            keep[hit] &= probed[:, ents.bucket] & alive
+        r, j = np.nonzero(keep)  # row-major: grouped by row, as merged below
+        if not len(r):
+            continue
+        r += t0
+        exact = np.concatenate([
+            _pair_scores(Q[r[s : s + step]], E[j[s : s + step], None, :])[:, 0]
+            for s in range(0, len(r), step)
+        ])
+        # an exact key below its row's k-th cannot enter (a tie still may)
+        ok = exact >= kth[r]
+        if not ok.any():
+            continue
+        r, j, exact = r[ok], j[ok], exact[ok]
+        wide = exact.astype(np.float64)
+        if ivf:
+            score, norm = (wide * norm2).astype(np.float32), exact
+        else:
+            score, norm = exact, (wide / norm2).astype(np.float32)
+        at, per_row = np.unique(r, return_counts=True)
+        reached.append(at)
+        merged.append(merge_candidates(
+            lists.take(at), per_row,
+            _candidate_arrays(ents.ids[j], ents.indexer[j],
+                              ents.wikipedia_id[j], ents.title[j], score, norm),
+            k, ivf,
+        ))
+    if not reached:
+        return rows
+    at = np.concatenate(reached)
+    counts = np.concatenate([c for c, _ in merged])
+    fields = [pa.concat_arrays(list(f)) for f in zip(*(f for _, f in merged))]
     new = dict(zip(
         [f.name for f in NIL_FIELDS], nil_columns(counts, *fields[:5], cfg)
     ))
     new["candidates"] = _candidates_list_array(
         counts, fields, rows.schema.field("candidates").type
     )
+    # row i reads its old value, or its merged one at n + its reached rank
+    take = np.arange(n)
+    take[at] = n + np.arange(len(at))
     for name, col in new.items():
         i = rows.schema.get_field_index(name)
-        rows = rows.set_column(i, rows.schema.field(i), col)
+        old = rows.column(i).combine_chunks()
+        rows = rows.set_column(
+            i, rows.schema.field(i), pa.concat_arrays([old, col]).take(take)
+        )
     return rows
 
 
 def run_batch(
     rows: pa.Table,
-    shards: list,
+    window: WindowEntities | None,
     next_rw_id: int,
     cfg: PipelineConfig,
     cluster_mode: str = "cc",
@@ -357,22 +513,15 @@ def run_batch(
     ``rows`` are the batch's ``fused.FUSED_SCHEMA`` rows in (conv_id,
     turn_idx, start_tok) order: every mention with its encoding, its
     candidates against the KB as it stood at window start, and the NIL
-    columns scored from them.  ``shards`` are the RW entities that the
-    window's earlier batches added (``[]`` for a window's first batch),
-    searched here with the fused stage's kernel
-    (``retrieval.topk_candidates_columnar``):
-
-    * ``'broadcast'``: ``KBShard``s;
-    * ``'ivf'``: the index shard's centroids, ``n_probe`` and tombstones
-      (an ``ann_index.IVFShard`` with no files) followed by one rows shard
-      per in-window delta — only the probed buckets count, as in the
-      window job.
-
-    Their candidates merge into the rows' own (``retrieval.merge_candidates``,
-    in the kernel's total order) and NIL is re-scored
-    (``nil.nil_columns``), so every row ends with exactly the candidates
-    and NIL score it would have had against the KB at its own batch's
-    start.
+    columns scored from them.  ``window`` holds the RW entities that the
+    window's earlier batches added (None for a window's first batch, or
+    when they added none); in ivf mode it carries the index shard's
+    centroids, ``n_probe`` and tombstones, so only the probed buckets
+    count, as in the window job.  ``_merge_window_entities`` merges them
+    into the rows' candidates, scoring only the (row, entity) pairs that
+    can enter a row's top ``k``, and re-scores NIL on the rows they reach,
+    so every row ends with exactly the candidates and NIL score it would
+    have had against the KB at its own batch's start.
 
     * ``tables``: pyarrow tables of ``mentions``, ``triples`` and
       ``candidates`` in their pinned schemas (``candidates`` empty unless
@@ -386,7 +535,8 @@ def run_batch(
 
     Driver memory: ONE WINDOW's mention rows (``WINDOW_MAX_TURNS``), each
     with its encoding (n × dim × 4 B), its candidate list and ≈200–300 B
-    of text, held until the window's last batch is finished.
+    of text, held until the window's last batch is finished.  The merge
+    adds O(row tile × the window's new entities) and the pairs it keeps.
     Clustering runs the mode's kernel on the driver; cc and greedy_replay
     hold one score tile at a time (``cluster_math.tile_rows``), so they do
     at every NIL size.  ``DRIVER_CLUSTER_MAX`` decides only where a
@@ -394,19 +544,8 @@ def run_batch(
     Spark (``createDataFrame`` on ``spark``) for
     ``cluster_summarize_batches``, and only the summary rows come back."""
     _check_modes(retrieval_mode, cluster_mode)
-    if (
-        retrieval_mode == "ivf" and shards
-        and getattr(shards[0], "centroids", None) is None
-    ):
-        raise ValueError(
-            "retrieval_mode='ivf' needs the index shard first: the "
-            "window's new entities are probed under its centroids "
-            "(ann_index.IVFShard)"
-        )
-    if shards and rows.num_rows:
-        rows = _merge_window_entities(
-            rows, shards, cfg, by_norm=retrieval_mode == "ivf"
-        )
+    if window is not None and rows.num_rows:
+        rows = _merge_window_entities(rows, window, cfg)
     n_nil = int(pc.sum(rows["is_nil"]).as_py() or 0)
     # Table.filter with no match gives a table createDataFrame rejects (an
     # empty list column with no chunk); slice(0, 0) keeps one
@@ -562,10 +701,10 @@ class BatchLoop:
     stage over all the window's turns, against the shards as they stood at
     window start, collected once as Arrow (``_collect_window``).  Each
     batch is then finished on the driver (``run_batch``, called once per
-    batch through this module's global), searching the RW entities that
-    the window's earlier batches added.  A batch therefore adds no Spark
-    job; only a three_step or tfidf NIL set above ``DRIVER_CLUSTER_MAX``
-    sends its clustering back to Spark.
+    batch through this module's global), merging in the RW entities that
+    the window's earlier batches added (``WindowEntities``).  A batch
+    therefore adds no Spark job; only a three_step or tfidf NIL set above
+    ``DRIVER_CLUSTER_MAX`` sends its clustering back to Spark.
 
     The shards at window start:
 
@@ -747,12 +886,10 @@ class BatchLoop:
         # semantics, pipeline/indexer/main.py:178-214; operators/ann_index.py)
         if ann:
             from incremental_entity_extraction_spark.operators.ann_index import (
-                IVFShard,
                 backfill_missing_deltas,
                 ensure_ann_index,
                 index_shard,
                 persist_delta,
-                rows_shard,
                 rw_delta_rows,
             )
             from incremental_entity_extraction_spark.operators.retrieval_ann import (  # noqa: E501
@@ -791,7 +928,7 @@ class BatchLoop:
                 backfill_missing_deltas(
                     self.ann_model, spark, lake_rw, drained, cfg.rw_indexer_id
                 )
-            # the in-window search probes under the index's centroids and
+            # the in-window merge probes under the index's centroids and
             # masks its tombstones
             probe = IVFShard(self.ann_model.centroids, self.ann_model.n_probe, dels)
         ann_model = self.ann_model
@@ -836,11 +973,11 @@ class BatchLoop:
                 ends = np.searchsorted(
                     rows["batch_id"].to_numpy(), window, side="right"
                 )
-                new: list = []  # shards of the entities this window added
+                added: list = []  # what this window's batches added so far
+                ents = None
                 for b, lo, hi in zip(window, [0, *ends[:-1]], ends):
                     tables, clusters = run_batch(
-                        rows.slice(lo, hi - lo),
-                        [probe, *new] if ann and new else new,
+                        rows.slice(lo, hi - lo), ents,
                         next_rw_id, cfg, self.cluster_mode,
                         self.retrieval_mode, self.persist_candidates, spark,
                     )
@@ -859,13 +996,19 @@ class BatchLoop:
                             delta = rw_delta_rows(
                                 ann_model, add_pdf, cfg.rw_indexer_id
                             )
-                            new.append(rows_shard(delta))
+                            added.append(delta)
+                            ents = WindowEntities.of_index_rows(
+                                pa.concat_tables(added), probe
+                            )
                         else:
                             rw_pdf = (
                                 pd.concat([rw_pdf, add_pdf], ignore_index=True)
                                 if len(rw_pdf) else add_pdf
                             )
-                            new.append(KBShard(add_pdf))
+                            added.append(add_pdf)
+                            ents = WindowEntities.of_rw(
+                                pd.concat(added, ignore_index=True)
+                            )
                     if pending is not None:
                         _drain(pending)
                         pending = None

@@ -20,7 +20,6 @@ from incremental_entity_extraction_spark.operators.ann_index import (
     index_shard,
     load_ann_index,
     persist_delta,
-    rows_shard,
 )
 from incremental_entity_extraction_spark.operators.retrieval import (
     topk_candidates_columnar,
@@ -59,16 +58,12 @@ def _vecs(df):
     )
 
 
-def search(model, Q, k, batches=(), inflight=None, dels=(), n_probe=None):
+def search(model, Q, k, batches=(), dels=(), n_probe=None):
     """Kernel entry point: per query, the [(id, score)] list in rank order."""
     if n_probe is not None:
         model = dataclasses.replace(model, n_probe=n_probe)
-    shards = [index_shard(model, batches, dels)]
-    rs = rows_shard(inflight)
-    if rs is not None:
-        shards.append(rs)
     counts, ids, _, _, _, sc, norm_sc = topk_candidates_columnar(
-        np.asarray(Q, np.float32), shards, k, 1.0
+        np.asarray(Q, np.float32), [index_shard(model, batches, dels)], k, 1.0
     )
     np.testing.assert_array_equal(sc, norm_sc)  # norm2 = 1
     bounds = np.r_[0, np.cumsum(counts)]
@@ -264,9 +259,10 @@ def test_model_roundtrip_and_reuse(spark, built, embs):
 
 
 def test_delta_add_and_visibility(spark, built):
-    """In-flight rows (the per-batch shard) and drained files are visible;
-    a written but undrained batch file is not — visibility is the caller's
-    file list, never a directory listing."""
+    """Drained delta files are visible; a written but undrained batch file
+    is not — visibility is the caller's file list, never a directory
+    listing.  (A delta still in its window is merged on the driver:
+    tests/test_window_merge.py.)"""
     model, _ = built
     rng = np.random.default_rng(3)
     new_vecs = rng.normal(size=(5, 32)).astype(np.float32) * 3
@@ -277,10 +273,7 @@ def test_delta_add_and_visibility(spark, built):
     def top1(lists):
         return [row[0][0] for row in lists]
 
-    # in-flight visibility: self vector must be top-1
-    assert top1(search(model, new_vecs, 3, inflight=delta)) == new_ids.tolist()
-
-    # drained visibility: same result once the delta file is written
+    # drained visibility: the self vector is top-1 once the file is written
     persist_delta(model, spark, delta, 0)
     assert existing_delta_batches(model) == {0}
     assert top1(search(model, new_vecs, 3, batches=[0])) == new_ids.tolist()
@@ -317,8 +310,8 @@ def _numpy_ivf(C, n_probe, corpus_keys, corpus_X, Q, k, dels=()):
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_kernel_matches_numpy_ivf_reference(spark, tmp_path, seed):
-    """Base + one drained delta + the in-flight delta, with a tombstone:
-    identical ids and ranks to the NumPy reference."""
+    """Base + two drained deltas, with tombstones in each: identical ids
+    and ranks to the NumPy reference."""
     rng = np.random.default_rng(seed)
     centers = rng.normal(size=(10, 24)).astype(np.float32) * 3
     X = (centers[np.arange(300) % 10] + rng.normal(size=(300, 24))).astype(
@@ -330,12 +323,12 @@ def test_kernel_matches_numpy_ivf_reference(spark, tmp_path, seed):
     )
     ids = np.arange(300, dtype=np.int64)
     persist_delta(model, spark, assign_delta(model, ids[240:270], X[240:270]), 0)
-    inflight = assign_delta(model, ids[270:], X[270:])
+    persist_delta(model, spark, assign_delta(model, ids[270:], X[270:]), 1)
     dels = [int(ids[5]), int(ids[250]), int(ids[280])]
     Q = (centers[rng.integers(0, 10, 50)] + rng.normal(size=(50, 24))).astype(
         np.float32
     )
-    got = _ids(search(model, Q, 7, batches=[0], inflight=inflight, dels=dels))
+    got = _ids(search(model, Q, 7, batches=[0, 1], dels=dels))
     want = _numpy_ivf(model.centroids, 3, ids, X, Q, 7, dels)
     assert got == want
 

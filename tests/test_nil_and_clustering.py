@@ -5,11 +5,16 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from incremental_entity_extraction_spark.functions.cluster_math import (
+    component_roots,
     greedy_cluster_labels,
     medoid_index,
     modal_value,
+    threshold_pairs,
 )
 from incremental_entity_extraction_spark.operators.clustering import (
+    _CANONICAL,
+    _CLUSTER_COLS,
+    _summarize,
     cc_summarize_pdf,
     cluster_summarize_batches,
 )
@@ -291,6 +296,60 @@ def test_cc_kernel_clusters_20000_rows_in_tile_memory(cfg):
     assert got == want
     assert len(out) == len(set(want.values())) < 19_000
     assert peak < 64 << 20, f"peak {peak / 2**20:.1f} MB"
+
+
+def _summarize_loop(pdf, roots):
+    """The per-root scan ``clustering._summarize`` replaced (one
+    ``np.flatnonzero(root == r)`` per root, O(n × clusters)), kept as its
+    reference."""
+    pdf = pdf.sort_values(_CANONICAL).reset_index(drop=True)
+    enc = np.stack([np.asarray(e, dtype=np.float32) for e in pdf["encoding"]])
+    root = np.asarray(roots(pdf, enc))
+    ids, mentions = pdf["mention_id"].tolist(), pdf["mention"].tolist()
+    rows = []
+    for r in pd.unique(root):
+        members = np.flatnonzero(root == r)
+        sub_enc = enc[members]
+        ms = [mentions[i] for i in members]
+        rows.append((
+            ids[r], int(pdf["batch_id"].iloc[0]), modal_value(ms), len(members),
+            [ids[i] for i in members], ms,
+            sub_enc[medoid_index(sub_enc)].tolist(),
+        ))
+    return pd.DataFrame(rows, columns=_CLUSTER_COLS)
+
+
+def test_summarize_groups_equal_per_root_scan(cfg):
+    """The stable-sort grouping gives the per-root scan's cluster rows,
+    row for row: on the 20 000-row world under its cc roots, and on fuzzed
+    roots (each root a member of its own group, groups of any size)."""
+    pdf, _ = _scale_world(cfg.dim)
+    th = float(cfg.greedy_threshold)
+    memo = []
+
+    def cc_roots(p, enc):
+        if not memo:
+            by_id = np.argsort(p["mention_id"].to_numpy().astype(object),
+                               kind="stable")
+            rank = np.empty(len(by_id), dtype=np.intp)
+            rank[by_id] = np.arange(len(by_id))
+            memo.append(component_roots(len(enc), threshold_pairs(enc, th), rank))
+        return memo[0]
+
+    got = _summarize(pdf, cc_roots)
+    pd.testing.assert_frame_equal(got, _summarize_loop(pdf, cc_roots))
+    assert len(got) < 19_000
+
+    rng = np.random.default_rng(3)
+    for n in (1, 2, 7, 60, 300):
+        small = pdf.sample(n, random_state=int(rng.integers(1 << 30)))
+        labels = rng.integers(0, max(1, n // int(rng.integers(1, 6))), n)
+        heads = {g: rng.choice(np.flatnonzero(labels == g)) for g in set(labels)}
+        fixed = np.array([heads[g] for g in labels])
+        pd.testing.assert_frame_equal(
+            _summarize(small, lambda p, enc: fixed),
+            _summarize_loop(small, lambda p, enc: fixed),
+        )
 
 
 def test_medoid_totals_tiled_bit_equal_full_formula():

@@ -128,4 +128,4 @@ def test_unknown_cluster_mode_raises_before_retrieval(
     assert max(tracker.getJobIdsForGroup(None), default=-1) == j0
     assert not (tmp_path / "lake").exists()
     with pytest.raises(ValueError, match=re.escape(want)):
-        pl.run_batch(None, [], 0, cfg, cluster_mode="kmeans")
+        pl.run_batch(None, None, 0, cfg, cluster_mode="kmeans")

@@ -302,3 +302,38 @@ def test_columnar_topk_matches_brute_force(n_m, n_e, k, seed):
         assert got == exp, f"row {r}"
         np.testing.assert_array_equal(sc[pos : pos + counts[r]], S[r][order])
         pos += counts[r]
+
+
+@given(
+    st.sampled_from([1, 7, 64, 256, 1024]),
+    st.integers(min_value=1, max_value=9),    # query rows
+    st.integers(min_value=1, max_value=9),    # entity rows
+    st.integers(min_value=0, max_value=10**6),
+)
+@settings(max_examples=60, deadline=None)
+def test_pair_products_do_not_depend_on_their_block(d, n_q, n_e, seed):
+    """The bits of a (query, entity) product are the pair's own: the same
+    scored alone, in a block, or from non-contiguous gathered rows, and the
+    same from ``retrieval._pair_scores`` as from ``ann_index._dots``.  The
+    in-window merge (``pipeline._merge_window_entities``) re-scores only
+    the pairs it keeps, one at a time, and must reproduce the window job's
+    block scores exactly."""
+    from incremental_entity_extraction_spark.operators.ann_index import _dots
+    from incremental_entity_extraction_spark.operators.retrieval import (
+        _pair_scores,
+    )
+
+    rng = np.random.default_rng(seed)
+    # every other row of a wider matrix: gathered views are strided
+    Q = rng.standard_normal((2 * n_q, d)).astype(np.float32)[::2]
+    E = rng.standard_normal((2 * n_e, d)).astype(np.float32)[1::2]
+    block = _dots(Q, E)
+    pool = _pair_scores(Q, np.broadcast_to(E, (n_q, n_e, d)))
+    r, j = np.divmod(np.arange(n_q * n_e), n_e)
+    gathered = _pair_scores(Q[r], E[j][:, None, :])[:, 0].reshape(n_q, n_e)
+    alone = np.array([
+        [_dots(Q[a : a + 1], E[b : b + 1])[0, 0] for b in range(n_e)]
+        for a in range(n_q)
+    ])
+    for got in (pool, gathered, alone):
+        np.testing.assert_array_equal(got.view(np.uint32), block.view(np.uint32))

@@ -85,25 +85,6 @@ def test_ann_top1_agrees_with_exact(enriched_pair):
     assert agree / n >= 0.9, f"top-1 agreement {agree / n:.3f}"
 
 
-@pytest.mark.parametrize("mode", ["ivf"])
-def test_run_batch_ann_modes_require_model(cfg, mode):
-    """The persisted index is the only ANN path: a batch's in-window
-    entities are probed under the index shard's centroids, so a shard
-    list without it raises instead of falling back."""
-    import pyarrow as pa
-
-    from incremental_entity_extraction_spark.operators.ann_index import (
-        IVFShard,
-    )
-    from incremental_entity_extraction_spark.pipeline import run_batch
-
-    with pytest.raises(ValueError, match="needs the index shard"):
-        run_batch(
-            pa.table({"is_nil": pa.array([], pa.bool_())}),
-            [IVFShard(rows={})], 0, cfg, retrieval_mode=mode,
-        )
-
-
 @pytest.mark.parametrize("mode", ["IVF", "ivf_pq"])
 def test_unknown_retrieval_mode_is_rejected(spark, spark_world, cfg, tmp_path,
                                             mode):
@@ -123,7 +104,7 @@ def test_unknown_retrieval_mode_is_rejected(spark, spark_world, cfg, tmp_path,
         )
     assert not (tmp_path / "lake").exists()
     with pytest.raises(ValueError, match=r"broadcast \| ivf"):
-        run_batch(None, [], 0, cfg, retrieval_mode=mode)
+        run_batch(None, None, 0, cfg, retrieval_mode=mode)
 
 
 def test_pipeline_e2e_with_ivf_retrieval(spark, spark_world, world, cfg, tmp_path):
