@@ -95,7 +95,10 @@ def test_resume_over_spark_written_partitions(spark, spark_world, cfg, tmp_path)
     lake = pl.Lake(str(tmp_path / "mixed"))
     pl.run_incremental(spark, tr.filter(F.col("batch_id") <= 1), kb, lake, cfg, **opts)
     for t in PINNED:
-        df = lake.read(spark, t).localCheckpoint()
+        # one write task: Spark reads each small file as its own split,
+        # ordered by size, so two same-sized files (metrics) would leave
+        # batch 0 to whichever task the directory listing gives it
+        df = lake.read(spark, t).coalesce(1).localCheckpoint()
         shutil.rmtree(lake.path(t))
         lake.write_partition(df, t)  # Spark's writer, dynamic overwrite
         names = os.listdir(os.path.join(lake.path(t), "batch_id=0"))
