@@ -1,34 +1,25 @@
-"""Interactive stage-by-stage walkthrough (reference lifecycle §3.2).
+"""Interactive walkthrough of one incremental run (reference lifecycle §3.2).
 
-Mirrors notebooks/try_pipeline.Rmd: drive each pipeline stage by hand and
-print the intermediate contracts — the API smoke test for the stage
-functions, importable individually.
+Mirrors notebooks/try_pipeline.Rmd: run the incremental loop on a small
+synthetic world, then print what each stage left in the lake — the
+detected mentions with their NIL decision (detect → encode → top-k
+retrieve → NIL predict), the entities the NIL clusters added to the KB,
+and the triples.
 
     python examples/try_pipeline.py
 """
 
 from __future__ import annotations
 
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
 from incremental_entity_extraction_spark.config import DEFAULT_CONFIG as cfg
 from incremental_entity_extraction_spark.fixtures import make_world
-from incremental_entity_extraction_spark.operators.clustering import (
-    cluster_summarize_batches,
-)
-from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
-from incremental_entity_extraction_spark.operators.kb import (
-    assign_new_entity_ids,
-    new_entity_rows_pdf,
-)
-from incremental_entity_extraction_spark.operators.mentions import detect_mentions
-from incremental_entity_extraction_spark.operators.nil import predict_nil
-from incremental_entity_extraction_spark.operators.retrieval import (
-    build_kb_shards,
-    retrieve_topk,
-)
+from incremental_entity_extraction_spark.pipeline import Lake, run_incremental
 from incremental_entity_extraction_spark.session import get_spark
 from pyspark.sql import functions as F
 
@@ -36,45 +27,39 @@ from pyspark.sql import functions as F
 def main() -> None:
     spark = get_spark(cores=4, app_name="try-pipeline")
     world = make_world(cfg, n_convs=6)
-    transcripts = spark.createDataFrame(world.transcripts)
-    kb = spark.createDataFrame(world.entities_kb)
+    root = tempfile.mkdtemp(prefix="try-pipeline-")
+    try:
+        lake = Lake(root)
+        stats = run_incremental(
+            spark,
+            spark.createDataFrame(world.transcripts),
+            spark.createDataFrame(world.entities_kb),
+            lake,
+            cfg,
+            cluster_mode="greedy_replay",
+        )
+        print(f"== {len(stats)} batches committed")
 
-    print("== 1. mention detection (M1)")
-    mentions = detect_mentions(transcripts)
-    mentions.select("mention_id", "mention", "context_left").show(5, truncate=40)
+        print("== 1. mentions: detection, top-1 candidate, NIL decision (M1-M7)")
+        mentions = lake.read(spark, "mentions")
+        mentions.select(
+            "batch_id", "mention", "top_title",
+            F.round("max_bi", 2).alias("max_bi"),
+            F.round("nil_score", 3).alias("nil_score"), "is_nil",
+        ).orderBy("batch_id", "mention_id").show(8, truncate=30)
+        mentions.groupBy("is_nil").count().show()
 
-    print("== 2. encoding (M4)")
-    encoded = encode_mentions_df(mentions, cfg)
-    encoded.select("mention_id", F.slice("encoding", 1, 4).alias("enc[:4]")).show(3)
+        print("== 2. new_entities: NIL clusters appended to the KB (M8-M12)")
+        lake.read(spark, "new_entities").select(
+            "batch_id", "id", "indexer", "title"
+        ).orderBy("id").show(5)
 
-    print("== 3. dense top-k retrieval + hydration (W1/J5)")
-    shards = build_kb_shards(kb, n_shards=1)
-    candidates = retrieve_topk(encoded, cfg, shards)
-    candidates.select(
-        "mention",
-        F.element_at("candidates", 1)["title"].alias("top_title"),
-        F.round(F.element_at("candidates", 1)["score"], 2).alias("top_score"),
-    ).show(5)
-
-    print("== 4. NIL prediction (M6/M7/F14)")
-    nil_scored = predict_nil(candidates, cfg).localCheckpoint()
-    nil_scored.groupBy("is_nil").count().show()
-
-    print("== 5. NIL clustering + summaries (M8/M11)")
-    nil_df = nil_scored.filter(F.col("is_nil")).select(
-        "mention_id", "conv_id", "turn_idx", "start_tok", "batch_id",
-        "mention", "context_left", "context_right", "encoding",
-    )
-    clusters = cluster_summarize_batches(nil_df, cfg, "greedy_replay")
-    clusters.select("title", "nelements", "mentions").show(5, truncate=50)
-
-    print("== 6. KB augmentation (M12)")
-    with_ids = assign_new_entity_ids(clusters.toPandas(), start_id=0, cfg=cfg)
-    print(new_entity_rows_pdf(with_ids, cfg)[
-        ["id", "indexer", "wikipedia_id", "title"]
-    ].head(5))
-
-    spark.stop()
+        print("== 3. triples")
+        lake.read(spark, "triples").groupBy("pred").count().orderBy("pred").show()
+        lake.read(spark, "triples").orderBy("subj", "pred").show(5, truncate=40)
+    finally:
+        spark.stop()
+        shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":

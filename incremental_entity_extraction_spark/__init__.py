@@ -9,11 +9,14 @@ The reference is a pandas + HTTP-microservice pipeline (biencoder /
 FAISS indexer / NIL predictor / NIL clusterer around Postgres); this
 package re-expresses each service as vectorized DataFrame stages:
 
-* mention detection        -> gazetteer token matching (M1)
-* biencoder encoding       -> deterministic hash featurizer in mapInPandas (M4)
-* FAISS top-k retrieval    -> broadcast dense-matrix top-k (W1) + hydration join (J5)
-* NIL prediction           -> closed-form logistic column expression (M6/M7/F14)
-* NIL clustering           -> threshold-graph connected components (M8)
+* mention detection        -> OOV-token-run detector (M1)
+* biencoder encoding       -> deterministic hash featurizer (M4)
+* FAISS top-k retrieval    -> broadcast dense-matrix or IVF top-k with the
+                              metadata riding the shards (W1/J5)
+* NIL prediction           -> closed-form logistic over the top-k (M6/M7/F14)
+  (these four run as ONE fused mapInArrow stage, operators/fused.py)
+* NIL clustering           -> tiled union-find or greedy replay on the
+                              driver (M8)
 * KB augmentation          -> append to new_entities lake table (M12)
 
 See SURVEY.md at the repo root for the operator-by-operator mapping.

@@ -2,13 +2,12 @@
 
 The per-row reference kernels (functions/detection.detect_mentions_in_tokens,
 functions/featurizer.window_from_tokens / encode_token_lists) define the
-semantics and still power the composable operators and the NumPy oracle.
-This module re-expresses the whole per-partition pass — detection, context
-extraction, window building, encoding — as NumPy/pandas array programs with
-no per-mention Python loop on the hot path, producing BIT-IDENTICAL output
-(tests/test_fused.py asserts the fused stage equals the composed chain,
-which still runs the per-row kernels; tests/test_fused_kernel.py asserts
-this module equals the per-row kernels directly).
+semantics and power the NumPy oracle.  This module re-expresses the whole
+per-partition pass — detection, context extraction, window building,
+encoding — as NumPy/pandas array programs with no per-mention Python loop
+on the hot path, producing BIT-IDENTICAL output (tests/test_fused_kernel.py
+asserts this module equals the per-row kernels directly; tests/test_fused.py
+asserts the fused stage equals the oracle).
 
 Key identities that make vectorization exact:
 

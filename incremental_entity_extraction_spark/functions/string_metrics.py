@@ -1,10 +1,10 @@
-"""String metrics F4-F6 (SURVEY.md §2.7) — pure-Python/NumPy kernels.
+"""String metric F4 (SURVEY.md §2.7) — pure-Python/NumPy kernels.
 
 Reference: pipeline/threestepclustering/__main__.py:22-63 uses a
 Damerau-Levenshtein distance with an equality short-circuit and a penalty
-for very short strings, a word-set Jaccard distance, and a soft
-Jaccard-Levenshtein blend.  Re-implemented from the metric definitions (no
-external textdistance/fastDamerauLevenshtein dependency).
+for very short strings (the 3-step engine's metric).  Re-implemented from
+the metric definition (no external textdistance/fastDamerauLevenshtein
+dependency).
 """
 
 from __future__ import annotations
@@ -45,33 +45,6 @@ def dl_distance_normalized(a: str, b: str, short_penalty: int = 3, short_len: in
         return 0.0
     penalty = short_penalty if min(len(a), len(b)) <= short_len else 0
     return (damerau_levenshtein(a, b) + penalty) / max(len(a), len(b), 1)
-
-
-def jaccard_words_distance(a: str, b: str) -> float:
-    """F5: 1 - |A∩B|/|A∪B| over word sets."""
-    sa, sb = set(a.split()), set(b.split())
-    if not sa and not sb:
-        return 0.0
-    return 1.0 - len(sa & sb) / len(sa | sb)
-
-
-def soft_jaccard_levenshtein(a: str, b: str) -> float:
-    """F6: word-pair Levenshtein-weighted Jaccard distance — each word in A
-    matches its most-similar word in B (normalized D-L similarity), and the
-    soft intersection is the sum of best-match similarities."""
-    wa, wb = a.split(), b.split()
-    if not wa and not wb:
-        return 0.0
-    if not wa or not wb:
-        return 1.0
-    soft_inter = 0.0
-    for x in wa:
-        best = max(
-            1.0 - damerau_levenshtein(x, y) / max(len(x), len(y), 1) for y in wb
-        )
-        soft_inter += best
-    union = len(wa) + len(wb) - soft_inter
-    return 1.0 - soft_inter / union if union > 0 else 0.0
 
 
 def pairwise_matrix(strings: list[str], fn) -> np.ndarray:

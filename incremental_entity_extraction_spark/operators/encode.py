@@ -1,10 +1,11 @@
-"""M4/M5 — mention & entity encoding as Arrow-batched pandas UDF stages.
+"""M5 — entity encoding as an Arrow-batched pandas UDF stage.
 
 Reference: BLINK bi-encoder HTTP service (pipeline/biencoder/main.py:41-99),
-BERT-large towers producing 1024-d float32.  Ours: the pluggable encoder
-contract from ``functions.featurizer`` applied inside ``mapInPandas`` —
+BERT-large towers producing 1024-d float32.  Ours: the entity tower of
+``functions.featurizer`` applied inside ``mapInPandas`` —
 vectors never leave the JVM<->Arrow path as base64 (the reference's
 transport encoding, eval_kbp.py:233-239, is eliminated; F8 in SURVEY.md §2.7).
+Mentions are encoded inside the fused stage (operators/fused.py).
 
 Narrow transform: each partition encodes its own rows against the
 executor-local token-vector cache; no shuffle, no driver round trip.
@@ -21,35 +22,7 @@ from pyspark.sql import types as T
 from incremental_entity_extraction_spark.config import PipelineConfig
 from incremental_entity_extraction_spark.functions.featurizer import (
     encode_entities,
-    encode_mentions,
 )
-
-
-def _with_encoding_schema(df: DataFrame) -> T.StructType:
-    return T.StructType(
-        df.schema.fields + [T.StructField("encoding", T.ArrayType(T.FloatType()), False)]
-    )
-
-
-def encode_mentions_df(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Adds ``encoding array<float>`` from (context_left, mention, context_right)."""
-    dim, norm, max_tok = cfg.dim, cfg.vector_norm, cfg.max_context_tokens
-    out_schema = _with_encoding_schema(mentions)
-    in_cols = [f.name for f in mentions.schema.fields]
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            enc = encode_mentions(
-                pdf["context_left"].fillna(""),
-                pdf["mention"],
-                pdf["context_right"].fillna(""),
-                dim, norm, max_tok,
-            )
-            out = pdf[in_cols].copy()
-            out["encoding"] = [row for row in enc]
-            yield out
-
-    return mentions.mapInPandas(_encode, schema=out_schema)
 
 
 def encode_entities_df(entities: DataFrame, cfg: PipelineConfig) -> DataFrame:

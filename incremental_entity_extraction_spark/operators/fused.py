@@ -1,18 +1,18 @@
 """Fused detect→encode→retrieve→NIL stage: ONE mapInArrow hop.
 
-The composable operators (mentions.py, encode.py, retrieval.py) are three
-chained ``mapInPandas`` stages.  Spark runs each as its own PythonRunner, so
-a single task chains three Python workers and every intermediate row
-(including the duplicated context strings) crosses the JVM↔Python Arrow
-boundary three times.  At 32 cores that is ~96 concurrent Python workers —
-measured 2-3× slower than this fused single-hop stage on the same data.
+The reference runs these stages as separate services (biencoder, indexer,
+nilpredictor).  As chained Spark stages each would be its own PythonRunner,
+so a single task would chain several Python workers and every intermediate
+row (including the duplicated context strings) would cross the JVM↔Python
+Arrow boundary once per stage — measured 2-3× slower than this fused
+single-hop stage on the same data.
 
-This operator runs the same kernels (detection, featurizer, tiled top-k,
-then ``nil.nil_columns`` on the flat top-k arrays) inside one worker pass
-and emits the full enriched, NIL-scored mention rows.  Output is
-bit-identical to the composed chain followed by ``nil.predict_nil`` (tests
-assert it); the composed operators remain for unit testing and ad-hoc
-composition.
+This operator runs the kernels (detection, featurizer, tiled top-k, then
+``nil.nil_columns`` on the flat top-k arrays) inside one worker pass and
+emits the full enriched, NIL-scored mention rows.  Its output equals the
+NumPy oracle's per-stage functions (``oracle.reference``) on the same KB:
+mention columns and encodings exactly, candidate lists in the same order
+(tests/test_fused.py).
 
 Both retrieval modes run here.  The shards are either ``KBShard``s (the
 whole KB broadcast; exact) or the persisted IVF index

@@ -10,9 +10,9 @@ Ours: one NumPy kernel, ``nil_columns``, over a batch's flat top-k
 candidate arrays — the logistic model collapses to a closed-form sigmoid
 over standardized features (SURVEY.md F14).  The fused
 detect→encode→retrieve stage (operators/fused.py) runs it in the same
-Python pass that ranks the candidates; ``predict_nil`` runs it over any
-frame with a ``candidates`` column (the composed chain).  It computes in
-float64 in the oracle's operation order
+Python pass that ranks the candidates, and the in-window merge
+(``pipeline._merge_window_entities``) re-runs it on the rows it re-ranks.
+It computes in float64 in the oracle's operation order
 (``oracle.reference.nil_score_from_features``), so scores equal the
 oracle's bit for bit.  Rows with zero candidates are NIL by construction
 (eval_kbp.py:306-310).
@@ -20,12 +20,8 @@ oracle's bit for bit.  Rows with zero candidates are NIL by construction
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from incremental_entity_extraction_spark.config import PipelineConfig
@@ -89,27 +85,3 @@ def nil_columns(
         wikipedia_id.take(top),
         title.take(top),
     ]
-
-
-def predict_nil(candidates_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Adds the ``NIL_FIELDS`` columns to a frame whose ``candidates``
-    column holds rank-ordered ``retrieval.CANDIDATE_STRUCT`` lists:
-    ``nil_columns`` in one ``mapInArrow``.  The fused stage
-    (``fused.detect_encode_retrieve``) already emits these columns."""
-    schema = T.StructType(candidates_df.schema.fields + NIL_FIELDS)
-
-    def _nil(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            lists = rb.column("candidates")
-            flat = lists.flatten()
-            f = dict(zip((x.name for x in flat.type), flat.flatten()))
-            counts = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
-            yield pa.RecordBatch.from_arrays(
-                rb.columns + nil_columns(
-                    counts, f["id"], f["indexer"], f["wikipedia_id"],
-                    f["title"], f["score"], cfg,
-                ),
-                names=schema.names,
-            )
-
-    return candidates_df.mapInArrow(_nil, schema=schema)

@@ -20,24 +20,19 @@ matching the oracle and the reference's score-desc sort across indexes
 
 Hydration parity note: the reference's per-request ``SELECT ... WHERE id IN``
 (S4) is a broadcast-hash join in relational terms; here metadata rides the
-same broadcast as the vectors, so hydration is a local array gather.  A
-standalone join-based hydrator is in ``hydrate_candidates`` for the general
-case where metadata is too wide to broadcast with the vectors.
+same broadcast as the vectors, so hydration is a local array gather.  The
+top-k runs inside the fused stage (operators/fused.py).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from incremental_entity_extraction_spark.config import PipelineConfig
 from incremental_entity_extraction_spark.operators.ann_index import (
     IVFShard,
     ivf_topk_columnar,
@@ -103,39 +98,6 @@ def build_kb_shards(kb_df: DataFrame, n_shards: int = 1) -> list[KBShard]:
         KBShard(pdf[(pdf["id"] % n_shards) == s].reset_index(drop=True))
         for s in range(n_shards)
     ]
-
-
-def retrieve_topk(
-    mentions: DataFrame,
-    cfg: PipelineConfig,
-    shards: list[KBShard],
-) -> DataFrame:
-    """Adds ``candidates array<struct>`` (sorted, top_k) to mention rows."""
-    spark = mentions.sparkSession
-    bc = spark.sparkContext.broadcast(shards)
-    k_cfg = cfg.top_k
-    norm2 = float(cfg.vector_norm) ** 2
-    out_schema = T.StructType(
-        mentions.schema.fields
-        + [T.StructField("candidates", T.ArrayType(CANDIDATE_STRUCT), False)]
-    )
-    in_cols = [f.name for f in mentions.schema.fields]
-
-    def _topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        shard_list = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            enc = np.stack(
-                [np.asarray(e, dtype=np.float32) for e in pdf["encoding"]]
-            )
-            out = pdf[in_cols].copy()
-            out["candidates"] = topk_candidates_kernel(
-                enc, shard_list, k_cfg, norm2
-            )
-            yield out
-
-    return mentions.mapInPandas(_topk, schema=out_schema)
 
 
 def topk_candidates_columnar(
@@ -278,79 +240,3 @@ def merge_candidates(
         np.bincount(q[keep], minlength=n).astype(np.int32),
         [c.take(keep) for c in cols],
     )
-
-
-def topk_candidates_kernel(
-    enc: np.ndarray, shard_list: list[KBShard], k: int, norm2: float
-) -> list[list[dict]]:
-    """Row-major list-of-dicts view of ``topk_candidates_columnar`` — kept
-    for the composable ``retrieve_topk`` operator and the NumPy-oracle
-    tests; the fused hot path consumes the columnar form directly."""
-    counts, ids, idxr, wids, titles, sc, norm_sc = topk_candidates_columnar(
-        enc, shard_list, k, norm2
-    )
-    cands_col: list[list[dict]] = []
-    pos = 0
-    for c in counts:
-        cands_col.append(
-            [
-                {
-                    "id": int(ids[j]),
-                    "indexer": int(idxr[j]),
-                    "wikipedia_id": int(wids[j]),
-                    "title": str(titles[j]),
-                    "score": float(sc[j]),
-                    "norm_score": float(norm_sc[j]),
-                }
-                for j in range(pos, pos + int(c))
-            ]
-        )
-        pos += int(c)
-    return cands_col
-
-
-def hydrate_candidates(candidates: DataFrame, entities: DataFrame) -> DataFrame:
-    """S4/J5 as a standalone relational operator: explode candidate ids,
-    broadcast-hash join entity metadata on (id, indexer), re-assemble the
-    sorted candidate array.
-
-    The reference's single ``SELECT ... WHERE id IN (...) AND indexer=%s``
-    round trip (pipeline/indexer/main.py:98-109).  Used when metadata is too
-    wide to ride the vector broadcast.
-    """
-    exploded = candidates.select(
-        "mention_id", F.posexplode("candidates").alias("pos", "cand")
-    ).select("mention_id", "pos", F.col("cand.id").alias("id"),
-             F.col("cand.indexer").alias("indexer"),
-             F.col("cand.score").alias("score"),
-             F.col("cand.norm_score").alias("norm_score"))
-    meta = F.broadcast(
-        entities.select("id", "indexer", "wikipedia_id", "title")
-    )
-    joined = exploded.join(meta, ["id", "indexer"], "left")
-    reassembled = (
-        joined.groupBy("mention_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("pos", "id", "indexer", "wikipedia_id", "title",
-                             "score", "norm_score")
-                )
-            ).alias("sorted_cands")
-        )
-        .select(
-            "mention_id",
-            F.transform(
-                "sorted_cands",
-                lambda c: F.struct(
-                    c["id"].alias("id"),
-                    c["indexer"].alias("indexer"),
-                    c["wikipedia_id"].alias("wikipedia_id"),
-                    c["title"].alias("title"),
-                    c["score"].alias("score"),
-                    c["norm_score"].alias("norm_score"),
-                ),
-            ).alias("candidates"),
-        )
-    )
-    return reassembled

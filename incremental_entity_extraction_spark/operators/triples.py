@@ -61,7 +61,7 @@ def cluster_triples(clusters: pd.DataFrame) -> pa.Table:
     with ids (``mentions_id``, ``index_id``, ``title``).  A member's conv_id
     is the prefix of its composite
     ``mention_id = f"{conv_id}:{turn_idx}:{start_tok}"``
-    (operators/mentions.py)."""
+    (functions/fused_kernel.py)."""
     rows = []
     for members, index_id, title in zip(
         clusters["mentions_id"], clusters["index_id"], clusters["title"]

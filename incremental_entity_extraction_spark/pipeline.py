@@ -744,8 +744,6 @@ class BatchLoop:
     dels: list[int] = field(default_factory=list)
     encoder: object = None
     retrieval_mode: str = "broadcast"
-    ann_rebuild_threshold: float | None = None
-    salt_repartition: bool | None = None
 
     def __post_init__(self) -> None:
         # a bad mode fails here, before any Spark job
@@ -763,21 +761,16 @@ class BatchLoop:
             self.ro_shards_bc = None
 
     def _salted(self, tb: DataFrame, n_turns: int) -> DataFrame:
-        """salt_repartition True/False forces every window; None decides PER
-        WINDOW: an explicit ``partitions`` is a request to shape the
-        window's partitioning (the partition-invariance tests rely on it);
-        otherwise the salt shuffle exists for (a) parallelism — a
+        """Decides PER WINDOW: an explicit ``partitions`` is a request to
+        shape the window's partitioning (the partition-invariance tests
+        rely on it); otherwise the salt shuffle exists for (a) parallelism — a
         byte-contiguous batch in the source parquet lands in ~one scan
         split — and (b) hot-conversation skew; for tiny windows it buys
         neither (single-task fused compute is already cheap) and its
         ~0.2 s stage is pure serial floor (profiled), so skip below ~1000
         turns.  A computed task count of 1 skips it too: a hash shuffle
         into one partition buys neither."""
-        salt = (
-            self.salt_repartition if self.salt_repartition is not None
-            else self.partitions is not None or n_turns >= 1000
-        )
-        if not salt:
+        if self.partitions is None and n_turns < 1000:
             return tb
         if self.partitions is not None:
             n = self.partitions
@@ -898,27 +891,13 @@ class BatchLoop:
 
             if self.ann_model is None:
                 # trained/bucketed ONCE per (corpus, params); a resume run
-                # loads the persisted model + rows and pays zero retraining.
-                # With ``ann_rebuild_threshold`` set, drained RW entities
-                # (the accreted deltas, frozen-centroid-assigned since build)
-                # are offered as the drift training fold: when
-                # deltas-since-training exceed the threshold ratio, ensure
-                # rebuilds once with them in the k-means sample and the
-                # backfill below re-adds them under the new model.
-                delta_corpus = None
-                if self.ann_rebuild_threshold is not None and lake_rw is not None:
-                    delta_corpus = composite_corpus(
-                        lake_rw.filter(F.col("batch_id").isin(sorted(drained)))
-                        .select("id", "indexer", "embedding")
-                    )
+                # loads the persisted model + rows and pays zero retraining
                 self.ann_model = ensure_ann_index(
                     composite_corpus(self.kb_ro.select(
                         "id", "indexer", "wikipedia_id", "title", "embedding"
                     )),
                     lake.path("ann_index"),
                     mode=self.retrieval_mode,
-                    rebuild_threshold=self.ann_rebuild_threshold,
-                    delta_corpus=delta_corpus,
                 )
             # backfill: drained batches whose delta commit is missing (a lake
             # written by an older index layout, or a fingerprint-change
@@ -1059,8 +1038,6 @@ def run_incremental(
     encoder=None,
     retrieval_mode: str = "broadcast",
     single_batch: bool = False,
-    ann_rebuild_threshold: float | None = None,
-    salt_repartition: bool | None = None,
 ) -> list[dict]:
     """Loop over batch_id in ascending order, threading KB state through the
     lake; resumable via the lineage table (``BatchLoop``).
@@ -1091,7 +1068,6 @@ def run_incremental(
     loop = BatchLoop(
         spark, kb_ro, lake, cfg, cluster_mode, n_shards, resume, partitions,
         known_words, persist_candidates, dels, encoder, retrieval_mode,
-        ann_rebuild_threshold, salt_repartition,
     )
     try:
         return loop.run(transcripts)

@@ -40,7 +40,6 @@ def run_streaming_incremental(
     persist_candidates: bool = False,
     encoder=None,
     retrieval_mode: str = "broadcast",
-    ann_rebuild_threshold: float | None = None,
 ) -> None:
     """Consume a transcript parquet directory as a stream; emit lake tables.
 
@@ -51,7 +50,6 @@ def run_streaming_incremental(
         spark, kb_ro, lake, cfg, cluster_mode, n_shards,
         known_words=known_words, persist_candidates=persist_candidates,
         encoder=encoder, retrieval_mode=retrieval_mode,
-        ann_rebuild_threshold=ann_rebuild_threshold,
     )
     try:
         reader = spark.readStream.schema(TRANSCRIPT_DDL)

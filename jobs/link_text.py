@@ -29,7 +29,6 @@ def main() -> None:
         require_fresh_zip()
     p = argparse.ArgumentParser()
     p.add_argument("--kb", help="entities parquet (default: built-in fixture KB)")
-    p.add_argument("--top-k", type=int, default=3)
     p.add_argument("texts", nargs="+")
     args = p.parse_args()
 

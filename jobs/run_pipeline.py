@@ -11,7 +11,7 @@ Usage (north_rule deployment shape):
         --transcripts /path/transcripts_parquet \
         --kb /path/entities_parquet \
         --lake /path/lake \
-        [--cluster-mode cc] [--n-shards 1] [--batches all]
+        [--cluster-mode cc] [--n-shards 1]
 
 On a real cluster, swap --master for the cluster manager; everything else
 is identical (the lake maps onto Iceberg tables).

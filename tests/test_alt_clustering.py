@@ -1,4 +1,4 @@
-"""M9 3-step / M10 TF-IDF clustering engines + F4-F6 string metrics."""
+"""M9 3-step / M10 TF-IDF clustering engines + the F4 string metric."""
 
 import numpy as np
 import pytest
@@ -12,8 +12,6 @@ from incremental_entity_extraction_spark.functions.cluster_math import (
 from incremental_entity_extraction_spark.functions.string_metrics import (
     damerau_levenshtein,
     dl_distance_normalized,
-    jaccard_words_distance,
-    soft_jaccard_levenshtein,
 )
 
 
@@ -30,15 +28,6 @@ def test_dl_normalized_short_penalty():
     assert dl_distance_normalized("abc", "abd") > 0.5
     # long strings: one edit over 12 chars is small
     assert dl_distance_normalized("zorvexmarnel", "zorvexmarnee") < 0.2
-
-
-def test_jaccard_and_soft_jaccard():
-    assert jaccard_words_distance("a b c", "a b c") == 0.0
-    assert jaccard_words_distance("a b", "c d") == 1.0
-    # soft: near-identical words count as partial intersection
-    hard = jaccard_words_distance("zorvex marnel", "zorvex marnek")
-    soft = soft_jaccard_levenshtein("zorvex marnel", "zorvex marnek")
-    assert soft < hard
 
 
 def test_single_link_equiv_cc():

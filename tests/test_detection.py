@@ -1,11 +1,11 @@
-"""M1 mention detection: oracle == Spark, and both find every gold mention."""
+"""M1 mention detection: the fused stage == oracle, and both find every
+gold mention."""
 
 import pandas as pd
 
 from incremental_entity_extraction_spark.functions.detection import (
     detect_mentions_in_tokens,
 )
-from incremental_entity_extraction_spark.operators.mentions import detect_mentions
 from incremental_entity_extraction_spark.oracle import oracle_detect_mentions
 
 
@@ -31,12 +31,9 @@ def test_gold_mentions_all_detected(world):
     assert (merged["_merge"] == "both").all()
 
 
-def test_spark_detector_equals_oracle(spark, spark_world, world):
-    sdf = detect_mentions(spark_world["transcripts"]).toPandas()
+def test_spark_detector_equals_oracle(fused_stage, world):
+    """The fused stage's mention columns (both frames in detection order)."""
     odf = oracle_detect_mentions(world.transcripts)
-    key = ["conv_id", "turn_idx", "start_tok"]
-    sdf = sdf.sort_values(key).reset_index(drop=True)
-    odf = odf.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(
-        sdf[odf.columns].astype(str), odf.astype(str), check_dtype=False
+        fused_stage[odf.columns].astype(str), odf.astype(str), check_dtype=False
     )

@@ -62,12 +62,16 @@ def test_feeds_pipeline_shape(spark, tmp_path):
     contract (plus batch_id, which ingestion assigns)."""
     from pyspark.sql import functions as F
 
-    from incremental_entity_extraction_spark.operators.mentions import (
-        detect_mentions,
+    from incremental_entity_extraction_spark.config import DEFAULT_CONFIG
+    from incremental_entity_extraction_spark.operators.fused import (
+        detect_encode_retrieve,
     )
 
     _write_fixture(tmp_path)
     clean, _ = read_transcripts_jsonl(spark, str(tmp_path))
-    m = detect_mentions(clean.withColumn("batch_id", F.lit(0)))
+    # no KB shards: every mention is NIL, detection is what is checked
+    m = detect_encode_retrieve(
+        clean.withColumn("batch_id", F.lit(0)), DEFAULT_CONFIG, []
+    )
     # "hello zorvex" is one maximal OOV run -> one 2-token mention
     assert m.filter(F.col("mention").contains("zorvex")).count() == 1

@@ -1,41 +1,17 @@
-"""W1 broadcast top-k: Spark decisions == oracle; shard invariance."""
+"""W1 broadcast top-k: the fused stage's candidates == oracle; shard invariance."""
 
 import numpy as np
 import pandas as pd
 
-from incremental_entity_extraction_spark.functions.featurizer import encode_mentions
-from incremental_entity_extraction_spark.operators.encode import encode_mentions_df
-from incremental_entity_extraction_spark.operators.mentions import detect_mentions
-from incremental_entity_extraction_spark.operators.retrieval import (
-    build_kb_shards,
-    hydrate_candidates,
-    retrieve_topk,
-)
-from incremental_entity_extraction_spark.oracle import oracle_detect_mentions
-from incremental_entity_extraction_spark.oracle.reference import oracle_topk
+from incremental_entity_extraction_spark.operators.fused import detect_encode_retrieve
+from incremental_entity_extraction_spark.operators.nil import NIL_FIELDS
+from incremental_entity_extraction_spark.operators.retrieval import build_kb_shards
 
 
-def _spark_candidates(spark, spark_world, cfg, n_shards):
-    mentions = detect_mentions(spark_world["transcripts"])
-    encoded = encode_mentions_df(mentions, cfg)
-    shards = build_kb_shards(spark_world["entities_kb"], n_shards=n_shards)
-    return retrieve_topk(encoded, cfg, shards).toPandas()
-
-
-def test_topk_matches_oracle_decisions(spark, spark_world, world, cfg):
-    got = _spark_candidates(spark, spark_world, cfg, n_shards=1)
-    got = got.sort_values("mention_id").reset_index(drop=True)
-
-    om = oracle_detect_mentions(world.transcripts)
-    enc = encode_mentions(
-        om["context_left"], om["mention"], om["context_right"],
-        cfg.dim, cfg.vector_norm, cfg.max_context_tokens,
-    )
-    ocands = oracle_topk(enc, world.entities_kb, cfg)
-    om = om.assign(candidates=ocands).sort_values("mention_id").reset_index(drop=True)
-
-    assert list(got["mention_id"]) == list(om["mention_id"])
-    for s_row, o_row in zip(got["candidates"], om["candidates"]):
+def test_topk_matches_oracle_decisions(fused_stage, oracle_stages):
+    exp, _ = oracle_stages
+    assert list(fused_stage["mention_id"]) == list(exp["mention_id"])
+    for s_row, o_row in zip(fused_stage["candidates"], exp["candidates"]):
         assert [(c["id"], c["indexer"], c["wikipedia_id"]) for c in s_row] == [
             (c["id"], c["indexer"], c["wikipedia_id"]) for c in o_row
         ]
@@ -44,22 +20,21 @@ def test_topk_matches_oracle_decisions(spark, spark_world, world, cfg):
         )
 
 
-def test_topk_shard_invariance(spark, spark_world, cfg):
-    one = _spark_candidates(spark, spark_world, cfg, n_shards=1)
-    four = _spark_candidates(spark, spark_world, cfg, n_shards=4)
-    one = one.sort_values("mention_id").reset_index(drop=True)
-    four = four.sort_values("mention_id").reset_index(drop=True)
+def test_topk_shard_invariance(spark_world, cfg):
+    """1 and 4 ``KBShard``s give the same candidates and NIL columns."""
+
+    def _rows(n_shards):
+        shards = build_kb_shards(spark_world["entities_kb"], n_shards=n_shards)
+        return (
+            detect_encode_retrieve(spark_world["transcripts"], cfg, shards)
+            .toPandas()
+            .sort_values("mention_id")
+            .reset_index(drop=True)
+        )
+
+    one, four = _rows(1), _rows(4)
+    assert list(one["mention_id"]) == list(four["mention_id"])
     for a, b in zip(one["candidates"], four["candidates"]):
         assert [(c["id"], c["indexer"]) for c in a] == [(c["id"], c["indexer"]) for c in b]
-
-
-def test_hydrate_candidates_matches_broadcast_metadata(spark, spark_world, cfg):
-    cands = _spark_candidates(spark, spark_world, cfg, n_shards=1)
-    sdf = spark.createDataFrame(cands[["mention_id", "candidates"]])
-    hydrated = hydrate_candidates(sdf, spark_world["entities_kb"]).toPandas()
-    hydrated = hydrated.sort_values("mention_id").reset_index(drop=True)
-    orig = cands.sort_values("mention_id").reset_index(drop=True)
-    for h_row, o_row in zip(hydrated["candidates"], orig["candidates"]):
-        assert [(c["id"], c["title"]) for c in h_row] == [
-            (c["id"], c["title"]) for c in o_row
-        ]
+    nil_cols = [f.name for f in NIL_FIELDS]
+    pd.testing.assert_frame_equal(one[nil_cols], four[nil_cols])
